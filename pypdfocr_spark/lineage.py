@@ -8,12 +8,20 @@ watcher's processed-set sentinel ``-1``
 
 * ``lineage_rows`` — one metrics row per physical partition of the
   extraction output: (run_id, partition_id, doc_count, byte_count,
-  failures, wall_ms), computed with JVM-side aggregation
-  (``spark_partition_id`` + groupBy — a map-side-combinable agg).
-* ``commit`` — append results + lineage to parquet tables. On a real
-  cluster these are Iceberg ``writeTo(...).append()`` calls and the
-  snapshot is atomic; parquet + directory convention is the sandbox
-  stand-in (no Iceberg runtime jar here).
+  failures, wall_ms), computed with JVM-side aggregation (groupBy on
+  the partition id — a map-side-combinable agg).
+* ``commit`` — append results, then lineage, to two tables. The
+  extraction runs once, in the first append; the lineage rollup reads
+  back exactly the data files that append added (explicit versions, not
+  a re-run of a plan the append has changed) and takes each row's
+  partition from its file's name. On a real cluster the appends are
+  Iceberg ``writeTo(...).append()`` snapshots; parquet + directory
+  convention stands in when no Iceberg runtime jar is present.
+  Two assumptions: one committer per output directory (the parquet
+  backend diffs directory listings to find the added files), and a
+  two-append window — data first, then lineage — in which a crash leaves
+  committed documents without lineage rows. Resume is unaffected by that
+  window: it reads the data table.
 * ``resume_filter`` — ``left_anti`` join of the input corpus against
   already-committed urls (the EXCEPT-by-key of SURVEY §2.7 O4). The join
   broadcasts when the committed side is small; at scale it's a shuffled
@@ -25,8 +33,9 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .schema import LINEAGE_SCHEMA
 
@@ -35,8 +44,14 @@ def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
 
 
-def lineage_rows(extracted: DataFrame, run_id: str, wall_ms: int = 0) -> DataFrame:
-    """Per-partition metrics over the extraction output.
+def lineage_rows(
+    extracted: DataFrame, run_id: str, partition_id: Column, wall_ms: int = 0
+) -> DataFrame:
+    """Per-partition metrics over extraction output rows.
+
+    ``partition_id`` names each row's partition. ``commit`` passes the
+    write task's index parsed from each written file's name: the value
+    ``spark_partition_id()`` gives the rows in the write job.
 
     ``wall_ms`` per partition is the sum of the per-row Python compute
     shares measured inside the Arrow stages (EXTRACTED_SCHEMA.wall_ms);
@@ -48,7 +63,7 @@ def lineage_rows(extracted: DataFrame, run_id: str, wall_ms: int = 0) -> DataFra
         else F.lit(wall_ms).cast("long")
     )
     sel = [
-        F.spark_partition_id().alias("partition_id"),
+        partition_id.cast("int").alias("partition_id"),
         F.col("byte_count"),
         F.when(F.col("status") != "ok", F.col("url")).alias("failure_url"),
     ]
@@ -74,22 +89,46 @@ def lineage_rows(extracted: DataFrame, run_id: str, wall_ms: int = 0) -> DataFra
     )
 
 
-def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dict:
-    """Append extraction output + lineage; returns commit stats.
+# The write task's partition index leads every data file name: Spark's
+# parquet writer names files ``part-00003-<uuid>-c000...``, Iceberg's
+# ``00003-<task>-<uuid>-00001.parquet``.
+_FILE_PARTITION = r"^(?:part-)?(\d+)-"
+# the only columns lineage_rows reads back from the committed files
+_ROLLUP_COLUMNS = ("url", "status", "byte_count", "wall_ms")
 
-    Iceberg mapping: ``extracted.writeTo(tbl).append()`` +
-    ``metrics.writeTo(tbl_metrics).append()`` in one job; resume reads the
-    committed snapshot. Parquet append is the sandbox equivalent.
+
+def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dict:
+    """Append extraction output, then its lineage; returns commit stats.
+
+    The extraction runs once, in the append to ``<out_dir>/extracted``.
+    The lineage rollup then reads back only the data files that append
+    added (``catalog.append`` returns them), and only the narrow columns
+    it aggregates. It never re-runs the extraction plan: a resume plan
+    scans ``<out_dir>/extracted`` through ``resume_filter``'s anti-join,
+    so re-running it after the append would drop every url just written.
+    Each row's partition is the write task's index in its file's name.
+
+    Assumes one committer per ``out_dir``, as resume does: the parquet
+    backend finds the added files by listing the directory before and
+    after the append. The two appends are not atomic. A crash between
+    them leaves documents without lineage rows; resume still skips those
+    documents, because it reads the extracted table, not the lineage.
+    On Iceberg each append is its own atomic snapshot.
     """
     from . import catalog
 
     run_id = run_id or new_run_id()
-    extracted = extracted.persist()  # one computation feeds both writes
     t0 = time.monotonic()
-    catalog.append(extracted, f"{out_dir}/extracted")
+    added = catalog.append(extracted, f"{out_dir}/extracted")
     wall_ms = int((time.monotonic() - t0) * 1000)
-    catalog.append(lineage_rows(extracted, run_id, wall_ms), f"{out_dir}/lineage")
-    extracted.unpersist()
+    if added:  # reading no paths raises; an append that adds no file has no lineage
+        narrow = StructType([f for f in extracted.schema if f.name in _ROLLUP_COLUMNS])
+        written = extracted.sparkSession.read.schema(narrow).parquet(*added)
+        part = F.regexp_extract("_metadata.file_name", _FILE_PARTITION, 1)
+        catalog.append(
+            lineage_rows(written, run_id, part, wall_ms),
+            f"{out_dir}/lineage",
+        )
     return {"run_id": run_id, "wall_ms": wall_ms}
 
 

@@ -131,6 +131,7 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             )
         except Exception as exc:  # data error → row, never task failure
             text, n_pages, status, route = "", 0, f"error:{type(exc).__name__}", cfg.default_route
+            norm_pages = []
         # doc norm = per-page norms joined by space — equal to
         # normalize_page_text(text) because ascii-ignore distributes over
         # concat and the joining '\n' itself normalizes to ' ' (the same
@@ -551,8 +552,8 @@ def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame
     and NEITHER branch's pushed filter could skip anything — both
     branches scanned (and Arrow-shipped) the full corpus. Now the light
     branch's ``n_bytes <= T`` prunes every heavy file at file level and
-    vice versa. Heavy rows get ~par/8 files (they are few but fat — at
-    sf1.0, 1% of docs carry ~60% of bytes), light rows the rest.
+    vice versa. Each class gets ``par`` files (defaultParallelism): heavy
+    rows are few but fat — at sf1.0, 1% of docs carry ~60% of bytes.
     Iceberg mapping: a size-class partition / z-order at ingest.
     """
     from .config import HEAVY_PAYLOAD_BYTES

@@ -1835,11 +1835,13 @@ def crawl_commit(
     extracted: DataFrame, out_dir: str, run_id: "str | None" = None
 ) -> dict:
     """Append crawl extraction output + per-archive lineage in one
-    computation (persist feeds both writes — the same pattern as
-    lineage.commit; Iceberg ``writeTo(...).append()`` when the runtime
-    is present, parquet otherwise). An archive therefore appears in the
-    lineage table only when ALL its documents are in the docs table —
-    the invariant archive-granularity resume relies on."""
+    computation (persist feeds both writes; Iceberg
+    ``writeTo(...).append()`` when the runtime is present, parquet
+    otherwise). The persist survives the first append because this
+    plan's resume filter scans the lineage table, not the docs table.
+    An archive therefore appears in the lineage table only when ALL its
+    documents are in the docs table — the invariant archive-granularity
+    resume relies on."""
     from . import catalog, lineage
 
     run_id = run_id or lineage.new_run_id()

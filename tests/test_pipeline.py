@@ -86,10 +86,96 @@ def test_resume_skips_committed(spark, tmp_path):
     todo = {r["url"] for r in remaining.select("url").collect()}
     assert not (done & todo)
 
+    # commit the remainder: its plan scans the extracted table through the
+    # anti-join, and its lineage must still count every row it appended
+    lineage.commit(pipeline.extract(remaining, cfg), str(tmp_path), run_id="rest")
+    appended = {
+        r["run_id"]: r["n"]
+        for r in spark.read.parquet(f"{tmp_path}/lineage")
+        .groupBy("run_id").agg(F.sum("doc_count").alias("n")).collect()
+    }
+    assert appended == {"half": committed_n, "rest": 400 - committed_n}
+    assert spark.read.parquet(f"{tmp_path}/extracted").count() == 400
+
+
+def test_commit_empty_writes_no_lineage_rows(spark, tmp_path):
+    from pypdfocr_spark.schema import EXTRACTED_SCHEMA
+
+    empty = spark.createDataFrame([], EXTRACTED_SCHEMA)
+    stats = lineage.commit(empty, str(tmp_path), run_id="empty")
+    assert stats["run_id"] == "empty"
+    assert spark.read.parquet(f"{tmp_path}/extracted").count() == 0
+    assert spark.read.parquet(f"{tmp_path}/lineage").count() == 0
+
+
+def test_commit_lineage_partition_is_write_partition(spark, tmp_path):
+    """Lineage partition ids (read from the written files' names) are
+    the spark_partition_id() of the rows the commit wrote."""
+    rows = [(f"u{i}", "ok" if i % 5 else "error:X", 10 * i) for i in range(60)]
+    df = spark.createDataFrame(rows, "url string, status string, byte_count long")
+    df = df.repartition(3, "url")
+    expected = {
+        (r["p"], r["n"], r["b"])
+        for r in df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"), F.sum("byte_count").alias("b")).collect()
+    }
+    lineage.commit(df, str(tmp_path), run_id="p")
+    lin = spark.read.parquet(f"{tmp_path}/lineage").collect()
+    assert {(r["partition_id"], r["doc_count"], r["byte_count"]) for r in lin} == expected
+    assert sorted(u for r in lin for u in r["failures"]) == sorted(
+        u for u, st, _ in rows if st != "ok"
+    )
+
+
+def test_catalog_append_returns_added_files(spark, tmp_path):
+    from pypdfocr_spark import catalog
+
+    target = str(tmp_path / "t")
+    a = catalog.append(spark.range(5).repartition(2), target)
+    b = catalog.append(spark.range(5, 8).coalesce(1), target)
+    assert a and b and not set(a) & set(b)
+    assert sorted(r[0] for r in spark.read.parquet(*a).collect()) == list(range(5))
+    assert sorted(r[0] for r in spark.read.parquet(*b).collect()) == [5, 6, 7]
+
 
 def test_resume_noop_without_snapshot(spark, tmp_path):
     corpus_df = pipeline.source_filter(pipeline.build_corpus_df(spark, SF_SMOKE))
     assert lineage.resume_filter(corpus_df, str(tmp_path / "nope")).count() == 400
+
+
+def test_extract_rows_error_rows_do_not_leak(monkeypatch):
+    """A row whose kernel raises becomes an error row with empty text and
+    norm, whether it is the first row of the batch or follows an ok row
+    (whose norm must not carry over)."""
+    import datetime
+
+    import pandas as pd
+
+    real = pipeline._doc_kernel
+
+    def kernel(payload, cfg):
+        if payload.startswith(b"boom"):
+            raise ValueError("boom")
+        return real(payload, cfg)
+
+    monkeypatch.setattr(pipeline, "_doc_kernel", kernel)
+    ts = datetime.datetime(2024, 1, 1)
+    ok = b"<html><body><p>spark window text</p></body></html>"
+    payloads = [b"boom-first", ok, b"boom-later", ok]
+    pdf = pd.DataFrame({
+        "url": [f"https://a.example/{i}.html" for i in range(4)],
+        "warc_ts": [ts] * 4, "html": payloads, "lang": ["en"] * 4,
+    })
+    out = pipeline._extract_rows(pdf, ExtractConfig())
+    assert len(out) == 4
+    for i in (0, 2):
+        assert out["status"][i] == "error:ValueError"
+        assert out["extracted_text"][i] == ""
+        assert out["extracted_norm"][i] == ""
+        assert out["n_pages"][i] == 0
+    for i in (1, 3):
+        assert out["status"][i] == "ok"
+        assert "spark window" in out["extracted_norm"][i]
 
 
 def test_jvm_reassembly_parity(spark):
@@ -135,7 +221,7 @@ def test_jvm_reassembly_parity(spark):
     assert by_url["https://a.example/table-report.pdf"][cols.index("route")] == "storage"
 
 
-def test_heavy_path_failures_reach_status_and_lineage(spark):
+def test_heavy_path_failures_reach_status_and_lineage(spark, tmp_path):
     """A failing HEAVY document must surface a non-ok status (and thus a
     lineage failure), not be silently committed as ok — per-page statuses
     ride the salted shuffle and reassemble to the first non-ok status."""
@@ -174,8 +260,9 @@ def test_heavy_path_failures_reach_status_and_lineage(spark):
     assert out["https://a.example/good.pdf"]["status"] == "ok"
     assert out["https://a.example/good.pdf"]["n_pages"] == 400
 
-    extracted = pipeline.extract(corpus_df, ExtractConfig())
-    lin = lineage.lineage_rows(extracted, run_id="t").collect()
+    lineage.commit(pipeline.extract(corpus_df, ExtractConfig()), str(tmp_path), run_id="t")
+    lin = spark.read.parquet(f"{tmp_path}/lineage").collect()
+    assert sum(r["doc_count"] for r in lin) == 4
     failed = {u for r in lin for u in r["failures"]}
     assert "https://a.example/corrupt.pdf" in failed
     assert "https://a.example/blob.bin" in failed

@@ -59,6 +59,10 @@ def test_watch_processes_incrementally_and_resumes(spark, corpus_slices):
         pipeline.build_corpus_df(spark, SF_SMOKE), cfg
     ).count()
     assert n2 == batch_n
+    # every micro-batch's commit, the resumed second one included, rolls
+    # lineage up over all the rows it appended
+    lin_n = spark.read.parquet(f"{out}/lineage").agg(F.sum("doc_count")).first()[0]
+    assert lin_n == n2
 
     # third restart with nothing new: no growth (idempotent)
     q = stream.watch_extract(spark, corpus_slices["inbox"], out, ckpt, cfg)
