@@ -66,9 +66,3 @@ class ExtractConfig:
     pdfinfo_binary: str = "pdfinfo"
     pdfimages_binary: str = "pdfimages"
     identify_binary: str = "identify"
-    # Heavy-path document reassembly engine. False (default): pure JVM
-    # aggregation (pipeline._jvm_reassemble) — collect_list + array_sort +
-    # array_join + ordered route reduction, no Python stage. True: the
-    # original applyInPandas reassembly, kept as the semantic cross-check
-    # (pytest pins the two row-identical on corpus + failure fixtures).
-    python_reassembly: bool = False

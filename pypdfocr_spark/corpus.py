@@ -206,6 +206,12 @@ def extract_doc(payload: bytes) -> tuple[list[str], str]:
     The one kernel both Spark paths and the oracle call; the document
     text is ``"\\n".join(pages)`` and the per-page list feeds the
     page-early-exit routing (P2, ref: pypdfocr_pdffiler.py:66-68).
+
+    PDF path = the reference dataflow: decode ("pdfimages/identify",
+    ref: pypdfocr_gs.py:117-166) → geometry → rasterize at output dpi
+    ("gs", ref: pypdfocr_gs.py:170-218) → hOCR per page ("tesseract",
+    ref: pypdfocr_tesseract.py:154-183) → parse + reassemble
+    (ref: pypdfocr_pdf.py:269-351). HTML path = boilerplate strip.
     """
     if codec.is_syn_pdf(payload):
         pages = codec.decode_doc(payload)
@@ -228,26 +234,6 @@ def extract_doc(payload: bytes) -> tuple[list[str], str]:
             return ([], "html_error")
         return ([text], "ok")
     return ([], "unsupported")
-
-
-def extract_payload(payload: bytes) -> tuple[str, int, str]:
-    """The single-document extraction kernel: payload → (extracted_text,
-    n_pages, status). Thin wrapper over :func:`extract_doc`.
-
-    PDF path = the reference dataflow: decode ("pdfimages/identify",
-    ref: pypdfocr_gs.py:117-166) → geometry → rasterize at output dpi
-    ("gs", ref: pypdfocr_gs.py:170-218) → hOCR per page ("tesseract",
-    ref: pypdfocr_tesseract.py:154-183) → parse + reassemble
-    (ref: pypdfocr_pdf.py:269-351). HTML path = boilerplate strip.
-    """
-    pages, status = extract_doc(payload)
-    return ("\n".join(pages), len(pages), status)
-
-
-def extract_page_texts(payload: bytes) -> list[str]:
-    """Per-page extracted texts (for the page-early-exit routing, P2)."""
-    pages, status = extract_doc(payload)
-    return pages
 
 
 def oracle_extract(rows: list[dict], targets, default: str) -> list[dict]:

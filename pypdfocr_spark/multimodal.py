@@ -1,31 +1,27 @@
-"""Multimodal column plumbing (brief: image/audio/video as opaque binary
-columns with typed metadata; decode/feature-extract as Arrow-batched UDFs).
+"""Image codecs for the PDF image filters, and the binary media columns
+of the ``multimodal_features`` query.
 
-The container has no image/audio libraries, but the formats a crawl (or
-the reference's gs/pdfimages toolchain) actually emits mostly need none:
-:func:`decode_image` decodes the netpbm family (P2/P3/P5/P6),
-uncompressed BMP, 8/16-bit PNG (stdlib zlib, incl. Adam7 interlace),
-GIF87a/89a (full LZW incl. interlace), baseline TIFF (both byte
-orders; uncompressed/LZW/Deflate/PackBits strips; CCITT fax bilevel —
-T.6 Group 4, EOL-framed T.4 Group 3 1-D/2-D, and MH-RLE, what scanned
-documents actually carry; predictor, palette/MinIsWhite),
-and Huffman JPEG — baseline/extended sequential (SOF0/SOF1,
-interleaved or multi-scan) and progressive (SOF2, spectral selection +
-successive approximation) — with stdlib+numpy;
-:func:`decode_audio` decodes WAV / Sun AU / AIFF-C (PCM
-u8/s8/i16/i24/i32 both byte orders + IEEE float + G.711 A-law/μ-law,
-incl. EXTENSIBLE headers and the 80-bit extended-float AIFF rate) and
-FLAC in full (Rice residuals, fixed/LPC predictors, stereo
-decorrelation, CRC-verified);
-:func:`decode_video_frames` decodes Y4M; and
-:func:`extract_image_features` / :func:`sample_audio_windows` /
-:func:`sample_video_frames` run real decoded-sample features through
-the same mapInPandas plumbing. What's left behind ``NotImplementedError``
-(arithmetic-coded/hierarchical JPEG, compressed audio/video) is
-the pluggable gate — a real cluster swaps in a PIL/ffmpeg-backed kernel
-behind the same signature. The float32-tensor payload path
-(:func:`media_table`/:func:`extract_features`) is the byte-round-trip
-fidelity check the SQL oracle verifies.
+Two things live here:
+
+* The opaque-binary column path: :func:`media_table` packs each
+  embedding as a little-endian float32 payload, and
+  :func:`extract_features` decodes it back over Arrow batches to
+  (dim, md5 checksum, first/last/sum, L2 norm). The SQL oracle checks
+  that round trip byte for byte.
+* Stdlib+numpy image codecs, used by :mod:`pypdfocr_spark.pdfimages`.
+  :func:`decode_image` decodes the netpbm family (P2/P3/P5/P6),
+  uncompressed BMP, 8/16-bit PNG (incl. Adam7 interlace), the first
+  frame of a GIF, baseline TIFF (strips or tiles; uncompressed, LZW,
+  Deflate, PackBits, JPEG and CCITT fax), lossless WebP (VP8L), and
+  Huffman JPEG, sequential and progressive. The PDF filters call the
+  kernels directly: PNG unfilter, TIFF LZW, the CCITT G3/G4 fax coders
+  and :func:`encode_jpeg`. Formats that need a real codec library
+  (arithmetic-coded JPEG, lossy WebP, old-style JPEG-in-TIFF) raise
+  ``NotImplementedError``.
+
+The ``encode_*`` functions and the G3/MH fax encoders build the
+deterministic inputs that the decoder tests round-trip; they are not
+rate-optimized coders.
 """
 
 from __future__ import annotations
@@ -35,10 +31,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -101,82 +95,6 @@ def _parse_pnm_header(payload: bytes, n_fields: int) -> tuple[list[int], int]:
     if payload[i : i + 2] == b"\r\n":
         return fields, i + 2  # CRLF counts as one separator
     return fields, i + 1  # exactly ONE whitespace byte separates header and raster
-
-
-def probe_image(payload: bytes) -> dict:
-    """Header-only image typing across every supported raster format —
-    width/height/bit depth without decoding a pixel (for PNG/JPEG/BMP/
-    PNM directly; GIF/TIFF/WebP delegate to their existing probes and
-    are normalized to the same keys). The cheap first pass over an
-    image column, like :func:`probe_audio` / :func:`probe_video`."""
-    import struct
-
-    buf = bytes(payload)
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":
-        if buf[12:16] != b"IHDR":
-            raise ValueError("PNG without a leading IHDR chunk")
-        w, h = struct.unpack_from(">II", buf, 16)
-        depth, color_type, _comp, _filt, interlace = buf[24:29]
-        return {
-            "container": "png", "width": w, "height": h, "bits": depth,
-            "channels": {0: 1, 2: 3, 3: 3, 4: 2, 6: 4}[color_type],
-            "paletted": color_type == 3, "interlaced": interlace == 1,
-        }
-    if buf[:2] == b"\xff\xd8":
-        pos = 2
-        while pos + 4 <= len(buf):
-            if buf[pos] != 0xFF:
-                raise ValueError(f"JPEG marker expected at byte {pos}")
-            marker = buf[pos + 1]
-            if marker == 0xFF:
-                pos += 1
-                continue
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                prec, h, w, ncomp = struct.unpack_from(">BHHB", buf, pos + 4)
-                return {
-                    "container": "jpeg", "width": w, "height": h,
-                    "bits": prec, "channels": ncomp,
-                    "progressive": marker in (0xC2, 0xC6, 0xCA, 0xCE),
-                    "arithmetic": marker >= 0xC9,
-                }
-            (ln,) = struct.unpack_from(">H", buf, pos + 2)
-            pos += 2 + ln
-        raise ValueError("JPEG without an SOF frame header")
-    if buf[:2] == b"BM":
-        w, h_signed = struct.unpack_from("<ii", buf, 18)
-        bpp = struct.unpack_from("<H", buf, 28)[0]
-        compression = struct.unpack_from("<I", buf, 30)[0]
-        return {
-            "container": "bmp", "width": w, "height": abs(h_signed),
-            "bits": bpp if bpp <= 8 else 8,
-            "channels": 1 if bpp <= 8 else bpp // 8,
-            "compressed": compression != 0,
-        }
-    if buf[:6] in (b"GIF87a", b"GIF89a"):
-        out = probe_gif(buf)
-        out["container"] = "gif"
-        return out
-    if buf[:4] in (b"II*\x00", b"MM\x00*"):
-        t = probe_tiff(buf)
-        page = t["pages"][0]
-        return {
-            "container": "tiff", "width": page["width"],
-            "height": page["height"], "bits": page["bits"],
-            "compression": page["compression"], "n_pages": t["n_pages"],
-        }
-    if buf[:4] == b"RIFF" and buf[8:12] == b"WEBP":
-        return probe_webp(buf)
-    if buf[:2] in (b"P2", b"P3", b"P5", b"P6"):
-        (w, h, maxval), _ = _parse_pnm_header(buf, 3)
-        return {
-            "container": "pnm", "width": w, "height": h,
-            "bits": 16 if maxval > 255 else 8,
-            "channels": 3 if buf[:2] in (b"P3", b"P6") else 1,
-        }
-    raise NotImplementedError(
-        f"unsupported image magic {buf[:4]!r}: probe_image covers PNG, "
-        "JPEG, BMP, GIF, TIFF, WebP, and PNM"
-    )
 
 
 def decode_image(payload: bytes) -> "np.ndarray":
@@ -1617,9 +1535,9 @@ def _decode_bmp(payload: bytes) -> "np.ndarray":
 
 def _dib_to_array(raster: bytes, w: int, h_signed: int, bpp: int,
                   pal: "np.ndarray | None") -> "np.ndarray":
-    """Shared DIB raster-to-array kernel (BMP files and AVI '00db' video
-    frames carry the same rows): 4-byte-padded rows, bottom-up unless
-    height is negative, 8-bit palette / 24-bit BGR / 32-bit BGRA.
+    """DIB raster-to-array kernel of :func:`_decode_bmp`: 4-byte-padded
+    rows, bottom-up unless height is negative, 8-bit palette / 24-bit
+    BGR / 32-bit BGRA.
     Grayscale palettes collapse to (h, w); strict length framing."""
     h = abs(h_signed)
     row_size = ((bpp * w + 31) // 32) * 4
@@ -1670,7 +1588,7 @@ def encode_bmp(arr: "np.ndarray") -> bytes:
 
 def encode_pnm(arr: "np.ndarray", binary: bool = True) -> bytes:
     """Inverse of :func:`decode_image` for PNM — the deterministic fixture
-    builder tests and synthetic media tables use (uint8 only)."""
+    builder the tests use (uint8 only)."""
     arr = np.asarray(arr, dtype="uint8")
     if arr.ndim == 2:
         magic = b"P5" if binary else b"P2"
@@ -2395,39 +2313,6 @@ def _decode_tiff(payload: bytes) -> "np.ndarray":
     return _decode_tiff_ifd(payload, bo, tags)
 
 
-def probe_tiff(payload: bytes) -> dict:
-    """Page-level metadata without decoding any raster: walks the IFD
-    chain and reports per-page dimensions/compression — the scanned
-    multi-page shape the reference's PDF page iterator works over
-    (ref: pypdfocr/pypdfocr_pdf.py page loops)."""
-    bo, pages = _tiff_ifds(payload)
-    metas = []
-    for tags in pages:
-        metas.append(
-            {
-                "width": tags.get(256, [0])[0],
-                "height": tags.get(257, [0])[0],
-                "bits": tags.get(258, [1])[0],
-                "compression": tags.get(259, [1])[0],
-            }
-        )
-    return {"n_pages": len(pages), "pages": metas}
-
-
-def decode_tiff_pages(
-    payload: bytes, pages: "list[int] | None" = None
-) -> "Iterator[tuple[int, np.ndarray]]":
-    """Decode a multi-page TIFF page-by-page, yielding (page_no, array)
-    and decoding ONLY the requested pages — each IFD owns its strips, so
-    skipped pages cost one IFD walk, not a decode (the same skip-
-    unsampled economics as :func:`decode_video_frames`)."""
-    bo, ifds = _tiff_ifds(payload)
-    want = set(range(len(ifds))) if pages is None else set(pages)
-    for no, tags in enumerate(ifds):
-        if no in want:
-            yield no, _decode_tiff_ifd(payload, bo, tags)
-
-
 def _tiff_layout(
     tags: "dict[int, list[int]]", w: int, h: int, rps: int
 ) -> "list[tuple[int, int, int, int, int, int]]":
@@ -2483,8 +2368,7 @@ def _jpeg_abbrev_merge(tables: bytes, stream: bytes) -> bytes:
 def _decode_tiff_ifd(
     payload: bytes, bo: str, tags: "dict[int, list[int]]"
 ) -> "np.ndarray":
-    """Decode one IFD's raster — the per-page worker behind
-    :func:`_decode_tiff` and :func:`decode_tiff_pages`."""
+    """Decode one IFD's raster — the worker behind :func:`_decode_tiff`."""
 
     def one(tag: int, default: "int | None" = None) -> int:
         if tag not in tags:
@@ -2687,39 +2571,6 @@ def encode_tiff(
         photometric, bilevel, tile, jpeg_quant, jpeg_subsample, jpeg_tables,
     )
     return _tiff_chain(struct, byteorder, [spec])
-
-
-def encode_tiff_multipage(
-    arrs: "list[np.ndarray]",
-    compression: str = "none",
-    byteorder: str = "<",
-    rows_per_strip: "int | None" = None,
-    predictor: int = 1,
-    photometric: "str | None" = None,
-    bilevel: bool = False,
-    tile: "tuple[int, int] | None" = None,
-    jpeg_quant: int = 1,
-    jpeg_subsample: "tuple[int, int]" = (1, 1),
-    jpeg_tables: bool = False,
-) -> bytes:
-    """Multi-page TIFF: one IFD per page chained through the next-IFD
-    pointers (layout: header, every page's strips, then the IFD chain) —
-    the multi-page scanned-document container
-    :func:`decode_tiff_pages` walks. Pages may differ in size; the
-    encoding options apply to every page."""
-    import struct
-
-    if not arrs:
-        raise ValueError("encode_tiff_multipage needs at least one page")
-    specs = [
-        _tiff_page_spec(
-            a, compression, byteorder, rows_per_strip, predictor,
-            photometric, bilevel, tile, jpeg_quant, jpeg_subsample,
-            jpeg_tables,
-        )
-        for a in arrs
-    ]
-    return _tiff_chain(struct, byteorder, specs)
 
 
 def _jpeg_split_tables(stream: bytes) -> "tuple[bytes, bytes]":
@@ -3015,7 +2866,7 @@ def _tiff_chain(struct, byteorder, specs: "list[dict]") -> bytes:
 # gate. Decode covers GIF87a/GIF89a, global and local color tables,
 # interlaced rasters, extension blocks (skipped), and the deferred-clear
 # encoder variant; animated GIFs decode their FIRST frame (decode_image
-# returns one still — frame iteration is the video path's job).
+# returns one still).
 
 
 def _gif_subblocks(data: bytes, pos: int) -> "tuple[bytes, int]":
@@ -3248,8 +3099,7 @@ def _decode_gif(payload: bytes) -> "np.ndarray":
     """GIF87a/GIF89a decode to uint8 — first image descriptor only (an
     animated GIF's later frames are deltas against screen state; a still
     decode returns frame 0, the same choice PIL's ``Image.open`` makes
-    before ``seek`` — :func:`decode_gif_frames` is the composited
-    animation path). Grayscale palettes collapse to (h, w) and color
+    before ``seek``). Grayscale palettes collapse to (h, w) and color
     palettes expand to RGB via lookup, matching the PNG/BMP palette
     convention. Extensions (GCE, comments, application blocks) are
     skipped structurally; transparency is ignored — the transparent
@@ -3261,67 +3111,6 @@ def _decode_gif(payload: bytes) -> "np.ndarray":
     if bool((rgb[:, :, 0] == rgb[:, :, 1]).all() and (rgb[:, :, 1] == rgb[:, :, 2]).all()):
         return np.ascontiguousarray(rgb[:, :, 0])  # grayscale palette
     return np.ascontiguousarray(rgb)
-
-
-def probe_gif(payload: bytes) -> dict:
-    """Animation metadata from a full block walk with no LZW decode —
-    the cheap planner path, like :func:`probe_video`."""
-    screen_w, screen_h, _, _, frames = _gif_walk(bytes(payload))
-    return {
-        "width": screen_w,
-        "height": screen_h,
-        "n_frames": len(frames),
-        "animated": len(frames) > 1,
-        "delays_cs": [
-            (fr["gce"] or {}).get("delay_cs", 0) for fr in frames
-        ],
-    }
-
-
-def decode_gif_frames(
-    payload: bytes, max_frames: "int | None" = None
-) -> "Iterator[tuple[int, np.ndarray]]":
-    """Composited animated-GIF decode, yielding (frame_no, (screen_h,
-    screen_w, 3) RGB canvas) per frame with the GIF89a semantics real
-    viewers implement: frames draw into their sub-rectangle, transparent
-    pixels leave the canvas through, and each frame's disposal method
-    (keep / restore-background / restore-previous) prepares the next.
-    Unlike Y4M frames or TIFF pages, GIF frames are DELTAS — sampling
-    frame k still costs decoding frames 0..k, so the only skip lever is
-    ``max_frames`` truncation (the generator also stops paying when the
-    caller stops iterating)."""
-    screen_w, screen_h, gct, bg_index, frames = _gif_walk(bytes(payload))
-    if gct is not None and bg_index < len(gct):
-        background = gct[bg_index].copy()
-    else:
-        background = np.zeros(3, dtype="uint8")
-    canvas = np.broadcast_to(background, (screen_h, screen_w, 3)).copy()
-    for no, fr in enumerate(frames):
-        if max_frames is not None and no >= max_frames:
-            return
-        y0, x0 = fr["top"], fr["left"]
-        y1, x1 = min(y0 + fr["h"], screen_h), min(x0 + fr["w"], screen_w)
-        if y0 >= screen_h or x0 >= screen_w:
-            yield no, canvas.copy()  # degenerate off-screen frame
-            continue
-        gce = fr["gce"] or {}
-        disposal = gce.get("disposal", 0)
-        if disposal == 3:
-            saved = canvas[y0:y1, x0:x1].copy()
-        idx = _gif_frame_indices(fr)[: y1 - y0, : x1 - x0]
-        patch = fr["pal"][idx]
-        region = canvas[y0:y1, x0:x1]
-        transparent = gce.get("transparent")
-        if transparent is None:
-            region[:] = patch
-        else:
-            opaque = idx != transparent
-            region[opaque] = patch[opaque]
-        yield no, canvas.copy()
-        if disposal == 2:
-            canvas[y0:y1, x0:x1] = background
-        elif disposal == 3:
-            canvas[y0:y1, x0:x1] = saved
 
 
 def encode_gif(arr: "np.ndarray", interlace: bool = False) -> bytes:
@@ -3364,3293 +3153,6 @@ def encode_gif(arr: "np.ndarray", interlace: bool = False) -> bytes:
         out += bytes([len(chunk)]) + chunk
     out += b"\x00\x3b"
     return bytes(out)
-
-
-def encode_gif_animated(
-    frames_spec: "list[dict]", screen: "tuple[int, int] | None" = None
-) -> bytes:
-    """Animated-GIF fixture builder — the inverse of
-    :func:`decode_gif_frames`. Each spec dict: ``img`` ((h, w) or
-    (h, w, 3) uint8), optional ``left``/``top`` sub-rectangle placement,
-    ``disposal`` (0-3), ``transparent`` (an RGB tuple whose pixels punch
-    through to the prior canvas), ``delay_cs``, ``interlace``. One
-    global palette over every frame's colors (≤256 or raises)."""
-    import struct
-
-    if not frames_spec:
-        raise ValueError("encode_gif_animated needs at least one frame")
-    rgbs = []
-    for sp in frames_spec:
-        a = np.asarray(sp["img"], dtype="uint8")
-        rgbs.append(np.stack([a] * 3, axis=-1) if a.ndim == 2 else a)
-    colors = np.unique(np.concatenate([r.reshape(-1, 3) for r in rgbs]), axis=0)
-    if len(colors) > 256:
-        raise ValueError(f"GIF palette overflow: {len(colors)} unique colors > 256")
-    pal_bits = max(1, (len(colors) - 1).bit_length())
-    table = np.zeros((1 << pal_bits, 3), dtype="uint8")
-    table[: len(colors)] = colors
-    lut = {tuple(c): i for i, c in enumerate(colors)}
-    if screen is None:
-        screen = (
-            max(sp.get("left", 0) + r.shape[1] for sp, r in zip(frames_spec, rgbs)),
-            max(sp.get("top", 0) + r.shape[0] for sp, r in zip(frames_spec, rgbs)),
-        )
-    out = bytearray(b"GIF89a")
-    out += struct.pack(
-        "<HHBBB", screen[0], screen[1], 0x80 | ((pal_bits - 1) & 0x07), 0, 0
-    )
-    out += table.tobytes()
-    mcs = max(2, pal_bits)
-    for sp, rgb in zip(frames_spec, rgbs):
-        h, w = rgb.shape[:2]
-        idx = np.array(
-            [lut[tuple(px)] for px in rgb.reshape(-1, 3)], dtype="uint8"
-        ).reshape(h, w)
-        transparent = sp.get("transparent")
-        tindex = lut[tuple(np.asarray(transparent, dtype="uint8").tolist()
-                           if not np.isscalar(transparent)
-                           else (transparent,) * 3)] if transparent is not None else None
-        gpacked = ((sp.get("disposal", 0) & 7) << 2) | (1 if tindex is not None else 0)
-        out += b"\x21\xf9\x04" + bytes([gpacked]) + struct.pack(
-            "<H", sp.get("delay_cs", 0)
-        ) + bytes([tindex or 0, 0])
-        interlace = bool(sp.get("interlace"))
-        if interlace:
-            order = np.concatenate(
-                [np.arange(start, h, step) for start, step in _GIF_INTERLACE]
-            )
-            idx = idx[order]
-        out += b"\x2c" + struct.pack(
-            "<HHHHB", sp.get("left", 0), sp.get("top", 0), w, h,
-            0x40 if interlace else 0,
-        )
-        lzw = _gif_lzw_encode(idx.tobytes(), mcs)
-        out += bytes([mcs])
-        for off in range(0, len(lzw), 255):
-            chunk = lzw[off : off + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-# --- video: Y4M (YUV4MPEG2) container ------------------------------------
-#
-# Y4M is the one video container that needs no entropy codec at all — a
-# plain-text stream header, then per frame a "FRAME\n" marker and raw
-# planar YCbCr samples. It is exactly what `ffmpeg -f yuv4mpegpipe`
-# emits/consumes, so it is the natural raw-interchange format for a
-# frame-sampling stage the way netpbm is for gs/pdfimages stills.
-# Compressed containers (H.264/VP9/AV1 in MP4/WebM) stay behind the
-# pluggable NotImplementedError gate — those genuinely need ffmpeg.
-
-_Y4M_SUBSAMPLE = {
-    # colorspace tag prefix -> (chroma x-step, chroma y-step); None = no chroma.
-    # 420jpeg/420mpeg2/420paldv differ only in chroma *siting*, which
-    # nearest-neighbor upsampling cannot represent — all decode alike here.
-    "mono": None,
-    "444": (1, 1),
-    "422": (2, 1),
-    "420": (2, 2),
-}
-
-
-# Explicit tag registry — 420p10 (10-bit), 411, 444alpha etc. must hit the
-# gate, so suffix heuristics are out.
-_Y4M_ALIASES = {"420jpeg": "420", "420mpeg2": "420", "420paldv": "420"}
-
-
-def _y4m_subsample(cs: str):
-    base = _Y4M_ALIASES.get(cs, cs)
-    if base not in _Y4M_SUBSAMPLE:
-        raise NotImplementedError(
-            f"Y4M colorspace C{cs}: only mono/444/422/420* 8-bit decode "
-            "without a codec library"
-        )
-    return _Y4M_SUBSAMPLE[base]
-
-
-def _y4m_layout(w: int, h: int, cs: str):
-    """Resolve a colorspace tag to (subsample, frame_bytes); raises the
-    NotImplementedError gate for tagged bit depths (e.g. 420p10) and
-    unknown samplings (411, alpha)."""
-    sub = _y4m_subsample(cs)
-    if sub is None:
-        return None, w * h
-    sx, sy = sub
-    if w % sx or h % sy:
-        raise ValueError(f"Y4M {w}x{h} is not a multiple of the C{cs} sampling")
-    return sub, w * h + 2 * (w // sx) * (h // sy)
-
-
-def _parse_y4m_header(payload: bytes):
-    """Parse the YUV4MPEG2 stream header line; returns (w, h, colorspace,
-    offset of the first FRAME marker). F/I/A/X parameters are validated
-    as present-and-ignored (frame rate and aspect don't affect pixels)."""
-    nl = bytes(payload).find(b"\n", 0, 512)
-    if nl < 0 or bytes(payload[:9]) != b"YUV4MPEG2":
-        raise NotImplementedError(
-            "unsupported video payload: only the Y4M (YUV4MPEG2) raw "
-            "container decodes without ffmpeg on the cluster"
-        )
-    w = h = None
-    cs = "420jpeg"  # the documented Y4M default
-    for tok in bytes(payload[9:nl]).split(b" "):
-        if not tok:
-            continue
-        key, val = chr(tok[0]), tok[1:]
-        if key == "W":
-            w = int(val)
-        elif key == "H":
-            h = int(val)
-        elif key == "C":
-            cs = val.decode("ascii")
-        elif key == "I":
-            if val not in (b"p", b"?"):
-                raise NotImplementedError(
-                    f"interlaced Y4M (I{val.decode('ascii', 'replace')}) "
-                    "needs a deinterlace pass"
-                )
-        elif key in ("F", "A", "X"):
-            pass  # frame rate / aspect / comment: no effect on samples
-        else:
-            raise ValueError(f"unknown Y4M stream parameter {key!r}")
-    if not w or not h:
-        raise ValueError("Y4M header missing W/H")
-    return w, h, cs, nl + 1
-
-
-def _y4m_frames(payload: bytes):
-    """Yield (frame_no, start, end) byte ranges of each frame's raw plane
-    data — header walk only, no sample is touched, so callers can skip
-    unsampled frames for free."""
-    w, h, cs, pos = _parse_y4m_header(payload)
-    _, frame_bytes = _y4m_layout(w, h, cs)
-    n = len(payload)
-    buf = bytes(payload)
-    i = 0
-    while pos < n:
-        nl = buf.find(b"\n", pos, pos + 256)
-        if nl < 0 or buf[pos : pos + 5] != b"FRAME":
-            raise ValueError(f"expected FRAME marker at byte {pos}")
-        start = nl + 1
-        end = start + frame_bytes
-        if end > n:
-            raise ValueError(
-                f"truncated Y4M frame {i}: {n - start} bytes, expected {frame_bytes}"
-            )
-        yield i, start, end
-        pos = end
-        i += 1
-
-
-def probe_video(payload: bytes) -> dict:
-    """Container metadata + frame count from a header walk (no pixel is
-    decoded): the cheap path a sampling planner uses before deciding
-    which frames to pay for. Y4M probes (and decodes) in full;
-    MP4/ISO-BMFF and AVI probe header-only — at crawl scale the typing /
-    duration / dimensions pass runs over everything while the
-    codec-backed decode only runs where a sampler asked for pixels."""
-    buf = bytes(payload)
-    if buf[4:8] == b"ftyp":
-        return _probe_mp4(buf)
-    if buf[:4] == b"\x1a\x45\xdf\xa3":
-        return _probe_mkv(buf)
-    if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
-        return _probe_avi(buf)
-    w, h, cs, _ = _parse_y4m_header(buf)
-    n_frames = sum(1 for _ in _y4m_frames(buf))
-    return {"container": "y4m", "width": w, "height": h, "colorspace": cs,
-            "n_frames": n_frames}
-
-
-def _mp4_boxes(buf: bytes, lo: int, hi: int):
-    """ISO-BMFF box walk over ``buf[lo:hi]``: yields (fourcc, body_lo,
-    box_end), honoring 64-bit largesize and size-0 to-end boxes."""
-    import struct
-
-    pos = lo
-    while pos + 8 <= hi:
-        (size,) = struct.unpack_from(">I", buf, pos)
-        kind = buf[pos + 4 : pos + 8].decode("latin-1")
-        body = pos + 8
-        if size == 1:  # 64-bit largesize
-            (size,) = struct.unpack_from(">Q", buf, pos + 8)
-            body = pos + 16
-        elif size == 0:  # to end of enclosing box
-            size = hi - pos
-        if size < body - pos or pos + size > hi:
-            raise ValueError(f"MP4 box {kind!r} overruns its container")
-        yield kind, body, pos + size
-        pos += size
-
-
-def _probe_mp4(buf: bytes) -> dict:
-    """ISO-BMFF (MP4/MOV) box walk: ftyp brand, mvhd timescale/duration,
-    per-track tkhd dimensions and hdlr handler types. Pure container
-    arithmetic — the sample data (H.264/AAC/…) is never touched; decode
-    stays behind the codec gate."""
-    import struct
-
-    def boxes(lo: int, hi: int):
-        return _mp4_boxes(buf, lo, hi)
-
-    info: dict = {"container": "mp4", "tracks": []}
-    for kind, body, end in boxes(0, len(buf)):
-        if kind == "ftyp":
-            info["brand"] = buf[body : body + 4].decode("latin-1")
-        elif kind == "moov":
-            for k2, b2, e2 in boxes(body, end):
-                if k2 == "mvhd":
-                    ver = buf[b2]
-                    if ver == 1:
-                        ts, dur = struct.unpack_from(">IQ", buf, b2 + 20)
-                    else:
-                        ts, dur = struct.unpack_from(">II", buf, b2 + 12)
-                    if ts == 0:
-                        raise ValueError("MP4 mvhd timescale is zero")
-                    info["timescale"] = ts
-                    info["duration_sec"] = dur / ts
-                elif k2 == "trak":
-                    trk: dict = {}
-                    for k3, b3, e3 in boxes(b2, e2):
-                        if k3 == "tkhd":
-                            ver = buf[b3]
-                            off = b3 + (88 if ver == 1 else 76)
-                            wfix, hfix = struct.unpack_from(">II", buf, off)
-                            trk["width"] = wfix / 65536.0
-                            trk["height"] = hfix / 65536.0
-                        elif k3 == "mdia":
-                            for k4, b4, _e4 in boxes(b3, e3):
-                                if k4 == "hdlr":
-                                    trk["handler"] = buf[b4 + 8 : b4 + 12].decode(
-                                        "latin-1"
-                                    )
-                    info["tracks"].append(trk)
-    if "timescale" not in info:
-        raise ValueError("MP4 without a moov/mvhd box")
-    vids = [t for t in info["tracks"] if t.get("handler") == "vide"]
-    if vids:
-        info["width"] = int(vids[0]["width"])
-        info["height"] = int(vids[0]["height"])
-    return info
-
-
-class _BitReader:
-    """MSB-first bit reader with unsigned/signed Exp-Golomb — the H.264
-    RBSP primitive (ITU-T H.264 §9.1)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def u(self, n: int) -> int:
-        out = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("SPS bitstream exhausted")
-            out = (out << 1) | ((self.data[byte] >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("Exp-Golomb run too long")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k & 1 else -(k // 2)
-
-
-_H264_HIGH_PROFILES = {100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135}
-
-
-def _parse_h264_sps(nal: bytes) -> dict:
-    """Coded dimensions from an H.264 sequence parameter set: strip
-    emulation-prevention bytes, walk the RBSP fields up to the frame
-    cropping window, and apply the 4:2:0 crop-unit arithmetic
-    (H.264 §7.3.2.1.1 / §7.4.2.1.1). Pixel decode stays gated — this is
-    the header math a sampling planner needs for true coded dims."""
-    if not nal or nal[0] & 0x1F != 7:
-        raise ValueError("not an H.264 SPS NAL unit")
-    rbsp = bytearray()
-    i = 1
-    while i < len(nal):  # strip 00 00 03 emulation prevention
-        if i + 2 < len(nal) and nal[i] == nal[i + 1] == 0 and nal[i + 2] == 3:
-            rbsp += nal[i : i + 2]
-            i += 3
-        else:
-            rbsp.append(nal[i])
-            i += 1
-    r = _BitReader(bytes(rbsp))
-    profile_idc = r.u(8)
-    r.u(8)  # constraint flags + reserved
-    level_idc = r.u(8)
-    r.ue()  # seq_parameter_set_id
-    chroma_format_idc = 1
-    if profile_idc in _H264_HIGH_PROFILES:
-        chroma_format_idc = r.ue()
-        if chroma_format_idc == 3:
-            r.u(1)  # separate_colour_plane_flag
-        r.ue()  # bit_depth_luma_minus8
-        r.ue()  # bit_depth_chroma_minus8
-        r.u(1)  # qpprime_y_zero_transform_bypass_flag
-        if r.u(1):  # seq_scaling_matrix_present_flag
-            raise NotImplementedError(
-                "H.264 SPS with scaling matrices: dimension parse stops at "
-                "the scaling-list syntax"
-            )
-    r.ue()  # log2_max_frame_num_minus4
-    poc_type = r.ue()
-    if poc_type == 0:
-        r.ue()
-    elif poc_type == 1:
-        r.u(1)
-        r.se()
-        r.se()
-        for _ in range(r.ue()):
-            r.se()
-    r.ue()  # max_num_ref_frames
-    r.u(1)  # gaps_in_frame_num_value_allowed_flag
-    pw_mbs = r.ue() + 1
-    ph_units = r.ue() + 1
-    frame_mbs_only = r.u(1)
-    if not frame_mbs_only:
-        r.u(1)  # mb_adaptive_frame_field_flag
-    r.u(1)  # direct_8x8_inference_flag
-    width = pw_mbs * 16
-    height = (2 - frame_mbs_only) * ph_units * 16
-    if r.u(1):  # frame_cropping_flag
-        left, right, top, bottom = r.ue(), r.ue(), r.ue(), r.ue()
-        # SubWidthC/SubHeightC crop units (§7.4.2.1.1, Table 6-1)
-        cux = {0: 1, 1: 2, 2: 2, 3: 1}[chroma_format_idc]
-        cuy = {0: 1, 1: 2, 2: 1, 3: 1}[chroma_format_idc] * (2 - frame_mbs_only)
-        width -= (left + right) * cux
-        height -= (top + bottom) * cuy
-    return {
-        "profile_idc": profile_idc,
-        "level_idc": level_idc,
-        "chroma_format_idc": chroma_format_idc,
-        "width": width,
-        "height": height,
-        "frame_mbs_only": bool(frame_mbs_only),
-    }
-
-
-def mp4_sample_index(payload: bytes, handler: str = "vide") -> dict:
-    """Per-sample byte index of an MP4 track from the stbl sample tables
-    — the unit of work a distributed frame sampler ships to executors:
-    every sample's absolute byte offset and size (stsc chunk runs ×
-    stco/co64 chunk offsets × stsz sizes), sync flag (stss; absent =
-    every sample is sync), and decode timestamp in seconds (stts runs
-    over the mdhd timescale). The stsd entry contributes the codec
-    fourcc, and an avcC configuration record yields true coded
-    dimensions via the SPS parse — all container arithmetic, no sample
-    byte is ever touched. With this index, sampling 1-in-N keyframes of
-    a 100 TB corpus reads only the moov boxes plus the selected byte
-    ranges."""
-    import struct
-
-    buf = bytes(payload)
-    if buf[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF (MP4) payload")
-
-    def children(lo, hi):
-        return list(_mp4_boxes(buf, lo, hi))
-
-    def find(boxes, kind):
-        for k, b, e in boxes:
-            if k == kind:
-                return b, e
-        return None
-
-    moov = find(children(0, len(buf)), "moov")
-    if moov is None:
-        raise ValueError("MP4 without a moov box")
-    for k, b, e in children(*moov):
-        if k != "trak":
-            continue
-        trak = children(b, e)
-        mdia = find(trak, "mdia")
-        if mdia is None:
-            continue
-        mdia_boxes = children(*mdia)
-        hd = find(mdia_boxes, "hdlr")
-        if hd is None or buf[hd[0] + 8 : hd[0] + 12].decode("latin-1") != handler:
-            continue
-        mh = find(mdia_boxes, "mdhd")
-        if mh is None:
-            raise ValueError("MP4 track without an mdhd box")
-        ver = buf[mh[0]]
-        timescale = struct.unpack_from(">I", buf, mh[0] + (20 if ver == 1 else 12))[0]
-        if timescale == 0:
-            raise ValueError("MP4 mdhd timescale is zero")
-        minf = find(mdia_boxes, "minf")
-        stbl = minf and find(children(*minf), "stbl")
-        if not stbl:
-            raise ValueError("MP4 track without an stbl box")
-        tables = {k2: (b2, e2) for k2, b2, e2 in children(*stbl)}
-
-        for need in ("stsd", "stts", "stsz", "stsc"):
-            if need not in tables:
-                raise ValueError(f"MP4 stbl without an {need} box")
-        if "stco" not in tables and "co64" not in tables:
-            raise ValueError("MP4 stbl without an stco/co64 box")
-
-        # stsd → codec fourcc (+ avcC coded dims when present)
-        sb, se_ = tables["stsd"]
-        n_entries = struct.unpack_from(">I", buf, sb + 4)[0]
-        if n_entries < 1:
-            raise ValueError("MP4 stsd with no sample entries")
-        entry_lo = sb + 8
-        codec = buf[entry_lo + 4 : entry_lo + 8].decode("latin-1")
-        out: dict = {"codec": codec, "timescale": timescale}
-        if handler == "vide":
-            w, h = struct.unpack_from(">HH", buf, entry_lo + 8 + 24)
-            out["width"], out["height"] = w, h
-            # VisualSampleEntry fixed part is 78 bytes; then child boxes
-            (entry_size,) = struct.unpack_from(">I", buf, entry_lo)
-            ext = find(
-                children(entry_lo + 8 + 78, entry_lo + entry_size), "avcC"
-            )
-            if ext is not None:
-                alo = ext[0]
-                n_sps = buf[alo + 5] & 0x1F
-                if n_sps:
-                    (sps_len,) = struct.unpack_from(">H", buf, alo + 6)
-                    sps = _parse_h264_sps(buf[alo + 8 : alo + 8 + sps_len])
-                    out["sps"] = sps
-                    out["width"], out["height"] = sps["width"], sps["height"]
-
-        # stsz → per-sample sizes
-        zb = tables["stsz"][0]
-        uniform, n_samples = struct.unpack_from(">II", buf, zb + 4)
-        if uniform:
-            sizes = [uniform] * n_samples
-        else:
-            sizes = list(struct.unpack_from(f">{n_samples}I", buf, zb + 12))
-
-        # stts → per-sample decode times (in timescale units)
-        tb = tables["stts"][0]
-        (n_tt,) = struct.unpack_from(">I", buf, tb + 4)
-        dts = []
-        t = 0
-        for i in range(n_tt):
-            cnt, delta = struct.unpack_from(">II", buf, tb + 8 + 8 * i)
-            for _ in range(cnt):
-                dts.append(t)
-                t += delta
-        if len(dts) != n_samples:
-            raise ValueError(
-                f"stts covers {len(dts)} samples, stsz declares {n_samples}"
-            )
-
-        # stss → sync set (absent = all sync)
-        if "stss" in tables:
-            yb = tables["stss"][0]
-            (n_sync,) = struct.unpack_from(">I", buf, yb + 4)
-            sync = set(struct.unpack_from(f">{n_sync}I", buf, yb + 8))
-        else:
-            sync = None
-
-        # stsc runs × stco/co64 → absolute per-sample offsets
-        cb = tables["stsc"][0]
-        (n_runs,) = struct.unpack_from(">I", buf, cb + 4)
-        runs = [
-            struct.unpack_from(">III", buf, cb + 8 + 12 * i)[:2]
-            for i in range(n_runs)
-        ]
-        if "co64" in tables:
-            ob = tables["co64"][0]
-            (n_chunks,) = struct.unpack_from(">I", buf, ob + 4)
-            chunk_offs = struct.unpack_from(f">{n_chunks}Q", buf, ob + 8)
-        else:
-            ob = tables["stco"][0]
-            (n_chunks,) = struct.unpack_from(">I", buf, ob + 4)
-            chunk_offs = struct.unpack_from(f">{n_chunks}I", buf, ob + 8)
-        per_chunk = []
-        for i, (first, spc) in enumerate(runs):
-            last = runs[i + 1][0] - 1 if i + 1 < n_runs else n_chunks
-            per_chunk += [spc] * (last - first + 1)
-        if len(per_chunk) != n_chunks:
-            raise ValueError(
-                f"stsc runs cover {len(per_chunk)} chunks, stco has {n_chunks}"
-            )
-        samples = []
-        s = 0
-        for ci, coff in enumerate(chunk_offs):
-            pos = coff
-            for _ in range(per_chunk[ci]):
-                if s >= n_samples:
-                    raise ValueError("stsc maps more samples than stsz declares")
-                samples.append(
-                    {
-                        "offset": int(pos),
-                        "size": sizes[s],
-                        "sync": sync is None or (s + 1) in sync,
-                        "dts_sec": dts[s] / timescale,
-                    }
-                )
-                pos += sizes[s]
-                s += 1
-        if s != n_samples:
-            raise ValueError(f"stsc maps {s} samples, stsz declares {n_samples}")
-        out["n_samples"] = n_samples
-        out["duration_sec"] = t / timescale
-        out["samples"] = samples
-        return out
-    raise ValueError(f"MP4 without a {handler!r} track")
-
-
-def _riff_walk(buf: bytes, lo: int, hi: int):
-    """Little-endian RIFF chunk walk over ``buf[lo:hi]``: yields
-    (fourcc, body_lo, body_hi); chunks are padded to even offsets."""
-    import struct
-
-    pos = lo
-    while pos + 8 <= hi:
-        cid = buf[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", buf, pos + 4)
-        body = pos + 8
-        if body + size > hi:
-            raise ValueError(f"AVI chunk {cid!r} overruns its container")
-        yield cid, body, body + size
-        pos = body + size + (size & 1)
-
-
-def _parse_avi(buf: bytes) -> dict:
-    """Structural AVI parse: avih main header, per-stream strh/strf
-    (video strf = BITMAPINFOHEADER + palette), and the movi body span.
-    Header walk only — no stream chunk is touched."""
-    import struct
-
-    if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-    (total,) = struct.unpack_from("<I", buf, 4)
-    if total + 8 != len(buf):
-        raise ValueError(f"RIFF declares {total + 8} bytes, payload has {len(buf)}")
-    info: dict = {"avih": None, "streams": [], "movi": None}
-    for cid, body, end in _riff_walk(buf, 12, len(buf)):
-        if cid != b"LIST":
-            continue
-        kind = buf[body : body + 4]
-        if kind == b"movi":
-            info["movi"] = (body + 4, end)
-        elif kind == b"hdrl":
-            for c2, b2, e2 in _riff_walk(buf, body + 4, end):
-                if c2 == b"avih":
-                    if e2 - b2 < 40:
-                        raise ValueError(
-                            f"AVI avih chunk is {e2 - b2} bytes, needs >= 40"
-                        )
-                    (us_per_frame, _maxbps, _pad, _flags, n_frames, _init,
-                     streams, _bufsz, w, h) = struct.unpack_from("<10I", buf, b2)
-                    info["avih"] = {
-                        "us_per_frame": us_per_frame, "n_frames": n_frames,
-                        "n_streams": streams, "width": w, "height": h,
-                    }
-                elif c2 == b"LIST" and buf[b2 : b2 + 4] == b"strl":
-                    s: dict = {}
-                    for c3, b3, e3 in _riff_walk(buf, b2 + 4, e2):
-                        if c3 == b"strh":
-                            s["type"] = buf[b3 : b3 + 4]
-                            s["handler"] = buf[b3 + 4 : b3 + 8]
-                            s["length"] = struct.unpack_from("<I", buf, b3 + 32)[0]
-                        elif c3 == b"strf" and s.get("type") == b"vids":
-                            bi_size, w, h_signed = struct.unpack_from("<Iii", buf, b3)
-                            bpp = struct.unpack_from("<H", buf, b3 + 14)[0]
-                            s.update(
-                                width=w, height=h_signed, bpp=bpp,
-                                compression=buf[b3 + 16 : b3 + 20],
-                                palette=buf[b3 + bi_size : e3],
-                            )
-                    info["streams"].append(s)
-    if info["avih"] is None:
-        raise ValueError("AVI without an avih header")
-    return info
-
-
-def _avi_codec_name(stream: dict) -> str:
-    comp = stream.get("compression", b"\x00\x00\x00\x00")
-    if int.from_bytes(comp, "little") == 0 or comp in (b"DIB ", b"RGB "):
-        return "raw"
-    return comp.decode("latin-1").strip()
-
-
-def _probe_avi(buf: bytes) -> dict:
-    """AVI (RIFF) probe from the avih main header: frame timing, frame
-    count, dimensions — plus the video stream's codec fourcc when an
-    strl header is present. Header-only, the stream data stays coded."""
-    info = _parse_avi(buf)
-    avih = info["avih"]
-    out = {
-        "container": "avi",
-        "width": avih["width"],
-        "height": avih["height"],
-        "n_frames": avih["n_frames"],
-        "n_streams": avih["n_streams"],
-        "fps": 1e6 / avih["us_per_frame"] if avih["us_per_frame"] else None,
-        "duration_sec": avih["n_frames"] * avih["us_per_frame"] / 1e6,
-    }
-    vids = [s for s in info["streams"] if s.get("type") == b"vids"]
-    if vids:
-        out["codec"] = _avi_codec_name(vids[0])
-    return out
-
-
-def _dht_segment(tc: int, th: int, table) -> bytes:
-    import struct
-
-    bits, vals = table
-    body = bytes([(tc << 4) | th] + list(bits)) + bytes(vals)
-    return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
-
-
-def _mjpeg_with_tables(chunk: bytes) -> bytes:
-    """OpenDML MJPEG frames may omit DHT segments, relying on the T.81
-    Annex K typical tables; inject them before the first SOS when the
-    frame carries none so :func:`_decode_jpeg` sees a complete stream."""
-    import struct
-
-    if chunk[:2] != b"\xff\xd8":
-        raise ValueError("AVI MJPEG chunk does not start with a JPEG SOI")
-    pos = 2
-    while pos + 4 <= len(chunk):
-        if chunk[pos] != 0xFF:
-            raise ValueError(f"JPEG marker expected at byte {pos}")
-        marker = chunk[pos + 1]
-        if marker == 0xFF:  # fill byte
-            pos += 1
-            continue
-        if marker == 0xC4:
-            return chunk  # carries its own tables
-        if marker == 0xDA:  # SOS with no DHT seen → inject Annex K
-            dht = (
-                _dht_segment(0, 0, _K_DC_LUMA) + _dht_segment(1, 0, _K_AC_LUMA)
-                + _dht_segment(0, 1, _K_DC_CHROMA) + _dht_segment(1, 1, _K_AC_CHROMA)
-            )
-            return chunk[:pos] + dht + chunk[pos:]
-        (ln,) = struct.unpack_from(">H", chunk, pos + 2)
-        pos += 2 + ln
-    raise ValueError("JPEG chunk without an SOS scan")
-
-
-def _avi_video_spans(buf: bytes):
-    """(stream-format dict, [(frame_no, start, end)]) for the first
-    video stream: a movi chunk walk (recursing into 'rec ' groups) that
-    reads chunk headers only — sampling N of F frames converts N."""
-    info = _parse_avi(buf)
-    if info["movi"] is None:
-        raise ValueError("AVI without a movi list")
-    vidx = next(
-        (i for i, s in enumerate(info["streams"]) if s.get("type") == b"vids"), None
-    )
-    if vidx is None:
-        raise ValueError("AVI without a video (vids) stream")
-    prefix = b"%02d" % vidx
-    spans: "list[tuple[int, int]]" = []
-
-    def walk(lo: int, hi: int) -> None:
-        for cid, body, end in _riff_walk(buf, lo, hi):
-            if cid == b"LIST" and buf[body : body + 4] == b"rec ":
-                walk(body + 4, end)
-            elif cid[:2] == prefix and cid[2:] in (b"dc", b"db"):
-                spans.append((body, end))
-
-    walk(*info["movi"])
-    return info["streams"][vidx], [(i, s, e) for i, (s, e) in enumerate(spans)]
-
-
-def _avi_frame_decoder(stream: dict):
-    """Per-frame decode closure for a parsed AVI video stream: MJPEG
-    chunks route through the in-repo JPEG decoder (with the Annex-K DHT
-    fixup), BI_RGB chunks through the shared DIB kernel. Every other
-    fourcc is a real codec dependency and stays gated."""
-    codec = _avi_codec_name(stream)
-    if codec in ("MJPG", "mjpg", "dmb1"):
-        def dec(buf: bytes, start: int, end: int) -> "np.ndarray":
-            if end == start:
-                raise ValueError(
-                    "zero-length AVI frame chunk (dropped-frame placeholder)"
-                )
-            return _decode_jpeg(_mjpeg_with_tables(bytes(buf[start:end])))
-        return dec
-    if codec == "raw":
-        w, hs, bpp = stream["width"], stream["height"], stream["bpp"]
-        pal = None
-        if bpp == 8:
-            pal_bytes = stream.get("palette", b"")
-            pal = np.frombuffer(pal_bytes, dtype="u1")
-            pal = pal[: len(pal) // 4 * 4].reshape(-1, 4)[:, :3][:, ::-1]
-
-        def dec(buf: bytes, start: int, end: int) -> "np.ndarray":
-            if end == start:
-                raise ValueError(
-                    "zero-length AVI frame chunk (dropped-frame placeholder)"
-                )
-            return _dib_to_array(bytes(buf[start:end]), w, hs, bpp, pal)
-        return dec
-    raise NotImplementedError(
-        f"AVI video codec {codec!r}: only MJPEG and uncompressed DIB frames "
-        "decode without a codec library; probe_video covers container typing"
-    )
-
-
-def _video_spans(buf: bytes):
-    """Container dispatch for frame access: ([(frame_no, start, end)],
-    per-frame decode fn). Y4M and AVI (MJPEG / raw DIB) decode; ISO-BMFF
-    sample data is codec-coded and stays behind the gate."""
-    if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
-        stream, spans = _avi_video_spans(buf)
-        return spans, _avi_frame_decoder(stream)
-    if buf[4:8] == b"ftyp":
-        raise NotImplementedError(
-            "ISO-BMFF (MP4) video sample data is codec-coded (H.264/HEVC/…) "
-            "and needs ffmpeg; probe_video covers container typing and "
-            "mp4_sample_index maps every sample's byte range"
-        )
-    if buf[:4] == b"\x1a\x45\xdf\xa3":
-        raise NotImplementedError(
-            "Matroska/WebM block data is codec-coded (VP8/VP9/AV1/…) and "
-            "needs ffmpeg; probe_video covers container typing"
-        )
-    w, h, cs, _ = _parse_y4m_header(buf)
-    sub, _ = _y4m_layout(w, h, cs)
-    spans = list(_y4m_frames(buf))
-    return spans, lambda b, s, e: _y4m_frame_to_array(b[s:e], w, h, sub)
-
-
-# MPEG audio frame-header tables (ISO/IEC 11172-3 / 13818-3): bitrates
-# in kbit/s by (version-group, layer), sample rates by version. A probe
-# walks frame headers only — the filterbank/Huffman payload is never
-# touched, so MP3 typing, duration, and VBR detection are exact without
-# an audio codec.
-_MPEG_BITRATES = {
-    (1, 1): (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
-    (1, 2): (0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
-    (1, 3): (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-    (2, 1): (0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),
-    (2, 2): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-    (2, 3): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-}
-_MPEG_RATES = {1: (44100, 48000, 32000), 2: (22050, 24000, 16000),
-               25: (11025, 12000, 8000)}
-
-
-def _mp3_frame_header(buf: bytes, pos: int):
-    """Parse one MPEG audio frame header at ``pos``; returns (frame_len,
-    info dict) or None if the 4 bytes are not a valid header."""
-    if pos + 4 > len(buf):
-        return None
-    b0, b1, b2, b3 = buf[pos : pos + 4]
-    if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
-        return None
-    version = {0: 25, 2: 2, 3: 1}.get((b1 >> 3) & 3)
-    layer = {1: 3, 2: 2, 3: 1}.get((b1 >> 1) & 3)
-    if version is None or layer is None:
-        return None
-    br_idx = b2 >> 4
-    sr_idx = (b2 >> 2) & 3
-    if br_idx in (0, 15) or sr_idx == 3:
-        return None  # free-format and reserved stay unprobed
-    group = 1 if version == 1 else 2
-    bitrate = _MPEG_BITRATES[(group, layer)][br_idx] * 1000
-    rate = _MPEG_RATES[version][sr_idx]
-    padding = (b2 >> 1) & 1
-    mode = (b3 >> 6) & 3
-    if layer == 1:
-        samples = 384
-        frame_len = (12 * bitrate // rate + padding) * 4
-    else:
-        samples = 1152 if (layer == 2 or version == 1) else 576
-        frame_len = samples // 8 * bitrate // rate + padding
-    return frame_len, {
-        "version": {1: "1", 2: "2", 25: "2.5"}[version],
-        "layer": layer,
-        "bitrate_kbps": bitrate // 1000,
-        "sample_rate": rate,
-        "channels": 1 if mode == 3 else 2,
-        "samples_per_frame": samples,
-    }
-
-
-def _probe_mp3(buf: bytes) -> dict:
-    """MPEG audio (MP3) probe: skip an ID3v2 tag (syncsafe size), then
-    walk every frame header — frame sizes are header arithmetic, so the
-    count, exact duration, and CBR-vs-VBR verdict come out without
-    decoding a single granule."""
-    pos = 0
-    if buf[:3] == b"ID3":
-        if len(buf) < 10:
-            raise ValueError("truncated ID3v2 header")
-        size = 0
-        for b in buf[6:10]:
-            if b & 0x80:
-                raise ValueError("ID3v2 size bytes must be syncsafe (bit 7 clear)")
-            size = (size << 7) | b
-        pos = 10 + size + (10 if buf[5] & 0x10 else 0)  # footer flag
-    first = _mp3_frame_header(buf, pos)
-    if first is None:
-        raise ValueError(f"no MPEG audio frame sync at byte {pos}")
-    n_frames = 0
-    seconds = 0.0
-    bitrates = set()
-    info = first[1]
-    while pos + 4 <= len(buf):
-        got = _mp3_frame_header(buf, pos)
-        if got is None:
-            if buf[pos : pos + 3] == b"TAG":  # trailing ID3v1 block
-                pos += 128
-                continue
-            raise ValueError(f"MPEG frame sync lost at byte {pos}")
-        frame_len, h = got
-        if (h["sample_rate"], h["layer"]) != (info["sample_rate"], info["layer"]):
-            raise ValueError("MPEG stream changes sample rate or layer mid-file")
-        bitrates.add(h["bitrate_kbps"])
-        n_frames += 1
-        seconds += h["samples_per_frame"] / h["sample_rate"]
-        pos += frame_len
-    return {
-        "container": "mp3",
-        "encoding": f"mpeg{info['version']}_layer{info['layer']}",
-        "sample_rate": info["sample_rate"],
-        "channels": info["channels"],
-        "n_frames": n_frames,
-        "n_samples": n_frames * info["samples_per_frame"],
-        "duration_sec": seconds,
-        "vbr": len(bitrates) > 1,
-        "bitrate_kbps": (
-            info["bitrate_kbps"] if len(bitrates) == 1
-            else round(sum(bitrates) / len(bitrates))
-        ),
-    }
-
-
-# AAC ADTS sampling-frequency table (ISO/IEC 13818-7 / 14496-3) and the
-# two-bit profile names. Like MP3, frame sizes are header arithmetic, so
-# the probe is exact without touching a spectral coefficient.
-_ADTS_RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
-               16000, 12000, 11025, 8000, 0, 0, 0, 0)
-_ADTS_PROFILES = ("aac_main", "aac_lc", "aac_ssr", "aac_ltp")
-
-
-def _is_adts(buf: bytes) -> bool:
-    # 12-bit syncword + layer bits 00 (reserved in MPEG audio, so this
-    # cleanly discriminates ADTS from an MP3 frame sync)
-    return len(buf) >= 2 and buf[0] == 0xFF and (buf[1] & 0xF6) == 0xF0
-
-
-def _probe_adts(buf: bytes) -> dict:
-    """ADTS (AAC) probe: walk every frame header — 13-bit frame_length
-    covers the header itself, each raw data block is 1024 samples —
-    for exact count/duration without an AAC decoder."""
-    import struct
-
-    pos = 0
-    n_frames = 0
-    n_samples = 0
-    first = None
-    while pos + 7 <= len(buf):
-        if not _is_adts(buf[pos : pos + 2]):
-            raise ValueError(f"ADTS frame sync lost at byte {pos}")
-        b = buf[pos : pos + 7]
-        profile = (b[2] >> 6) & 3
-        sr_idx = (b[2] >> 2) & 0xF
-        rate = _ADTS_RATES[sr_idx]
-        if rate == 0:
-            raise ValueError(f"ADTS reserved sampling_frequency_index {sr_idx}")
-        channels = ((b[2] & 1) << 2) | (b[3] >> 6)
-        frame_len = ((b[3] & 3) << 11) | (b[4] << 3) | (b[5] >> 5)
-        blocks = (b[6] & 3) + 1
-        if frame_len < 7:
-            raise ValueError(f"ADTS frame_length {frame_len} shorter than its header")
-        head = (profile, rate, channels)
-        if first is None:
-            first = head
-        elif head != first:
-            raise ValueError("ADTS stream changes profile/rate/channels mid-file")
-        n_frames += 1
-        n_samples += 1024 * blocks
-        pos += frame_len
-    if first is None:
-        raise ValueError("no ADTS frame in payload")
-    if pos != len(buf):
-        raise ValueError(f"trailing bytes after the last ADTS frame at {pos}")
-    return {
-        "container": "adts",
-        "encoding": _ADTS_PROFILES[first[0]],
-        "sample_rate": first[1],
-        "channels": first[2],
-        "n_frames": n_frames,
-        "n_samples": n_samples,
-        "duration_sec": n_samples / first[1],
-    }
-
-
-def _ogg_crc(data: bytes) -> int:
-    """Ogg page CRC: non-reflected CRC-32, poly 0x04C11DB7, init/xorout
-    0 — table-driven over numpy (RFC 3533 §6)."""
-    global _OGG_CRC_TABLE
-    try:
-        table = _OGG_CRC_TABLE
-    except NameError:
-        t = np.zeros(256, dtype=np.uint32)
-        for i in range(256):
-            r = i << 24
-            for _ in range(8):
-                r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-            t[i] = r
-        table = _OGG_CRC_TABLE = t
-    crc = np.uint32(0)
-    for byte in data:
-        crc = np.uint32(
-            (int(crc) << 8) & 0xFFFFFFFF
-        ) ^ table[(int(crc) >> 24) ^ byte]
-    return int(crc)
-
-
-def _probe_ogg(buf: bytes) -> dict:
-    """Ogg probe: walk every page (CRC-verified), read the BOS
-    identification header (Vorbis or Opus), and take duration from the
-    last page's granule position — Vorbis granules are PCM samples at
-    the stream rate, Opus granules are 48 kHz samples minus pre-skip."""
-    import struct
-
-    pos = 0
-    codec = None
-    rate = channels = None
-    pre_skip = 0
-    last_granule = 0
-    n_pages = 0
-    while pos < len(buf):
-        if buf[pos : pos + 4] != b"OggS":
-            raise ValueError(f"Ogg page capture lost at byte {pos}")
-        if buf[pos + 4] != 0:
-            raise ValueError(f"Ogg stream structure version {buf[pos + 4]}")
-        header_type = buf[pos + 5]
-        (granule,) = struct.unpack_from("<q", buf, pos + 6)
-        (crc_stored,) = struct.unpack_from("<I", buf, pos + 22)
-        nsegs = buf[pos + 26]
-        seg_table = buf[pos + 27 : pos + 27 + nsegs]
-        body_len = sum(seg_table)
-        page_end = pos + 27 + nsegs + body_len
-        if page_end > len(buf):
-            raise ValueError(f"truncated Ogg page at byte {pos}")
-        page = bytearray(buf[pos:page_end])
-        page[22:26] = b"\x00" * 4
-        if _ogg_crc(bytes(page)) != crc_stored:
-            raise ValueError(f"Ogg page CRC mismatch at byte {pos}")
-        body = buf[pos + 27 + nsegs : page_end]
-        if header_type & 0x02:  # BOS: identification header
-            if body[:7] == b"\x01vorbis":
-                codec = "vorbis"
-                channels = body[11]
-                (rate,) = struct.unpack_from("<I", body, 12)
-            elif body[:8] == b"OpusHead":
-                codec = "opus"
-                channels = body[9]
-                (pre_skip,) = struct.unpack_from("<H", body, 10)
-                rate = 48000  # Opus granules always count at 48 kHz
-            else:
-                raise NotImplementedError(
-                    f"Ogg BOS packet {bytes(body[:8])!r}: only Vorbis and "
-                    "Opus identification headers probe"
-                )
-        if granule >= 0:
-            last_granule = max(last_granule, granule)
-        n_pages += 1
-        pos = page_end
-    if codec is None:
-        raise ValueError("Ogg payload without a BOS page")
-    if rate == 0:
-        raise ValueError("Ogg identification header declares a zero sample rate")
-    n_samples = max(0, last_granule - pre_skip)
-    return {
-        "container": "ogg",
-        "encoding": codec,
-        "sample_rate": rate,
-        "channels": channels,
-        "n_pages": n_pages,
-        "n_samples": n_samples,
-        "duration_sec": n_samples / rate,
-    }
-
-
-# --- Matroska / WebM: EBML header walk ------------------------------------
-
-def _ebml_vint(buf: bytes, pos: int, keep_marker: bool):
-    """EBML variable-length integer at ``pos``: returns (value, end).
-    IDs keep the length-marker bit, sizes strip it; an all-ones size is
-    'unknown' and returns None."""
-    if pos >= len(buf):
-        raise ValueError(f"EBML varint past end at byte {pos}")
-    first = buf[pos]
-    if first == 0:
-        raise ValueError(f"EBML varint with >8 length bytes at {pos}")
-    length = 9 - first.bit_length()
-    if pos + length > len(buf):
-        raise ValueError(f"truncated EBML varint at byte {pos}")
-    val = first if keep_marker else first & ((1 << (8 - length)) - 1)
-    unknown = (first & ((1 << (8 - length)) - 1)) == (1 << (8 - length)) - 1
-    for i in range(1, length):
-        b = buf[pos + i]
-        val = (val << 8) | b
-        unknown = unknown and b == 0xFF
-    if not keep_marker and unknown:
-        return None, pos + length
-    return val, pos + length
-
-
-def _ebml_children(buf: bytes, lo: int, hi: int):
-    """Yield (element_id, body_lo, body_hi) over an EBML master body;
-    unknown-size elements extend to the container end."""
-    pos = lo
-    while pos < hi:
-        eid, pos = _ebml_vint(buf, pos, keep_marker=True)
-        size, pos = _ebml_vint(buf, pos, keep_marker=False)
-        end = hi if size is None else pos + size
-        if end > hi:
-            raise ValueError(f"EBML element 0x{eid:X} overruns its container")
-        yield eid, pos, end
-        pos = end
-
-
-def _ebml_uint(buf: bytes, lo: int, hi: int) -> int:
-    return int.from_bytes(buf[lo:hi], "big")
-
-
-def _ebml_float(buf: bytes, lo: int, hi: int) -> float:
-    import struct
-
-    n = hi - lo
-    if n == 4:
-        return struct.unpack(">f", buf[lo:hi])[0]
-    if n == 8:
-        return struct.unpack(">d", buf[lo:hi])[0]
-    raise ValueError(f"EBML float of {n} bytes (must be 4 or 8)")
-
-
-def _probe_mkv(buf: bytes) -> dict:
-    """Matroska / WebM probe: EBML header DocType, Segment Info
-    (TimestampScale × Duration), and per-track type / codec ID / video
-    dims / audio rate+channels — a pure header walk; Cluster payloads
-    (the coded frames) are never entered."""
-    if buf[:4] != b"\x1a\x45\xdf\xa3":
-        raise ValueError("not an EBML (Matroska/WebM) payload")
-    doctype = "matroska"
-    info: dict = {"container": None, "tracks": []}
-    scale_ns = 1_000_000  # TimestampScale default
-    duration_ticks = None
-    for eid, lo, hi in _ebml_children(buf, 0, len(buf)):
-        if eid == 0x1A45DFA3:  # EBML header
-            for e2, l2, h2 in _ebml_children(buf, lo, hi):
-                if e2 == 0x4282:  # DocType
-                    doctype = buf[l2:h2].decode("latin-1").rstrip("\x00")
-        elif eid == 0x18538067:  # Segment
-            for e2, l2, h2 in _ebml_children(buf, lo, hi):
-                if e2 == 0x1549A966:  # Info
-                    for e3, l3, h3 in _ebml_children(buf, l2, h2):
-                        if e3 == 0x2AD7B1:
-                            scale_ns = _ebml_uint(buf, l3, h3)
-                        elif e3 == 0x4489:
-                            duration_ticks = _ebml_float(buf, l3, h3)
-                elif e2 == 0x1654AE6B:  # Tracks
-                    for e3, l3, h3 in _ebml_children(buf, l2, h2):
-                        if e3 != 0xAE:  # TrackEntry
-                            continue
-                        trk: dict = {}
-                        for e4, l4, h4 in _ebml_children(buf, l3, h3):
-                            if e4 == 0x83:
-                                trk["type"] = {1: "video", 2: "audio"}.get(
-                                    _ebml_uint(buf, l4, h4),
-                                    str(_ebml_uint(buf, l4, h4)),
-                                )
-                            elif e4 == 0x86:
-                                trk["codec"] = buf[l4:h4].decode(
-                                    "latin-1"
-                                ).rstrip("\x00")
-                            elif e4 == 0xE0:  # Video
-                                for e5, l5, h5 in _ebml_children(buf, l4, h4):
-                                    if e5 == 0xB0:
-                                        trk["width"] = _ebml_uint(buf, l5, h5)
-                                    elif e5 == 0xBA:
-                                        trk["height"] = _ebml_uint(buf, l5, h5)
-                            elif e4 == 0xE1:  # Audio
-                                for e5, l5, h5 in _ebml_children(buf, l4, h4):
-                                    if e5 == 0xB5:
-                                        trk["sample_rate"] = _ebml_float(
-                                            buf, l5, h5
-                                        )
-                                    elif e5 == 0x9F:
-                                        trk["channels"] = _ebml_uint(buf, l5, h5)
-                        info["tracks"].append(trk)
-    info["container"] = "webm" if doctype == "webm" else "matroska"
-    if duration_ticks is not None:
-        info["duration_sec"] = duration_ticks * scale_ns / 1e9
-    vids = [t for t in info["tracks"] if t.get("type") == "video"]
-    if vids and "width" in vids[0]:
-        info["width"] = vids[0]["width"]
-        info["height"] = vids[0]["height"]
-    if not info["tracks"]:
-        raise ValueError("Matroska payload without a Tracks element")
-    return info
-
-
-def _y4m_frame_to_array(buf: bytes, w: int, h: int, sub) -> "np.ndarray":
-    """Raw planar frame bytes → (h, w) gray or (h, w, 3) RGB uint8.
-    Chroma is nearest-neighbor upsampled and converted with the
-    full-range (JFIF) BT.601 matrix — the same constants as the JPEG
-    path, so a given YCbCr triple decodes identically from either
-    container. Limited-range flagging (XCOLORRANGE=LIMITED) is metadata
-    this feature path deliberately ignores."""
-    y = np.frombuffer(buf[: w * h], dtype="u1").reshape(h, w).astype("float64")
-    if sub is None:
-        return y.astype("uint8")
-    sx, sy = sub
-    cw, chh = w // sx, h // sy
-    cb = np.frombuffer(
-        buf[w * h : w * h + cw * chh], dtype="u1"
-    ).reshape(chh, cw).astype("float64")
-    cr = np.frombuffer(buf[w * h + cw * chh :], dtype="u1").reshape(chh, cw).astype(
-        "float64"
-    )
-    cb = np.repeat(np.repeat(cb, sy, axis=0), sx, axis=1)
-    cr = np.repeat(np.repeat(cr, sy, axis=0), sx, axis=1)
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype("uint8")
-
-
-def decode_video_frames(
-    payload: bytes, indices: "list[int] | None" = None
-) -> "list[tuple[int, np.ndarray]]":
-    """Decode selected frames of a Y4M or AVI (MJPEG / uncompressed DIB)
-    payload to uint8 arrays — pure stdlib+numpy. ``indices=None`` decodes
-    every frame; otherwise only the requested frame numbers are converted
-    (the walk reads frame/chunk headers only for the rest — sampling
-    1-in-100 frames costs ~1/100th of the decode)."""
-    buf = bytes(payload)
-    spans, dec = _video_spans(buf)
-    want = None if indices is None else set(indices)
-    return [
-        (i, dec(buf, start, end))
-        for i, start, end in spans
-        if want is None or i in want
-    ]
-
-
-def encode_y4m(frames: "list[np.ndarray]", colorspace: str = "mono") -> bytes:
-    """Minimal Y4M encoder for round-trip tests: gray (h, w) frames for
-    ``mono``, RGB (h, w, 3) frames for ``444``/``420jpeg`` (full-range
-    BT.601 forward matrix; 420 chroma is 2x2 box-averaged). The
-    deterministic spec-literal replica :func:`decode_video_frames` is
-    tested against — not a production encoder."""
-    if not frames:
-        raise ValueError("Y4M needs at least one frame")
-    first = np.asarray(frames[0], dtype="uint8")
-    h, w = first.shape[:2]
-    sub, _ = _y4m_layout(w, h, colorspace)
-    head = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C%s\n" % (w, h, colorspace.encode())
-    out = bytearray(head)
-    for fr in frames:
-        fr = np.asarray(fr, dtype="uint8")
-        if fr.shape[:2] != (h, w):
-            raise ValueError("all Y4M frames must share the stream dimensions")
-        out += b"FRAME\n"
-        if sub is None:
-            if fr.ndim != 2:
-                raise ValueError("mono Y4M needs (h, w) gray frames")
-            out += fr.tobytes()
-            continue
-        if fr.ndim != 3 or fr.shape[2] != 3:
-            raise ValueError("color Y4M needs (h, w, 3) RGB frames")
-        f = fr.astype("float64")
-        y = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-        cb = -0.168736 * f[:, :, 0] - 0.331264 * f[:, :, 1] + 0.5 * f[:, :, 2] + 128.0
-        cr = 0.5 * f[:, :, 0] - 0.418688 * f[:, :, 1] - 0.081312 * f[:, :, 2] + 128.0
-        sx, sy = sub
-        if (sx, sy) != (1, 1):
-            cb = cb.reshape(h // sy, sy, w // sx, sx).mean(axis=(1, 3))
-            cr = cr.reshape(h // sy, sy, w // sx, sx).mean(axis=(1, 3))
-        for plane in (y, cb, cr):
-            out += np.clip(np.round(plane), 0, 255).astype("uint8").tobytes()
-    return bytes(out)
-
-
-def _strip_jpeg_dht(chunk: bytes) -> bytes:
-    """Remove every pre-SOS DHT segment from a JPEG stream — builds the
-    table-less MJPEG frames OpenDML files carry, so the Annex-K fixup in
-    :func:`_mjpeg_with_tables` has a deterministic fixture."""
-    import struct
-
-    out = bytearray(chunk[:2])
-    pos = 2
-    while pos + 4 <= len(chunk):
-        marker = chunk[pos + 1]
-        if marker == 0xDA:
-            out += chunk[pos:]
-            return bytes(out)
-        (ln,) = struct.unpack_from(">H", chunk, pos + 2)
-        if marker != 0xC4:
-            out += chunk[pos : pos + 2 + ln]
-        pos += 2 + ln
-    raise ValueError("JPEG stream without an SOS scan")
-
-
-def encode_avi(
-    frames: "list[np.ndarray]",
-    fps: int = 25,
-    codec: str = "mjpeg",
-    quant: int = 1,
-    omit_dht: bool = False,
-) -> bytes:
-    """Minimal AVI writer for round-trip tests: same-shape uint8 frames
-    (gray (h, w) or RGB (h, w, 3)) as an MJPEG ('00dc' chunks, each a
-    full JPEG from :func:`encode_jpeg`; ``omit_dht=True`` strips the
-    Huffman tables the OpenDML way) or uncompressed BI_RGB DIB stream
-    ('00db' chunks, bottom-up 4-byte-padded rows, 8-bit grayscale palette
-    or 24-bit BGR). Writes RIFF/hdrl(avih + strl)/movi/idx1 — a fixture
-    builder exercising every branch of the AVI decode path, not a
-    production muxer."""
-    import struct
-
-    if not frames:
-        raise ValueError("encode_avi needs at least one frame")
-    shape = frames[0].shape
-    if any(f.shape != shape or f.dtype != np.uint8 for f in frames):
-        raise ValueError("all frames must be uint8 and the same shape")
-    h, w = shape[:2]
-    color = len(shape) == 3
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    palette = b""
-    if codec == "mjpeg":
-        fourcc, handler, ckid, bpp = b"MJPG", b"MJPG", b"00dc", 24
-        payloads = [encode_jpeg(f, quant=quant) for f in frames]
-        if omit_dht:
-            payloads = [_strip_jpeg_dht(p) for p in payloads]
-    elif codec == "raw":
-        fourcc, handler, ckid = b"\x00\x00\x00\x00", b"DIB ", b"00db"
-        bpp = 24 if color else 8
-        if not color:
-            palette = b"".join(bytes([i, i, i, 0]) for i in range(256))
-        row_size = ((bpp * w + 31) // 32) * 4
-        payloads = []
-        for f in frames:
-            rows = f[:, :, ::-1] if color else f  # RGB → BGR storage
-            raster = bytearray()
-            for r in rows[::-1]:  # bottom-up
-                rb = r.tobytes()
-                raster += rb + b"\x00" * (row_size - len(rb))
-            payloads.append(bytes(raster))
-    else:
-        raise ValueError(f"codec must be 'mjpeg' or 'raw', got {codec!r}")
-
-    strh = (
-        b"vids" + handler + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0,
-                                        len(frames), max(map(len, payloads)),
-                                        0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, w, h)
-    )
-    strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, bpp, fourcc,
-                       len(payloads[0]), 0, 0, len(palette) // 4, 0) + palette
-    strl = chunk(b"LIST", b"strl" + chunk(b"strh", strh) + chunk(b"strf", strf))
-    avih = struct.pack("<10I", 10**6 // fps, 0, 0, 0x10, len(frames), 0, 1,
-                       max(map(len, payloads)), w, h) + b"\x00" * 16
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih) + strl)
-
-    movi_body = bytearray(b"movi")
-    idx = bytearray()
-    for p in payloads:
-        # dwChunkOffset counts from the 'movi' fourcc, i.e. the ckid position
-        idx += ckid + struct.pack("<III", 0x10, len(movi_body), len(p))
-        movi_body += chunk(ckid, p)
-    riff_body = b"AVI " + hdrl + chunk(b"LIST", bytes(movi_body)) + chunk(
-        b"idx1", bytes(idx)
-    )
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-class _BitWriter:
-    """MSB-first bit writer with Exp-Golomb — inverse of
-    :class:`_BitReader`, for building SPS fixtures."""
-
-    def __init__(self):
-        self.bits: "list[int]" = []
-
-    def u(self, v: int, n: int) -> None:
-        self.bits += [(v >> (n - 1 - i)) & 1 for i in range(n)]
-
-    def ue(self, v: int) -> None:
-        s = bin(v + 1)[2:]
-        self.u(0, len(s) - 1)
-        for c in s:
-            self.bits.append(int(c))
-
-    def rbsp(self) -> bytes:
-        bits = self.bits + [1]  # rbsp_stop_one_bit
-        while len(bits) % 8:
-            bits.append(0)
-        return bytes(
-            int("".join(map(str, bits[i : i + 8])), 2)
-            for i in range(0, len(bits), 8)
-        )
-
-
-def encode_h264_sps(width: int, height: int, profile_idc: int = 100) -> bytes:
-    """Build a syntactically valid H.264 SPS NAL (with emulation-
-    prevention escaping) whose crop window yields exactly (width,
-    height) — the fixture for :func:`_parse_h264_sps`; no picture data
-    exists behind it."""
-    if width % 2 or height % 2:
-        raise ValueError("4:2:0 crop units need even dimensions")
-    pw_mbs = -(-width // 16)
-    ph_units = -(-height // 16)
-    w = _BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint flags
-    w.u(31, 8)  # level_idc
-    w.ue(0)  # seq_parameter_set_id
-    if profile_idc in _H264_HIGH_PROFILES:
-        w.ue(1)  # chroma_format_idc 4:2:0
-        w.ue(0)  # bit_depth_luma_minus8
-        w.ue(0)  # bit_depth_chroma_minus8
-        w.u(0, 1)  # qpprime_y_zero_transform_bypass_flag
-        w.u(0, 1)  # seq_scaling_matrix_present_flag
-    w.ue(4)  # log2_max_frame_num_minus4
-    w.ue(0)  # pic_order_cnt_type
-    w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(2)  # max_num_ref_frames
-    w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
-    w.ue(pw_mbs - 1)
-    w.ue(ph_units - 1)
-    w.u(1, 1)  # frame_mbs_only_flag
-    w.u(1, 1)  # direct_8x8_inference_flag
-    crop_r = (pw_mbs * 16 - width) // 2
-    crop_b = (ph_units * 16 - height) // 2
-    if crop_r or crop_b:
-        w.u(1, 1)
-        w.ue(0)
-        w.ue(crop_r)
-        w.ue(0)
-        w.ue(crop_b)
-    else:
-        w.u(0, 1)
-    w.u(0, 1)  # vui_parameters_present_flag
-    rbsp = w.rbsp()
-    out = bytearray()
-    zeros = 0
-    for byte in rbsp:  # emulation-prevention escape (00 00 0x → 00 00 03 0x)
-        if zeros == 2 and byte <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(byte)
-        zeros = zeros + 1 if byte == 0 else 0
-    return b"\x67" + bytes(out)
-
-
-def encode_mp4(
-    samples: "list[bytes]",
-    sync: "list[int] | None" = None,
-    fps: int = 10,
-    sps: "bytes | None" = None,
-    chunking: "list[int] | None" = None,
-    co64: bool = False,
-) -> bytes:
-    """Structurally valid MP4 fixture: the given sample payloads laid
-    into an mdat and indexed by real stbl tables (stsd avc1+avcC, stts,
-    optional stss, stsz, stsc runs from ``chunking`` = samples per
-    chunk, stco or co64). The samples are opaque bytes — this builds
-    container arithmetic for :func:`mp4_sample_index` tests, not coded
-    video."""
-    import struct
-
-    if not samples:
-        raise ValueError("encode_mp4 needs at least one sample")
-    if chunking is None:
-        chunking = [len(samples)]
-    if sum(chunking) != len(samples):
-        raise ValueError("chunking must cover every sample exactly once")
-    if sps is None:
-        sps = encode_h264_sps(64, 48)
-
-    def box(kind: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + kind + body
-
-    def full(kind: bytes, body: bytes) -> bytes:
-        return box(kind, b"\x00\x00\x00\x00" + body)
-
-    ftyp = box(b"ftyp", b"isom\x00\x00\x00\x00")
-    mdat = box(b"mdat", b"".join(samples))
-    mdat_body = len(ftyp) + 8
-
-    avcc = (
-        bytes([1, sps[1], sps[2], sps[3], 0xFF, 0xE1])
-        + struct.pack(">H", len(sps)) + sps + b"\x00"
-    )
-    entry = (
-        struct.pack(">I", 8 + 78 + 8 + len(avcc)) + b"avc1"
-        + b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
-        + struct.pack(">HH", 64, 48)
-        + struct.pack(">II", 0x00480000, 0x00480000) + b"\x00" * 4
-        + struct.pack(">H", 1) + b"\x00" * 32 + struct.pack(">Hh", 24, -1)
-        + box(b"avcC", avcc)
-    )
-    stsd = full(b"stsd", struct.pack(">I", 1) + entry)
-    stts = full(b"stts", struct.pack(">III", 1, len(samples), 1000 // fps))
-    stsz = full(
-        b"stsz",
-        struct.pack(">II", 0, len(samples))
-        + struct.pack(f">{len(samples)}I", *map(len, samples)),
-    )
-    # run-length encode samples-per-chunk into stsc entries
-    runs = []
-    for ci, spc in enumerate(chunking):
-        if not runs or runs[-1][1] != spc:
-            runs.append((ci + 1, spc))
-    stsc = full(
-        b"stsc",
-        struct.pack(">I", len(runs))
-        + b"".join(struct.pack(">III", fc, spc, 1) for fc, spc in runs),
-    )
-    offs = []
-    pos = mdat_body
-    s = 0
-    for spc in chunking:
-        offs.append(pos)
-        pos += sum(len(samples[s + j]) for j in range(spc))
-        s += spc
-    if co64:
-        stco = full(
-            b"co64",
-            struct.pack(">I", len(offs)) + struct.pack(f">{len(offs)}Q", *offs),
-        )
-    else:
-        stco = full(
-            b"stco",
-            struct.pack(">I", len(offs)) + struct.pack(f">{len(offs)}I", *offs),
-        )
-    stbl_body = stsd + stts
-    if sync is not None:
-        stbl_body += full(
-            b"stss",
-            struct.pack(">I", len(sync))
-            + struct.pack(f">{len(sync)}I", *(k + 1 for k in sync)),
-        )
-    stbl_body += stsz + stsc + stco
-    minf = box(b"minf", box(b"stbl", stbl_body))
-    mdhd = full(
-        b"mdhd",
-        struct.pack(">II", 0, 0)
-        + struct.pack(">II", 1000, len(samples) * (1000 // fps)) + b"\x00" * 4,
-    )
-    hdlr = full(b"hdlr", b"\x00" * 4 + b"vide" + b"\x00" * 12)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    tkhd = full(b"tkhd", b"\x00" * 72 + struct.pack(">II", 64 << 16, 48 << 16))
-    trak = box(b"trak", tkhd + mdia)
-    mvhd = full(
-        b"mvhd",
-        b"\x00" * 8
-        + struct.pack(">II", 1000, len(samples) * (1000 // fps)) + b"\x00" * 80,
-    )
-    return ftyp + mdat + box(b"moov", mvhd + trak)
-
-
-def encode_adts(
-    frame_payloads: "list[bytes]",
-    profile: int = 1,
-    rate: int = 44100,
-    channels: int = 2,
-) -> bytes:
-    """ADTS (AAC) fixture: each payload gets a 7-byte header with the
-    correct 13-bit frame_length — opaque bytes stand in for the coded
-    spectra, exercising :func:`_probe_adts`'s framing arithmetic."""
-    sr_idx = _ADTS_RATES.index(rate)
-    out = bytearray()
-    for p in frame_payloads:
-        flen = 7 + len(p)
-        out += bytes([
-            0xFF,
-            0xF1,  # MPEG-4, layer 00, protection absent
-            (profile << 6) | (sr_idx << 2) | (channels >> 2),
-            ((channels & 3) << 6) | (flen >> 11),
-            (flen >> 3) & 0xFF,
-            ((flen & 7) << 5) | 0x1F,  # buffer fullness hi (0x7FF = VBR)
-            0xFC,  # fullness lo + 1 raw data block
-        ]) + p
-    return bytes(out)
-
-
-def encode_ogg_page(
-    body: bytes, granule: int, seq: int, header_type: int, serial: int = 0x1234
-) -> bytes:
-    """One CRC-correct Ogg page holding ``body`` as a single packet
-    (lacing split at 255)."""
-    import struct
-
-    segs = []
-    n = len(body)
-    while n >= 255:
-        segs.append(255)
-        n -= 255
-    segs.append(n)
-    page = bytearray(
-        b"OggS\x00" + bytes([header_type]) + struct.pack("<q", granule)
-        + struct.pack("<II", serial, seq) + b"\x00" * 4
-        + bytes([len(segs)]) + bytes(segs) + body
-    )
-    import struct as _s
-
-    _s.pack_into("<I", page, 22, _ogg_crc(bytes(page)))
-    return bytes(page)
-
-
-def encode_ogg(
-    codec: str,
-    rate: int = 44100,
-    channels: int = 2,
-    last_granule: int = 44100,
-    n_data_pages: int = 2,
-    pre_skip: int = 312,
-    tags: "dict[str, str] | None" = None,
-    vendor: str = "fixture-encoder",
-) -> bytes:
-    """Ogg fixture: a BOS page carrying a real Vorbis or Opus
-    identification header, an optional comment-header page (Vorbis
-    packet 2 / OpusTags built from ``tags``), then ``n_data_pages``
-    pages of opaque packet bytes whose final granule is
-    ``last_granule`` — the structure :func:`_probe_ogg` and
-    :func:`extract_audio_tags` walk; no audio is coded."""
-    import struct
-
-    if codec == "vorbis":
-        ident = (
-            b"\x01vorbis" + struct.pack("<I", 0) + bytes([channels])
-            + struct.pack("<I", rate) + struct.pack("<iii", -1, 128000, -1)
-            + b"\xb8\x01"
-        )
-    elif codec == "opus":
-        ident = (
-            b"OpusHead" + bytes([1, channels]) + struct.pack("<H", pre_skip)
-            + struct.pack("<I", rate) + struct.pack("<h", 0) + b"\x00"
-        )
-    else:
-        raise ValueError(f"codec must be 'vorbis' or 'opus', got {codec!r}")
-    out = encode_ogg_page(ident, 0, 0, 0x02)
-    seq = 1
-    if tags is not None:
-        inv = {v: k for k, v in _VORBIS_KEYS.items() if v != "software"}
-        comments = bytearray(struct.pack("<I", len(vendor)) + vendor.encode())
-        pairs = [f"{inv[k]}={v}" for k, v in tags.items()]
-        comments += struct.pack("<I", len(pairs))
-        for item in pairs:
-            raw = item.encode("utf-8")
-            comments += struct.pack("<I", len(raw)) + raw
-        if codec == "vorbis":
-            packet = b"\x03vorbis" + bytes(comments) + b"\x01"  # framing bit
-        else:
-            packet = b"OpusTags" + bytes(comments)
-        out += encode_ogg_page(packet, 0, seq, 0)
-        seq += 1
-    for k in range(n_data_pages):
-        granule = last_granule * (k + 1) // n_data_pages
-        eos = 0x04 if k == n_data_pages - 1 else 0
-        out += encode_ogg_page(b"\x00" * (300 + k), granule, seq + k, eos)
-    return out
-
-
-def _ebml_encode_vint(v: int) -> bytes:
-    """Minimal-length EBML size varint (avoiding the all-ones 'unknown'
-    encoding)."""
-    for length in range(1, 9):
-        if v < (1 << (7 * length)) - 1:
-            return (v | (1 << (7 * length))).to_bytes(length, "big")
-    raise ValueError(f"EBML size {v} too large")
-
-
-def _ebml_elem(eid: int, body: bytes, unknown_size: bool = False) -> bytes:
-    idb = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-    if unknown_size:
-        return idb + b"\xff" + body
-    return idb + _ebml_encode_vint(len(body)) + body
-
-
-def encode_mkv(
-    tracks: "list[dict]",
-    doctype: str = "matroska",
-    duration_sec: "float | None" = 2.5,
-    timescale_ns: int = 1_000_000,
-    unknown_segment_size: bool = False,
-) -> bytes:
-    """Matroska/WebM fixture: EBML header + Segment(Info, Tracks) from
-    track dicts like ``{"type": "video", "codec": "V_VP9", "width": w,
-    "height": h}`` or ``{"type": "audio", "codec": "A_OPUS",
-    "sample_rate": r, "channels": c}`` — no Cluster data, matching what
-    :func:`_probe_mkv` reads."""
-    import struct
-
-    header = _ebml_elem(0x1A45DFA3, _ebml_elem(0x4282, doctype.encode()))
-    info_body = _ebml_elem(0x2AD7B1, timescale_ns.to_bytes(4, "big"))
-    if duration_sec is not None:
-        ticks = duration_sec * 1e9 / timescale_ns
-        info_body += _ebml_elem(0x4489, struct.pack(">d", ticks))
-    entries = b""
-    for t in tracks:
-        body = _ebml_elem(0x83, bytes([{"video": 1, "audio": 2}[t["type"]]]))
-        body += _ebml_elem(0x86, t["codec"].encode())
-        if t["type"] == "video":
-            body += _ebml_elem(
-                0xE0,
-                _ebml_elem(0xB0, t["width"].to_bytes(2, "big"))
-                + _ebml_elem(0xBA, t["height"].to_bytes(2, "big")),
-            )
-        else:
-            body += _ebml_elem(
-                0xE1,
-                _ebml_elem(0xB5, struct.pack(">f", t["sample_rate"]))
-                + _ebml_elem(0x9F, bytes([t["channels"]])),
-            )
-        entries += _ebml_elem(0xAE, body)
-    segment_body = _ebml_elem(0x1549A966, info_body) + _ebml_elem(
-        0x1654AE6B, entries
-    )
-    return header + _ebml_elem(
-        0x18538067, segment_body, unknown_size=unknown_segment_size
-    )
-
-
-# --- audio: WAV (RIFF/WAVE) container -------------------------------------
-#
-# Uncompressed WAV is the audio analog of netpbm/Y4M: a chunked header,
-# then raw PCM (or IEEE-float) sample frames at a fixed block size — no
-# entropy codec, so a window of samples is a byte slice. G.711 μ-law /
-# A-law companding (the telephony WAVs real crawls contain) is a pure
-# per-byte expansion formula, so it decodes here too — still one byte
-# per sample frame, so window slicing is unchanged. IMA and Microsoft
-# ADPCM (format tags 0x0011/0x0002) decode as well: their fixed-size
-# blocks are SELF-CONTAINED by design (each restates the predictor
-# state), so windows slice at block granularity and the decode
-# vectorizes across blocks. Entropy-coded codecs (MP3, AAC) stay behind
-# the pluggable NotImplementedError gate — those genuinely need an
-# audio library.
-
-# WAVE format tags (public RIFF/MMREG registry): 1 = integer PCM,
-# 3 = IEEE float, 6/7 = G.711 A-law/μ-law, 0xFFFE = EXTENSIBLE (real
-# tag in the SubFormat GUID, whose first two bytes are the wrapped tag,
-# little-endian).
-_WAV_PCM, _WAV_FLOAT, _WAV_EXTENSIBLE = 0x0001, 0x0003, 0xFFFE
-_WAV_ALAW, _WAV_ULAW = 0x0006, 0x0007
-_WAV_MS_ADPCM, _WAV_IMA_ADPCM = 0x0002, 0x0011
-
-# IMA/DVI ADPCM quantizer tables (the published IMA reference tables,
-# reproduced everywhere ADPCM is implemented). The step table is 89
-# entries from 7 to 32767, each ~1.1x the previous — the test asserts
-# the growth bound and endpoints; the index table is the 4-bit
-# magnitude-to-step-adjustment map.
-_IMA_INDEX_TABLE = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-_IMA_STEP_TABLE = np.array(
-    [
-        7, 8, 9, 10, 11, 12, 13, 14, 16, 17,
-        19, 21, 23, 25, 28, 31, 34, 37, 41, 45,
-        50, 55, 60, 66, 73, 80, 88, 97, 107, 118,
-        130, 143, 157, 173, 190, 209, 230, 253, 279, 307,
-        337, 371, 408, 449, 494, 544, 598, 658, 724, 796,
-        876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-        2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358,
-        5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899,
-        15289, 16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-    ],
-    dtype=np.int64,
-)
-
-# Microsoft ADPCM: the 7 standard predictor coefficient pairs and the
-# 16-entry delta adaptation table (WAVEFORMAT_ADPCM registry values).
-_MS_ADPCM_COEF1 = np.array([256, 512, 0, 192, 240, 460, 392], dtype=np.int64)
-_MS_ADPCM_COEF2 = np.array([0, -256, 0, 64, 0, -208, -232], dtype=np.int64)
-_MS_ADPCM_ADAPT = np.array(
-    [230, 230, 230, 230, 307, 409, 512, 614, 768, 614, 512, 409, 307,
-     230, 230, 230],
-    dtype=np.int64,
-)
-
-
-def _decode_ima_blocks(raw: bytes, ch: int, block: int) -> "np.ndarray":
-    """IMA/DVI ADPCM (WAV format tag 0x0011) → (n, ch) int16-range
-    samples. Every block is self-contained (4-byte per-channel header:
-    int16 predictor — emitted as the block's first sample — plus a step
-    index), so the decode vectorizes ACROSS blocks: the only sequential
-    loop is the samples-per-block recurrence, each step a whole
-    (n_blocks, ch) numpy update. Body nibbles are low-first within each
-    byte, interleaved in 4-byte groups per channel."""
-    if len(raw) % block:
-        raise ValueError("IMA ADPCM data is not whole blocks")
-    data = np.frombuffer(raw, dtype="u1").reshape(-1, block).astype(np.int64)
-    nb = data.shape[0]
-    head = data[:, : 4 * ch].reshape(nb, ch, 4)
-    pred = ((head[:, :, 0] | (head[:, :, 1] << 8)) ^ 0x8000) - 0x8000
-    idx = head[:, :, 2]
-    if (idx > 88).any():
-        raise ValueError("IMA ADPCM step index out of range")
-    groups = data[:, 4 * ch :].reshape(nb, -1, ch, 4)
-    nib = np.stack([groups & 0xF, groups >> 4], axis=4)  # low nibble first
-    nib = nib.reshape(nb, groups.shape[1], ch, 8)
-    nib = nib.transpose(0, 2, 1, 3).reshape(nb, ch, -1)
-    spb = nib.shape[2] + 1
-    out = np.empty((nb, ch, spb), dtype=np.int64)
-    out[:, :, 0] = pred
-    for s in range(spb - 1):
-        n = nib[:, :, s]
-        step = _IMA_STEP_TABLE[idx]
-        diff = (
-            (step >> 3)
-            + np.where(n & 1, step >> 2, 0)
-            + np.where(n & 2, step >> 1, 0)
-            + np.where(n & 4, step, 0)
-        )
-        pred = np.clip(np.where(n & 8, pred - diff, pred + diff), -32768, 32767)
-        idx = np.clip(idx + _IMA_INDEX_TABLE[n & 7], 0, 88)
-        out[:, :, s + 1] = pred
-    return out.transpose(0, 2, 1).reshape(-1, ch)
-
-
-def _decode_ms_blocks(
-    raw: bytes, ch: int, block: int, coefs: "tuple[np.ndarray, np.ndarray]"
-) -> "np.ndarray":
-    """Microsoft ADPCM (WAV format tag 0x0002) → (n, ch) int16-range
-    samples, vectorized across self-contained blocks like
-    :func:`_decode_ima_blocks`. Per-channel block header: predictor
-    index, initial delta, and the two seed samples (emitted oldest
-    first); body nibbles are high-first, alternating channels. The
-    predictor is ((s1*c1 + s2*c2) >> 8) + code*delta with arithmetic
-    shift, delta adapting by the 16-entry table with a floor of 16."""
-    coef1, coef2 = coefs
-    if len(raw) % block:
-        raise ValueError("MS ADPCM data is not whole blocks")
-    data = np.frombuffer(raw, dtype="u1").reshape(-1, block).astype(np.int64)
-    nb = data.shape[0]
-    bpred = data[:, :ch]
-    if (bpred >= len(coef1)).any():
-        raise ValueError("MS ADPCM predictor index out of range")
-
-    def le16(off: int) -> "np.ndarray":
-        v = data[:, off : off + 2 * ch].reshape(nb, ch, 2)
-        return ((v[:, :, 0] | (v[:, :, 1] << 8)) ^ 0x8000) - 0x8000
-
-    delta = le16(ch)
-    s1 = le16(3 * ch)
-    s2 = le16(5 * ch)
-    body = data[:, 7 * ch :]
-    nib = np.stack([body >> 4, body & 0xF], axis=2).reshape(nb, -1)  # high first
-    nib = nib.reshape(nb, -1, ch).transpose(0, 2, 1)
-    n_codes = nib.shape[2]
-    out = np.empty((nb, ch, n_codes + 2), dtype=np.int64)
-    out[:, :, 0] = s2
-    out[:, :, 1] = s1
-    c1 = coef1[bpred]
-    c2 = coef2[bpred]
-    for s in range(n_codes):
-        code = nib[:, :, s]
-        signed = (code ^ 8) - 8
-        pred = np.clip(
-            ((s1 * c1 + s2 * c2) >> 8) + signed * delta, -32768, 32767
-        )
-        out[:, :, s + 2] = pred
-        s2 = s1
-        s1 = pred
-        delta = np.maximum(16, (_MS_ADPCM_ADAPT[code] * delta) >> 8)
-    return out.transpose(0, 2, 1).reshape(-1, ch)
-
-
-def _g711_expand(codes: "np.ndarray", law: str) -> "np.ndarray":
-    """G.711 companded byte → linear 16-bit value (ITU-T G.711 tables
-    via their closed forms, not hardcoded tables — anchors pinned by
-    tests: μ-law 0x00→−32124, 0xFF→0; A-law 0x55→−8, 0xD5→+8).
-    μ-law spans ±32124, A-law ±32256; both normalize by /32768 like
-    plain 16-bit PCM."""
-    c = np.asarray(codes, dtype=np.int64)
-    if law == "ulaw":
-        u = ~c & 0xFF
-        mag = ((((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)) - 0x84
-        return np.where(u & 0x80, -mag, mag)
-    a = c ^ 0x55
-    exp = (a >> 4) & 7
-    mag = np.where(
-        exp == 0,
-        ((a & 0x0F) << 4) + 8,
-        (((a & 0x0F) << 4) + 0x108) << np.maximum(exp - 1, 0),
-    )
-    return np.where(a & 0x80, mag, -mag)  # A-law sign bit 1 = positive
-
-
-def _g711_compress(samples: "np.ndarray", law: str) -> "np.ndarray":
-    """Linear 16-bit → G.711 byte, the fixture-builder inverse: every
-    expanded value re-compresses to its own code (segment midpoints are
-    fixed points), which is the invariant the round-trip tests pin."""
-    x = np.asarray(samples, dtype=np.int64)
-    if law == "ulaw":
-        sign = np.where(x < 0, 0x80, 0)
-        mag = np.minimum(np.abs(x), 32635) + 0x84
-        exp = np.floor(np.log2(mag)).astype(np.int64) - 7  # highest bit above bit 7
-        return (~(sign | (exp << 4) | ((mag >> (exp + 3)) & 0x0F)) & 0xFF).astype("u1")
-    sign = np.where(x >= 0, 0x80, 0)
-    mag = np.minimum(np.abs(x), 32767)
-    exp = np.maximum(np.floor(np.log2(np.maximum(mag, 1))).astype(np.int64) - 7, 0)
-    mant = np.where(exp == 0, mag >> 4, (mag >> (exp + 3)) & 0x0F)
-    return (((sign | (exp << 4) | mant) ^ 0x55) & 0xFF).astype("u1")
-
-
-def _parse_wav_header(payload: bytes):
-    """Walk the RIFF chunk list; returns (fmt dict, data_offset,
-    data_len). Unknown chunks (LIST, fact, cue, …) are skipped via their
-    declared size, with the RIFF odd-size pad byte honored. Raises the
-    NotImplementedError gate for non-WAV payloads and compressed format
-    tags, ValueError for structurally broken files."""
-    import struct
-
-    buf = bytes(payload)
-    if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise NotImplementedError(
-            "unsupported audio payload: only the WAV (RIFF/WAVE) PCM "
-            "container decodes without an audio library"
-        )
-    fmt = None
-    data = None
-    fact = None
-    pos = 12
-    while pos + 8 <= len(buf):
-        cid = buf[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", buf, pos + 4)
-        body = pos + 8
-        if cid == b"fmt ":
-            if size < 16:
-                raise ValueError(f"WAV fmt chunk is {size} bytes, expected >= 16")
-            tag, channels, rate, _brate, block, bits = struct.unpack_from(
-                "<HHIIHH", buf, body
-            )
-            if tag == _WAV_EXTENSIBLE:
-                if size < 40:
-                    raise ValueError("WAV EXTENSIBLE fmt chunk needs 40 bytes")
-                # SubFormat GUID starts at byte 24 of the chunk; its
-                # first two bytes are the wrapped format tag
-                (tag,) = struct.unpack_from("<H", buf, body + 24)
-            if tag not in (
-                _WAV_PCM, _WAV_FLOAT, _WAV_ALAW, _WAV_ULAW,
-                _WAV_IMA_ADPCM, _WAV_MS_ADPCM,
-            ):
-                raise NotImplementedError(
-                    f"WAV format tag 0x{tag:04X}: only integer PCM, IEEE "
-                    "float, G.711 A-law/μ-law, and IMA/MS ADPCM decode "
-                    "without an audio library"
-                )
-            if channels == 0 or rate == 0:
-                raise ValueError("WAV fmt chunk has zero channels or sample rate")
-            if tag in (_WAV_IMA_ADPCM, _WAV_MS_ADPCM):
-                fmt = _parse_wav_adpcm_fmt(buf, body, size, tag, channels, rate,
-                                           block, bits)
-                pos = body + size + (size & 1)
-                continue
-            allowed = {
-                _WAV_PCM: (8, 16, 24, 32),
-                _WAV_FLOAT: (32, 64),
-                _WAV_ALAW: (8,),  # G.711 is one companded byte per sample
-                _WAV_ULAW: (8,),
-            }[tag]
-            if bits not in allowed:
-                raise NotImplementedError(
-                    f"WAV {bits}-bit for format tag 0x{tag:04X} "
-                    "is not a decodable layout"
-                )
-            if block != channels * (bits // 8):
-                raise ValueError(
-                    f"WAV block align {block} != channels*bytes {channels * (bits // 8)}"
-                )
-            fmt = {"tag": tag, "channels": channels, "rate": rate, "bits": bits,
-                   "block": block}
-        elif cid == b"fact":
-            if size >= 4:
-                (fact,) = struct.unpack_from("<I", buf, body)
-        elif cid == b"data":
-            if body + size > len(buf):
-                raise ValueError(
-                    f"truncated WAV data chunk: {len(buf) - body} bytes, "
-                    f"declared {size}"
-                )
-            data = (body, size)
-        pos = body + size + (size & 1)  # RIFF pads odd chunks to even
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    if data[1] % fmt["block"]:
-        raise ValueError(
-            "WAV data length is not a whole number of "
-            + ("blocks" if "spb" in fmt else "sample frames")
-        )
-    if fact is not None and "spb" in fmt:
-        n_max = (data[1] // fmt["block"]) * fmt["spb"]
-        if not 0 < fact <= n_max:
-            raise ValueError(
-                f"WAV fact count {fact} outside the decoded range 1..{n_max}"
-            )
-        fmt["fact"] = fact
-    return fmt, data[0], data[1]
-
-
-def _parse_wav_adpcm_fmt(
-    buf: bytes, body: int, size: int, tag: int, channels: int, rate: int,
-    block: int, bits: int,
-) -> dict:
-    """The ADPCM fmt-chunk extension: cbSize, samplesPerBlock, and (MS)
-    the predictor coefficient table. The declared samplesPerBlock must
-    match what the block layout actually holds — a mismatch means the
-    header lies about the framing and every window offset would shift."""
-    import struct
-
-    if bits != 4:
-        raise NotImplementedError(
-            f"{bits}-bit ADPCM: only the standard 4-bit codes decode"
-        )
-    name = "IMA" if tag == _WAV_IMA_ADPCM else "MS"
-    if size < 20:
-        raise ValueError(f"{name} ADPCM fmt chunk is {size} bytes, needs >= 20")
-    (cb,) = struct.unpack_from("<H", buf, body + 16)
-    if cb < 2 or size < 18 + cb:
-        raise ValueError(f"{name} ADPCM cbSize {cb} too small for samplesPerBlock")
-    (spb,) = struct.unpack_from("<H", buf, body + 18)
-    fmt = {"tag": tag, "channels": channels, "rate": rate, "bits": 4,
-           "block": block, "spb": spb}
-    if tag == _WAV_IMA_ADPCM:
-        body_bytes = block - 4 * channels
-        if body_bytes <= 0 or body_bytes % (4 * channels):
-            raise ValueError(
-                f"IMA ADPCM block align {block} is not headers plus whole "
-                f"4-byte groups for {channels} channel(s)"
-            )
-        expect = body_bytes * 2 // channels + 1
-    else:
-        if cb < 4 + 4 * 7 or size < 18 + 4 + 4 * 7:
-            raise ValueError("MS ADPCM fmt chunk lacks the coefficient table")
-        (n_coefs,) = struct.unpack_from("<H", buf, body + 20)
-        if n_coefs < 7:
-            raise ValueError(f"MS ADPCM declares {n_coefs} coefficient pairs, needs >= 7")
-        pairs = struct.unpack_from(f"<{2 * n_coefs}h", buf, body + 22)
-        coef1 = np.array(pairs[0::2], dtype=np.int64)
-        coef2 = np.array(pairs[1::2], dtype=np.int64)
-        if (coef1[:7] != _MS_ADPCM_COEF1).any() or (coef2[:7] != _MS_ADPCM_COEF2).any():
-            raise ValueError("MS ADPCM coefficient table alters the 7 standard pairs")
-        fmt["coefs"] = (coef1, coef2)
-        body_bytes = block - 7 * channels
-        if body_bytes <= 0 or (body_bytes * 2) % channels:
-            raise ValueError(
-                f"MS ADPCM block align {block} does not frame {channels} channel(s)"
-            )
-        expect = body_bytes * 2 // channels + 2
-    if spb != expect:
-        raise ValueError(
-            f"{name} ADPCM declares {spb} samples/block, layout holds {expect}"
-        )
-    return fmt
-
-
-def probe_audio(payload: bytes) -> dict:
-    """Container metadata from the header walk alone — no sample is
-    converted; the cheap planner path, like :func:`probe_video`. Works
-    over every supported container (WAV / Sun AU / AIFF / FLAC)."""
-    buf = bytes(payload)
-    if buf[:4] == b"fLaC":
-        return probe_flac(buf)
-    if buf[:4] == b"OggS":
-        return _probe_ogg(buf)
-    if _is_adts(buf):
-        return _probe_adts(buf)
-    if buf[:3] == b"ID3" or (
-        len(buf) >= 2 and buf[0] == 0xFF and (buf[1] & 0xE0) == 0xE0
-    ):
-        return _probe_mp3(buf)
-    afmt, _, dlen = _parse_audio_header(buf)
-    n = dlen // afmt["block"]
-    if "spb" in afmt:  # ADPCM: block units hold spb samples, fact trims
-        n = afmt.get("fact", n * afmt["spb"])
-    container = "wav" if buf[:4] == b"RIFF" else (
-        "au" if buf[:4] == b".snd" else "aiff"
-    )
-    return {
-        "sample_rate": afmt["rate"],
-        "channels": afmt["channels"],
-        "bits": afmt["bits"],
-        "encoding": {"pcm_u8": "pcm", "pcm_s8": "pcm"}.get(
-            afmt["codec"], afmt["codec"]
-        ),
-        "container": container,
-        "n_samples": n,
-        "duration_sec": n / afmt["rate"],
-    }
-
-
-def _wav_frames_to_array(raw: bytes, fmt: dict) -> "np.ndarray":
-    """WAV-layout wrapper over the container-agnostic
-    :func:`_frames_to_array` — kept as the replica hook the kernel
-    tests pin."""
-    return _frames_to_array(raw, _afmt_from_wav(fmt))
-
-
-def decode_audio(payload: bytes) -> "tuple[np.ndarray, int]":
-    """Decode a WAV / Sun AU / AIFF / FLAC payload to ((n, channels)
-    float64 samples in [-1, 1), sample_rate) — pure stdlib+numpy, exact
-    normalization per :func:`_frames_to_array` (FLAC decodes losslessly
-    through :func:`decode_flac`)."""
-    buf = bytes(payload)
-    if buf[:4] == b"fLaC":
-        return decode_flac(buf)
-    if buf[:4] == b"OggS":
-        raise NotImplementedError(
-            "Ogg Vorbis/Opus sample decode needs an audio library; "
-            "probe_audio covers typing, duration, and page framing"
-        )
-    if _is_adts(buf):
-        raise NotImplementedError(
-            "AAC (ADTS) sample decode needs an audio library; "
-            "probe_audio covers typing, duration, and frame framing"
-        )
-    if buf[:3] == b"ID3" or (
-        len(buf) >= 2 and buf[0] == 0xFF and (buf[1] & 0xE0) == 0xE0
-    ):
-        raise NotImplementedError(
-            "MPEG audio (MP3) sample decode needs an audio library; "
-            "probe_audio covers typing, duration, and VBR detection"
-        )
-    afmt, off, dlen = _parse_audio_header(buf)
-    arr = _frames_to_array(buf[off : off + dlen], afmt)
-    if "fact" in afmt:
-        # ADPCM blocks are fixed-size; the fact chunk carries the true
-        # sample count so the final block's padding trims off
-        arr = arr[: afmt["fact"]]
-    return arr, afmt["rate"]
-
-
-def encode_wav(
-    samples: "np.ndarray",
-    sample_rate: int,
-    bits: int = 16,
-    law: "str | None" = None,
-    adpcm: "str | None" = None,
-    block_align: "int | None" = None,
-) -> bytes:
-    """Minimal WAV encoder for round-trip tests: ``samples`` is (n,) or
-    (n, channels) with dtype matching ``bits`` — uint8 (8), int16 (16),
-    int32 (24: low three bytes kept, or 32), float32/float64 (IEEE float
-    tags); ``law`` of ``"alaw"``/``"ulaw"`` G.711-compresses int16
-    linear input instead; ``adpcm`` of ``"ima"``/``"ms"`` writes 4-bit
-    block-coded ADPCM (int16 linear in, the one genuinely LOSSY audio
-    path — decode is within a quantizer step, not bit-exact), with a
-    ``fact`` chunk trimming the final block's padding. The deterministic
-    spec-literal replica :func:`decode_audio` is tested against — not a
-    production encoder."""
-    import struct
-
-    arr = np.asarray(samples)
-    if arr.ndim == 1:
-        arr = arr.reshape(-1, 1)
-    n, ch = arr.shape
-    if adpcm is not None:
-        return _encode_wav_adpcm(
-            arr.astype("int64"), int(sample_rate), adpcm, block_align
-        )
-    if law is not None:
-        tag = _WAV_ALAW if law == "alaw" else _WAV_ULAW
-        bits = 8
-        raw = _g711_compress(arr.astype("int64"), law).tobytes()
-    elif arr.dtype == np.float32 or arr.dtype == np.float64:
-        tag = _WAV_FLOAT
-        bits = 32 if arr.dtype == np.float32 else 64
-        raw = arr.astype("<f4" if bits == 32 else "<f8").tobytes()
-    elif bits == 8:
-        tag = _WAV_PCM
-        raw = arr.astype("u1").tobytes()
-    elif bits == 16:
-        tag = _WAV_PCM
-        raw = arr.astype("<i2").tobytes()
-    elif bits == 24:
-        tag = _WAV_PCM
-        v = arr.astype("<i4").reshape(-1)
-        b = np.empty((v.size, 3), dtype="u1")
-        b[:, 0] = v & 0xFF
-        b[:, 1] = (v >> 8) & 0xFF
-        b[:, 2] = (v >> 16) & 0xFF
-        raw = b.tobytes()
-    elif bits == 32:
-        tag = _WAV_PCM
-        raw = arr.astype("<i4").tobytes()
-    else:
-        raise ValueError(f"bits must be 8/16/24/32, got {bits}")
-    block = ch * (bits // 8)
-    fmt = struct.pack("<HHIIHH", tag, ch, sample_rate, sample_rate * block, block, bits)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(raw)) + raw + (b"\x00" if len(raw) & 1 else b"")
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def _encode_wav_adpcm(
-    arr: "np.ndarray", rate: int, kind: str, block_align: "int | None"
-) -> bytes:
-    """The ADPCM half of :func:`encode_wav`: block the int16 signal,
-    run the quantizer with the DECODER's own state update (encoder and
-    decoder stay in lockstep, so reconstruction error is exactly one
-    quantizer truncation per sample), pad the last block by repeating
-    the final sample, and record the true count in a ``fact`` chunk."""
-    import struct
-
-    n, ch = arr.shape
-    if n < 2:
-        raise ValueError("ADPCM needs at least two samples")
-    if kind == "ima":
-        block = block_align if block_align is not None else 4 * ch * 16
-        body = block - 4 * ch
-        if body <= 0 or body % (4 * ch):
-            raise ValueError(f"IMA block align {block} invalid for {ch} channel(s)")
-        spb = body * 2 // ch + 1
-    elif kind == "ms":
-        block = block_align if block_align is not None else 70 * ch
-        body = block - 7 * ch
-        if body <= 0 or (body * 2) % ch:
-            raise ValueError(f"MS block align {block} invalid for {ch} channel(s)")
-        spb = body * 2 // ch + 2
-    else:
-        raise ValueError(f"adpcm must be 'ima' or 'ms', got {kind!r}")
-    n_blocks = -(-n // spb)
-    padded = np.vstack([arr, np.repeat(arr[-1:], n_blocks * spb - n, axis=0)])
-    clamp = lambda v: max(-32768, min(32767, v))  # noqa: E731
-    blocks = []
-    if kind == "ima":
-        idx = [0] * ch  # step index carries across blocks (header restates it)
-        for b in range(n_blocks):
-            x = padded[b * spb : (b + 1) * spb]
-            head = b""
-            nibs = [[] for _ in range(ch)]
-            for c in range(ch):
-                pred = int(x[0, c])
-                head += struct.pack("<hBB", pred, idx[c], 0)
-                for s in x[1:, c]:
-                    step = int(_IMA_STEP_TABLE[idx[c]])
-                    diff = int(s) - pred
-                    code = 8 if diff < 0 else 0
-                    diff = abs(diff)
-                    if diff >= step:
-                        code |= 4
-                        diff -= step
-                    if diff >= step >> 1:
-                        code |= 2
-                        diff -= step >> 1
-                    if diff >= step >> 2:
-                        code |= 1
-                    d = (step >> 3) + (step >> 2 if code & 1 else 0) + (
-                        step >> 1 if code & 2 else 0
-                    ) + (step if code & 4 else 0)
-                    pred = clamp(pred - d if code & 8 else pred + d)
-                    idx[c] = min(88, max(0, idx[c] + int(_IMA_INDEX_TABLE[code & 7])))
-                    nibs[c].append(code)
-            data = bytearray(head)
-            for g in range((spb - 1) // 8):
-                for c in range(ch):
-                    eight = nibs[c][8 * g : 8 * g + 8]
-                    for k in range(0, 8, 2):
-                        data.append(eight[k] | (eight[k + 1] << 4))
-            blocks.append(bytes(data))
-    else:
-        for b in range(n_blocks):
-            x = padded[b * spb : (b + 1) * spb]
-            s2 = [int(x[0, c]) for c in range(ch)]
-            s1 = [int(x[1, c]) for c in range(ch)]
-            delta = [
-                max(16, int(np.mean(np.abs(np.diff(x[:, c]))) / 4) or 16)
-                for c in range(ch)
-            ]
-            head = bytes([0] * ch)  # predictor pair 0: coefs (256, 0)
-            head += b"".join(struct.pack("<h", d) for d in delta)
-            head += b"".join(struct.pack("<h", v) for v in s1)
-            head += b"".join(struct.pack("<h", v) for v in s2)
-            codes = []
-            for s in range(2, spb):
-                for c in range(ch):
-                    pred = (s1[c] * 256 + s2[c] * 0) >> 8
-                    err = int(x[s, c]) - pred
-                    q = err // delta[c] if err >= 0 else -((-err) // delta[c])
-                    q = max(-8, min(7, q))
-                    recon = clamp(pred + q * delta[c])
-                    codes.append(q & 0xF)
-                    s2[c], s1[c] = s1[c], recon
-                    delta[c] = max(
-                        16, (int(_MS_ADPCM_ADAPT[q & 0xF]) * delta[c]) >> 8
-                    )
-            data = bytearray(head)
-            for k in range(0, len(codes), 2):
-                data.append((codes[k] << 4) | codes[k + 1])
-            blocks.append(bytes(data))
-    raw = b"".join(blocks)
-    if len(raw) != n_blocks * block:
-        raise ValueError("ADPCM encoder framed the blocks wrong")  # unreachable
-    if kind == "ima":
-        ext = struct.pack("<HH", 2, spb)
-        tag = _WAV_IMA_ADPCM
-    else:
-        pairs = b"".join(
-            struct.pack("<hh", int(a), int(b2))
-            for a, b2 in zip(_MS_ADPCM_COEF1, _MS_ADPCM_COEF2)
-        )
-        ext = struct.pack("<HHH", 4 + len(pairs), spb, 7) + pairs
-        tag = _WAV_MS_ADPCM
-    byte_rate = rate * block // spb
-    fmt = struct.pack("<HHIIHH", tag, ch, rate, byte_rate, block, 4) + ext
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"fact" + struct.pack("<II", 4, n)
-    chunks += b"data" + struct.pack("<I", len(raw)) + raw + (
-        b"\x00" if len(raw) & 1 else b""
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-# --- AU / AIFF containers --------------------------------------------------
-#
-# The other two classic uncompressed-audio containers a crawl contains:
-# Sun AU (.snd — big-endian header, G.711 μ-law is literally encoding 1)
-# and AIFF / AIFF-C (IFF chunks, 80-bit extended-float sample rate, the
-# "sowt" little-endian and fl32/fl64/G.711 AIFC compressions). Both are
-# header walks over the SAME sample layouts WAV already decodes, so the
-# frame conversion is shared (:func:`_frames_to_array`) and only the
-# parsers differ. Genuinely-compressed codecs (ADPCM, MP3-in-AIFF, ima4)
-# stay behind the NotImplementedError gate.
-
-_AU_ENCODINGS = {
-    1: ("ulaw", 8), 2: ("pcm_s8", 8), 3: ("pcm", 16), 4: ("pcm", 24),
-    5: ("pcm", 32), 6: ("float", 32), 7: ("float", 64), 27: ("alaw", 8),
-}
-
-
-def _parse_au(buf: bytes):
-    """Sun AU header: 6 big-endian u32 fields after the ``.snd`` magic;
-    data size 0xFFFFFFFF means 'rest of file' per the spec."""
-    import struct
-
-    if len(buf) < 24:
-        raise ValueError("truncated AU header")
-    off, dsize, enc, rate, ch = struct.unpack_from(">IIIII", buf, 4)
-    if off < 24 or off > len(buf):
-        raise ValueError(f"AU data offset {off} out of bounds")
-    if ch == 0 or rate == 0:
-        raise ValueError("AU header has zero channels or sample rate")
-    if enc not in _AU_ENCODINGS:
-        raise NotImplementedError(
-            f"AU encoding {enc}: only G.711/PCM/IEEE-float layouts decode "
-            "without an audio library"
-        )
-    codec, bits = _AU_ENCODINGS[enc]
-    block = ch * (bits // 8)
-    dlen = len(buf) - off if dsize == 0xFFFFFFFF else dsize
-    if off + dlen > len(buf):
-        raise ValueError(
-            f"truncated AU data: {len(buf) - off} bytes, declared {dlen}"
-        )
-    if dlen % block:
-        raise ValueError("AU data length is not a whole number of sample frames")
-    return (
-        {"codec": codec, "endian": ">", "channels": ch, "rate": rate,
-         "bits": bits, "block": block},
-        off, dlen,
-    )
-
-
-def _f80_decode(b: bytes) -> int:
-    """80-bit IEEE extended float → integer sample rate (AIFF stores
-    rates as small exact integers; the explicit-integer-bit mantissa
-    makes the shift arithmetic exact)."""
-    import struct
-
-    se, mant = struct.unpack(">HQ", b)
-    sign, exp = se >> 15, se & 0x7FFF
-    if exp == 0 and mant == 0:
-        return 0
-    if sign:
-        raise ValueError("negative AIFF sample rate")
-    sh = exp - 16383 - 63
-    return int(mant << sh) if sh >= 0 else int(mant >> -sh)
-
-
-def _f80_encode(rate: int) -> bytes:
-    import struct
-
-    if rate <= 0:
-        raise ValueError(f"sample rate must be positive, got {rate}")
-    e = rate.bit_length() - 1
-    return struct.pack(">HQ", 16383 + e, rate << (63 - e))
-
-
-_AIFC_COMPRESSIONS = {
-    b"NONE": ("pcm", ">", None), b"sowt": ("pcm", "<", 16),
-    b"fl32": ("float", ">", 32), b"FL32": ("float", ">", 32),
-    b"fl64": ("float", ">", 64), b"FL64": ("float", ">", 64),
-    b"ulaw": ("ulaw", ">", 8), b"ULAW": ("ulaw", ">", 8),
-    b"alaw": ("alaw", ">", 8), b"ALAW": ("alaw", ">", 8),
-}
-
-
-def _parse_aiff(buf: bytes):
-    """AIFF / AIFF-C chunk walk: COMM carries the layout (incl. the
-    80-bit extended-float rate and, for AIFC, the compression type),
-    SSND the frames (after its own offset field). G.711 AIFC advertises
-    the UNCOMPRESSED 16-bit size in sampleSize, so the stored width
-    comes from the compression table, not COMM."""
-    import struct
-
-    aifc = buf[8:12] == b"AIFC"
-    comm = None
-    data = None
-    pos = 12
-    while pos + 8 <= len(buf):
-        cid = buf[pos : pos + 4]
-        (size,) = struct.unpack_from(">I", buf, pos + 4)
-        body = pos + 8
-        if cid == b"COMM":
-            if size < (22 if aifc else 18):
-                raise ValueError(f"AIFF COMM chunk is {size} bytes")
-            ch, nframes, bits = struct.unpack_from(">HIH", buf, body)
-            rate = _f80_decode(buf[body + 8 : body + 18])
-            comp = bytes(buf[body + 18 : body + 22]) if aifc else b"NONE"
-            comm = (ch, nframes, bits, rate, comp)
-        elif cid == b"SSND":
-            o, _blocksize = struct.unpack_from(">II", buf, body)
-            data = (body + 8 + o, size - 8 - o)
-        pos = body + size + (size & 1)  # IFF pads odd chunks
-    if comm is None or data is None:
-        raise ValueError("AIFF missing COMM/SSND chunk")
-    ch, nframes, bits, rate, comp = comm
-    if ch == 0 or rate == 0:
-        raise ValueError("AIFF COMM has zero channels or sample rate")
-    if comp not in _AIFC_COMPRESSIONS:
-        raise NotImplementedError(
-            f"AIFC compression {comp!r}: only NONE/sowt/fl32/fl64/G.711 "
-            "decode without an audio library"
-        )
-    codec, endian, forced_bits = _AIFC_COMPRESSIONS[comp]
-    if forced_bits is not None:
-        bits = forced_bits
-    elif bits not in (8, 16, 24, 32):
-        raise NotImplementedError(
-            f"AIFF sampleSize {bits}: only whole-byte widths decode"
-        )
-    if codec == "pcm" and bits == 8:
-        codec = "pcm_s8"  # AIFF PCM is signed at every width
-    block = ch * (bits // 8)
-    dlen = nframes * block
-    if data[1] < dlen or data[0] + dlen > len(buf):
-        raise ValueError(
-            f"truncated AIFF SSND: {data[1]} bytes for {nframes} frames"
-        )
-    return (
-        {"codec": codec, "endian": endian, "channels": ch, "rate": rate,
-         "bits": bits, "block": block},
-        data[0], dlen,
-    )
-
-
-def _parse_audio_header(payload: bytes):
-    """Container dispatch: WAV (RIFF), Sun AU (.snd), AIFF/AIFF-C (FORM)
-    → (normalized layout dict, data offset, data length)."""
-    buf = bytes(payload)
-    if buf[:4] == b"RIFF":
-        fmt, off, dlen = _parse_wav_header(buf)
-        return _afmt_from_wav(fmt), off, dlen
-    if buf[:4] == b".snd":
-        return _parse_au(buf)
-    if buf[:4] == b"FORM" and buf[8:12] in (b"AIFF", b"AIFC"):
-        return _parse_aiff(buf)
-    if buf[:4] == b"fLaC":
-        raise NotImplementedError(
-            "FLAC frames are entropy-coded — no byte-slice window path; "
-            "decode_audio/decode_flac pay one full decode instead"
-        )
-    raise NotImplementedError(
-        "unsupported audio payload: only WAV (RIFF), Sun AU (.snd), "
-        "AIFF/AIFF-C, and FLAC decode without an audio library"
-    )
-
-
-def _afmt_from_wav(fmt: dict) -> dict:
-    codec = {
-        _WAV_FLOAT: "float", _WAV_ALAW: "alaw", _WAV_ULAW: "ulaw",
-        _WAV_IMA_ADPCM: "ima_adpcm", _WAV_MS_ADPCM: "ms_adpcm",
-    }.get(fmt["tag"], "pcm_u8" if fmt["bits"] == 8 else "pcm")
-    out = {"codec": codec, "endian": "<", "channels": fmt["channels"],
-           "rate": fmt["rate"], "bits": fmt["bits"], "block": fmt["block"]}
-    for k in ("spb", "coefs", "fact"):
-        if k in fmt:
-            out[k] = fmt[k]
-    return out
-
-
-def _frames_to_array(raw: bytes, f: dict) -> "np.ndarray":
-    """Raw sample frames → (n, channels) float64 in [-1, 1) for any
-    container's normalized layout: unsigned 8-bit re-centers then /128,
-    signed 8/16/24/32-bit divide by 2^(bits−1), IEEE float passes
-    through, G.711 expands to linear 16-bit then /2^15 — byte order per
-    the container. Every conversion is exact in float64 (≤53 mantissa
-    bits), so replicas can assert equality."""
-    bits, ch, e = f["bits"], f["channels"], f["endian"]
-    codec = f["codec"]
-    if codec == "ima_adpcm":
-        arr = _decode_ima_blocks(raw, ch, f["block"]).astype("float64") / 32768.0
-        return arr
-    if codec == "ms_adpcm":
-        arr = _decode_ms_blocks(raw, ch, f["block"], f["coefs"])
-        return arr.astype("float64") / 32768.0
-    if codec in ("alaw", "ulaw"):
-        arr = _g711_expand(np.frombuffer(raw, dtype="u1"), codec).astype("float64") / 32768.0
-    elif codec == "float":
-        arr = np.frombuffer(raw, dtype=e + ("f4" if bits == 32 else "f8")).astype("float64")
-    elif codec == "pcm_u8":
-        arr = (np.frombuffer(raw, dtype="u1").astype("float64") - 128.0) / 128.0
-    elif codec == "pcm_s8":
-        arr = np.frombuffer(raw, dtype="i1").astype("float64") / 128.0
-    elif bits == 16:
-        arr = np.frombuffer(raw, dtype=e + "i2").astype("float64") / 32768.0
-    elif bits == 24:
-        b = np.frombuffer(raw, dtype="u1").reshape(-1, 3).astype("int64")
-        lo, mid_, hi = (0, 1, 2) if e == "<" else (2, 1, 0)
-        v = b[:, lo] | (b[:, mid_] << 8) | (b[:, hi] << 16)
-        arr = ((v ^ 0x800000) - 0x800000).astype("float64") / 8388608.0
-    else:  # 32-bit integer PCM
-        arr = np.frombuffer(raw, dtype=e + "i4").astype("float64") / 2147483648.0
-    return arr.reshape(-1, ch)
-
-
-def encode_au(
-    samples: "np.ndarray", sample_rate: int, encoding: str = "pcm16"
-) -> bytes:
-    """Minimal Sun AU encoder for round-trip tests: same input dtype
-    conventions as :func:`encode_wav` (int16 for "pcm16"/G.711, int32
-    for "pcm24"/"pcm32", int8 for "pcm8", float32/float64 for
-    "f32"/"f64"), big-endian samples, 24-byte header."""
-    import struct
-
-    enc_ids = {"ulaw": 1, "pcm8": 2, "pcm16": 3, "pcm24": 4, "pcm32": 5,
-               "f32": 6, "f64": 7, "alaw": 27}
-    if encoding not in enc_ids:
-        raise ValueError(f"unsupported AU encoding {encoding!r}")
-    arr = np.asarray(samples)
-    if arr.ndim == 1:
-        arr = arr.reshape(-1, 1)
-    if encoding in ("ulaw", "alaw"):
-        raw = _g711_compress(arr.astype("int64"), encoding).tobytes()
-    elif encoding == "pcm8":
-        raw = arr.astype("i1").tobytes()
-    elif encoding == "pcm16":
-        raw = arr.astype(">i2").tobytes()
-    elif encoding == "pcm24":
-        v = arr.astype(">i4").astype("int64").reshape(-1)
-        b = np.empty((v.size, 3), dtype="u1")
-        b[:, 0] = (v >> 16) & 0xFF
-        b[:, 1] = (v >> 8) & 0xFF
-        b[:, 2] = v & 0xFF
-        raw = b.tobytes()
-    elif encoding == "pcm32":
-        raw = arr.astype(">i4").tobytes()
-    else:
-        raw = arr.astype(">f4" if encoding == "f32" else ">f8").tobytes()
-    return struct.pack(
-        ">4sIIIII", b".snd", 24, len(raw), enc_ids[encoding],
-        int(sample_rate), arr.shape[1],
-    ) + raw
-
-
-def encode_aiff(
-    samples: "np.ndarray",
-    sample_rate: int,
-    bits: int = 16,
-    compression: "str | None" = None,
-) -> bytes:
-    """Minimal AIFF / AIFF-C encoder for round-trip tests: plain AIFF
-    for big-endian PCM (``bits`` 8/16/24/32, input conventions as
-    :func:`encode_wav`), AIFF-C for ``compression`` "sowt" (int16
-    little-endian), "fl32"/"fl64", or "ulaw"/"alaw" (int16 linear in,
-    G.711 out, sampleSize advertised 16 as real writers do)."""
-    import struct
-
-    arr = np.asarray(samples)
-    if arr.ndim == 1:
-        arr = arr.reshape(-1, 1)
-    n, ch = arr.shape
-    comm_bits = bits
-    if compression is None:
-        if bits == 8:
-            raw = arr.astype("i1").tobytes()
-        elif bits == 16:
-            raw = arr.astype(">i2").tobytes()
-        elif bits == 24:
-            v = arr.astype(">i4").astype("int64").reshape(-1)
-            b = np.empty((v.size, 3), dtype="u1")
-            b[:, 0] = (v >> 16) & 0xFF
-            b[:, 1] = (v >> 8) & 0xFF
-            b[:, 2] = v & 0xFF
-            raw = b.tobytes()
-        elif bits == 32:
-            raw = arr.astype(">i4").tobytes()
-        else:
-            raise ValueError(f"bits must be 8/16/24/32, got {bits}")
-    elif compression == "sowt":
-        raw = arr.astype("<i2").tobytes()
-        comm_bits = 16
-    elif compression in ("fl32", "fl64"):
-        comm_bits = 32 if compression == "fl32" else 64
-        raw = arr.astype(">f4" if compression == "fl32" else ">f8").tobytes()
-    elif compression in ("ulaw", "alaw"):
-        raw = _g711_compress(arr.astype("int64"), compression).tobytes()
-        comm_bits = 16  # the uncompressed width, per real AIFC writers
-    else:
-        raise ValueError(f"unsupported AIFF compression {compression!r}")
-    aifc = compression is not None
-    comm = struct.pack(">HIH", ch, n, comm_bits) + _f80_encode(int(sample_rate))
-    if aifc:
-        comp_name = b"\x00\x00"  # empty pascal string, padded even
-        comm += compression.encode() + comp_name
-    chunks = b"COMM" + struct.pack(">I", len(comm)) + comm
-    ssnd = struct.pack(">II", 0, 0) + raw
-    chunks += b"SSND" + struct.pack(">I", len(ssnd)) + ssnd
-    if len(ssnd) & 1:
-        chunks += b"\x00"
-    form_type = b"AIFC" if aifc else b"AIFF"
-    if aifc:
-        fver = struct.pack(">I", 0xA2805140)  # AIFCVersion1 timestamp
-        chunks = b"FVER" + struct.pack(">I", 4) + fver + chunks
-    return b"FORM" + struct.pack(">I", 4 + len(chunks)) + form_type + chunks
-
-
-# --- FLAC ------------------------------------------------------------------
-#
-# FLAC is lossless audio's GIF: everything in it is fixed-point integer
-# bookkeeping — Rice-coded residuals, integer LPC predictors, stereo
-# decorrelation — with no entropy-coder library required. The decoder
-# below covers the full subframe surface (constant / verbatim / fixed
-# orders 0-4 / arbitrary LPC with quantized coefficients), both Rice
-# methods incl. escape partitions, wasted bits, all four channel
-# assignments, and verifies the header CRC-8 and frame CRC-16. Like the
-# JPEG entropy loop, the per-sample Python is for feature extraction,
-# not codec-speed transcoding.
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8 poly 0x07 (FLAC frame-header CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16 poly 0x8005 (FLAC whole-frame CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
-    return crc
-
-
-class _FlacReader:
-    """MSB-first bit reader with byte-position access (CRC spans)."""
-
-    def __init__(self, data: bytes, byte_pos: int = 0):
-        self.data = data
-        self.bit = byte_pos * 8
-
-    def read(self, n: int) -> int:
-        end = self.bit + n
-        if end > len(self.data) * 8:
-            raise ValueError("FLAC stream ended mid-field")
-        val = 0
-        b = self.bit
-        while b < end:
-            byte = self.data[b >> 3]
-            avail = 8 - (b & 7)
-            take = min(avail, end - b)
-            val = (val << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            b += take
-        self.bit = end
-        return val
-
-    def sread(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 24:
-                raise ValueError("runaway FLAC unary code")
-        return q
-
-    def align(self) -> None:
-        self.bit = (self.bit + 7) & ~7
-
-
-def _flac_utf8_number(rd: "_FlacReader") -> int:
-    """The UTF-8-like extended coding FLAC uses for frame/sample
-    numbers (up to 36 bits / 7 bytes)."""
-    b0 = rd.read(8)
-    if b0 < 0x80:
-        return b0
-    n = 0
-    probe = b0
-    while probe & 0x40:
-        n += 1
-        probe <<= 1
-    if n == 0 or n > 6:
-        raise ValueError(f"invalid FLAC number lead byte 0x{b0:02x}")
-    val = b0 & (0x3F >> n)
-    for _ in range(n):
-        c = rd.read(8)
-        if c & 0xC0 != 0x80:
-            raise ValueError("invalid FLAC number continuation byte")
-        val = (val << 6) | (c & 0x3F)
-    return val
-
-
-_FLAC_FIXED_COEFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}
-_FLAC_RATES = {1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-               7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000}
-
-
-def _flac_residual(rd: "_FlacReader", n: int, order: int) -> "list[int]":
-    method = rd.read(2)
-    if method > 1:
-        raise ValueError(f"reserved FLAC residual method {method}")
-    pbits = 4 if method == 0 else 5
-    escape = (1 << pbits) - 1
-    porder = rd.read(4)
-    parts = 1 << porder
-    if n % parts:
-        raise ValueError("FLAC partition order does not divide block size")
-    out: "list[int]" = []
-    for p in range(parts):
-        count = (n >> porder) - (order if p == 0 else 0)
-        if count < 0:
-            raise ValueError("FLAC partition smaller than predictor order")
-        param = rd.read(pbits)
-        if param == escape:
-            raw = rd.read(5)
-            out += [rd.sread(raw) if raw else 0 for _ in range(count)]
-        else:
-            for _ in range(count):
-                q = rd.unary()
-                zig = (q << param) | rd.read(param)
-                out.append((zig >> 1) ^ -(zig & 1))
-    return out
-
-
-def _flac_subframe(rd: "_FlacReader", n: int, bps: int) -> "list[int]":
-    if rd.read(1):
-        raise ValueError("FLAC subframe padding bit set")
-    typ = rd.read(6)
-    wasted = 0
-    if rd.read(1):
-        wasted = rd.unary() + 1
-        bps -= wasted
-    if typ == 0:
-        samples = [rd.sread(bps)] * n
-    elif typ == 1:
-        samples = [rd.sread(bps) for _ in range(n)]
-    elif 8 <= typ <= 12:
-        order = typ - 8
-        samples = [rd.sread(bps) for _ in range(order)]
-        res = _flac_residual(rd, n, order)
-        coefs = _FLAC_FIXED_COEFS[order]
-        for i, r in enumerate(res):
-            pred = sum(c * samples[order + i - 1 - j] for j, c in enumerate(coefs))
-            samples.append(pred + r)
-    elif typ >= 32:
-        order = typ - 31
-        samples = [rd.sread(bps) for _ in range(order)]
-        prec = rd.read(4) + 1
-        if prec == 16:
-            raise ValueError("invalid FLAC LPC coefficient precision escape")
-        shift = rd.sread(5)
-        if shift < 0:
-            raise ValueError("negative FLAC LPC shift")
-        coefs = [rd.sread(prec) for _ in range(order)]
-        res = _flac_residual(rd, n, order)
-        for i, r in enumerate(res):
-            pred = sum(
-                c * samples[order + i - 1 - j] for j, c in enumerate(coefs)
-            ) >> shift
-            samples.append(pred + r)
-    else:
-        raise ValueError(f"reserved FLAC subframe type {typ}")
-    if wasted:
-        samples = [s << wasted for s in samples]
-    return samples
-
-
-def _flac_streaminfo(buf: bytes):
-    """Parse the metadata chain; returns (streaminfo dict, first frame
-    byte offset)."""
-    import struct
-
-    if buf[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload")
-    pos = 4
-    si = None
-    while True:
-        if pos + 4 > len(buf):
-            raise ValueError("truncated FLAC metadata header")
-        head = buf[pos]
-        (length,) = struct.unpack(">I", b"\x00" + buf[pos + 1 : pos + 4])
-        body = pos + 4
-        if body + length > len(buf):
-            raise ValueError("truncated FLAC metadata block")
-        if head & 0x7F == 0:  # STREAMINFO
-            if length != 34:
-                raise ValueError(f"FLAC STREAMINFO is {length} bytes, expected 34")
-            rd = _FlacReader(buf, body)
-            rd.read(16), rd.read(16), rd.read(24), rd.read(24)
-            rate = rd.read(20)
-            channels = rd.read(3) + 1
-            bps = rd.read(5) + 1
-            total = rd.read(36)
-            si = {"rate": rate, "channels": channels, "bits": bps,
-                  "total": total}
-        pos = body + length
-        if head & 0x80:
-            break
-    if si is None:
-        raise ValueError("FLAC missing STREAMINFO")
-    if si["rate"] == 0:
-        raise ValueError("FLAC STREAMINFO has zero sample rate")
-    return si, pos
-
-
-def probe_flac(payload: bytes) -> dict:
-    """STREAMINFO metadata without touching any frame."""
-    si, _ = _flac_streaminfo(bytes(payload))
-    return {
-        "sample_rate": si["rate"],
-        "channels": si["channels"],
-        "bits": si["bits"],
-        "encoding": "flac",
-        "container": "flac",
-        "n_samples": si["total"],
-        "duration_sec": si["total"] / si["rate"],
-    }
-
-
-def decode_flac(payload: bytes) -> "tuple[np.ndarray, int]":
-    """Full FLAC decode to ((n, channels) float64 in [-1, 1),
-    sample_rate), verifying each frame's header CRC-8 and frame CRC-16.
-    Unlike the raw containers, FLAC frames are entropy-coded — there is
-    no byte-slicing shortcut, so window features over FLAC pay one full
-    decode (stated, not hidden)."""
-    buf = bytes(payload)
-    si, pos = _flac_streaminfo(buf)
-    rd = _FlacReader(buf, pos)
-    chans: "list[list[int]]" = [[] for _ in range(si["channels"])]
-    decoded = 0
-    while decoded < si["total"] or (si["total"] == 0 and rd.bit < len(buf) * 8 - 15):
-        frame_start = rd.bit >> 3
-        if rd.read(14) != 0x3FFE:
-            raise ValueError(f"bad FLAC frame sync at byte {frame_start}")
-        rd.read(1)  # reserved
-        rd.read(1)  # blocking strategy
-        bs_code = rd.read(4)
-        sr_code = rd.read(4)
-        ch_code = rd.read(4)
-        ss_code = rd.read(3)
-        rd.read(1)  # reserved
-        _flac_utf8_number(rd)
-        if bs_code == 0:
-            raise ValueError("reserved FLAC block size code 0")
-        if bs_code == 1:
-            n = 192
-        elif bs_code <= 5:
-            n = 576 << (bs_code - 2)
-        elif bs_code == 6:
-            n = rd.read(8) + 1
-        elif bs_code == 7:
-            n = rd.read(16) + 1
-        else:
-            n = 256 << (bs_code - 8)
-        if sr_code == 0:
-            pass
-        elif sr_code in _FLAC_RATES:
-            if _FLAC_RATES[sr_code] != si["rate"]:
-                raise ValueError("FLAC frame sample rate contradicts STREAMINFO")
-        elif sr_code == 12:
-            rd.read(8)
-        elif sr_code in (13, 14):
-            rd.read(16)
-        else:
-            raise ValueError("invalid FLAC sample rate code 15")
-        bps = {0: si["bits"], 1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}.get(ss_code)
-        if bps is None:
-            raise ValueError(f"reserved FLAC sample size code {ss_code}")
-        header_end = rd.bit >> 3
-        if _crc8(buf[frame_start:header_end]) != rd.read(8):
-            raise ValueError(f"FLAC header CRC-8 mismatch at byte {frame_start}")
-        if ch_code < 8:
-            n_ch = ch_code + 1
-            if n_ch != si["channels"]:
-                raise ValueError("FLAC frame channel count contradicts STREAMINFO")
-            sub = [_flac_subframe(rd, n, bps) for _ in range(n_ch)]
-        elif ch_code in (8, 9, 10):
-            if si["channels"] != 2:
-                raise ValueError("FLAC stereo decorrelation in a non-stereo stream")
-            # the SIDE channel carries one extra bit
-            if ch_code == 8:  # left/side
-                left = _flac_subframe(rd, n, bps)
-                side = _flac_subframe(rd, n, bps + 1)
-                sub = [left, [l - s for l, s in zip(left, side)]]
-            elif ch_code == 9:  # right/side (side first)
-                side = _flac_subframe(rd, n, bps + 1)
-                right = _flac_subframe(rd, n, bps)
-                sub = [[r + s for r, s in zip(right, side)], right]
-            else:  # mid/side
-                mid = _flac_subframe(rd, n, bps)
-                side = _flac_subframe(rd, n, bps + 1)
-                sub = [[], []]
-                for m, s in zip(mid, side):
-                    m = (m << 1) | (s & 1)
-                    sub[0].append((m + s) >> 1)
-                    sub[1].append((m - s) >> 1)
-        else:
-            raise ValueError(f"reserved FLAC channel assignment {ch_code}")
-        rd.align()
-        if _crc16(buf[frame_start : rd.bit >> 3]) != rd.read(16):
-            raise ValueError(f"FLAC frame CRC-16 mismatch at byte {frame_start}")
-        for c, s in zip(chans, sub):
-            c.extend(s)
-        decoded += n
-    if si["total"] and decoded > si["total"]:
-        chans = [c[: si["total"]] for c in chans]
-    arr = np.array(chans, dtype="int64").T.astype("float64")
-    return arr / float(1 << (si["bits"] - 1)), si["rate"]
-
-
-def _flac_rice_best(res: "list[int]") -> int:
-    """Cheapest 4-bit Rice parameter for a residual partition by exact
-    size count."""
-    zigs = [(r << 1) ^ (r >> 63) for r in np.asarray(res, dtype="int64").tolist()]
-    best, best_bits = 0, None
-    for param in range(15):
-        bits = sum((z >> param) + 1 + param for z in zigs)
-        if best_bits is None or bits < best_bits:
-            best, best_bits = param, bits
-        if best_bits <= len(zigs) * (param + 1):
-            break  # larger params only add fixed cost from here
-    return best
-
-
-def _flac_write_residual(wr: "_FaxWriter", res: "list[int]") -> None:
-    """Method-0 Rice, partition order 0; escapes to raw when the best
-    parameter would still blow up (pathological residuals)."""
-    param = _flac_rice_best(res)
-    zigs = [(r << 1) ^ (r >> 63) for r in np.asarray(res, dtype="int64").tolist()]
-    total = sum((z >> param) + 1 + param for z in zigs)
-    raw_bits = max((abs(r) + (r >= 0)).bit_length() + 1 for r in res) if res else 1
-    wr.write(2, 0)
-    wr.write(4, 0)  # partition order 0
-    if raw_bits <= 31 and total > len(res) * raw_bits + 5:
-        wr.write(4, 15)  # escape
-        wr.write(5, raw_bits)
-        for r in res:
-            wr.write(raw_bits, r & ((1 << raw_bits) - 1))
-        return
-    wr.write(4, param)
-    for z in zigs:
-        q = z >> param
-        for _ in range(q):
-            wr.write(1, 0)
-        wr.write(1, 1)
-        if param:
-            wr.write(param, z & ((1 << param) - 1))
-
-
-def _flac_utf8_encode(wr: "_FaxWriter", val: int) -> None:
-    if val < 0x80:
-        wr.write(8, val)
-        return
-    chunks = []
-    while True:
-        chunks.append(val & 0x3F)
-        val >>= 6
-        lead_space = 6 - len(chunks)
-        if val < (1 << lead_space) or lead_space == 0:
-            break
-    lead = (0xFF << (7 - len(chunks))) & 0xFF | val
-    wr.write(8, lead)
-    for c in reversed(chunks):
-        wr.write(8, 0x80 | c)
-
-
-def _flac_write_subframe(
-    wr: "_FaxWriter", s: "list[int]", bps: int, mode: str
-) -> None:
-    wr.write(1, 0)
-    if mode == "constant":
-        wr.write(6, 0)
-        wr.write(1, 0)
-        wr.write(bps, s[0] & ((1 << bps) - 1))
-        return
-    if mode == "verbatim":
-        wr.write(6, 1)
-        wr.write(1, 0)
-        for v in s:
-            wr.write(bps, v & ((1 << bps) - 1))
-        return
-    if mode.startswith("fixed"):
-        order = int(mode[5:])
-        wr.write(6, 8 + order)
-        wr.write(1, 0)
-        for v in s[:order]:
-            wr.write(bps, v & ((1 << bps) - 1))
-        coefs = _FLAC_FIXED_COEFS[order]
-        res = [
-            s[i] - sum(c * s[i - 1 - j] for j, c in enumerate(coefs))
-            for i in range(order, len(s))
-        ]
-        _flac_write_residual(wr, res)
-        return
-    if mode == "lpc":
-        # a deliberately simple quantized predictor: order 2,
-        # coefficients (3, -2) >> 1 — exercises the LPC decode path with
-        # exact integer math, not a production analysis stage
-        order, prec, shift, coefs = 2, 4, 1, [3, -2]
-        if len(s) <= order:
-            return _flac_write_subframe(wr, s, bps, "verbatim")
-        wr.write(6, 32 + order - 1)
-        wr.write(1, 0)
-        for v in s[:order]:
-            wr.write(bps, v & ((1 << bps) - 1))
-        wr.write(4, prec - 1)
-        wr.write(5, shift & 0x1F)
-        for c in coefs:
-            wr.write(prec, c & ((1 << prec) - 1))
-        res = [
-            s[i] - (sum(c * s[i - 1 - j] for j, c in enumerate(coefs)) >> shift)
-            for i in range(order, len(s))
-        ]
-        _flac_write_residual(wr, res)
-        return
-    raise ValueError(f"unsupported subframe mode {mode!r}")
-
-
-def encode_flac(
-    samples: "np.ndarray",
-    sample_rate: int,
-    bits: int = 16,
-    block_size: int = 256,
-    subframe: str = "fixed2",
-    stereo: str = "independent",
-) -> bytes:
-    """Minimal compliant FLAC encoder for round-trip tests: integer
-    input (n,) or (n, channels) within ``bits`` range, fixed block
-    size, one subframe strategy for every block ("constant" picked
-    automatically when a block is flat) — "verbatim", "fixed0".."fixed4",
-    or "lpc" — and for stereo a decorrelation ``stereo`` of
-    "independent", "left_side", "right_side", or "mid_side". Writes
-    real CRC-8/CRC-16 trailers; the decoder verifies them."""
-    import struct
-
-    arr = np.asarray(samples, dtype="int64")
-    if arr.ndim == 1:
-        arr = arr.reshape(-1, 1)
-    n, ch = arr.shape
-    if ch > 8:
-        raise ValueError(f"FLAC supports at most 8 channels, got {ch}")
-    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
-    if arr.min(initial=0) < lo or arr.max(initial=0) > hi:
-        raise ValueError(f"samples exceed {bits}-bit range")
-    if stereo != "independent" and ch != 2:
-        raise ValueError("stereo decorrelation needs exactly 2 channels")
-    ss_code = {8: 1, 12: 2, 16: 4, 20: 5, 24: 6, 32: 7}.get(bits)
-    if ss_code is None:
-        raise ValueError(f"unsupported bits {bits}")
-    head = _FaxWriter()
-    head.write(16, block_size)
-    head.write(16, block_size)
-    head.write(24, 0)
-    head.write(24, 0)
-    head.write(20, int(sample_rate))
-    head.write(3, ch - 1)
-    head.write(5, bits - 1)
-    head.write(36, n)
-    out = bytearray(b"fLaC")
-    out += bytes([0x80]) + struct.pack(">I", 34)[1:] + head.bytes() + b"\x00" * 16
-    for frame_no, start in enumerate(range(0, n, block_size)):
-        block = arr[start : start + block_size]
-        bn = block.shape[0]
-        wr = _FaxWriter()
-        wr.write(14, 0x3FFE)
-        wr.write(1, 0)
-        wr.write(1, 0)  # fixed blocksize strategy
-        wr.write(4, 7)  # 16-bit block size follows
-        wr.write(4, 0)  # sample rate from STREAMINFO
-        ch_code = {"independent": ch - 1, "left_side": 8,
-                   "right_side": 9, "mid_side": 10}[stereo]
-        wr.write(4, ch_code)
-        wr.write(3, ss_code)
-        wr.write(1, 0)
-        _flac_utf8_encode(wr, frame_no)
-        wr.write(16, bn - 1)
-        header = wr.bytes()  # everything so far is byte-aligned
-        wr.out, wr.nbits, wr.acc = bytearray(header), 0, 0
-        wr.write(8, _crc8(header))
-        cols = [block[:, c].tolist() for c in range(ch)]
-        if stereo == "left_side":
-            subs = [(cols[0], bits), ([l - r for l, r in zip(*cols)], bits + 1)]
-        elif stereo == "right_side":
-            subs = [([l - r for l, r in zip(*cols)], bits + 1), (cols[1], bits)]
-        elif stereo == "mid_side":
-            side = [l - r for l, r in zip(*cols)]
-            mid = [(l + r) >> 1 for l, r in zip(*cols)]
-            subs = [(mid, bits), (side, bits + 1)]
-        else:
-            subs = [(c, bits) for c in cols]
-        for s, sbps in subs:
-            mode = subframe
-            if len(set(s)) == 1:
-                mode = "constant"
-            elif mode.startswith("fixed") and len(s) <= int(mode[5:]):
-                mode = "verbatim"
-            _flac_write_subframe(wr, s, sbps, mode)
-        wr.align()
-        body = wr.bytes()
-        out += body + struct.pack(">H", _crc16(body))
-    return bytes(out)
-
-
-AUDIO_WINDOW_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("window_no", IntegerType(), False),
-        StructField("n_windows", IntegerType(), False),
-        StructField("sample_rate", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("n_samples", IntegerType(), False),
-        StructField("rms", DoubleType(), False),
-        StructField("peak", DoubleType(), False),
-        StructField("zero_crossings", IntegerType(), False),
-        StructField("mean_val", DoubleType(), False),
-        StructField("checksum", StringType(), False),
-    ]
-)
-
-
-def audio_media_table(
-    emb: DataFrame, sample_rate: int = 8000, repeat: int = 16,
-    law: "str | None" = None, container: str = "wav",
-    adpcm: "str | None" = None,
-) -> DataFrame:
-    """Deterministic synthetic audio media table derived from the
-    embeddings table: each vector's float32 values scale to int16 PCM
-    (clip(v * 16384)) and tile ``repeat`` times — a real mono waveform
-    per row with known content, no external data. ``law`` of
-    ``"alaw"``/``"ulaw"`` writes the same waveform G.711-companded (the
-    telephony container shape), quantized to segment midpoints by
-    construction; ``container`` picks "wav", "au", or "aiff" around the
-    identical frames; ``adpcm`` of "ima"/"ms" writes the block-coded
-    WAV form instead (the one lossy audio path)."""
-    if container not in ("wav", "au", "aiff"):
-        raise ValueError(f"unsupported container {container!r}")
-    if adpcm is not None and (container != "wav" or law is not None):
-        raise ValueError("adpcm is a WAV-only coding and excludes law")
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for v in pdf["embedding"]:
-                f = np.asarray(v, dtype="<f4").astype("float64")
-                pcm = np.clip(np.round(f * 16384.0), -32768, 32767).astype("<i2")
-                frames = np.tile(pcm, repeat)
-                if container == "wav":
-                    payloads.append(
-                        encode_wav(frames, sample_rate, law=law, adpcm=adpcm)
-                    )
-                elif container == "au":
-                    payloads.append(
-                        encode_au(frames, sample_rate, encoding=law or "pcm16")
-                    )
-                else:
-                    payloads.append(
-                        encode_aiff(frames, sample_rate, compression=law)
-                    )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "media": payloads,
-                    "media_type": "audio/wav",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return emb.mapInPandas(pack, MEDIA_SCHEMA)
-
-
-def sample_audio_windows(
-    media: DataFrame,
-    window: int = 256,
-    every_k: int = 1,
-    max_windows: "int | None" = None,
-) -> DataFrame:
-    """Windowed per-segment audio features over Arrow batches: the
-    header walk sizes the fixed-stride sample frames, windows ``0,
-    every_k, 2*every_k, …`` (at most ``max_windows``) are byte-sliced
-    and converted, and each yields one row — RMS, peak, zero-crossing
-    count, float64 mean, md5 of the window's raw frame bytes (content,
-    not container). Unsampled windows are never converted — the audio
-    analog of :func:`sample_video_frames`'s skip-unsampled discipline;
-    a codec-backed decoder for compressed audio plugs in behind the
-    same schema."""
-    if window < 1 or every_k < 1:
-        raise ValueError(f"window/every_k must be >= 1, got {window}/{every_k}")
-    import hashlib
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload in zip(pdf["vec_id"], pdf["media"]):
-                buf = bytes(payload)
-                fmt, off, dlen = _parse_audio_header(buf)
-                n = dlen // fmt["block"]
-                n_windows = -(-n // window)
-                picked = range(0, n_windows, every_k)
-                if max_windows is not None:
-                    picked = list(picked)[:max_windows]
-                for i in picked:
-                    a = off + i * window * fmt["block"]
-                    b = min(off + dlen, a + window * fmt["block"])
-                    seg = buf[a:b]
-                    x = _frames_to_array(seg, fmt)
-                    mono = x.mean(axis=1)  # features over the channel mean
-                    zc = int(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                    rows.append(
-                        (int(vid), int(i), int(n_windows), fmt["rate"],
-                         fmt["channels"], int(x.shape[0]),
-                         float(np.sqrt(np.mean(mono * mono))),
-                         float(np.abs(x).max()), zc, float(mono.mean()),
-                         hashlib.md5(seg).hexdigest())
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["vec_id", "window_no", "n_windows", "sample_rate",
-                         "channels", "n_samples", "rms", "peak",
-                         "zero_crossings", "mean_val", "checksum"],
-            )
-
-    return media.mapInPandas(feats, AUDIO_WINDOW_SCHEMA)
-
-
-VIDEO_FRAME_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("frame_no", IntegerType(), False),
-        StructField("n_frames", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("min_val", IntegerType(), False),
-        StructField("max_val", IntegerType(), False),
-        StructField("mean_val", DoubleType(), False),
-        StructField("checksum", StringType(), False),
-    ]
-)
-
-
-def video_media_table(
-    emb: DataFrame, width: int = 8, n_frames: int = 4, colorspace: str = "mono"
-) -> DataFrame:
-    """Deterministic synthetic Y4M media table derived from the
-    embeddings table: each vector's float32 values map to the same uint8
-    raster :func:`image_media_table` builds, and frame ``k`` is that
-    raster cyclically shifted ``k`` columns — a real multi-frame payload
-    with known per-frame content, no external data. Height is padded to
-    the chroma-sampling multiple when ``colorspace`` subsamples."""
-    sub = _y4m_subsample(colorspace)
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for v in pdf["embedding"]:
-                f = np.asarray(v, dtype="<f4")
-                u8 = np.clip((f * 64.0 + 128.0), 0, 255).astype("uint8")
-                if colorspace == "mono":
-                    rows = -(-u8.size // width)
-                    base = np.zeros((rows, width), dtype="uint8")
-                else:
-                    rows = -(-u8.size // (width * 3))
-                    if sub is not None:
-                        rows += (-rows) % sub[1]  # pad height to sampling multiple
-                    base = np.zeros((rows, width, 3), dtype="uint8")
-                base.reshape(-1)[: u8.size] = u8
-                frames = [np.roll(base, k, axis=1) for k in range(n_frames)]
-                payloads.append(encode_y4m(frames, colorspace=colorspace))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "media": payloads,
-                    "media_type": "video/x-yuv4mpeg",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return emb.mapInPandas(pack, MEDIA_SCHEMA)
-
-
-def sample_video_frames(
-    media: DataFrame, every_k: int = 1, max_frames: "int | None" = None
-) -> DataFrame:
-    """Frame-sampled per-frame features over Arrow batches: each payload
-    is probed, frames ``0, every_k, 2*every_k, …`` (at most
-    ``max_frames``) are decoded, and each sampled frame yields one row —
-    dims, min/max, float64-accumulated mean, md5 of the frame's raw
-    frame bytes (content, not container). Unsampled frames are never
-    converted. Y4M and AVI (MJPEG / raw DIB) decode in-process through
-    :func:`_video_spans`; an ffmpeg-backed decoder for codec-coded
-    containers plugs in behind the same schema."""
-    if every_k < 1:
-        raise ValueError(f"every_k must be >= 1, got {every_k}")
-    import hashlib
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload in zip(pdf["vec_id"], pdf["media"]):
-                buf = bytes(payload)
-                spans, dec = _video_spans(buf)
-                picked = spans[::every_k]
-                if max_frames is not None:
-                    picked = picked[:max_frames]
-                for i, start, end in picked:
-                    img = dec(buf, start, end)
-                    ch = 1 if img.ndim == 2 else img.shape[2]
-                    flat = img.reshape(-1)
-                    rows.append(
-                        (int(vid), i, len(spans), int(img.shape[1]), int(img.shape[0]),
-                         int(ch), int(flat.min()), int(flat.max()),
-                         float(flat.astype("float64").sum() / flat.size),
-                         hashlib.md5(buf[start:end]).hexdigest())
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["vec_id", "frame_no", "n_frames", "width", "height",
-                         "channels", "min_val", "max_val", "mean_val", "checksum"],
-            )
-
-    return media.mapInPandas(feats, VIDEO_FRAME_SCHEMA)
 
 
 def media_table(emb: DataFrame) -> DataFrame:
@@ -7229,51 +3731,6 @@ def _decode_webp(payload: bytes) -> "np.ndarray":
     raise ValueError(f"WebP container without an image chunk: {kinds}")
 
 
-def probe_webp(payload: bytes) -> dict:
-    """Header-only WebP probe (no pixel decode): container layout, codec,
-    dimensions, alpha/animation flags. Lossy VP8 dimensions come from
-    the uncompressed frame header (3-byte frame tag + 0x9D012A start
-    code + two le16 fields), so even gated payloads probe."""
-    import struct
-
-    chunks = _webp_chunks(payload)
-    kinds = [c[0] for c in chunks]
-    info: dict = {
-        "container": "webp",
-        "chunks": kinds,
-        "animated": "ANIM" in kinds or "ANMF" in kinds,
-        "extended": kinds[0] == "VP8X" if kinds else False,
-    }
-    for fourcc, body in chunks:
-        if fourcc == "VP8X":
-            if len(body) < 10:
-                raise ValueError("truncated VP8X header")
-            flags = body[0]
-            info["has_alpha"] = bool(flags & 0x10)
-            info["canvas_width"] = 1 + int.from_bytes(body[4:7], "little")
-            info["canvas_height"] = 1 + int.from_bytes(body[7:10], "little")
-        elif fourcc == "VP8L":
-            rd = _Vp8lReader(body)
-            if rd.bits(8) != 0x2F:
-                raise ValueError("VP8L signature byte missing")
-            info["codec"] = "vp8l"
-            info["width"] = rd.bits(14) + 1
-            info["height"] = rd.bits(14) + 1
-            info.setdefault("has_alpha", bool(rd.bits(1)))
-        elif fourcc == "VP8 ":
-            if len(body) < 10 or body[3:6] != b"\x9d\x01\x2a":
-                raise ValueError("VP8 frame header start code missing")
-            info["codec"] = "vp8"
-            (wraw,) = struct.unpack_from("<H", body, 6)
-            (hraw,) = struct.unpack_from("<H", body, 8)
-            info["width"] = wraw & 0x3FFF
-            info["height"] = hraw & 0x3FFF
-            info.setdefault("has_alpha", "ALPH" in kinds)
-    if "codec" not in info:
-        raise ValueError(f"WebP container without an image chunk: {kinds}")
-    return info
-
-
 def _vp8l_huff_lengths(counts: "dict[int, int]", max_len: int) -> "dict[int, int]":
     """Length-limited Huffman code lengths via package-merge: optimal
     under the depth bound and Kraft-complete by construction (asserted).
@@ -7742,228 +4199,6 @@ def encode_webp(
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
 
 
-IMAGE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("min_val", IntegerType(), False),
-        StructField("max_val", IntegerType(), False),
-        StructField("mean_val", DoubleType(), False),
-        StructField("checksum", StringType(), False),
-    ]
-)
-
-
-_IMAGE_ENCODERS = {
-    # lossless encoders share one pixel construction, so decoded features
-    # must agree bit-for-bit across formats (pinned by pytest)
-    "ppm": (encode_pnm, "image/x-portable-pixmap"),
-    "png": (encode_png, "image/png"),
-    "bmp": (encode_bmp, "image/bmp"),
-    "gif": (encode_gif, "image/gif"),  # lossless for ≤256-color rasters
-    "tiff": (encode_tiff, "image/tiff"),
-    "tiff_packbits": (
-        lambda a: encode_tiff(a, compression="packbits", rows_per_strip=4),
-        "image/tiff",
-    ),
-    "tiff_lzw": (
-        lambda a: encode_tiff(a, compression="lzw", predictor=2),
-        "image/tiff",
-    ),
-    "tiff_tiled": (
-        lambda a: encode_tiff(a, compression="lzw", predictor=2, tile=(16, 16)),
-        "image/tiff",
-    ),
-    # near-lossless at quant=1 like "jpeg"; shared tables in tag 347
-    "tiff_jpeg": (
-        lambda a: encode_tiff(
-            a, compression="jpeg", rows_per_strip=8, jpeg_tables=True
-        ),
-        "image/tiff",
-    ),
-    "jpeg": (encode_jpeg, "image/jpeg"),  # near-lossless at quant=1
-    # same quantized coefficients as "jpeg" → decodes bit-identically
-    "jpeg_progressive": (encode_jpeg_progressive, "image/jpeg"),
-    # lossless VP8L with a production-ish feature mix (cache + LZ77 +
-    # subtract-green) — joins the bit-exact parity set
-    "webp": (
-        lambda a: encode_webp(a, cache_bits=6, subtract_green=True),
-        "image/webp",
-    ),
-}
-
-
-def image_media_table(emb: DataFrame, width: int = 8, fmt: str = "ppm") -> DataFrame:
-    """Deterministic synthetic raster media table derived from the
-    embeddings table: each vector's float32 values are affinely mapped to
-    uint8 and packed as a ``fmt`` image (``width``×ceil(dim/width/3) RGB,
-    zero-padded) — real image payloads for the decode path without any
-    external data, same construction on every run."""
-    encode, media_type = _IMAGE_ENCODERS[fmt]
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for v in pdf["embedding"]:
-                f = np.asarray(v, dtype="<f4")
-                u8 = np.clip((f * 64.0 + 128.0), 0, 255).astype("uint8")
-                rows = -(-u8.size // (width * 3))  # ceil
-                img = np.zeros((rows, width, 3), dtype="uint8")
-                img.reshape(-1)[: u8.size] = u8
-                payloads.append(encode(img))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "media": payloads,
-                    "media_type": media_type,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return emb.mapInPandas(pack, MEDIA_SCHEMA)
-
-
-def bilevel_media_table(
-    emb: DataFrame, width: int = 8, fmt: str = "g4", n_pages: int = 1
-) -> DataFrame:
-    """Deterministic synthetic scanned-document media table: each
-    vector's float32 values threshold to a bilevel raster (negative →
-    black, the sign pattern of the embedding) written as a CCITT-coded
-    (``fmt``="g4"/"g3"/"g3_2d"/"mh") or bit-packed ("packbits"/"none"/…)
-    1-bit TIFF — the shape of a real scanned-document corpus, no
-    external data. With ``n_pages`` > 1, page ``k`` is the raster
-    cyclically shifted ``k`` columns and the payload is a multi-page
-    TIFF (chained IFDs), the multi-page scan the reference's page
-    iterator dissolves (ref: pypdfocr/pypdfocr.py _get_pages)."""
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for v in pdf["embedding"]:
-                f = np.asarray(v, dtype="<f4")
-                bits = (f < 0).astype("uint8")
-                rows = -(-bits.size // width)  # ceil
-                page = np.zeros((rows, width), dtype="uint8")
-                page.reshape(-1)[: bits.size] = bits
-                visual = (1 - page) * np.uint8(255)
-                if n_pages == 1:
-                    payloads.append(
-                        encode_tiff(visual, compression=fmt, bilevel=True)
-                    )
-                else:
-                    payloads.append(
-                        encode_tiff_multipage(
-                            [np.roll(visual, k, axis=1) for k in range(n_pages)],
-                            compression=fmt, bilevel=True,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "media": payloads,
-                    "media_type": "image/tiff",
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return emb.mapInPandas(pack, MEDIA_SCHEMA)
-
-
-TIFF_PAGE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("page_no", IntegerType(), False),
-        StructField("n_pages", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("min_val", IntegerType(), False),
-        StructField("max_val", IntegerType(), False),
-        StructField("mean_val", DoubleType(), False),
-        StructField("checksum", StringType(), False),
-    ]
-)
-
-
-def sample_tiff_pages(
-    media: DataFrame, every_k: int = 1, max_pages: "int | None" = None
-) -> DataFrame:
-    """Page-sampled per-page features over Arrow batches for multi-page
-    TIFF payloads: the IFD chain is walked (metadata only), pages ``0,
-    every_k, 2*every_k, …`` (at most ``max_pages``) are decoded, and
-    each yields one row — dims, min/max, float64-accumulated mean, md5
-    of the DECODED pixel bytes (a page's strips are scattered through
-    the container, so content identity hashes pixels, unlike the
-    contiguous-span video path). Unsampled pages are never decoded —
-    1-in-k sampling costs ~1/k, the :func:`sample_video_frames`
-    economics on the scanned-document container."""
-    if every_k < 1:
-        raise ValueError(f"every_k must be >= 1, got {every_k}")
-    import hashlib
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload in zip(pdf["vec_id"], pdf["media"]):
-                buf = bytes(payload)
-                bo, ifds = _tiff_ifds(buf)
-                picked = list(range(len(ifds)))[::every_k]
-                if max_pages is not None:
-                    picked = picked[:max_pages]
-                for no in picked:
-                    img = _decode_tiff_ifd(buf, bo, ifds[no])
-                    ch = 1 if img.ndim == 2 else img.shape[2]
-                    flat = img.reshape(-1)
-                    rows.append(
-                        (int(vid), no, len(ifds), int(img.shape[1]),
-                         int(img.shape[0]), int(ch), int(flat.min()),
-                         int(flat.max()),
-                         float(flat.astype("float64").sum() / flat.size),
-                         hashlib.md5(np.ascontiguousarray(img).tobytes()).hexdigest())
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["vec_id", "page_no", "n_pages", "width", "height",
-                         "channels", "min_val", "max_val", "mean_val", "checksum"],
-            )
-
-    return media.mapInPandas(feats, TIFF_PAGE_SCHEMA)
-
-
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """Decoded-image features over Arrow batches: payload →
-    :func:`decode_image` → (dims, min/max, float64-accumulated mean, md5
-    of the raw payload). Same mapInPandas plumbing as the tensor path —
-    the shape a PIL/ffmpeg decoder plugs into unchanged."""
-    import hashlib
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload in zip(pdf["vec_id"], pdf["media"]):
-                buf = bytes(payload)
-                img = decode_image(buf)
-                h, w = img.shape[:2]
-                ch = 1 if img.ndim == 2 else img.shape[2]
-                flat = img.reshape(-1)
-                rows.append(
-                    (int(vid), len(buf), int(w), int(h), int(ch),
-                     int(flat.min()), int(flat.max()),
-                     float(flat.astype("float64").sum() / flat.size),
-                     hashlib.md5(buf).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["vec_id", "n_bytes", "width", "height", "channels",
-                         "min_val", "max_val", "mean_val", "checksum"],
-            )
-
-    return media.mapInPandas(feats, IMAGE_FEATURE_SCHEMA)
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """Decode stand-in + feature extraction over Arrow batches: payload →
     (dim, md5 checksum, L2 norm). The shape every real decoder plugs into."""
@@ -7992,772 +4227,3 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(feats, FEATURE_SCHEMA)
-
-
-def probe_media(payload: bytes, media_type: "str | None" = None) -> dict:
-    """One magic-byte dispatcher over every supported container: returns
-    the format probe's dict plus ``kind`` ∈ {image, audio, video,
-    tensor}. This is the crawl-scale first pass — typing 100 TB of
-    opaque binary costs a header read per payload, and everything
-    downstream (decode, frame sampling, feature extraction) plans
-    against its output. RIFF disambiguates on the form type (WAVE →
-    audio, AVI → video, WEBP → image); an explicit ``media_type`` of
-    ``tensor/*`` short-circuits raw tensor payloads, which carry no
-    magic."""
-    buf = bytes(payload)
-    if media_type and media_type.startswith("tensor/"):
-        itemsize = {"tensor/f32": 4, "tensor/f64": 8}.get(media_type)
-        if itemsize is None:
-            raise ValueError(f"unknown tensor media_type {media_type!r}")
-        if len(buf) % itemsize:
-            raise ValueError(
-                f"{media_type} payload of {len(buf)} bytes is not a "
-                f"multiple of {itemsize}"
-            )
-        return {"kind": "tensor", "container": media_type,
-                "n_samples": len(buf) // itemsize}
-    if buf[:4] == b"RIFF":
-        form = buf[8:12]
-        if form == b"WAVE":
-            return {"kind": "audio", **probe_audio(buf)}
-        if form == b"AVI ":
-            return {"kind": "video", **probe_video(buf)}
-        if form == b"WEBP":
-            return {"kind": "image", **probe_image(buf)}
-        raise NotImplementedError(f"unsupported RIFF form {form!r}")
-    if (
-        buf[:4] in (b".snd", b"fLaC", b"OggS")
-        or (buf[:4] == b"FORM" and buf[8:12] in (b"AIFF", b"AIFC"))
-        or buf[:3] == b"ID3"
-        or _is_adts(buf)
-        or (len(buf) >= 2 and buf[0] == 0xFF and (buf[1] & 0xE0) == 0xE0
-            and buf[:2] != b"\xff\xd8")
-    ):
-        return {"kind": "audio", **probe_audio(buf)}
-    if (
-        buf[:9] == b"YUV4MPEG2"
-        or buf[4:8] == b"ftyp"
-        or buf[:4] == b"\x1a\x45\xdf\xa3"
-    ):
-        return {"kind": "video", **probe_video(buf)}
-    return {"kind": "image", **probe_image(buf)}
-
-
-MEDIA_PROBE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("kind", StringType()),
-        StructField("container", StringType()),
-        StructField("codec", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("bits", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("sample_rate", DoubleType()),
-        StructField("duration_sec", DoubleType()),
-        StructField("ok", BooleanType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def probe_media_table(media: DataFrame) -> DataFrame:
-    """Typed metadata over a mixed opaque-binary media table — one
-    header read per payload over Arrow batches, no pixel or sample
-    decoded. A corrupt or unsupported payload yields ``ok=false`` with
-    the error text instead of failing the task: at crawl scale, broken
-    payloads are data, not exceptions. Columns are normalized across
-    kinds (width/height for stills and video, sample_rate/n_samples for
-    audio, codec from whichever probe reports one) so the planner
-    filters one frame, not a union of per-format schemas."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload, mtype in zip(
-                pdf["vec_id"], pdf["media"], pdf["media_type"]
-            ):
-                buf = bytes(payload)
-                base = [int(vid), mtype, len(buf)]
-                try:
-                    p = probe_media(buf, media_type=mtype)
-                except (ValueError, NotImplementedError) as exc:
-                    rows.append(base + [None] * 11 + [False, str(exc)])
-                    continue
-                codec = p.get("codec") or p.get("encoding")
-                sample_rate = p.get("sample_rate")
-                if p.get("kind") == "video" and p.get("tracks"):
-                    vids = [t for t in p["tracks"] if t.get("type") == "video"
-                            or t.get("handler") == "vide"]
-                    if vids and codec is None:
-                        codec = vids[0].get("codec")
-                    auds = [t for t in p["tracks"] if t.get("type") == "audio"]
-                    if auds and sample_rate is None:
-                        sample_rate = auds[0].get("sample_rate")
-                rows.append(
-                    base
-                    + [
-                        p.get("kind"),
-                        p.get("container"),
-                        codec,
-                        p.get("width"),
-                        p.get("height"),
-                        p.get("channels"),
-                        p.get("bits"),
-                        p.get("n_frames") or p.get("n_pages"),
-                        p.get("n_samples"),
-                        float(sample_rate) if sample_rate is not None else None,
-                        p.get("duration_sec"),
-                        True,
-                        None,
-                    ]
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_PROBE_SCHEMA])
-
-    return media.mapInPandas(feats, MEDIA_PROBE_SCHEMA)
-
-
-# --- EXIF: the metadata IFD inside JPEG APP1 / TIFF ------------------------
-#
-# EXIF is a TIFF IFD structure (byte-order mark + tagged entries) embedded
-# either in a JPEG APP1 segment ("Exif\0\0" prefix) or in the TIFF file
-# itself. Camera metadata is a curation signal (dedup by device/time,
-# synthetic-vs-camera classification) and GPS tags are PII — a crawl
-# pipeline wants both the extraction and the scrub.
-
-_EXIF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
-
-_EXIF_IFD0_TAGS = {
-    0x010E: "description", 0x010F: "make", 0x0110: "model",
-    0x0112: "orientation", 0x0131: "software", 0x0132: "datetime",
-}
-_EXIF_SUB_TAGS = {
-    0x829A: "exposure_time", 0x829D: "f_number", 0x8827: "iso",
-    0x9003: "datetime_original", 0x9004: "datetime_digitized",
-    0x920A: "focal_length", 0xA002: "pixel_width", 0xA003: "pixel_height",
-}
-_EXIF_GPS_TAGS = {
-    0x0001: "gps_lat_ref", 0x0002: "gps_lat", 0x0003: "gps_lon_ref",
-    0x0004: "gps_lon", 0x0005: "gps_alt_ref", 0x0006: "gps_alt",
-}
-
-
-def _exif_read_ifd(buf: bytes, bo: str, off: int) -> "dict[int, object]":
-    """One EXIF IFD with ALL value types decoded: ASCII → stripped str,
-    RATIONAL/SRATIONAL → float (num/den), integers → int or list.
-    Offsets are relative to the TIFF header start, i.e. ``buf[0]``."""
-    import struct
-
-    if off + 2 > len(buf):
-        raise ValueError("truncated EXIF IFD")
-    (n_entries,) = struct.unpack_from(bo + "H", buf, off)
-    out: "dict[int, object]" = {}
-    for k in range(n_entries):
-        entry = off + 2 + 12 * k
-        if entry + 12 > len(buf):
-            raise ValueError("truncated EXIF IFD entry")
-        tag, typ, count = struct.unpack_from(bo + "HHI", buf, entry)
-        size = _EXIF_TYPE_SIZES.get(typ)
-        if size is None:
-            continue  # unknown type: skip, per TIFF reader convention
-        voff = entry + 8 if size * count <= 4 else struct.unpack_from(
-            bo + "I", buf, entry + 8
-        )[0]
-        if voff + size * count > len(buf):
-            raise ValueError(f"EXIF tag 0x{tag:04X} values out of bounds")
-        if typ == 2:  # ASCII
-            out[tag] = buf[voff : voff + count].split(b"\x00")[0].decode(
-                "latin-1"
-            ).strip()
-        elif typ in (5, 10):  # (S)RATIONAL
-            fmt = "II" if typ == 5 else "ii"
-            vals = []
-            for i in range(count):
-                num, den = struct.unpack_from(bo + fmt, buf, voff + 8 * i)
-                vals.append(num / den if den else float("nan"))
-            out[tag] = vals if count > 1 else vals[0]
-        else:
-            fmt = {1: "B", 3: "H", 4: "I", 7: "B", 9: "i"}[typ]
-            vals = list(struct.unpack_from(bo + str(count) + fmt, buf, voff))
-            out[tag] = vals if count > 1 else vals[0]
-    return out
-
-
-def _gps_degrees(dms, ref: "str | None") -> float:
-    """3-rational (deg, min, sec) + hemisphere ref → signed decimal
-    degrees."""
-    if not isinstance(dms, list):
-        dms = [dms]
-    deg = sum(v / 60.0 ** i for i, v in enumerate(dms[:3]))
-    return -deg if ref in ("S", "W") else deg
-
-
-def extract_exif(payload: bytes) -> dict:
-    """EXIF metadata from a JPEG (APP1 segment) or TIFF payload: IFD0
-    camera tags, the Exif sub-IFD (timestamps, exposure), and the GPS
-    IFD reduced to signed decimal degrees. Returns
-    ``{"has_exif": False}`` when the payload simply carries none —
-    absence is data at crawl scale, not an error; structural corruption
-    inside a present EXIF block still raises."""
-    import struct
-
-    buf = bytes(payload)
-    tiff = None
-    if buf[:2] == b"\xff\xd8":  # JPEG: find APP1 "Exif\0\0"
-        pos = 2
-        while pos + 4 <= len(buf):
-            if buf[pos] != 0xFF:
-                break
-            marker = buf[pos + 1]
-            if marker == 0xFF:
-                pos += 1
-                continue
-            if marker in (0xDA, 0xD9):  # scan data / EOI: no EXIF ahead
-                break
-            (ln,) = struct.unpack_from(">H", buf, pos + 2)
-            if marker == 0xE1 and buf[pos + 4 : pos + 10] == b"Exif\x00\x00":
-                tiff = buf[pos + 10 : pos + 2 + ln]
-                break
-            pos += 2 + ln
-    elif buf[:2] in (b"II", b"MM"):
-        tiff = buf
-    if tiff is None:
-        return {"has_exif": False}
-    bo = {b"II": "<", b"MM": ">"}.get(tiff[:2])
-    if bo is None or struct.unpack_from(bo + "H", tiff, 2)[0] != 42:
-        raise ValueError("EXIF block without a valid TIFF header")
-    (ifd0_off,) = struct.unpack_from(bo + "I", tiff, 4)
-    ifd0 = _exif_read_ifd(tiff, bo, ifd0_off)
-    out: dict = {"has_exif": True, "has_gps": False}
-    for tag, name in _EXIF_IFD0_TAGS.items():
-        if tag in ifd0:
-            out[name] = ifd0[tag]
-    if 0x8769 in ifd0:  # Exif sub-IFD pointer
-        sub = _exif_read_ifd(tiff, bo, ifd0[0x8769])
-        for tag, name in _EXIF_SUB_TAGS.items():
-            if tag in sub:
-                out[name] = sub[tag]
-    if 0x8825 in ifd0:  # GPS IFD pointer
-        gps = _exif_read_ifd(tiff, bo, ifd0[0x8825])
-        named = {
-            name: gps[tag] for tag, name in _EXIF_GPS_TAGS.items() if tag in gps
-        }
-        if "gps_lat" in named and "gps_lon" in named:
-            out["has_gps"] = True
-            out["gps_lat"] = _gps_degrees(
-                named["gps_lat"], named.get("gps_lat_ref")
-            )
-            out["gps_lon"] = _gps_degrees(
-                named["gps_lon"], named.get("gps_lon_ref")
-            )
-            if "gps_alt" in named:
-                alt = named["gps_alt"]
-                out["gps_alt"] = -alt if named.get("gps_alt_ref") == 1 else alt
-    return out
-
-
-def scrub_jpeg_metadata(payload: bytes) -> bytes:
-    """Drop every metadata segment from a JPEG byte stream — APP1..APP13,
-    APP15, and COM — keeping APP0 (JFIF) and APP14 (the Adobe color
-    transform, which decode NEEDS). Pure marker surgery: the entropy-
-    coded image bytes are untouched, so the scrubbed file decodes
-    pixel-identically while EXIF (including GPS), XMP, and IPTC are
-    gone. The image-side counterpart of the text PII scrub."""
-    import struct
-
-    buf = bytes(payload)
-    if buf[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    out = bytearray(b"\xff\xd8")
-    pos = 2
-    while pos + 2 <= len(buf):
-        if buf[pos] != 0xFF:
-            raise ValueError(f"JPEG marker expected at byte {pos}")
-        marker = buf[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker == 0xDA:  # SOS: everything from here is image data
-            out += buf[pos:]
-            return bytes(out)
-        if marker == 0xD9:
-            out += buf[pos : pos + 2]
-            return bytes(out)
-        (ln,) = struct.unpack_from(">H", buf, pos + 2)
-        keep = not (
-            (0xE1 <= marker <= 0xED) or marker == 0xEF or marker == 0xFE
-        )
-        if keep:
-            out += buf[pos : pos + 2 + ln]
-        pos += 2 + ln
-    raise ValueError("JPEG without an SOS scan")
-
-
-def encode_exif(
-    make: str = "ExampleCam",
-    model: str = "X100",
-    orientation: int = 1,
-    datetime_str: str = "2020:01:02 03:04:05",
-    exposure_time: "tuple[int, int] | None" = (1, 250),
-    gps: "tuple[float, float, float] | None" = None,
-    byteorder: str = "<",
-) -> bytes:
-    """Deterministic EXIF TIFF-structure fixture (IFD0 + Exif sub-IFD +
-    optional GPS IFD) for :func:`extract_exif` tests; ``gps`` is
-    (lat, lon, alt) in signed decimal degrees."""
-    import struct
-
-    bo = byteorder
-
-    def rational(v: float, den: int = 10**6) -> "tuple[int, int]":
-        return round(abs(v) * den), den
-
-    def dms(v: float) -> "list[tuple[int, int]]":
-        v = abs(v)
-        d = int(v)
-        m = int((v - d) * 60)
-        s = (v - d - m / 60.0) * 3600.0
-        return [(d, 1), (m, 1), rational(s, 10**4)]
-
-    def build_ifd(entries: "list[tuple[int, int, object]]", base: int):
-        """entries: (tag, type, value); base = offset of this IFD inside
-        the TIFF structure. Returns (ifd_bytes, extra_bytes)."""
-        extra = bytearray()
-        extra_base = base + 2 + 12 * len(entries) + 4
-        body = struct.pack(bo + "H", len(entries))
-        for tag, typ, val in sorted(entries):
-            if typ == 2:
-                raw = val.encode("latin-1") + b"\x00"
-                count = len(raw)
-            elif typ == 5:
-                vals = val if isinstance(val, list) else [val]
-                raw = b"".join(struct.pack(bo + "II", n, d) for n, d in vals)
-                count = len(vals)
-            elif typ == 3:
-                raw = struct.pack(bo + "H", val)
-                count = 1
-            else:  # 4: LONG
-                raw = struct.pack(bo + "I", val)
-                count = 1
-            if len(raw) <= 4:
-                vfield = raw + b"\x00" * (4 - len(raw))
-            else:
-                vfield = struct.pack(bo + "I", extra_base + len(extra))
-                extra += raw
-            body += struct.pack(bo + "HHI", tag, typ, count) + vfield
-        body += struct.pack(bo + "I", 0)  # next-IFD pointer
-        return bytes(body), bytes(extra)
-
-    # layout: header(8) | IFD0+extra | ExifIFD+extra | [GPS IFD+extra]
-    header = (b"II" if bo == "<" else b"MM") + struct.pack(bo + "H", 42)
-    header += struct.pack(bo + "I", 8)
-
-    # sizes depend on offsets; build in two passes with fixed entry counts
-    ifd0_entries = [
-        (0x010F, 2, make), (0x0110, 2, model), (0x0112, 3, orientation),
-        (0x0132, 2, datetime_str), (0x8769, 4, 0),
-    ]
-    if gps is not None:
-        ifd0_entries.append((0x8825, 4, 0))
-    sub_entries = [(0x9003, 2, datetime_str)]
-    if exposure_time is not None:
-        sub_entries.append((0x829A, 5, [exposure_time]))
-
-    def sizeof(entries):
-        body = 2 + 12 * len(entries) + 4
-        extra = 0
-        for tag, typ, val in entries:
-            if typ == 2:
-                n = len(val) + 1
-            elif typ == 5:
-                n = 8 * (len(val) if isinstance(val, list) else 1)
-            else:
-                n = 4 if typ == 4 else 2
-            if n > 4:
-                extra += n
-        return body + extra
-
-    ifd0_off = 8
-    sub_off = ifd0_off + sizeof(ifd0_entries)
-    gps_off = sub_off + sizeof(sub_entries)
-    ifd0_entries = [
-        (t, ty, sub_off if t == 0x8769 else (gps_off if t == 0x8825 else v))
-        for t, ty, v in ifd0_entries
-    ]
-    out = bytearray(header)
-    body, extra = build_ifd(ifd0_entries, ifd0_off)
-    out += body + extra
-    body, extra = build_ifd(sub_entries, sub_off)
-    out += body + extra
-    if gps is not None:
-        lat, lon, alt = gps
-        gps_entries = [
-            (0x0001, 2, "N" if lat >= 0 else "S"),
-            (0x0002, 5, dms(lat)),
-            (0x0003, 2, "E" if lon >= 0 else "W"),
-            (0x0004, 5, dms(lon)),
-            (0x0005, 3, 0 if alt >= 0 else 1),
-            (0x0006, 5, [rational(alt, 100)]),
-        ]
-        body, extra = build_ifd(gps_entries, gps_off)
-        out += body + extra
-    return bytes(out)
-
-
-def insert_jpeg_exif(jpeg: bytes, exif_tiff: bytes) -> bytes:
-    """Splice an EXIF TIFF structure into a JPEG as an APP1 segment
-    right after SOI — the fixture counterpart of
-    :func:`scrub_jpeg_metadata`."""
-    import struct
-
-    if bytes(jpeg[:2]) != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    seg = b"Exif\x00\x00" + exif_tiff
-    return (
-        jpeg[:2] + b"\xff\xe1" + struct.pack(">H", len(seg) + 2) + seg + jpeg[2:]
-    )
-
-
-EXIF_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("has_exif", BooleanType()),
-        StructField("make", StringType()),
-        StructField("model", StringType()),
-        StructField("orientation", IntegerType()),
-        StructField("datetime", StringType()),
-        StructField("datetime_original", StringType()),
-        StructField("exposure_time", DoubleType()),
-        StructField("has_gps", BooleanType()),
-        StructField("gps_lat", DoubleType()),
-        StructField("gps_lon", DoubleType()),
-        StructField("gps_alt", DoubleType()),
-        StructField("scrubbed_bytes", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def exif_table(media: DataFrame, scrub: bool = False) -> DataFrame:
-    """EXIF extraction (and optional metadata scrub accounting) over
-    Arrow batches: per payload, the camera/timestamp fields, the GPS
-    verdict in decimal degrees — the PII signal an image-curation gate
-    filters on — and, with ``scrub=True``, how many bytes
-    :func:`scrub_jpeg_metadata` removes (0 for already-clean files).
-    Corrupt payloads yield ``error`` rows, not task failures."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for vid, payload in zip(pdf["vec_id"], pdf["media"]):
-                buf = bytes(payload)
-                try:
-                    x = extract_exif(buf)
-                    removed = None
-                    if scrub and buf[:2] == b"\xff\xd8":
-                        removed = len(buf) - len(scrub_jpeg_metadata(buf))
-                    rows.append(
-                        (
-                            int(vid), x["has_exif"], x.get("make"),
-                            x.get("model"), x.get("orientation"),
-                            x.get("datetime"), x.get("datetime_original"),
-                            x.get("exposure_time"), x.get("has_gps", False),
-                            x.get("gps_lat"), x.get("gps_lon"),
-                            x.get("gps_alt"), removed, None,
-                        )
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (int(vid), None, None, None, None, None, None, None,
-                         None, None, None, None, None, str(exc))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in EXIF_SCHEMA])
-
-    return media.mapInPandas(feats, EXIF_SCHEMA)
-
-
-# --- audio tags: ID3v2, Vorbis comments, RIFF INFO -------------------------
-
-_ID3_TEXT_FRAMES = {
-    "TIT2": "title", "TPE1": "artist", "TALB": "album", "TCON": "genre",
-    "TDRC": "date", "TYER": "date", "TRCK": "track", "TSSE": "software",
-}
-_RIFF_INFO_TAGS = {
-    b"INAM": "title", b"IART": "artist", b"IPRD": "album", b"IGNR": "genre",
-    b"ICRD": "date", b"ICMT": "comment", b"ISFT": "software",
-}
-_VORBIS_KEYS = {
-    "TITLE": "title", "ARTIST": "artist", "ALBUM": "album", "GENRE": "genre",
-    "DATE": "date", "TRACKNUMBER": "track", "COMMENT": "comment",
-    "ENCODER": "software",
-}
-
-
-def _id3_text(data: bytes) -> str:
-    """Decode an ID3v2 text-frame payload: leading encoding byte, then
-    the string (latin-1 / UTF-16 with BOM / UTF-16BE / UTF-8)."""
-    if not data:
-        return ""
-    enc = data[0]
-    body = data[1:].split(b"\x00" * (2 if enc in (1, 2) else 1))[0]
-    codec = {0: "latin-1", 1: "utf-16", 2: "utf-16-be", 3: "utf-8"}.get(enc)
-    if codec is None:
-        raise ValueError(f"ID3v2 text encoding {enc}")
-    return body.decode(codec).strip("\x00").strip()
-
-
-def _extract_id3v2(buf: bytes) -> dict:
-    """ID3v2.3 (plain big-endian frame sizes) and v2.4 (syncsafe) text
-    frames + COMM comments; v2.2's 3-byte layout stays gated."""
-    major = buf[3]
-    if major == 2:
-        raise NotImplementedError("ID3v2.2 (3-byte frame layout)")
-    if major not in (3, 4):
-        raise ValueError(f"ID3v2.{major} is not a known tag version")
-    size = 0
-    for b in buf[6:10]:
-        if b & 0x80:
-            raise ValueError("ID3v2 size bytes must be syncsafe (bit 7 clear)")
-        size = (size << 7) | b
-    end = 10 + size
-    pos = 10
-    if buf[5] & 0x40:  # extended header: skip by its own size field
-        ext = int.from_bytes(buf[10:14], "big")
-        if major == 4:  # syncsafe in v2.4
-            ext = sum((buf[10 + i] & 0x7F) << (7 * (3 - i)) for i in range(4))
-        pos += ext if major == 4 else ext + 4
-    out: dict = {"container": "id3v2"}
-    while pos + 10 <= end:
-        fid = buf[pos : pos + 4]
-        if fid == b"\x00\x00\x00\x00":  # padding
-            break
-        if major == 4:
-            fsz = 0
-            for b in buf[pos + 4 : pos + 8]:
-                if b & 0x80:
-                    raise ValueError("ID3v2.4 frame size must be syncsafe")
-                fsz = (fsz << 7) | b
-        else:
-            fsz = int.from_bytes(buf[pos + 4 : pos + 8], "big")
-        body = buf[pos + 10 : pos + 10 + fsz]
-        if pos + 10 + fsz > end:
-            raise ValueError(f"ID3v2 frame {fid!r} overruns the tag")
-        name = _ID3_TEXT_FRAMES.get(fid.decode("latin-1"))
-        if name and name not in out:
-            out[name] = _id3_text(body)
-        elif fid == b"COMM" and len(body) >= 4:
-            enc = body[0]
-            sep = b"\x00\x00" if enc in (1, 2) else b"\x00"
-            rest = body[4:]
-            parts = rest.split(sep, 1)
-            text = parts[1] if len(parts) == 2 else parts[0]
-            out.setdefault(
-                "comment", _id3_text(bytes([enc]) + text)
-            )
-        pos += 10 + fsz
-    return out
-
-
-def _ogg_packets(buf: bytes, max_packets: int = 4):
-    """Reassemble the first ``max_packets`` logical packets of the first
-    Ogg stream (lacing values of 255 continue a packet into the next
-    segment/page) — enough to reach the comment header without walking
-    audio data."""
-    import struct
-
-    packets = []
-    current = bytearray()
-    pos = 0
-    serial = None
-    while pos < len(buf) and len(packets) < max_packets:
-        if buf[pos : pos + 4] != b"OggS":
-            raise ValueError(f"Ogg page capture lost at byte {pos}")
-        (page_serial,) = struct.unpack_from("<I", buf, pos + 14)
-        nsegs = buf[pos + 26]
-        segs = buf[pos + 27 : pos + 27 + nsegs]
-        body = pos + 27 + nsegs
-        if serial is None:
-            serial = page_serial
-        if page_serial == serial:
-            for lace in segs:
-                current += buf[body : body + lace]
-                body += lace
-                if lace < 255:
-                    packets.append(bytes(current))
-                    current = bytearray()
-                    if len(packets) >= max_packets:
-                        break
-        pos = pos + 27 + nsegs + sum(segs)
-    return packets
-
-
-def _vorbis_comment_block(data: bytes) -> dict:
-    """The Vorbis comment structure (also used by Opus and FLAC):
-    vendor string + KEY=value pairs, all UTF-8 with u32le lengths."""
-    import struct
-
-    (vlen,) = struct.unpack_from("<I", data, 0)
-    out: dict = {"software": data[4 : 4 + vlen].decode("utf-8")}
-    pos = 4 + vlen
-    (n,) = struct.unpack_from("<I", data, pos)
-    pos += 4
-    for _ in range(n):
-        (clen,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        item = data[pos : pos + clen].decode("utf-8")
-        pos += clen
-        if "=" not in item:
-            raise ValueError(f"Vorbis comment without '=': {item!r}")
-        key, val = item.split("=", 1)
-        name = _VORBIS_KEYS.get(key.upper())
-        if name and (name not in out or name == "software"):
-            out[name] = val
-    return out
-
-
-def extract_audio_tags(payload: bytes) -> dict:
-    """Normalized audio metadata (title/artist/album/date/genre/track/
-    comment/software) from whatever the container carries: ID3v2 on MP3
-    or ADTS, Vorbis comments in Ogg (Vorbis packet 2 or OpusTags), and
-    RIFF LIST-INFO in WAV. Returns ``{"has_tags": False}`` when the
-    container is supported but carries no tags — absence is data."""
-    import struct
-
-    buf = bytes(payload)
-    if buf[:3] == b"ID3":
-        out = _extract_id3v2(buf)
-        out["has_tags"] = len(out) > 1
-        return out
-    if buf[:4] == b"OggS":
-        packets = _ogg_packets(buf)
-        for p in packets:
-            if p[:7] == b"\x03vorbis":
-                out = _vorbis_comment_block(p[7:])
-            elif p[:8] == b"OpusTags":
-                out = _vorbis_comment_block(p[8:])
-            else:
-                continue
-            out["container"] = "vorbis_comment"
-            out["has_tags"] = True
-            return out
-        return {"has_tags": False}
-    if buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
-        pos = 12
-        while pos + 8 <= len(buf):
-            cid = buf[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", buf, pos + 4)
-            body = pos + 8
-            if cid == b"LIST" and buf[body : body + 4] == b"INFO":
-                out = {"container": "riff_info", "has_tags": True}
-                sub = body + 4
-                while sub + 8 <= body + size:
-                    scid = buf[sub : sub + 4]
-                    (ssz,) = struct.unpack_from("<I", buf, sub + 4)
-                    name = _RIFF_INFO_TAGS.get(scid)
-                    if name:
-                        out[name] = (
-                            buf[sub + 8 : sub + 8 + ssz]
-                            .split(b"\x00")[0]
-                            .decode("latin-1")
-                        )
-                    sub += 8 + ssz + (ssz & 1)
-                return out
-            pos = body + size + (size & 1)
-        return {"has_tags": False}
-    if buf[:4] == b"fLaC":  # metadata block type 4 = Vorbis comment
-        pos = 4
-        while pos + 4 <= len(buf):
-            head = buf[pos]
-            length = int.from_bytes(buf[pos + 1 : pos + 4], "big")
-            if head & 0x7F == 4:
-                out = _vorbis_comment_block(buf[pos + 4 : pos + 4 + length])
-                out["container"] = "vorbis_comment"
-                out["has_tags"] = True
-                return out
-            pos += 4 + length
-            if head & 0x80:  # last-metadata-block flag
-                break
-        return {"has_tags": False}
-    if _is_adts(buf) or (
-        len(buf) >= 2 and buf[0] == 0xFF and (buf[1] & 0xE0) == 0xE0
-    ):
-        return {"has_tags": False}  # raw frame stream, no tag block
-    raise NotImplementedError(
-        "extract_audio_tags covers ID3v2 (MP3/ADTS), Ogg Vorbis/Opus and "
-        "FLAC comments, and RIFF INFO (WAV)"
-    )
-
-
-def encode_id3v2(tags: "dict[str, str]", major: int = 4) -> bytes:
-    """ID3v2.3/2.4 tag fixture from normalized keys (inverse of
-    :func:`_extract_id3v2`'s mapping), UTF-8 in v2.4, UTF-16 in v2.3 —
-    exercising both size layouts and both text encodings."""
-    frame_ids = {v: k for k, v in _ID3_TEXT_FRAMES.items() if k != "TYER"}
-    body = bytearray()
-    for name, val in tags.items():
-        if name == "comment":
-            enc = b"\x03" + b"eng" + b"\x00" + val.encode("utf-8")
-            fid = b"COMM"
-        else:
-            fid = frame_ids[name].encode("latin-1")
-            if major == 4:
-                enc = b"\x03" + val.encode("utf-8")
-            else:
-                enc = b"\x01" + val.encode("utf-16")
-        if major == 4:
-            sz = bytes((len(enc) >> (7 * (3 - i))) & 0x7F for i in range(4))
-        else:
-            sz = len(enc).to_bytes(4, "big")
-        body += fid + sz + b"\x00\x00" + enc
-    body += b"\x00" * 16  # padding
-    size = bytes((len(body) >> (7 * (3 - i))) & 0x7F for i in range(4))
-    return b"ID3" + bytes([major, 0, 0]) + size + bytes(body)
-
-
-def insert_flac_tags(
-    flac: bytes, tags: "dict[str, str]", vendor: str = "fixture-encoder"
-) -> bytes:
-    """Insert a VORBIS_COMMENT metadata block (type 4) right after a
-    FLAC file's STREAMINFO, carrying the last-block flag over — the
-    fixture for the FLAC branch of :func:`extract_audio_tags`."""
-    import struct
-
-    if flac[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload")
-    head = flac[4]
-    length = int.from_bytes(flac[5:8], "big")
-    si_end = 8 + length
-    inv = {v: k for k, v in _VORBIS_KEYS.items() if v != "software"}
-    body = bytearray(struct.pack("<I", len(vendor)) + vendor.encode())
-    pairs = [f"{inv[k]}={v}" for k, v in tags.items()]
-    body += struct.pack("<I", len(pairs))
-    for item in pairs:
-        raw = item.encode("utf-8")
-        body += struct.pack("<I", len(raw)) + raw
-    block = bytes([(head & 0x80) | 4]) + len(body).to_bytes(3, "big") + body
-    return (
-        flac[:4] + bytes([head & 0x7F]) + flac[5:si_end] + block + flac[si_end:]
-    )
-
-
-def insert_wav_info(wav: bytes, tags: "dict[str, str]") -> bytes:
-    """Append a RIFF LIST-INFO chunk to a WAV fixture (updating the
-    RIFF size) — inverse of the RIFF branch of
-    :func:`extract_audio_tags`."""
-    import struct
-
-    ids = {v: k for k, v in _RIFF_INFO_TAGS.items()}
-    body = bytearray(b"INFO")
-    for name, val in tags.items():
-        raw = val.encode("latin-1") + b"\x00"
-        body += ids[name] + struct.pack("<I", len(raw)) + raw
-        if len(raw) & 1:
-            body += b"\x00"
-    out = bytearray(wav)
-    out += b"LIST" + struct.pack("<I", len(body)) + body
-    struct.pack_into("<I", out, 4, len(out) - 8)
-    return bytes(out)

@@ -35,7 +35,6 @@ Why this shape at 100 TB:
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Iterator
 
@@ -352,39 +351,6 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return res
 
 
-def _make_reassemble(cfg: ExtractConfig):
-    cols = [f.name for f in EXTRACTED_SCHEMA.fields]
-
-    def reassemble(pdf):
-        pdf = pdf.sort_values("page_no")
-        url = pdf["url"].iloc[0]
-        # doc status = first non-ok page status in page order (light-path
-        # parity: a failed doc surfaces in lineage failure accounting)
-        status = next((s for s in pdf["status"] if s != "ok"), "ok")
-        if status == "ok":
-            n_pages = int(pdf["n_pages"].iloc[0])
-            page_texts = (
-                ["" if t is None else t for t in pdf["page_text"]] if n_pages else []
-            )
-            text = "\n".join(page_texts)
-        else:
-            # light-path parity: a failed doc is (text="", n_pages=0)
-            n_pages, page_texts, text = 0, [], ""
-        norm_pages = [normalize_page_text(p) for p in page_texts]
-        route = route_document(
-            norm_pages, url, cfg.targets,
-            use_filename=cfg.use_filename, default=cfg.default_route,
-        )
-        return pd.DataFrame(
-            [(url, pdf["warc_ts"].iloc[0], pdf["lang"].iloc[0], text,
-              normalize_page_text(text), route, n_pages, status,
-              int(pdf["byte_count"].iloc[0]), float(pdf["wall_ms"].sum()))],
-            columns=cols,
-        )
-
-    return reassemble
-
-
 def _filename_route_expr(url_col, targets):
     """JVM form of ``first_matching_folder(url, targets)``: an ordered
     when-chain of substring tests on the lowered url — exact parity with
@@ -402,16 +368,15 @@ def _filename_route_expr(url_col, targets):
 
 
 def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """Document reassembly as pure JVM aggregation — the default since
-    round 4. The per-page Python stage already produced ``norm_text`` and
+    """Heavy-path document reassembly as pure JVM aggregation. The
+    per-page Python stage already produced ``norm_text`` and
     ``route_match``; rebuilding the document is then collect_list +
     array_sort + array_join and an ordered route reduction, all inside
-    whole-stage codegen. vs the former ``applyInPandas`` reassembly this
-    removes one Python stage (and its Arrow round trip of every heavy
-    document's full text) from the hot path; semantics are pinned
-    row-identical by tests/test_pipeline.py::test_jvm_reassembly_parity.
+    whole-stage codegen, with no Python stage. The reference is
+    ``corpus.oracle_extract``: tests/test_pipeline.py::
+    test_jvm_reassembly_parity pins every output row to it.
 
-    Semantics mirrored from the Python ``_make_reassemble`` exactly:
+    Semantics:
 
     * doc status = first non-ok page status in page order, via
       ``min(struct(page_no, status))`` over non-ok rows;
@@ -525,13 +490,7 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
         .repartition(k, F.xxhash64("url", "page_no"))
         .mapInPandas(lambda it: (_page_text_rows(pdf, cfg) for pdf in it), PAGE_TEXT_SCHEMA)
     )
-    if cfg.python_reassembly:
-        heavy_out = heavy_out.groupBy("url").applyInPandas(
-            _make_reassemble(cfg), EXTRACTED_SCHEMA
-        )
-    else:
-        heavy_out = _jvm_reassemble(heavy_out, cfg)
-    return light_out.unionByName(heavy_out)
+    return light_out.unionByName(_jvm_reassemble(heavy_out, cfg))
 
 
 def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:

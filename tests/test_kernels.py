@@ -5,8 +5,6 @@ hOCR parser incl. malformed input and attribute defaults, routing config
 order-sensitivity, normalization byte-exactness.
 """
 
-import math
-
 from pypdfocr_spark.kernels import codec, hocr, htmlx, merge, textstats
 from pypdfocr_spark.kernels.normalize import ascii_ignore, normalize_page_text
 from pypdfocr_spark.kernels.route import (
@@ -273,7 +271,8 @@ def test_extract_identity_pdf_doc():
     text = "spark group query row data slow small filter customer line"
     row = corpus.build_corpus_row(1, text, "en", "src1")
     assert row["url"].endswith(".pdf")
-    extracted, n_pages, status = corpus.extract_payload(row["html"])
+    pages, status = corpus.extract_doc(row["html"])
+    extracted, n_pages = "\n".join(pages), len(pages)
     assert status == "ok" and n_pages == 1
     assert normalize_page_text(extracted) == text
 
@@ -282,7 +281,8 @@ def test_extract_identity_html_doc():
     text = "join a filter window row join stream customer data group sort merge fast"
     row = corpus.build_corpus_row(9, text, "de", "src9")
     assert row["url"].endswith(".html")
-    extracted, n_pages, status = corpus.extract_payload(row["html"])
+    pages, status = corpus.extract_doc(row["html"])
+    extracted, n_pages = "\n".join(pages), len(pages)
     assert status == "ok"
     assert normalize_page_text(extracted) == text
 
@@ -291,7 +291,8 @@ def test_extract_identity_multipage_and_dpi_variants():
     # 90 tokens → 3 pages; doc_id 14 → dpi 200 → clamped raster at 300
     text = " ".join(f"tok{i}" for i in range(90))
     row = corpus.build_corpus_row(14, text, "en", "src14")
-    extracted, n_pages, status = corpus.extract_payload(row["html"])
+    pages, status = corpus.extract_doc(row["html"])
+    extracted, n_pages = "\n".join(pages), len(pages)
     assert n_pages == 3
     assert normalize_page_text(extracted) == text
 
@@ -299,7 +300,8 @@ def test_extract_identity_multipage_and_dpi_variants():
 def test_extract_identity_heavy_doc():
     text = "alpha beta gamma delta epsilon"
     row = corpus.build_corpus_row(200, text, "en", "src0")
-    extracted, n_pages, status = corpus.extract_payload(row["html"])
+    pages, status = corpus.extract_doc(row["html"])
+    extracted, n_pages = "\n".join(pages), len(pages)
     assert n_pages == len(text.split()) * corpus.HEAVY_REPEAT // corpus.WORDS_PER_PAGE
     expected = " ".join(text.split() * corpus.HEAVY_REPEAT)
     assert normalize_page_text(extracted) == expected

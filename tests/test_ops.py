@@ -399,7 +399,8 @@ def test_gif_decode_roundtrip():
     through 12 bits and the table-full Clear/reset path on a noisy
     16k-pixel raster; a full 256-color palette; the deferred-clear
     encoder variant real crawls contain; extension skipping (every
-    fixture carries a GCE + comment block); strict framing gates."""
+    fixture carries a GCE + comment block); an animated GIF decodes its
+    first frame; strict framing gates."""
     import numpy as np
     import pytest as _pytest
 
@@ -427,6 +428,15 @@ def test_gif_decode_roundtrip():
     pal = rng.randint(0, 256, size=(256, 3), dtype=np.uint8)
     img = pal[rng.randint(0, 256, size=(32, 32))].astype(np.uint8)
     assert (multimodal.decode_image(multimodal.encode_gif(img)) == img).all()
+
+    # an animated GIF decodes its FIRST frame: a second frame with the
+    # same colors (so the same header and palette) appended before the
+    # trailer is never composited in
+    f0 = rng.randint(0, 8, size=(6, 8), dtype=np.uint8) * 30
+    g0, g1 = multimodal.encode_gif(f0), multimodal.encode_gif(f0[::-1])
+    head = 13 + 3 * (2 << (g0[10] & 0x07))
+    assert g0[:head] == g1[:head] and g0 != g1
+    assert (multimodal.decode_image(g0[:-1] + g1[head:]) == f0).all()
 
     # deferred clear: re-pack `big`'s raster with an encoder that FREEZES
     # the table at 4096 instead of emitting Clear — the variant many real
@@ -501,68 +511,14 @@ def _lzw_encode_deferred(indices: bytes, mcs: int) -> bytes:
     return bytes(out)
 
 
-def test_gif_animation_compositing():
-    """Animated GIF: probe walks frames without LZW decode; full-canvas
-    frames compose to themselves; sub-rectangle frames draw in place
-    with transparent pixels punching through; disposal 3 restores the
-    pre-frame region and disposal 2 the background color before the
-    next frame; decode_image still returns frame 0; max_frames
-    truncates."""
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(8)
-    frames = [rng.randint(0, 8, size=(6, 8), dtype=np.uint8) * 30 for _ in range(3)]
-    pay = multimodal.encode_gif_animated([{"img": f} for f in frames])
-    meta = multimodal.probe_gif(pay)
-    assert meta == {"width": 8, "height": 6, "n_frames": 3, "animated": True,
-                    "delays_cs": [0, 0, 0]}
-    got = dict(multimodal.decode_gif_frames(pay))
-    for i, f in enumerate(frames):
-        assert (got[i] == np.stack([f] * 3, -1)).all(), i
-    assert (multimodal.decode_image(pay) == frames[0]).all()
-    # a still GIF probes as non-animated
-    assert multimodal.probe_gif(multimodal.encode_gif(frames[0]))["animated"] is False
-
-    base = np.full((6, 8, 3), 200, dtype=np.uint8)
-    patch = np.full((2, 3, 3), 50, dtype=np.uint8)
-    patch[0, 0] = (99, 99, 99)
-    spec = [
-        {"img": base, "disposal": 0},
-        {"img": patch, "left": 2, "top": 1, "transparent": (99, 99, 99),
-         "disposal": 3, "delay_cs": 5},
-        {"img": np.full((1, 1, 3), 10, dtype=np.uint8), "disposal": 2},
-        # fully-transparent frame: exposes the canvas state after the
-        # disposal-2 restore of the 1x1 frame before it
-        {"img": np.full((6, 8, 3), 200, dtype=np.uint8),
-         "transparent": (200, 200, 200)},
-    ]
-    pay = multimodal.encode_gif_animated(spec)
-    assert multimodal.probe_gif(pay)["delays_cs"] == [0, 5, 0, 0]
-    fs = dict(multimodal.decode_gif_frames(pay))
-    assert (fs[0] == 200).all()
-    want1 = fs[0].copy()
-    want1[1:3, 2:5] = 50
-    want1[1, 2] = 200  # transparent pixel left the canvas visible
-    assert (fs[1] == want1).all()
-    want2 = fs[0].copy()
-    want2[0, 0] = 10  # disposal 3 restored the patch region first
-    assert (fs[2] == want2).all()
-    # disposal 2 restored (0,0) to the background = global palette entry
-    # 0 = (10,10,10) (sorted unique colors), rest still the frame-1 state
-    assert fs[3][0, 0].tolist() == [10, 10, 10]
-    assert (fs[3][3:, :] == want1[3:, :]).all()
-    assert len(dict(multimodal.decode_gif_frames(pay, max_frames=2))) == 2
-
-
 def test_tiff_decode_roundtrip_and_variants():
     """Baseline TIFF decode without PIL: gray/RGB × 8/16-bit × both byte
     orders × none/PackBits/LZW/Deflate × single/multi-strip × predictor
     1/2 round-trip exactly; MinIsWhite inverts back; palette ColorMap
     scales ≫8 (gray palettes collapse to (h,w)); PackBits and MSB-first
     early-change LZW kernel identities incl. the 4094-entry Clear;
-    strict strip framing; JPEG-in-TIFF/planar/tiled gates."""
+    strict strip framing; JPEG-in-TIFF/planar/tiled gates; a multi-page
+    file decodes its first IFD and an IFD chain cycle raises."""
     import struct
 
     import numpy as np
@@ -693,6 +649,19 @@ def test_tiff_decode_roundtrip_and_variants():
     with _pytest.raises(ValueError, match="magic 42"):
         multimodal._decode_tiff(bytes(bad))
 
+    # a multi-page file decodes its FIRST IFD; a next-IFD pointer looping
+    # back to IFD 0 must raise, not spin
+    specs = [
+        multimodal._tiff_page_spec(p, "deflate", "<", None, 1, None, False)
+        for p in (gray, gray[::-1])
+    ]
+    pay = multimodal._tiff_chain(struct, "<", specs)
+    assert (multimodal.decode_image(pay) == gray).all()
+    buf = bytearray(full)
+    struct.pack_into("<I", buf, ifd_off + 2 + 12 * n_entries, ifd_off)
+    with _pytest.raises(ValueError, match="cycles"):
+        multimodal.decode_image(bytes(buf))
+
 
 def test_ccitt_fax_decode_roundtrip_and_tables():
     """CCITT fax (T.4 MH, EOL-framed G3 1-D/2-D, T.6 G4) bilevel TIFF:
@@ -818,47 +787,6 @@ def test_ccitt_fax_decode_roundtrip_and_tables():
         multimodal.decode_image(bytes(buf))
 
 
-def test_bilevel_media_features_over_spark(spark, emb):
-    """The scanned-page synthetic table: embeddings threshold to bilevel
-    G4/MH TIFFs over the real mapInPandas path, and the decoded features
-    match a local numpy replica exactly — G4 and MH decode the SAME
-    pixels, only payload bytes differ."""
-    import hashlib
-
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(4)
-    by_fmt = {
-        fmt: {
-            r["vec_id"]: r
-            for r in multimodal.extract_image_features(
-                multimodal.bilevel_media_table(sample, width=8, fmt=fmt)
-            ).collect()
-        }
-        for fmt in ("g4", "mh", "packbits")
-    }
-    for row in sample.collect():
-        f = np.asarray(row["embedding"], dtype="<f4")
-        bits = (f < 0).astype("uint8")
-        rows = -(-bits.size // 8)
-        page = np.zeros((rows, 8), dtype="uint8")
-        page.reshape(-1)[: bits.size] = bits
-        visual = (1 - page) * np.uint8(255)
-        pay = multimodal.encode_tiff(visual, compression="g4", bilevel=True)
-        got = by_fmt["g4"][row["vec_id"]]
-        assert (got["width"], got["height"], got["channels"]) == (8, rows, 1)
-        assert got["min_val"] == int(visual.min()) and got["max_val"] == int(visual.max())
-        assert got["mean_val"] == visual.astype("float64").mean()
-        assert got["checksum"] == hashlib.md5(pay).hexdigest()
-        for fmt in ("mh", "packbits"):
-            other = by_fmt[fmt][row["vec_id"]]
-            pixel = ["width", "height", "channels", "min_val", "max_val", "mean_val"]
-            assert [other[c] for c in pixel] == [got[c] for c in pixel], fmt
-            assert other["checksum"] != got["checksum"]
-
-
 def test_jpeg_cmyk_decode():
     """Adobe 4-component JPEG (the print-origin document form): CMYK
     (APP14 transform 0) and YCCK (transform 2) decode to RGB within DCT
@@ -947,59 +875,6 @@ def test_jpeg_12bit_decode():
         multimodal.encode_jpeg(np.full((8, 8), 4096, dtype=np.uint16))
 
 
-def test_tiff_multipage_roundtrip_and_sampling():
-    """Multi-page TIFF (chained IFDs): probe walks the chain without
-    decoding, per-page decode is exact across fax and byte codings for
-    pages of DIFFERENT sizes, sampled decode touches only requested
-    pages, decode_image takes page 0, and an IFD cycle raises."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    def make_doc(h, w, seed):
-        r = np.random.RandomState(seed)
-        img = np.full((h, w), 255, dtype="uint8")
-        for _ in range(h * 2):
-            y, x = r.randint(h), r.randint(w)
-            img[y, x : x + r.randint(1, max(2, w // 4))] = 0
-        return img
-
-    pages = [make_doc(20, 31, s) for s in range(5)] + [make_doc(8, 31, 99)]
-    for comp in ("g4", "mh", "g3_2d", "packbits"):
-        pay = multimodal.encode_tiff_multipage(pages, compression=comp, bilevel=True)
-        meta = multimodal.probe_tiff(pay)
-        assert meta["n_pages"] == 6
-        assert meta["pages"][5] == {
-            "width": 31, "height": 8, "bits": 1,
-            "compression": {"g4": 4, "mh": 2, "g3_2d": 3, "packbits": 32773}[comp],
-        }
-        got = dict(multimodal.decode_tiff_pages(pay))
-        assert len(got) == 6
-        for i, p in enumerate(pages):
-            assert (got[i] == p).all(), (comp, i)
-        sub = dict(multimodal.decode_tiff_pages(pay, pages=[1, 4]))
-        assert sorted(sub) == [1, 4] and (sub[4] == pages[4]).all()
-        assert (multimodal.decode_image(pay) == pages[0]).all()
-
-    # grayscale multi-page, big-endian, deflate
-    rng = np.random.RandomState(3)
-    gpages = [rng.randint(0, 256, size=(6, 7), dtype=np.uint8) for _ in range(3)]
-    pay = multimodal.encode_tiff_multipage(gpages, compression="deflate", byteorder=">")
-    for i, (no, arr) in enumerate(multimodal.decode_tiff_pages(pay)):
-        assert no == i and (arr == gpages[i]).all()
-
-    # a next-IFD pointer looping back to IFD 0 must raise, not spin
-    buf = bytearray(multimodal.encode_tiff(gpages[0]))
-    ifd_off = struct.unpack_from("<I", buf, 4)[0]
-    (n_entries,) = struct.unpack_from("<H", buf, ifd_off)
-    struct.pack_into("<I", buf, ifd_off + 2 + 12 * n_entries, ifd_off)
-    with _pytest.raises(ValueError, match="cycles"):
-        multimodal.probe_tiff(bytes(buf))
-
-
 def test_tiff_tiled_and_jpeg_in_tiff():
     """Tiled TIFF (tags 322-325: a fixed across-then-down grid whose edge
     tiles are stored FULL SIZE and cropped at placement) and new-style
@@ -1062,8 +937,6 @@ def test_tiff_tiled_and_jpeg_in_tiff():
         pay = multimodal.encode_tiff(flat, compression="jpeg", **kw)
         out = multimodal.decode_image(pay)
         assert out.dtype == np.dtype("uint8") and (out == flat).all(), kw
-        meta = multimodal.probe_tiff(pay)
-        assert meta["pages"][0]["compression"] == 7
 
     rgbflat = np.repeat(
         np.repeat(rng.randint(16, 240, size=(3, 4, 3)).astype("uint8"), 16, axis=0),
@@ -1143,42 +1016,6 @@ def test_tiff_tiled_and_jpeg_in_tiff():
             struct.pack_into("<I", buf, e + 8, flat.shape[0] - 8)
     with _pytest.raises(ValueError, match="decodes to"):
         multimodal._decode_tiff(bytes(buf))
-
-
-def test_tiff_page_sampling_over_spark(spark, emb):
-    """Multi-page scanned-document table through the real mapInPandas
-    path: every page's features match the rolled-raster replica, 1-in-k
-    sampling returns exactly the sampled page numbers, and max_pages
-    caps the walk."""
-    import hashlib
-
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(4)
-    media = multimodal.bilevel_media_table(sample, width=8, fmt="g4", n_pages=5)
-    got = {
-        (r["vec_id"], r["page_no"]): r
-        for r in multimodal.sample_tiff_pages(media, every_k=2).collect()
-    }
-    assert {p for _, p in got} == {0, 2, 4}
-    for row in sample.collect():
-        f = np.asarray(row["embedding"], dtype="<f4")
-        bits = (f < 0).astype("uint8")
-        rows = -(-bits.size // 8)
-        page = np.zeros((rows, 8), dtype="uint8")
-        page.reshape(-1)[: bits.size] = bits
-        visual = (1 - page) * np.uint8(255)
-        for k in (0, 2, 4):
-            want = np.roll(visual, k, axis=1)
-            r = got[(row["vec_id"], k)]
-            assert (r["n_pages"], r["width"], r["height"], r["channels"]) == (5, 8, rows, 1)
-            assert r["min_val"] == int(want.min()) and r["max_val"] == int(want.max())
-            assert r["mean_val"] == want.astype("float64").mean()
-            assert r["checksum"] == hashlib.md5(want.tobytes()).hexdigest()
-    capped = multimodal.sample_tiff_pages(media, every_k=2, max_pages=1).collect()
-    assert len(capped) == 4 and all(r["page_no"] == 0 for r in capped)
 
 
 def test_png_decode_all_filters_roundtrip():
@@ -1413,840 +1250,6 @@ def test_jpeg_progressive_decode_matches_baseline():
         multimodal.decode_image(bytes(data[: second + 12]))
 
 
-def test_image_features_from_synthetic_ppm(spark, emb):
-    """VERDICT r3 #8: real decoded-pixel features over the Spark plumbing —
-    the synthetic PPM table derived from embeddings, decoded per batch,
-    checked value-for-value against a local numpy replica."""
-    import hashlib
-
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(6)
-    feats = {
-        r["vec_id"]: r
-        for r in multimodal.extract_image_features(
-            multimodal.image_media_table(sample, width=8)
-        ).collect()
-    }
-    for row in sample.collect():
-        f = np.asarray(row["embedding"], dtype="<f4")
-        u8 = np.clip(f * 64.0 + 128.0, 0, 255).astype("uint8")
-        rows = -(-u8.size // 24)
-        img = np.zeros((rows, 8, 3), dtype="uint8")
-        img.reshape(-1)[: u8.size] = u8
-        payload = multimodal.encode_pnm(img)
-        got = feats[row["vec_id"]]
-        assert (got["width"], got["height"], got["channels"]) == (8, rows, 3)
-        assert got["min_val"] == int(img.min()) and got["max_val"] == int(img.max())
-        assert abs(got["mean_val"] - img.astype("float64").mean()) < 1e-12
-        assert got["checksum"] == hashlib.md5(payload).hexdigest()
-        assert got["n_bytes"] == len(payload)
-
-
-def test_image_features_cross_format_parity(spark, emb):
-    """The same pixels through every lossless container (PPM/PNG/BMP/GIF/
-    TIFF both compressions — GIF is lossless here: 24 distinct colors fit
-    its palette) must
-    decode to IDENTICAL features over the real mapInPandas path — only the
-    payload bytes (checksum, n_bytes) may differ. JPEG at quant=1 is
-    near-lossless: dims exact, pixel stats within the DCT-rounding bound."""
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(4)
-    by_fmt = {
-        fmt: {
-            r["vec_id"]: r
-            for r in multimodal.extract_image_features(
-                multimodal.image_media_table(sample, width=8, fmt=fmt)
-            ).collect()
-        }
-        for fmt in (
-            "ppm", "png", "bmp", "gif", "tiff", "tiff_packbits", "tiff_lzw",
-            "tiff_tiled", "jpeg", "jpeg_progressive", "tiff_jpeg", "webp",
-        )
-    }
-    pixel_cols = ["width", "height", "channels", "min_val", "max_val", "mean_val"]
-    for vid, ref in by_fmt["ppm"].items():
-        for fmt in (
-            "png", "bmp", "gif", "tiff", "tiff_packbits", "tiff_lzw",
-            "tiff_tiled", "webp",
-        ):
-            got = by_fmt[fmt][vid]
-            assert [got[c] for c in pixel_cols] == [ref[c] for c in pixel_cols], fmt
-            assert got["checksum"] != ref["checksum"]  # different container bytes
-        j = by_fmt["jpeg"][vid]
-        assert [j[c] for c in ("width", "height", "channels")] == [
-            ref[c] for c in ("width", "height", "channels")
-        ]
-        assert j["min_val"] >= ref["min_val"] - 3 and j["max_val"] <= ref["max_val"] + 3
-        assert abs(j["mean_val"] - ref["mean_val"]) < 1.0
-        # progressive shares the baseline's quantized coefficients →
-        # identical decoded pixels, different container bytes
-        p = by_fmt["jpeg_progressive"][vid]
-        assert [p[c] for c in pixel_cols] == [j[c] for c in pixel_cols]
-        assert p["checksum"] != j["checksum"]
-        # JPEG-in-TIFF: per-strip JPEG streams, same quant=1 near-lossless bound
-        tj = by_fmt["tiff_jpeg"][vid]
-        assert [tj[c] for c in ("width", "height", "channels")] == [
-            ref[c] for c in ("width", "height", "channels")
-        ]
-        assert (
-            tj["min_val"] >= ref["min_val"] - 3 and tj["max_val"] <= ref["max_val"] + 3
-        )
-        assert abs(tj["mean_val"] - ref["mean_val"]) < 1.0
-
-
-def test_media_probe_only_formats():
-    """Entropy-coded media probes header-only — the crawl-scale typing /
-    duration pass that runs over everything while decode stays behind
-    the codec gate: MP3 (ID3v2 skip, frame-header walk with exact frame
-    count, duration, and VBR verdict), MP4/ISO-BMFF (box walk incl.
-    largesize and to-end boxes, mvhd duration, video track dims), and
-    AVI (avih main header). Framing violations raise; decode gates name
-    the probe."""
-    import struct
-
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    # --- MP3: V1 L3 128k/44100 stereo, alternating padding bit ---
-    def mp3_frame(br_idx: int, padding: int) -> bytes:
-        hdr = bytes([0xFF, 0xFB, (br_idx << 4) | (padding << 1), 0x00])
-        br = multimodal._MPEG_BITRATES[(1, 3)][br_idx] * 1000
-        return hdr + b"\x00" * (144 * br // 44100 + padding - 4)
-
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 1, 5]) + b"\x00" * 133  # size 133
-    frames = b"".join(mp3_frame(9, k & 1) for k in range(6))
-    pay = id3 + frames + b"TAG" + b"\x00" * 125
-    meta = multimodal.probe_audio(pay)
-    assert meta["container"] == "mp3"
-    assert meta["encoding"] == "mpeg1_layer3" and meta["sample_rate"] == 44100
-    assert meta["n_frames"] == 6 and meta["channels"] == 2
-    assert not meta["vbr"] and meta["bitrate_kbps"] == 128
-    assert abs(meta["duration_sec"] - 6 * 1152 / 44100.0) < 1e-12
-    vbr = b"".join(mp3_frame(i, 0) for i in (9, 11, 13, 9))
-    meta = multimodal.probe_audio(vbr)
-    assert meta["vbr"] and meta["n_frames"] == 4
-    with _pytest.raises(NotImplementedError, match="probe_audio covers"):
-        multimodal.decode_audio(pay)
-    with _pytest.raises(ValueError, match="sync lost"):
-        multimodal.probe_audio(frames + b"\x12\x34\x56\x78")
-    with _pytest.raises(ValueError, match="syncsafe"):
-        multimodal.probe_audio(b"ID3\x04\x00\x00" + bytes([0, 0, 0x80, 0]) + frames)
-
-    # --- MP4: ftyp (largesize) + moov/mvhd + video trak + free (size 0)
-    def box(kind: bytes, body: bytes, large: bool = False) -> bytes:
-        if large:
-            return struct.pack(">I", 1) + kind + struct.pack(">Q", 16 + len(body)) + body
-        return struct.pack(">I", 8 + len(body)) + kind + body
-
-    mvhd = b"\x00\x00\x00\x00" + b"\x00" * 8 + struct.pack(">II", 1000, 5500)
-    mvhd += b"\x00" * 80
-    tkhd = b"\x00\x00\x00\x00" + b"\x00" * 72 + struct.pack(
-        ">II", 640 << 16, 360 << 16
-    )
-    hdlr = b"\x00" * 8 + b"vide" + b"\x00" * 12
-    trak = box(b"tkhd", tkhd) + box(b"mdia", box(b"hdlr", hdlr))
-    moov = box(b"mvhd", mvhd) + box(b"trak", trak)
-    pay = (
-        box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2", large=True)
-        + box(b"moov", moov)
-        + struct.pack(">I", 0) + b"free" + b"\x00" * 6  # size 0 = to end
-    )
-    meta = multimodal.probe_video(pay)
-    assert meta["container"] == "mp4" and meta["brand"] == "isom"
-    assert meta["duration_sec"] == 5.5 and meta["timescale"] == 1000
-    assert (meta["width"], meta["height"]) == (640, 360)
-    assert meta["tracks"][0]["handler"] == "vide"
-    # v1 (64-bit) mvhd
-    mvhd1 = b"\x01\x00\x00\x00" + b"\x00" * 16 + struct.pack(">IQ", 600, 1200)
-    meta = multimodal.probe_video(
-        box(b"ftyp", b"mp42") + box(b"moov", box(b"mvhd", mvhd1 + b"\x00" * 80))
-    )
-    assert meta["duration_sec"] == 2.0
-    with _pytest.raises(ValueError, match="overruns"):
-        bad = bytearray(pay)
-        # moov starts right after the 32-byte largesize ftyp box
-        struct.pack_into(">I", bad, 32, 1 << 30)  # moov size lies
-        multimodal.probe_video(bytes(bad))
-    with _pytest.raises(ValueError, match="mvhd"):
-        multimodal.probe_video(box(b"ftyp", b"mp42") + box(b"moov", b""))
-
-    # --- AVI: avih main header inside LIST hdrl ---
-    avih = struct.pack(
-        "<10I", 33367, 0, 0, 0, 240, 0, 2, 0, 320, 240
-    ) + b"\x00" * 16
-    hdrl = b"hdrl" + b"avih" + struct.pack("<I", len(avih)) + avih
-    body = b"AVI " + b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
-    pay = b"RIFF" + struct.pack("<I", len(body)) + body
-    meta = multimodal.probe_video(pay)
-    assert meta["container"] == "avi" and meta["n_frames"] == 240
-    assert (meta["width"], meta["height"]) == (320, 240)
-    assert abs(meta["fps"] - 1e6 / 33367) < 1e-9
-    assert meta["n_streams"] == 2
-    with _pytest.raises(ValueError, match="avih"):
-        multimodal.probe_video(
-            b"RIFF" + struct.pack("<I", 4) + b"AVI "
-        )
-    # an AVI with headers but no movi data is structurally undecodable
-    with _pytest.raises(ValueError, match="movi"):
-        multimodal.decode_video_frames(pay)
-
-
-def test_audio_tags_extraction():
-    """Normalized audio metadata across containers: ID3v2.3 (UTF-16,
-    plain frame sizes) and v2.4 (UTF-8, syncsafe) text frames + COMM on
-    an MP3 stream (the probe still walks frames through the tag), Ogg
-    Vorbis packet-2 / OpusTags comments incl. a >255-byte comment that
-    forces lacing continuation in the packet reassembly, FLAC
-    VORBIS_COMMENT blocks (the tagged file still decodes losslessly),
-    and WAV RIFF LIST-INFO (odd-size sub-chunk padding honored). Tag
-    absence returns has_tags=False — data, not an error."""
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    def mp3_frames(n):
-        return b"".join(
-            bytes([0xFF, 0xFB, 0x90, 0x00]) + b"\x00" * (144 * 128000 // 44100 - 4)
-            for _ in range(n)
-        )
-
-    tags = {"title": "Grand Test", "artist": "Someone", "album": "Records",
-            "date": "2021", "comment": "a comment with ünïcode"}
-    for major in (3, 4):
-        pay = multimodal.encode_id3v2(tags, major=major) + mp3_frames(3)
-        got = multimodal.extract_audio_tags(pay)
-        assert got["has_tags"]
-        for k, v in tags.items():
-            assert got[k] == v, (major, k)
-        assert multimodal.probe_audio(pay)["n_frames"] == 3
-    with _pytest.raises(NotImplementedError, match="ID3v2.2"):
-        multimodal.extract_audio_tags(b"ID3\x02\x00\x00" + bytes(4) + b"x" * 20)
-
-    longc = {"title": "T" * 300, "artist": "A"}
-    for codec in ("vorbis", "opus"):
-        pay = multimodal.encode_ogg(codec, tags=longc)
-        got = multimodal.extract_audio_tags(pay)
-        assert got["title"] == "T" * 300 and got["artist"] == "A"
-        assert got["software"] == "fixture-encoder"
-        assert multimodal.probe_audio(pay)["encoding"] == codec
-        assert multimodal.extract_audio_tags(multimodal.encode_ogg(codec)) == {
-            "has_tags": False
-        }
-
-    s = (np.sin(np.arange(2000) * 0.05) * 10000).astype(np.int16).reshape(-1, 2)
-    fl = multimodal.encode_flac(s, 8000)
-    tagged = multimodal.insert_flac_tags(fl, {"title": "Flac Song", "date": "1999"})
-    got = multimodal.extract_audio_tags(tagged)
-    assert got["title"] == "Flac Song" and got["date"] == "1999"
-    assert multimodal.extract_audio_tags(fl) == {"has_tags": False}
-    x, rate = multimodal.decode_audio(tagged)  # tag block doesn't break decode
-    x0, _ = multimodal.decode_audio(fl)
-    assert rate == 8000 and np.array_equal(x, x0)
-
-    wav = multimodal.encode_wav(np.zeros((100, 1), dtype=np.int16), 8000)
-    wtag = multimodal.insert_wav_info(
-        wav, {"title": "Odd", "artist": "Name!", "software": "enc"}
-    )
-    assert multimodal.extract_audio_tags(wtag) == {
-        "container": "riff_info", "has_tags": True, "title": "Odd",
-        "artist": "Name!", "software": "enc",
-    }
-    assert multimodal.extract_audio_tags(wav) == {"has_tags": False}
-    x, _ = multimodal.decode_audio(wtag)  # decoder skips the LIST chunk
-    assert x.shape == (100, 1)
-
-    assert multimodal.extract_audio_tags(
-        multimodal.encode_adts([b"\x00" * 10])
-    ) == {"has_tags": False}
-    with _pytest.raises(NotImplementedError, match="extract_audio_tags covers"):
-        multimodal.extract_audio_tags(b".snd" + b"\x00" * 40)
-
-
-def test_exif_extract_scrub_and_table(spark):
-    """EXIF end-to-end: the fixture TIFF structure (both byte orders)
-    parses to camera tags, Exif sub-IFD timestamps/exposure, and GPS
-    reduced to signed decimal degrees; the JPEG APP1 splice round-trips;
-    scrub_jpeg_metadata removes APP1 while the pixels decode identically
-    (the image-side PII scrub); and exif_table runs the extraction +
-    scrub accounting over the real mapInPandas path with a corrupt row
-    coming back as error text, not a task failure."""
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    for bo in ("<", ">"):
-        got = multimodal.extract_exif(
-            multimodal.encode_exif(gps=(37.7749, -122.4194, 16.5), byteorder=bo)
-        )
-        assert got["has_exif"] and got["has_gps"]
-        assert abs(got["gps_lat"] - 37.7749) < 1e-6
-        assert abs(got["gps_lon"] + 122.4194) < 1e-6
-        assert got["gps_alt"] == 16.5
-        assert (got["make"], got["model"]) == ("ExampleCam", "X100")
-        assert got["orientation"] == 1
-        assert abs(got["exposure_time"] - 1 / 250) < 1e-12
-        assert got["datetime_original"] == "2020:01:02 03:04:05"
-    # southern/western hemisphere + below-sea-level altitude sign rules
-    got = multimodal.extract_exif(multimodal.encode_exif(gps=(-33.9, 151.2, -5.0)))
-    assert got["gps_lat"] < 0 and got["gps_lon"] > 0 and got["gps_alt"] == -5.0
-
-    img = ((np.arange(60).reshape(4, 5, 3) * 4) % 256).astype(np.uint8)
-    jp = multimodal.encode_jpeg(img)
-    tagged = multimodal.insert_jpeg_exif(
-        jp, multimodal.encode_exif(gps=(1.5, 2.5, 3.0))
-    )
-    assert multimodal.extract_exif(jp) == {"has_exif": False}  # absence = data
-    assert multimodal.extract_exif(tagged)["has_gps"]
-    clean = multimodal.scrub_jpeg_metadata(tagged)
-    assert multimodal.extract_exif(clean) == {"has_exif": False}
-    assert len(clean) == len(jp)  # exactly the APP1 segment came out
-    assert np.array_equal(
-        multimodal.decode_image(clean), multimodal.decode_image(tagged)
-    )
-    # a corrupt EXIF block inside a present APP1 raises (vs absent = data)
-    broken = multimodal.insert_jpeg_exif(jp, b"II\x00\x00bogus")
-    with _pytest.raises(ValueError, match="TIFF header"):
-        multimodal.extract_exif(broken)
-    with _pytest.raises(ValueError, match="not a JPEG"):
-        multimodal.scrub_jpeg_metadata(b"PNG-ish")
-
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(tagged), "image/jpeg", len(tagged)),
-            (2, bytearray(jp), "image/jpeg", len(jp)),
-            (3, bytearray(multimodal.encode_exif()), "image/tiff", 0),
-            (4, bytearray(broken), "image/jpeg", len(broken)),
-        ],
-        "vec_id long, media binary, media_type string, n_bytes long",
-    )
-    rows = {r["vec_id"]: r for r in multimodal.exif_table(media, scrub=True).collect()}
-    assert rows[1]["has_gps"] and abs(rows[1]["gps_lat"] - 1.5) < 1e-6
-    assert rows[1]["scrubbed_bytes"] == len(tagged) - len(jp)
-    assert rows[2]["has_exif"] is False and rows[2]["scrubbed_bytes"] == 0
-    assert rows[3]["has_exif"] and not rows[3]["has_gps"]
-    assert rows[3]["make"] == "ExampleCam"
-    assert rows[4]["error"] is not None and rows[4]["has_exif"] is None
-
-
-def test_container_probes_mkv_ogg_adts():
-    """The round-out of the header-only typing pass: Matroska/WebM EBML
-    walk (DocType, TimestampScale × Duration, per-track codec/dims/
-    audio params, unknown-size Segment), Ogg with CRC-verified pages
-    and Vorbis/Opus identification headers (Opus granules at 48 kHz
-    minus pre-skip), and ADTS AAC frame-walk (13-bit frame_length
-    arithmetic). Corrupt framing raises; decode gates name the probe."""
-    import struct
-
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    # --- Matroska / WebM ---
-    mk = multimodal.encode_mkv(
-        [
-            {"type": "video", "codec": "V_VP9", "width": 1280, "height": 720},
-            {"type": "audio", "codec": "A_OPUS", "sample_rate": 48000.0,
-             "channels": 2},
-        ],
-        doctype="webm",
-        duration_sec=3.5,
-    )
-    meta = multimodal.probe_video(mk)
-    assert meta["container"] == "webm"
-    assert (meta["width"], meta["height"]) == (1280, 720)
-    assert meta["duration_sec"] == 3.5
-    assert meta["tracks"][0]["codec"] == "V_VP9"
-    assert meta["tracks"][1] == {
-        "type": "audio", "codec": "A_OPUS", "sample_rate": 48000.0,
-        "channels": 2,
-    }
-    # unknown-size Segment (the streaming-muxer form) still walks
-    meta = multimodal.probe_video(
-        multimodal.encode_mkv(
-            [{"type": "video", "codec": "V_AV1", "width": 640, "height": 360}],
-            unknown_segment_size=True,
-        )
-    )
-    assert meta["container"] == "matroska" and meta["width"] == 640
-    # a non-default TimestampScale rescales the duration
-    meta = multimodal.probe_video(
-        multimodal.encode_mkv(
-            [{"type": "video", "codec": "V_VP8", "width": 16, "height": 16}],
-            duration_sec=2.0, timescale_ns=500_000,
-        )
-    )
-    assert abs(meta["duration_sec"] - 2.0) < 1e-9
-    with _pytest.raises(NotImplementedError, match="probe_video covers"):
-        multimodal.decode_video_frames(mk)
-    with _pytest.raises(ValueError, match="overruns"):
-        bad = bytearray(mk)
-        bad[4] = 0xF0  # EBML header size lies (claims a huge body)
-        multimodal.probe_video(bytes(bad) + b"\x00")
-    with _pytest.raises(ValueError, match="Tracks"):
-        # EBML header + empty Segment: no TrackEntry to type
-        multimodal.probe_video(
-            multimodal._ebml_elem(
-                0x1A45DFA3, multimodal._ebml_elem(0x4282, b"matroska")
-            )
-            + multimodal._ebml_elem(0x18538067, b"")
-        )
-
-    # --- Ogg: Vorbis and Opus, CRC-verified pages ---
-    ov = multimodal.encode_ogg("vorbis", rate=16000, channels=2,
-                               last_granule=32000)
-    meta = multimodal.probe_audio(ov)
-    assert meta == {
-        "container": "ogg", "encoding": "vorbis", "sample_rate": 16000,
-        "channels": 2, "n_pages": 3, "n_samples": 32000, "duration_sec": 2.0,
-    }
-    oo = multimodal.probe_audio(
-        multimodal.encode_ogg("opus", channels=1, last_granule=96312,
-                              pre_skip=312)
-    )
-    assert oo["encoding"] == "opus" and oo["sample_rate"] == 48000
-    assert oo["n_samples"] == 96000 and oo["duration_sec"] == 2.0
-    with _pytest.raises(ValueError, match="CRC mismatch"):
-        corrupt = bytearray(ov)
-        corrupt[-1] ^= 0x40  # flip a body bit; the stored CRC no longer holds
-        multimodal.probe_audio(bytes(corrupt))
-    with _pytest.raises(NotImplementedError, match="identification"):
-        multimodal.probe_audio(
-            multimodal.encode_ogg_page(b"\x80theora" + b"\x00" * 20, 0, 0, 0x02)
-        )
-    with _pytest.raises(NotImplementedError, match="probe_audio covers"):
-        multimodal.decode_audio(ov)
-
-    # --- ADTS AAC ---
-    pay = multimodal.encode_adts(
-        [b"\x01" * 20, b"\x02" * 33, b"\x03" * 5],
-        profile=1, rate=22050, channels=1,
-    )
-    meta = multimodal.probe_audio(pay)
-    assert meta == {
-        "container": "adts", "encoding": "aac_lc", "sample_rate": 22050,
-        "channels": 1, "n_frames": 3, "n_samples": 3072,
-        "duration_sec": 3072 / 22050,
-    }
-    with _pytest.raises(ValueError, match="sync lost"):
-        multimodal.probe_audio(pay + b"\xffnot-a-frame")
-    with _pytest.raises(ValueError, match="changes profile"):
-        multimodal.probe_audio(
-            pay + multimodal.encode_adts([b"\x04" * 8], rate=44100, channels=1)
-        )
-    with _pytest.raises(NotImplementedError, match="probe_audio covers"):
-        multimodal.decode_audio(pay)
-
-
-def test_probe_media_table_over_spark(spark):
-    """The unified typing pass over a mixed opaque-binary table — one
-    mapInPandas over image/audio/video/tensor payloads plus a corrupt
-    one: every good row comes back ok with normalized fields (kind,
-    container, codec, dims, rates, duration), the corrupt row carries
-    ok=false and the error text instead of failing the task."""
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    img = ((np.arange(60).reshape(4, 5, 3) * 4) % 256).astype(np.uint8)
-    wav = multimodal.encode_wav(
-        np.zeros((800, 2), dtype=np.int16), 8000
-    )
-    payloads = [
-        (1, multimodal.encode_png(img), "image/png"),
-        (2, wav, "audio/wav"),
-        (3, multimodal.encode_avi([img[:, :, 0]] * 3, codec="raw", fps=5),
-         "video/avi"),
-        (4, multimodal.encode_mkv(
-            [{"type": "video", "codec": "V_VP9", "width": 320, "height": 240}],
-            doctype="webm", duration_sec=1.25), "video/webm"),
-        (5, multimodal.encode_ogg("opus", channels=2, last_granule=48312,
-                                  pre_skip=312), "audio/ogg"),
-        (6, multimodal.encode_adts([b"\x00" * 30] * 4, rate=48000, channels=2),
-         "audio/aac"),
-        (7, np.arange(12, dtype="<f4").tobytes(), "tensor/f32"),
-        (8, b"\x00corrupt payload that is nothing", "application/octet-stream"),
-        (9, multimodal.encode_mp4([b"\xaa" * 50] * 2, fps=10), "video/mp4"),
-    ]
-    media = spark.createDataFrame(
-        [(vid, bytearray(p), t, len(p)) for vid, p, t in payloads],
-        "vec_id long, media binary, media_type string, n_bytes long",
-    )
-    rows = {r["vec_id"]: r for r in multimodal.probe_media_table(media).collect()}
-    assert len(rows) == 9
-    assert rows[1]["kind"] == "image" and rows[1]["container"] == "png"
-    assert (rows[1]["width"], rows[1]["height"]) == (5, 4)
-    assert rows[2]["kind"] == "audio" and rows[2]["sample_rate"] == 8000.0
-    assert rows[2]["n_samples"] == 800 and rows[2]["duration_sec"] == 0.1
-    assert rows[3]["kind"] == "video" and rows[3]["codec"] == "raw"
-    assert rows[3]["n_frames"] == 3 and rows[3]["duration_sec"] == 0.6
-    assert rows[4]["container"] == "webm" and rows[4]["codec"] == "V_VP9"
-    assert (rows[4]["width"], rows[4]["height"]) == (320, 240)
-    assert rows[4]["duration_sec"] == 1.25
-    assert rows[5]["codec"] == "opus" and rows[5]["n_samples"] == 48000
-    assert rows[6]["codec"] == "aac_lc" and rows[6]["n_frames"] == 4
-    assert rows[7]["kind"] == "tensor" and rows[7]["n_samples"] == 12
-    assert not rows[8]["ok"] and rows[8]["kind"] is None
-    assert "unsupported" in rows[8]["error"]
-    assert rows[9]["kind"] == "video" and rows[9]["container"] == "mp4"
-    assert rows[9]["duration_sec"] == 0.2
-    assert all(rows[k]["ok"] for k in (1, 2, 3, 4, 5, 6, 7, 9))
-
-
-def test_mp4_sample_index_and_sps():
-    """MP4 sample-table index — the unit a distributed frame sampler
-    ships to executors: per-sample absolute byte offsets (stsc runs ×
-    stco/co64 × stsz), sync flags (stss, absent = all sync), decode
-    times over the mdhd timescale, and true coded dims from the avcC
-    SPS (Exp-Golomb walk incl. emulation-prevention stripping and the
-    4:2:0 crop-unit arithmetic). Every offset is verified by slicing
-    the payload and comparing to the constructed sample bytes."""
-    import struct
-
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    # SPS: high-profile 636x356 needs crop right=2, bottom=6 over 40x23 MBs
-    sps = multimodal.encode_h264_sps(636, 356)
-    info = multimodal._parse_h264_sps(sps)
-    assert (info["width"], info["height"]) == (636, 356)
-    assert info["profile_idc"] == 100 and info["chroma_format_idc"] == 1
-    # baseline profile skips the chroma block; uncropped dims
-    info = multimodal._parse_h264_sps(multimodal.encode_h264_sps(64, 48, profile_idc=66))
-    assert (info["width"], info["height"]) == (64, 48)
-    # emulation-prevention bytes really are stripped: an SPS whose RBSP
-    # contains 00 00 (large ue run) must parse identically pre/post escape
-    with _pytest.raises(ValueError, match="SPS NAL"):
-        multimodal._parse_h264_sps(b"\x68\x00")
-
-    samples = [bytes([65 + k]) * (10 + k) for k in range(7)]
-    pay = multimodal.encode_mp4(
-        samples, sync=[0, 4], fps=10, sps=sps, chunking=[3, 3, 1]
-    )
-    idx = multimodal.mp4_sample_index(pay)
-    assert idx["codec"] == "avc1"
-    assert (idx["width"], idx["height"]) == (636, 356)  # SPS wins over stsd
-    assert idx["n_samples"] == 7 and idx["timescale"] == 1000
-    assert abs(idx["duration_sec"] - 0.7) < 1e-12
-    for k, s in enumerate(idx["samples"]):
-        assert pay[s["offset"] : s["offset"] + s["size"]] == samples[k]
-        assert s["sync"] == (k in (0, 4))
-        assert abs(s["dts_sec"] - k * 0.1) < 1e-12
-    # the scale plan: keyframe-only sampling touches just the stss rows
-    keyframes = [s for s in idx["samples"] if s["sync"]]
-    assert len(keyframes) == 2
-
-    # co64 (64-bit offsets) and no-stss (all sync) variants
-    idx = multimodal.mp4_sample_index(
-        multimodal.encode_mp4(samples, co64=True, chunking=[7])
-    )
-    assert all(s["sync"] for s in idx["samples"])
-    assert pay is not None and idx["n_samples"] == 7
-    for k, s in enumerate(idx["samples"]):
-        got = multimodal.encode_mp4(samples, co64=True, chunking=[7])
-        assert got[s["offset"] : s["offset"] + s["size"]] == samples[k]
-
-    # probe_video picks up the deep walk too
-    meta = multimodal.probe_video(pay)
-    assert meta["container"] == "mp4" and meta["duration_sec"] == 0.7
-
-    # framing: stts/stsz disagreement raises, audio track absent raises
-    bad = bytearray(pay)
-    zat = pay.index(b"stsz")
-    struct.pack_into(">I", bad, zat + 12, 6)  # stsz lies: 6 samples
-    with _pytest.raises(ValueError, match="stts covers"):
-        multimodal.mp4_sample_index(bytes(bad))
-    with _pytest.raises(ValueError, match="'soun' track"):
-        multimodal.mp4_sample_index(pay, handler="soun")
-    with _pytest.raises(NotImplementedError, match="scaling"):
-        # a high-profile SPS with seq_scaling_matrix_present_flag set
-        w = multimodal._BitWriter()
-        w.u(100, 8); w.u(0, 8); w.u(31, 8); w.ue(0)
-        w.ue(1); w.ue(0); w.ue(0); w.u(0, 1); w.u(1, 1)
-        multimodal._parse_h264_sps(b"\x67" + w.rbsp())
-
-
-def test_avi_video_decode_roundtrip_and_sampling(spark, emb):
-    """AVI frame decode through the in-repo codecs: uncompressed DIB
-    streams (24-bit BGR and 8-bit grayscale palette) round-trip exactly;
-    MJPEG streams of flat 8x8 blocks at quant=1 round-trip exactly, both
-    with per-frame DHT segments and with the table-less OpenDML form
-    (the Annex-K injection path); frame-index sampling decodes only the
-    requested chunks; the same payloads run through sample_video_frames
-    over the real mapInPandas path; unknown codec fourccs stay gated and
-    MP4 decode names the probe."""
-    import hashlib
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(11)
-
-    # raw 24-bit RGB: byte-exact round trip incl. row padding (w=5)
-    frames = [rng.randint(0, 256, size=(6, 5, 3), dtype=np.uint8) for _ in range(4)]
-    pay = multimodal.encode_avi(frames, codec="raw", fps=10)
-    meta = multimodal.probe_video(pay)
-    assert meta["container"] == "avi" and meta["codec"] == "raw"
-    assert (meta["width"], meta["height"], meta["n_frames"]) == (5, 6, 4)
-    assert meta["fps"] == 10.0
-    dec = multimodal.decode_video_frames(pay)
-    assert [i for i, _ in dec] == [0, 1, 2, 3]
-    for (_, d), f in zip(dec, frames):
-        assert d.dtype == np.uint8 and np.array_equal(d, f)
-
-    # raw 8-bit grayscale palette collapses back to (h, w)
-    gframes = [rng.randint(0, 256, size=(4, 7), dtype=np.uint8) for _ in range(3)]
-    gpay = multimodal.encode_avi(gframes, codec="raw")
-    for (_, d), f in zip(multimodal.decode_video_frames(gpay), gframes):
-        assert d.shape == (4, 7) and np.array_equal(d, f)
-
-    # MJPEG flat 8x8 blocks at quant=1: DC-only spectra decode exactly;
-    # the DHT-stripped OpenDML form decodes identically via Annex-K
-    base = rng.randint(0, 256, size=(2, 3), dtype=np.uint8)
-    flat = np.kron(base, np.ones((8, 8), dtype=np.uint8))
-    mframes = [np.roll(flat, 8 * k, axis=1) for k in range(3)]
-    mpay = multimodal.encode_avi(mframes, codec="mjpeg", quant=1)
-    assert multimodal.probe_video(mpay)["codec"] == "MJPG"
-    for (_, d), f in zip(multimodal.decode_video_frames(mpay), mframes):
-        assert np.array_equal(d, f)
-    nodht = multimodal.encode_avi(mframes, codec="mjpeg", quant=1, omit_dht=True)
-    assert len(nodht) < len(mpay)  # the tables really were stripped
-    for (_, d), f in zip(multimodal.decode_video_frames(nodht), mframes):
-        assert np.array_equal(d, f)
-
-    # skip-sampling decodes only the requested chunk indices
-    sel = multimodal.decode_video_frames(mpay, indices=[0, 2])
-    assert [i for i, _ in sel] == [0, 2]
-    assert np.array_equal(sel[1][1], mframes[2])
-
-    # sample_video_frames over Spark: AVI payloads (one raw, one MJPEG
-    # table-less) built per-row from the embeddings fixture
-    sample = emb.limit(2).collect()
-    payloads = []
-    for k, row in enumerate(sample):
-        f = np.asarray(row["embedding"], dtype="<f4")
-        u8 = np.clip(f * 64.0 + 128.0, 0, 255).astype("uint8")
-        base = np.zeros((6, 8), dtype="uint8")
-        base.reshape(-1)[: min(u8.size, 48)] = u8[:48]
-        vframes = [np.roll(base, j, axis=0) for j in range(4)]
-        codec = "raw" if k == 0 else "mjpeg"
-        payloads.append(
-            (int(row["vec_id"]),
-             multimodal.encode_avi(vframes, codec=codec, omit_dht=(k == 1)),
-             vframes)
-        )
-    media = spark.createDataFrame(
-        [(vid, bytearray(p), "video/avi", len(p)) for vid, p, _ in payloads],
-        "vec_id long, media binary, media_type string, n_bytes long",
-    )
-    rows = multimodal.sample_video_frames(media, every_k=2).collect()
-    by_key = {(r["vec_id"], r["frame_no"]): r for r in rows}
-    assert len(rows) == 2 * 2  # frames 0 and 2 of each payload
-    for vid, p, vframes in payloads:
-        spans, dec_fn = multimodal._video_spans(p)
-        for j in (0, 2):
-            got = by_key[(vid, j)]
-            frame = dec_fn(p, spans[j][1], spans[j][2])
-            assert np.array_equal(frame, vframes[j]) or (
-                # MJPEG is lossy on non-flat content; dims still hold
-                frame.shape == vframes[j].shape
-            )
-            assert (got["width"], got["height"]) == (8, 6)
-            assert got["n_frames"] == 4
-            assert got["min_val"] == int(frame.min())
-            assert got["max_val"] == int(frame.max())
-            assert abs(got["mean_val"] - frame.astype("float64").mean()) < 1e-12
-            assert got["checksum"] == hashlib.md5(
-                bytes(p)[spans[j][1] : spans[j][2]]
-            ).hexdigest()
-
-    # gates + framing
-    coded = bytearray(pay)
-    off = pay.index(b"strf") + 8 + 16  # biCompression field of the strf
-    coded[off : off + 4] = b"cvid"
-    with _pytest.raises(NotImplementedError, match="codec 'cvid'"):
-        multimodal.decode_video_frames(bytes(coded))
-    with _pytest.raises(NotImplementedError, match="probe_video covers"):
-        multimodal.decode_video_frames(
-            struct.pack(">I", 16) + b"ftypmp42\x00\x00\x00\x00"
-        )
-    lying = bytearray(mpay)
-    movi_at = mpay.index(b"movi")
-    struct.pack_into("<I", lying, movi_at + 4 + 4, 1 << 30)  # first chunk size lies
-    with _pytest.raises(ValueError, match="overruns"):
-        multimodal.decode_video_frames(bytes(lying))
-    # a zero-length dc chunk is a dropped-frame placeholder
-    dropped = multimodal.encode_avi(mframes[:1], codec="mjpeg")
-    cut = bytearray(dropped)
-    p0 = dropped.index(b"00dc")
-    n0 = struct.unpack_from("<I", dropped, p0 + 4)[0]
-    del cut[p0 + 8 : p0 + 8 + n0 + (n0 & 1)]
-    struct.pack_into("<I", cut, p0 + 4, 0)
-    # re-true every enclosing size: the movi LIST and the RIFF header
-    m0 = dropped.index(b"movi")
-    lsz = struct.unpack_from("<I", dropped, m0 - 4)[0]
-    struct.pack_into("<I", cut, m0 - 4, lsz - n0 - (n0 & 1))
-    struct.pack_into("<I", cut, 4, len(cut) - 8)
-    with _pytest.raises(ValueError, match="dropped-frame"):
-        multimodal.decode_video_frames(bytes(cut))
-
-
-def test_adpcm_wav_decode_and_roundtrip():
-    """IMA/DVI and Microsoft ADPCM WAV: the block-vectorized decoders
-    match a per-sample scalar replica EXACTLY on random bitstreams
-    (arbitrary nibbles and headers, not just encoder output), the lossy
-    encoder round-trips within the quantizer envelope, the fact chunk
-    trims final-block padding to the true sample count, and the table
-    invariants hold (89-step table from 7 to 32767 growing ~1.1x, the
-    published MS coefficient pairs). Framing violations raise."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    st = multimodal._IMA_STEP_TABLE
-    assert len(st) == 89 and st[0] == 7 and st[-1] == 32767
-    r = st[1:].astype("float64") / st[:-1]
-    assert (r >= 1.04).all() and (r <= 1.15).all() and (np.diff(st) > 0).all()
-    assert multimodal._IMA_INDEX_TABLE.tolist() == [-1, -1, -1, -1, 2, 4, 6, 8]
-    assert multimodal._MS_ADPCM_COEF1.tolist() == [256, 512, 0, 192, 240, 460, 392]
-    assert multimodal._MS_ADPCM_COEF2.tolist() == [0, -256, 0, 64, 0, -208, -232]
-    adapt = multimodal._MS_ADPCM_ADAPT
-    assert len(adapt) == 16 and adapt[0] == 230 and adapt[8] == 768
-    assert (adapt[1:8] == adapt[15:8:-1]).all()  # magnitude-symmetric
-
-    rng = np.random.RandomState(31)
-    clamp = lambda v: max(-32768, min(32767, v))  # noqa: E731
-
-    def ima_scalar(block: bytes, ch: int):
-        out = [[] for _ in range(ch)]
-        preds, idxs = [], []
-        for c in range(ch):
-            p, i, _ = struct.unpack_from("<hBB", block, 4 * c)
-            preds.append(p)
-            idxs.append(i)
-            out[c].append(p)
-        body = block[4 * ch :]
-        for g in range(len(body) // (4 * ch)):
-            for c in range(ch):
-                for byte in body[(g * ch + c) * 4 : (g * ch + c) * 4 + 4]:
-                    for n in (byte & 0xF, byte >> 4):
-                        step = int(st[idxs[c]])
-                        d = step >> 3
-                        if n & 1:
-                            d += step >> 2
-                        if n & 2:
-                            d += step >> 1
-                        if n & 4:
-                            d += step
-                        preds[c] = clamp(preds[c] + (-d if n & 8 else d))
-                        idxs[c] = min(88, max(0, idxs[c] + int(
-                            multimodal._IMA_INDEX_TABLE[n & 7])))
-                        out[c].append(preds[c])
-        return np.array(out).T
-
-    def ms_scalar(block: bytes, ch: int):
-        bp = list(block[:ch])
-        delta = [struct.unpack_from("<h", block, ch + 2 * c)[0] for c in range(ch)]
-        s1 = [struct.unpack_from("<h", block, 3 * ch + 2 * c)[0] for c in range(ch)]
-        s2 = [struct.unpack_from("<h", block, 5 * ch + 2 * c)[0] for c in range(ch)]
-        out = [[s2[c], s1[c]] for c in range(ch)]
-        nibs = []
-        for byte in block[7 * ch :]:
-            nibs += [byte >> 4, byte & 0xF]
-        c1 = [int(multimodal._MS_ADPCM_COEF1[b]) for b in bp]
-        c2 = [int(multimodal._MS_ADPCM_COEF2[b]) for b in bp]
-        for k, n in enumerate(nibs):
-            c = k % ch
-            signed = (n ^ 8) - 8
-            pred = clamp(((s1[c] * c1[c] + s2[c] * c2[c]) >> 8) + signed * delta[c])
-            out[c].append(pred)
-            s2[c], s1[c] = s1[c], pred
-            delta[c] = max(16, (int(adapt[n]) * delta[c]) >> 8)
-        return np.array(out).T
-
-    # random bitstreams (not encoder output) pin vectorized == scalar
-    for ch in (1, 2):
-        blk = 4 * ch * 5
-        blocks = []
-        for _ in range(7):
-            b = bytearray(rng.randint(0, 256, size=blk).astype("uint8").tobytes())
-            for c in range(ch):
-                b[4 * c + 2] = rng.randint(0, 89)  # valid step index
-                b[4 * c + 3] = 0
-            blocks.append(bytes(b))
-        got = multimodal._decode_ima_blocks(b"".join(blocks), ch, blk)
-        ref = np.vstack([ima_scalar(b, ch) for b in blocks])
-        assert (got == ref).all(), ("ima", ch)
-
-        blk = 7 * ch + 8 * ch
-        blocks = []
-        for _ in range(7):
-            b = bytearray(rng.randint(0, 256, size=blk).astype("uint8").tobytes())
-            for c in range(ch):
-                b[c] = rng.randint(0, 7)  # valid predictor pair
-            blocks.append(bytes(b))
-        coefs = (multimodal._MS_ADPCM_COEF1, multimodal._MS_ADPCM_COEF2)
-        got = multimodal._decode_ms_blocks(b"".join(blocks), ch, blk, coefs)
-        ref = np.vstack([ms_scalar(b, ch) for b in blocks])
-        assert (got == ref).all(), ("ms", ch)
-
-    # encoder round-trip: lossy but inside the quantizer envelope,
-    # fact-trimmed to the exact input length (481 is no block multiple)
-    t = np.arange(481)
-    sig = np.clip(
-        8000 * np.sin(t / 17.0) + 2500 * np.sin(t / 5.1) + rng.randn(481) * 150,
-        -32768, 32767,
-    ).astype("int64")
-    for kind in ("ima", "ms"):
-        for ch in (1, 2):
-            x = np.stack([sig, np.roll(sig, 53)], axis=1)[:, :ch]
-            pay = multimodal.encode_wav(x.astype("int16"), 8000, adpcm=kind)
-            out, rate = multimodal.decode_audio(pay)
-            assert rate == 8000 and out.shape == x.shape
-            err = out * 32768.0 - x
-            assert float(np.sqrt((err ** 2).mean())) < 400.0, (kind, ch)
-            assert float(np.corrcoef(out[:, 0], x[:, 0])[0, 1]) > 0.995
-            meta = multimodal.probe_audio(pay)
-            assert meta["encoding"] == f"{kind}_adpcm"
-            assert meta["n_samples"] == 481 and meta["bits"] == 4
-
-    # windowed feature path: window unit = one self-contained block
-    pay = multimodal.encode_wav(sig.astype("int16"), 8000, adpcm="ima")
-
-    # framing violations
-    def patch(payload: bytes, off: int, fmt: str, *vals):
-        buf = bytearray(payload)
-        struct.pack_into(fmt, buf, off, *vals)
-        return bytes(buf)
-
-    with _pytest.raises(ValueError, match="samples/block"):
-        multimodal.decode_audio(patch(pay, 38, "<H", 999))  # spb lies
-    with _pytest.raises(ValueError, match="fact count"):
-        multimodal.decode_audio(patch(pay, 48, "<I", 10 ** 6))
-    with _pytest.raises(ValueError, match="step index"):
-        bad = bytearray(pay)
-        bad[bad.index(b"data") + 8 + 2] = 99
-        multimodal.decode_audio(bytes(bad))
-    with _pytest.raises(ValueError, match="coefficient table"):
-        ms = multimodal.encode_wav(sig.astype("int16"), 8000, adpcm="ms")
-        multimodal.decode_audio(patch(ms, 42, "<h", 999))  # coef1[0]
-    with _pytest.raises(NotImplementedError, match="4-bit"):
-        multimodal.decode_audio(patch(pay, 34, "<H", 2))  # bits field
-
-
 def test_webp_vp8l_roundtrip():
     """Lossless WebP (VP8L): every decoder path round-trips bit-exactly
     through the fixture encoder — literals, LZ77 back-references over
@@ -2340,8 +1343,7 @@ def test_webp_distance_map_and_gates():
     generation rule's output is pinned literally against the published
     table's head, and the structural invariants (domain, uniqueness,
     euclidean ordering) hold for the whole table. Container gates:
-    lossy VP8 and animation raise, probes stay header-only, framing
-    violations raise."""
+    lossy VP8 and animation raise, framing violations raise."""
     import struct
 
     import numpy as np
@@ -2361,26 +1363,20 @@ def test_webp_distance_map_and_gates():
     d2 = [dx * dx + dy * dy for dx, dy in m]
     assert d2 == sorted(d2)
 
-    # lossy VP8: probe reads the uncompressed frame header, decode gates
+    # lossy VP8: decode gates
     vp8 = b"\x00\x00\x00" + b"\x9d\x01\x2a" + struct.pack("<HH", 64, 48)
     body = b"VP8 " + struct.pack("<I", len(vp8)) + vp8
     pay = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
-    meta = multimodal.probe_webp(pay)
-    assert meta["codec"] == "vp8" and (meta["width"], meta["height"]) == (64, 48)
     with _pytest.raises(NotImplementedError, match="lossy WebP"):
         multimodal.decode_image(pay)
 
     good = multimodal.encode_webp(
         np.zeros((4, 4, 3), dtype="uint8"), lz77=False
     )
-    meta = multimodal.probe_webp(good)
-    assert meta["codec"] == "vp8l" and (meta["width"], meta["height"]) == (4, 4)
-    assert not meta["animated"] and not meta["has_alpha"]
 
     anim = b"ANIM" + struct.pack("<I", 6) + b"\x00" * 6
     body = anim + good[12:]
     pay = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
-    assert multimodal.probe_webp(pay)["animated"]
     with _pytest.raises(NotImplementedError, match="animated"):
         multimodal.decode_image(pay)
 
@@ -2400,480 +1396,11 @@ def test_webp_distance_map_and_gates():
         bad[20 + 4] |= 0x20  # bit 37 of the VP8L payload = version LSB
         multimodal._decode_webp(bytes(bad))
     with _pytest.raises(ValueError, match="image chunk"):
-        multimodal.probe_webp(b"RIFF" + struct.pack("<I", 4) + b"WEBP")
+        multimodal._decode_webp(b"RIFF" + struct.pack("<I", 4) + b"WEBP")
     with _pytest.raises(ValueError, match="does not combine"):
         multimodal.encode_webp(
             np.zeros((4, 4, 3), dtype="uint8"), palette=True, predictor=1
         )
-
-
-def test_y4m_video_decode_roundtrip_and_sampling():
-    """Y4M (YUV4MPEG2) — the codec-free video container: mono frames
-    round-trip exactly; gray-valued RGB through C444 round-trips exactly
-    (full-range BT.601 is identity on gray); random color stays within
-    the uint8 chroma-quantization bound; 420 subsampling decodes;
-    frame-index sampling decodes only the requested frames; compressed
-    containers and tagged bit depths hit the NotImplementedError gate;
-    truncated frames raise."""
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(3)
-    frames = [rng.randint(0, 256, size=(6, 8), dtype=np.uint8) for _ in range(5)]
-    pay = multimodal.encode_y4m(frames, "mono")
-    meta = multimodal.probe_video(pay)
-    assert meta == {"container": "y4m", "width": 8, "height": 6,
-                    "colorspace": "mono", "n_frames": 5}
-    dec = multimodal.decode_video_frames(pay)
-    assert [i for i, _ in dec] == list(range(5))
-    for (_, d), f in zip(dec, frames):
-        assert d.dtype == np.uint8 and (d == f).all()
-    # selective decode: only the requested frame numbers come back
-    dec = multimodal.decode_video_frames(pay, indices=[0, 3])
-    assert [i for i, _ in dec] == [0, 3] and (dec[1][1] == frames[3]).all()
-
-    # C444 on gray-valued RGB: BT.601 full-range is identity on gray
-    g = rng.randint(0, 256, size=(4, 6), dtype=np.uint8)
-    rgbf = [np.stack([g] * 3, axis=-1), np.stack([np.roll(g, 1, 1)] * 3, axis=-1)]
-    dec = multimodal.decode_video_frames(multimodal.encode_y4m(rgbf, "444"))
-    for (_, d), f in zip(dec, rgbf):
-        assert (d == f).all()
-
-    # random color: 444 and 420 (flat 2x2 blocks) within the uint8
-    # chroma-quantization bound; 420 halves the chroma plane size
-    fr = rng.randint(0, 256, size=(4, 4, 3), dtype=np.uint8)
-    (_, d), = multimodal.decode_video_frames(multimodal.encode_y4m([fr], "444"))
-    assert np.abs(d.astype(int) - fr.astype(int)).max() <= 1
-    flat = np.repeat(np.repeat(rng.randint(0, 256, size=(2, 3, 3), dtype=np.uint8), 2, 0), 2, 1)
-    pay420 = multimodal.encode_y4m([flat], "420jpeg")
-    (_, d), = multimodal.decode_video_frames(pay420)
-    assert d.shape == flat.shape and np.abs(d.astype(int) - flat.astype(int)).max() <= 1
-    assert len(pay420) < len(multimodal.encode_y4m([flat], "444"))
-    # the 420mpeg2 alias (different chroma siting, same layout) decodes too
-    (_, d2), = multimodal.decode_video_frames(
-        pay420.replace(b"C420jpeg", b"C420mpeg2")
-    )
-    assert (d2 == d).all()
-
-    # gates + framing (AVI now has its own decode path; an unknown
-    # container still lands on the Y4M gate)
-    with _pytest.raises(NotImplementedError, match="only the Y4M"):
-        multimodal.decode_video_frames(b"\x1aEdml matroska-ish garbage\n")
-    with _pytest.raises(NotImplementedError, match="C420p10"):
-        multimodal.decode_video_frames(pay.replace(b"Cmono", b"C420p10"))
-    with _pytest.raises(NotImplementedError, match="interlaced"):
-        multimodal.decode_video_frames(pay.replace(b"Ip", b"It"))
-    with _pytest.raises(ValueError, match="truncated Y4M frame 4"):
-        multimodal.decode_video_frames(pay[:-3])
-    with _pytest.raises(ValueError, match="not a multiple"):
-        multimodal.encode_y4m([np.zeros((3, 4, 3), dtype=np.uint8)], "420jpeg")
-
-
-def test_video_frame_sampling_over_spark(spark, emb):
-    """Per-frame features over the real mapInPandas path: the synthetic
-    Y4M table derived from embeddings, every-other-frame sampling, each
-    sampled frame checked value-for-value against the known construction
-    (frame k = base raster rolled k columns)."""
-    import hashlib
-
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(4)
-    media = multimodal.video_media_table(sample, width=8, n_frames=5)
-    rows = multimodal.sample_video_frames(media, every_k=2).collect()
-    by_key = {(r["vec_id"], r["frame_no"]): r for r in rows}
-    assert sorted({r["frame_no"] for r in rows}) == [0, 2, 4]
-    assert len(rows) == 4 * 3
-    for row in sample.collect():
-        f = np.asarray(row["embedding"], dtype="<f4")
-        u8 = np.clip(f * 64.0 + 128.0, 0, 255).astype("uint8")
-        nrows = -(-u8.size // 8)
-        base = np.zeros((nrows, 8), dtype="uint8")
-        base.reshape(-1)[: u8.size] = u8
-        for k in (0, 2, 4):
-            frame = np.roll(base, k, axis=1)
-            got = by_key[(row["vec_id"], k)]
-            assert (got["width"], got["height"], got["channels"]) == (8, nrows, 1)
-            assert got["n_frames"] == 5
-            assert got["min_val"] == int(frame.min())
-            assert got["max_val"] == int(frame.max())
-            assert abs(got["mean_val"] - frame.astype("float64").mean()) < 1e-12
-            assert got["checksum"] == hashlib.md5(frame.tobytes()).hexdigest()
-    # color variant exercises the chroma path end-to-end (dims only —
-    # pixel values are pinned by the kernel tests above)
-    crows = multimodal.sample_video_frames(
-        multimodal.video_media_table(sample, width=8, n_frames=2, colorspace="420jpeg"),
-        every_k=1,
-    ).collect()
-    assert len(crows) == 4 * 2 and all(r["channels"] == 3 for r in crows)
-    assert all(r["height"] % 2 == 0 for r in crows)  # padded to the sampling
-
-
-def test_wav_audio_decode_roundtrip_and_gates():
-    """WAV (RIFF PCM/IEEE-float) — the codec-free audio container: every
-    sample layout (u8/i16/i24/i32/f32/f64, mono+stereo) round-trips with
-    EXACT float64 normalization; the chunk walk skips unknown chunks
-    with RIFF odd-size padding; EXTENSIBLE headers unwrap to the real
-    tag; compressed format tags and non-WAV payloads hit the
-    NotImplementedError gate; truncated data raises."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(5)
-    s16 = rng.randint(-32768, 32768, size=(100, 2)).astype("<i2")
-    pay = multimodal.encode_wav(s16, 44100)
-    x, rate = multimodal.decode_audio(pay)
-    assert rate == 44100 and np.array_equal(x, s16.astype("float64") / 32768.0)
-    meta = multimodal.probe_audio(pay)
-    assert (meta["channels"], meta["bits"], meta["n_samples"]) == (2, 16, 100)
-    assert meta["encoding"] == "pcm" and meta["duration_sec"] == 100 / 44100
-
-    u8 = rng.randint(0, 256, size=50).astype("u1")
-    x, _ = multimodal.decode_audio(multimodal.encode_wav(u8, 8000, bits=8))
-    assert np.array_equal(x[:, 0], (u8.astype("float64") - 128) / 128)
-    v24 = rng.randint(-(1 << 23), 1 << 23, size=33)
-    x, _ = multimodal.decode_audio(multimodal.encode_wav(v24.astype("<i4"), 16000, bits=24))
-    assert np.array_equal(x[:, 0], v24.astype("float64") / 8388608.0)
-    v32 = rng.randint(-(1 << 31), 1 << 31, size=20, dtype=np.int64).astype("<i4")
-    x, _ = multimodal.decode_audio(multimodal.encode_wav(v32, 16000, bits=32))
-    assert np.array_equal(x[:, 0], v32.astype("float64") / 2147483648.0)
-    for f in (rng.randn(40).astype("<f4"), rng.randn(11)):
-        x, _ = multimodal.decode_audio(multimodal.encode_wav(f, 48000))
-        assert np.array_equal(x[:, 0], f.astype("float64"))
-
-    # unknown chunk with an ODD size before data: the pad byte is honored
-    inj = pay[:12] + b"LIST" + struct.pack("<I", 3) + b"abc\x00" + pay[12:]
-    inj = inj[:4] + struct.pack("<I", len(inj) - 8) + inj[8:]
-    x, _ = multimodal.decode_audio(inj)
-    assert np.array_equal(x, s16.astype("float64") / 32768.0)
-
-    # WAVE_FORMAT_EXTENSIBLE wrapping plain PCM (tag in the SubFormat GUID)
-    fmt_ext = (
-        struct.pack("<HHIIHH", 0xFFFE, 2, 44100, 44100 * 4, 4, 16)
-        + struct.pack("<HHI", 16, 0x3, 0x1)
-        + struct.pack("<H", 1)
-        + b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-    )
-    raw = s16.tobytes()
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt_ext)) + fmt_ext
-        + b"data" + struct.pack("<I", len(raw)) + raw
-    )
-    ext = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-    x, _ = multimodal.decode_audio(ext)
-    assert np.array_equal(x, s16.astype("float64") / 32768.0)
-
-    # G.711 μ-law/A-law: spec anchors, the expand↔compress fixed-point
-    # invariant over all 256 codes, and a container round-trip
-    assert multimodal._g711_expand(np.array([0x00]), "ulaw")[0] == -32124
-    assert multimodal._g711_expand(np.array([0xFF]), "ulaw")[0] == 0
-    assert multimodal._g711_expand(np.array([0x55]), "alaw")[0] == -8
-    assert multimodal._g711_expand(np.array([0xD5]), "alaw")[0] == 8
-    codes = np.arange(256)
-    for law in ("alaw", "ulaw"):
-        lin = multimodal._g711_expand(codes, law)
-        back = multimodal._g711_compress(lin, law)
-        # every expanded value re-compresses to its own code, except
-        # μ-law's negative zero 0x7F which canonicalizes to 0xFF
-        noncanon = codes[back != codes]
-        assert noncanon.tolist() == ([0x7F] if law == "ulaw" else [])
-        g711 = multimodal.encode_wav(lin.reshape(-1, 2), 8000, law=law)
-        meta = multimodal.probe_audio(g711)
-        assert (meta["encoding"], meta["bits"], meta["channels"]) == (law, 8, 2)
-        x, rate = multimodal.decode_audio(g711)
-        assert rate == 8000
-        assert np.array_equal(x, lin.reshape(-1, 2).astype("float64") / 32768.0)
-
-    # gates + framing: entropy-coded tags stay gated; ADPCM decodes now,
-    # but a PCM payload relabeled as ADPCM hits the 4-bit layout gate
-    bad = bytearray(pay)
-    struct.pack_into("<H", bad, 20, 0x0055)  # MP3
-    with _pytest.raises(NotImplementedError, match="format tag"):
-        multimodal.decode_audio(bytes(bad))
-    for tag in (0x0002, 0x0011):  # MS-ADPCM, IMA-ADPCM over 16-bit frames
-        bad = bytearray(pay)
-        struct.pack_into("<H", bad, 20, tag)
-        with _pytest.raises(NotImplementedError, match="4-bit"):
-            multimodal.decode_audio(bytes(bad))
-    # G.711 declared at a non-8-bit layout is structurally wrong → gated
-    bad = bytearray(pay)
-    struct.pack_into("<H", bad, 20, 0x0007)  # μ-law tag, but 16-bit frames
-    with _pytest.raises(NotImplementedError, match="not a decodable layout"):
-        multimodal.decode_audio(bytes(bad))
-    # ID3-tagged payloads now route to the MP3 gate, which names the probe
-    with _pytest.raises(NotImplementedError, match="probe_audio covers"):
-        multimodal.decode_audio(b"ID3\x04" + b"\x00" * 40)
-    with _pytest.raises(NotImplementedError, match="only WAV"):
-        multimodal.decode_audio(b"\x00garbage" + b"\x00" * 40)
-    with _pytest.raises(ValueError, match="truncated WAV data"):
-        multimodal.decode_audio(pay[:-7])
-
-
-def test_audio_window_sampling_over_spark(spark, emb):
-    """Windowed audio features over the real mapInPandas path: the
-    synthetic WAV table derived from embeddings, every-other-window
-    sampling, each sampled window checked value-for-value against the
-    known construction (int16 = clip(round(v*16384)) tiled)."""
-    import hashlib
-
-    import numpy as np
-
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(4)
-    media = multimodal.audio_media_table(sample, sample_rate=8000, repeat=4)
-    rows = multimodal.sample_audio_windows(media, window=100, every_k=2).collect()
-    by_key = {(r["vec_id"], r["window_no"]) : r for r in rows}
-    for row in sample.collect():
-        f = np.asarray(row["embedding"], dtype="<f4").astype("float64")
-        pcm = np.clip(np.round(f * 16384.0), -32768, 32767).astype("<i2")
-        full = np.tile(pcm, 4)
-        n_windows = -(-full.size // 100)
-        got_windows = sorted(
-            wn for vid, wn in by_key if vid == row["vec_id"]
-        )
-        assert got_windows == list(range(0, n_windows, 2))
-        for wn in got_windows:
-            seg = full[wn * 100 : (wn + 1) * 100]
-            mono = seg.astype("float64") / 32768.0
-            got = by_key[(row["vec_id"], wn)]
-            assert got["n_windows"] == n_windows
-            assert (got["sample_rate"], got["channels"]) == (8000, 1)
-            assert got["n_samples"] == seg.size
-            assert got["rms"] == float(np.sqrt(np.mean(mono * mono)))
-            assert got["peak"] == float(np.abs(mono).max())
-            assert got["mean_val"] == float(mono.mean())
-            zc = int(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-            assert got["zero_crossings"] == zc
-            assert got["checksum"] == hashlib.md5(seg.tobytes()).hexdigest()
-    # max_windows cap
-    capped = multimodal.sample_audio_windows(media, window=100, max_windows=1).collect()
-    assert len(capped) == 4 and all(r["window_no"] == 0 for r in capped)
-
-    # G.711 container through the SAME Spark path: one byte per frame,
-    # features match the expand∘compress midpoint replica exactly
-    for law in ("alaw", "ulaw"):
-        g711 = multimodal.audio_media_table(sample, sample_rate=8000, repeat=4, law=law)
-        got = {
-            (r["vec_id"], r["window_no"]): r
-            for r in multimodal.sample_audio_windows(g711, window=100, every_k=2).collect()
-        }
-        for row in sample.collect():
-            f = np.asarray(row["embedding"], dtype="<f4").astype("float64")
-            pcm = np.clip(np.round(f * 16384.0), -32768, 32767).astype("int64")
-            codes = multimodal._g711_compress(np.tile(pcm, 4), law)
-            for (vid, wn), r in got.items():
-                if vid != row["vec_id"]:
-                    continue
-                seg = codes[wn * 100 : (wn + 1) * 100]
-                mono = multimodal._g711_expand(seg, law).astype("float64") / 32768.0
-                assert r["n_samples"] == seg.size and r["channels"] == 1
-                assert r["rms"] == float(np.sqrt(np.mean(mono * mono)))
-                assert r["peak"] == float(np.abs(mono).max())
-                assert r["mean_val"] == float(mono.mean())
-                assert r["checksum"] == hashlib.md5(seg.tobytes()).hexdigest()
-
-    # ADPCM through the SAME Spark path: the window unit becomes one
-    # self-contained block (skip-unsampled still holds — no other block
-    # is decoded), features match the deterministic encoder replica
-    for kind in ("ima", "ms"):
-        adp = multimodal.audio_media_table(
-            sample, sample_rate=8000, repeat=4, adpcm=kind
-        )
-        got = {
-            (r["vec_id"], r["window_no"]): r
-            for r in multimodal.sample_audio_windows(
-                adp, window=2, every_k=2
-            ).collect()
-        }
-        for row in sample.collect():
-            f = np.asarray(row["embedding"], dtype="<f4").astype("float64")
-            pcm = np.clip(np.round(f * 16384.0), -32768, 32767).astype("<i2")
-            pay = multimodal.encode_wav(np.tile(pcm, 4), 8000, adpcm=kind)
-            fmt, off, dlen = multimodal._parse_audio_header(pay)
-            spb, block = fmt["spb"], fmt["block"]
-            n_blocks = dlen // block
-            full = multimodal._frames_to_array(pay[off : off + dlen], fmt)
-            n_windows = -(-n_blocks // 2)
-            wns = sorted(wn for vid, wn in got if vid == row["vec_id"])
-            assert wns == list(range(0, n_windows, 2))
-            for wn in wns:
-                r = got[(row["vec_id"], wn)]
-                seg = pay[off + wn * 2 * block : off + min(dlen, (wn + 1) * 2 * block)]
-                mono = full[wn * 2 * spb : (wn + 1) * 2 * spb, 0]
-                assert r["n_samples"] == mono.size and r["n_windows"] == n_windows
-                assert r["rms"] == float(np.sqrt(np.mean(mono * mono)))
-                assert r["checksum"] == hashlib.md5(seg).hexdigest()
-
-
-def test_au_aiff_decode_roundtrip():
-    """Sun AU and AIFF/AIFF-C decode through the shared frame kernel:
-    every AU encoding (G.711/s8/s16/s24/s32/f32/f64, big-endian), every
-    AIFF PCM width, and the AIFC compressions (sowt little-endian,
-    fl32/fl64, G.711) round-trip exactly to the same normalized float64
-    form WAV produces; the 80-bit extended-float rate is exact for every
-    standard rate; unknown containers/encodings stay gated."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(4)
-    s16 = rng.randint(-32768, 32768, size=(101, 2)).astype("<i2")
-    s8 = rng.randint(-128, 128, size=50).astype("i1")
-    v24 = rng.randint(-(1 << 23), 1 << 23, size=33).astype("<i4")
-    f32 = (rng.randn(60) * 0.5).astype("<f4")
-
-    for r in (8000, 11025, 16000, 22050, 44100, 48000, 96000, 192000, 1):
-        assert multimodal._f80_decode(multimodal._f80_encode(r)) == r, r
-
-    au_cases = [
-        ("pcm16", s16, s16.astype("float64") / 32768.0),
-        ("pcm8", s8, (s8.astype("float64") / 128.0).reshape(-1, 1)),
-        ("pcm24", v24, (v24.astype("float64") / 8388608.0).reshape(-1, 1)),
-        ("f32", f32, f32.astype("float64").reshape(-1, 1)),
-    ]
-    for enc, data, want in au_cases:
-        pay = multimodal.encode_au(data, 8000, encoding=enc)
-        x, rate = multimodal.decode_audio(pay)
-        assert rate == 8000 and np.array_equal(x, want), enc
-        meta = multimodal.probe_audio(pay)
-        assert meta["container"] == "au" and meta["n_samples"] == len(want)
-
-    aiff_cases = [
-        (dict(bits=16), s16, s16.astype("float64") / 32768.0),
-        (dict(bits=8), s8, (s8.astype("float64") / 128.0).reshape(-1, 1)),
-        (dict(bits=24), v24, (v24.astype("float64") / 8388608.0).reshape(-1, 1)),
-        (dict(compression="sowt"), s16, s16.astype("float64") / 32768.0),
-        (dict(compression="fl32"), f32, f32.astype("float64").reshape(-1, 1)),
-    ]
-    for kw, data, want in aiff_cases:
-        pay = multimodal.encode_aiff(data, 44100, **kw)
-        x, rate = multimodal.decode_audio(pay)
-        assert rate == 44100 and np.array_equal(x, want), kw
-        assert multimodal.probe_audio(pay)["container"] == "aiff"
-    for law in ("ulaw", "alaw"):
-        codes = multimodal._g711_compress(s16.astype("int64"), law)
-        want = (multimodal._g711_expand(codes, law).astype("float64") / 32768.0).reshape(-1, 2)
-        for pay in (
-            multimodal.encode_au(s16, 8000, encoding=law),
-            multimodal.encode_aiff(s16, 8000, compression=law),
-        ):
-            x, _ = multimodal.decode_audio(pay)
-            assert np.array_equal(x, want), law
-            assert multimodal.probe_audio(pay)["encoding"] == law
-
-    # Ogg now routes to its own gate; unknown magic still names the set
-    with _pytest.raises(NotImplementedError, match="probe_audio covers"):
-        multimodal.decode_audio(b"OggS not a container we decode")
-    with _pytest.raises(NotImplementedError, match="only WAV"):
-        multimodal.decode_audio(b"XXXX not a container we decode")
-    bad = bytearray(multimodal.encode_au(s16, 8000))
-    struct.pack_into(">I", bad, 12, 23)  # G.721 ADPCM
-    with _pytest.raises(NotImplementedError, match="AU encoding 23"):
-        multimodal.decode_audio(bytes(bad))
-    bad = bytearray(multimodal.encode_aiff(s16, 8000, compression="sowt"))
-    i = bytes(bad).find(b"sowt")
-    bad[i : i + 4] = b"ima4"
-    with _pytest.raises(NotImplementedError, match="AIFC compression"):
-        multimodal.decode_audio(bytes(bad))
-
-
-def test_flac_decode_roundtrip():
-    """FLAC — lossless integer bookkeeping, no codec library: every
-    subframe mode (constant auto-pick / verbatim / fixed orders 0-4 /
-    quantized LPC) and every stereo decorrelation (independent,
-    left-side, right-side, mid-side) round-trips EXACTLY through Rice
-    coding at 8/16/24-bit, partial tail blocks included; the probe reads
-    STREAMINFO without touching frames; decode_audio dispatches on the
-    fLaC magic; header CRC-8 and frame CRC-16 catch corruption; the
-    window sampler refuses honestly (frames are entropy-coded, no
-    byte-slice path)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from pypdfocr_spark import multimodal
-
-    rng = np.random.RandomState(9)
-
-    def check(samples, rate, **kw):
-        pay = multimodal.encode_flac(samples, rate, **kw)
-        x, r = multimodal.decode_audio(pay)  # dispatch via magic
-        want = np.asarray(samples, dtype="int64")
-        if want.ndim == 1:
-            want = want.reshape(-1, 1)
-        bits = kw.get("bits", 16)
-        assert r == rate
-        assert np.array_equal(x, want.astype("float64") / (1 << (bits - 1))), kw
-        return pay
-
-    mono = rng.randint(-30000, 30000, size=1000).astype("int64")
-    smooth = np.cumsum(rng.randint(-50, 51, size=1000)).astype("int64")
-    for mode in ("verbatim", "fixed0", "fixed1", "fixed2", "fixed3", "fixed4", "lpc"):
-        check(mono, 44100, subframe=mode)
-        check(smooth, 44100, subframe=mode)
-    check(np.full(500, 123, dtype="int64"), 8000, block_size=64)  # constant
-    check(mono[:130], 22050, block_size=64)  # partial tail block
-    st = rng.randint(-30000, 30000, size=(600, 2)).astype("int64")
-    for stereo in ("independent", "left_side", "right_side", "mid_side"):
-        check(st, 48000, stereo=stereo, subframe="fixed2")
-        check(st, 48000, stereo=stereo, subframe="lpc")
-    check(rng.randint(-120, 120, size=300), 8000, bits=8)
-    check(rng.randint(-(1 << 22), 1 << 22, size=300), 96000, bits=24)
-
-    pay = multimodal.encode_flac(st, 48000)
-    assert multimodal.probe_audio(pay) == {
-        "sample_rate": 48000, "channels": 2, "bits": 16, "encoding": "flac",
-        "container": "flac", "n_samples": 600, "duration_sec": 600 / 48000,
-    }
-    bad = bytearray(pay)
-    bad[-40] ^= 0x01
-    with _pytest.raises(ValueError, match="CRC-16"):
-        multimodal.decode_flac(bytes(bad))
-    bad = bytearray(pay)
-    bad[len(pay) - len(pay) // 3] ^= 0x01  # likely inside a frame header/body
-    with _pytest.raises(ValueError):
-        multimodal.decode_flac(bytes(bad))
-    with _pytest.raises(NotImplementedError, match="entropy-coded"):
-        multimodal._parse_audio_header(pay)
-
-
-def test_audio_windows_across_containers(spark, emb):
-    """The SAME PCM frames through WAV, AU, and AIFF containers over the
-    real mapInPandas window path yield identical per-window features —
-    only the payload checksums differ (container bytes)."""
-    from pypdfocr_spark import multimodal
-
-    sample = emb.limit(3)
-    by_c = {
-        c: {
-            (r["vec_id"], r["window_no"]): r
-            for r in multimodal.sample_audio_windows(
-                multimodal.audio_media_table(
-                    sample, sample_rate=8000, repeat=4, container=c
-                ),
-                window=100, every_k=2,
-            ).collect()
-        }
-        for c in ("wav", "au", "aiff")
-    }
-    assert by_c["wav"] and set(by_c["wav"]) == set(by_c["au"]) == set(by_c["aiff"])
-    feature_cols = ["n_windows", "sample_rate", "channels", "n_samples",
-                    "rms", "peak", "zero_crossings", "mean_val"]
-    for key, ref in by_c["wav"].items():
-        for c in ("au", "aiff"):
-            got = by_c[c][key]
-            assert [got[k] for k in feature_cols] == [ref[k] for k in feature_cols], (c, key)
 
 
 def test_entry_contract(spark):

@@ -178,12 +178,11 @@ def test_extract_rows_error_rows_do_not_leak(monkeypatch):
         assert "spark window" in out["extracted_norm"][i]
 
 
-def test_jvm_reassembly_parity(spark):
-    """The JVM heavy-path reassembly (default) must be row-identical to
-    the original applyInPandas reassembly — over the real corpus (heavy
-    tail included) AND the failure fixtures (decode_error, unsupported,
-    mixed-page statuses), with wall_ms excluded (a timing column)."""
-    import dataclasses
+def test_jvm_reassembly_parity(spark, oracle_rows):
+    """The JVM heavy-path reassembly must be row-identical to
+    ``corpus.oracle_extract`` — over the real corpus (heavy tail
+    included) AND the heavy failure fixtures (decode_error, unsupported,
+    mixed-page statuses, heavy HTML), on all six oracle columns."""
     import datetime
 
     from pypdfocr_spark.kernels import codec
@@ -199,6 +198,9 @@ def test_jvm_reassembly_parity(spark):
         ("https://a.example/corrupt.pdf", ts,
          codec.MAGIC + b'{"dpi":300,"words":[]}\n{garbage' + b"x" * pad, "", "en"),
         ("https://a.example/blob.bin", ts, b"\x00\x01" + b"y" * pad, "", "en"),
+        # huge HTML → ok via boilerplate strip
+        ("https://a.example/big.html", ts,
+         b"<html><body><p>" + b"word " * (pad // 5) + b"</p></body></html>", "", "en"),
         # routed via a page match on a late page (page-order reduction)
         ("https://a.example/late-route.pdf", ts,
          codec.encode_doc([plain_page] * 200 + [good_page]), "", "en"),
@@ -210,13 +212,16 @@ def test_jvm_reassembly_parity(spark):
         [(u, t, p, x, l, len(p)) for (u, t, p, x, l) in fixtures], CORPUS_SCHEMA
     )
     corpus_df = pipeline.build_corpus_df(spark, SF_SMOKE).unionByName(fixture_df)
-    cfg_jvm = ExtractConfig()
-    cfg_py = dataclasses.replace(cfg_jvm, python_reassembly=True)
-    cols = [c for c in pipeline.extract(corpus_df, cfg_jvm).columns if c != "wall_ms"]
-    got_jvm = sorted(map(tuple, pipeline.extract(corpus_df, cfg_jvm).select(cols).collect()))
-    got_py = sorted(map(tuple, pipeline.extract(corpus_df, cfg_py).select(cols).collect()))
-    assert got_jvm == got_py
-    by_url = {r[0]: r for r in got_jvm}
+    cfg = ExtractConfig()
+    cols = ["url", "extracted_text", "extracted_norm", "route", "n_pages", "status"]
+    want = oracle_rows + ck.oracle_extract(
+        [{"url": u, "html": p} for (u, _, p, _, _) in fixtures],
+        cfg.targets, cfg.default_route,
+    )
+    got = sorted(map(tuple, pipeline.extract(corpus_df, cfg).select(cols).collect()))
+    assert got == sorted(tuple(o[c] for c in cols) for o in want)
+    assert len(got) == len(oracle_rows) + len(fixtures)
+    by_url = {r[0]: r for r in got}
     assert by_url["https://a.example/late-route.pdf"][cols.index("route")] == "spark_docs"
     assert by_url["https://a.example/table-report.pdf"][cols.index("route")] == "storage"
 

@@ -1,7 +1,8 @@
 """Subprocess-backed kernel tests — fully mocked binaries, mirroring the
 reference's approach (ref: test/test_tesseract.py:13-137, test/test_gs.py:
-13-48 run everything under a patched subprocess). No Spark session needed:
-the kernels and the pipeline's Arrow-row functions are plain Python.
+13-48 run everything under a patched subprocess). The kernels and the
+pipeline's Arrow-row functions are plain Python; only the heavy-path tests
+take the Spark session, to reassemble their page rows in the JVM.
 """
 
 import json
@@ -15,6 +16,7 @@ from pypdfocr_spark import envcheck
 from pypdfocr_spark import pipeline
 from pypdfocr_spark.config import ExtractConfig
 from pypdfocr_spark.kernels import hocr, subproc
+from pypdfocr_spark.schema import PAGE_TEXT_SCHEMA
 
 PDF = b"%PDF-1.4 fake body"
 
@@ -430,7 +432,14 @@ def _fake_page_range_ocr_stack(monkeypatch, page_words):
     monkeypatch.setattr(subproc, "pdf_page_count", lambda p, **kw: len(page_words))
 
 
-def test_heavy_real_pdf_page_split(monkeypatch, tmp_path):
+def _reassemble_in_jvm(spark, page_out, cfg):
+    """Page rows → ``pipeline._jvm_reassemble`` over a Spark frame → pandas."""
+    cols = [f.name for f in PAGE_TEXT_SCHEMA.fields]
+    df = spark.createDataFrame(page_out[cols], PAGE_TEXT_SCHEMA)
+    return pipeline._jvm_reassemble(df, cfg).toPandas()
+
+
+def test_heavy_real_pdf_page_split(spark, monkeypatch, tmp_path):
     """VERDICT r2 #3 done-criterion: a multi-page real %PDF heavy doc
     produces per-page rows under ocr_strategy='subprocess' (one slim
     staged-path row per page — no payload bytes in the shuffle), each page
@@ -462,7 +471,7 @@ def test_heavy_real_pdf_page_split(monkeypatch, tmp_path):
     assert set(page_out["status"]) == {"ok"}
     assert sorted(page_out["page_text"]) == sorted(" ".join(w) for w in words)
 
-    reassembled = pipeline._make_reassemble(cfg)(page_out)
+    reassembled = _reassemble_in_jvm(spark, page_out, cfg)
     whole_pages, whole_status = subproc.extract_doc_subprocess(PDF)
     assert whole_status == "ok"
     assert reassembled["extracted_text"].iloc[0] == "\n".join(whole_pages)
@@ -471,7 +480,7 @@ def test_heavy_real_pdf_page_split(monkeypatch, tmp_path):
     assert int(reassembled["n_pages"].iloc[0]) == 3
 
 
-def test_heavy_real_pdf_page_split_ocr_failure_statuses(monkeypatch, tmp_path):
+def test_heavy_real_pdf_page_split_ocr_failure_statuses(spark, monkeypatch, tmp_path):
     words = [["one"], ["two"]]
     _fake_page_range_ocr_stack(monkeypatch, words)
     cfg = replace(
@@ -495,7 +504,7 @@ def test_heavy_real_pdf_page_split_ocr_failure_statuses(monkeypatch, tmp_path):
     out = pipeline._page_text_rows(pages, cfg)
     assert set(out["status"]) == {"decode_error"}
     # doc-level parity: a failed page fails the doc like the light path
-    doc = pipeline._make_reassemble(cfg)(out)
+    doc = _reassemble_in_jvm(spark, out, cfg)
     assert doc["status"].iloc[0] == "decode_error"
     assert doc["extracted_text"].iloc[0] == "" and int(doc["n_pages"].iloc[0]) == 0
 
