@@ -34,7 +34,6 @@ class ExtractConfig:
     default_route: str = DEFAULT_ROUTE
     use_filename: bool = True  # the reference's -n flag (pypdfocr.py:169-170)
     heavy_payload_bytes: int = HEAVY_PAYLOAD_BYTES
-    page_partitions: int | None = None  # None → defaultParallelism
     # OCR kernel strategy: 'auto' resolves driver-side (envcheck) to
     # 'subprocess' when new-enough tesseract + gs exist on the executors'
     # image, else 'builtin' (the deterministic synthetic codec). Mirrors

@@ -72,16 +72,6 @@ def natural_keys(text: str) -> list:
     return [_atoi(c) for c in re.split(r"(\d+)", text)]
 
 
-def get_font_spec(title: str) -> tuple[str, int]:
-    """Font name/size from a title attr; absent → ('', 8)
-    (ref: pypdfocr/pypdfocr_pdf.py:357-364)."""
-    m = REGEX_FONTSPEC.search(title)
-    if not m:
-        return ("", 8)
-    fontname, fontsize = m.groups()
-    return (fontname, _atoi(fontsize))
-
-
 def _find_body(root: Element) -> Element:
     body = None
     for child in root:

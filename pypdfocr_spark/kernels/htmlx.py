@@ -64,77 +64,3 @@ def strip_boilerplate(html: str) -> str:
     # source markup — collapse to single spaces
     lines = [_WS.sub(" ", ln).strip() for ln in text.split("\x00")]
     return "\n".join(ln for ln in lines if ln)
-
-
-class _LinkDensity(HTMLParser):
-    """Per-block (anchor_chars, total_chars) accounting for the
-    link-density heuristic. Blocks are the same _BLOCK boundaries the
-    main extractor uses; text inside _SKIP_SUBTREE never counts."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._skip_depth = 0
-        self._anchor_depth = 0
-        self.blocks: list[tuple[str, int, int]] = []  # (text, anchor, total)
-        self._chunks: list[str] = []
-        self._anchor = 0
-        self._total = 0
-
-    def _flush(self) -> None:
-        text = _WS.sub(" ", "".join(self._chunks)).strip()
-        if self._total:
-            self.blocks.append((text, self._anchor, self._total))
-        self._chunks, self._anchor, self._total = [], 0, 0
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_SUBTREE:
-            self._skip_depth += 1
-        elif tag == "a":
-            self._anchor_depth += 1
-        elif tag in _BLOCK:
-            self._flush()
-
-    def handle_endtag(self, tag):
-        if tag in _SKIP_SUBTREE and self._skip_depth:
-            self._skip_depth -= 1
-        elif tag == "a" and self._anchor_depth:
-            self._anchor_depth -= 1
-        elif tag in _BLOCK:
-            self._flush()
-
-    def handle_data(self, data):
-        if self._skip_depth or not data:
-            return
-        self._chunks.append(data)
-        n = len(data.strip())
-        self._total += n
-        if self._anchor_depth:
-            self._anchor += n
-
-    def close(self):
-        super().close()
-        self._flush()
-
-
-def strip_boilerplate_dom(html: str, max_link_density: float = 0.5) -> str:
-    """Main-content extraction with the classic link-density DOM heuristic
-    on top of the tag filter (north-rule: "DOM heuristics"; the
-    boilerpipe/Readability family's core signal): a text block whose
-    characters are mostly anchor text is navigation/related-links chrome,
-    not content — drop blocks with anchor_chars/total_chars >
-    ``max_link_density``. Tag-level filtering alone misses link farms
-    living in plain ``<div>``s; this catches them without a class/id
-    blocklist. Opt-in: :func:`strip_boilerplate` stays the pipeline
-    default (its byte-level contract is oracle-pinned)."""
-    parser = _LinkDensity()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        return ""
-    kept = [
-        text
-        for text, anchor, total in parser.blocks
-        if text and (anchor / total) <= max_link_density
-    ]
-    return "\n".join(kept)

@@ -6,15 +6,23 @@ Logical plan::
       → mapInPandas(build_corpus)                   # F1 rows (url, ts, html, text, lang)
       → where(NOT url endswith _ocr.pdf/_test.pdf)  # S3 source filter, JVM-side
       ├─ light docs (payload ≤ threshold):
-      │    mapInPandas(extract_doc)                 # whole doc in one task, NO shuffle
+      │    mapInPandas(light kernel)                # whole doc in one task, NO shuffle
       └─ heavy docs (payload > threshold):          # the skew tail
            mapInPandas(explode_pages)               # doc → per-page rows
            → repartition(K, xxhash64(url, page_no)) # salt: spread one doc's pages
-           → mapInPandas(extract_page)              # per-page OCR+parse+norm+route-match
+           → mapInPandas(page kernel)               # per-page OCR+parse+norm+route-match
            → groupBy(url).agg(...)                  # JVM reassembly: collect_list
                                                     #   + array_sort + array_join +
                                                     #   ordered route reduction
       → unionByName
+
+One plan serves both extractions (``_extract_plan``); only the two
+kernels, each with its output schema, differ:
+
+* ``extract`` (text columns): ``_extract_rows`` / ``_page_text_rows``;
+* ``spans.extract_spans`` (text columns + the nested ``spans`` column):
+  ``spans._doc_rows_with_spans`` / ``spans._page_span_rows``, whose page
+  rows also carry each page's parsed ``lines``.
 
 Why this shape at 100 TB:
 
@@ -25,8 +33,9 @@ Why this shape at 100 TB:
   AQE's inability to split a single row — is exploded to page granularity
   *before* the expensive stage and hash-spread across the cluster
   (SURVEY §4: salt *pages*, AQE can't split a row).
-* The reassembly shuffle only carries (url, page_no, page_text) — the
-  extracted strings, not the raster payloads.
+* The reassembly shuffle only carries the per-page results (text, norm,
+  route match, and for spans the parsed lines) — never the raster
+  payloads.
 * All Python work is Arrow-batched ``mapInPandas``; per-batch failure
   capture keeps data errors out of task retries
   (graceful degradation, ref: pypdfocr/pypdfocr_pdf.py:276-281).
@@ -387,11 +396,16 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
       joining newline itself normalizes to a space, so this equals
       ``normalize_page_text(text)`` — the S6 contract);
     * route = first page (by page_no) with a match → its folder, else
-      filename fallback (when enabled), else the default.
+      filename fallback (when enabled), else the default;
+    * when the page rows carry parsed ``lines`` (``spans.extract_spans``),
+      ``spans`` = ``struct(page_no, lines)`` of each page with
+      ``page_no < n_pages`` in page order, and ``[]`` for failed docs.
     """
-    struct_sorted = F.array_sort(
-        F.collect_list(F.struct("page_no", "n_pages", "page_text", "norm_text", "route_match"))
-    )
+    fields = ["page_no", "n_pages", "page_text", "norm_text", "route_match"]
+    with_lines = "lines" in pages_df.columns
+    if with_lines:
+        fields.append("lines")
+    struct_sorted = F.array_sort(F.collect_list(F.struct(*fields)))
     g = pages_df.groupBy("url").agg(
         struct_sorted.alias("_p"),
         F.min(
@@ -410,6 +424,14 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     if cfg.use_filename:
         route = F.coalesce(route, _filename_route_expr(F.col("url"), cfg.targets))
     route = F.coalesce(route, F.lit(cfg.default_route).cast("string"))
+    spans = []
+    if with_lines:
+        spans = [
+            F.transform(
+                F.filter("_p", lambda x: ok & (x["page_no"] < x["n_pages"])),
+                lambda x: F.struct(x["page_no"].alias("page_no"), x["lines"].alias("lines")),
+            ).alias("spans")
+        ]
     return g.select(
         F.col("url"),
         F.col("warc_ts"),
@@ -423,6 +445,7 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
         F.when(ok, F.lit("ok")).otherwise(F.col("_bad")["status"]).alias("status"),
         F.col("byte_count"),
         F.col("wall_ms"),
+        *spans,
     )
 
 
@@ -437,21 +460,9 @@ def source_filter(corpus_df: DataFrame) -> DataFrame:
     return corpus_df.where(cond)
 
 
-def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
-    """Full extraction: corpus rows → EXTRACTED_SCHEMA rows (module doc)."""
-    cfg = cfg or ExtractConfig()
-    # resolve ONCE on the driver so executors never probe PATH; the
-    # resolved value ships inside the broadcast config closure. Always
-    # routed through resolve_ocr_strategy so a typo'd strategy string
-    # raises here instead of silently running the builtin codec.
-    from dataclasses import replace
-
-    from . import envcheck
-
-    cfg = replace(cfg, ocr_strategy=envcheck.resolve_ocr_strategy(cfg.ocr_strategy))
-    spark = corpus_df.sparkSession
+def _split(corpus_df: DataFrame, cfg: ExtractConfig) -> tuple[DataFrame, DataFrame]:
+    """Source filter, then the (light, heavy) size split."""
     src = source_filter(corpus_df)
-
     # prefer the stats-bearing n_bytes column: `n_bytes > T` prunes at the
     # parquet/Iceberg row-group level (min/max stats), so each branch's
     # scan skips the other branch's row groups. A coalesce() wrapper
@@ -466,31 +477,63 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
         is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
         light = src.where(~is_heavy)
         heavy = src.where(is_heavy)
+    return light, heavy
 
-    light_out = light.mapInPandas(
-        lambda it: (_extract_rows(pdf, cfg) for pdf in it), EXTRACTED_SCHEMA
-    )
 
+def _salted_pages(heavy: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """Heavy docs → PAGE_SCHEMA rows, hash-spread by (url, page_no)."""
     # After the salt, page rows are uniform-cost (one page each), so the
     # right partition count is the cluster's parallelism — not a multiple:
     # every extra partition is one more Python-worker dispatch, and the
     # r4 sweep measured 4× parallelism costing ~2× the whole stage in
     # tiny-task overhead (32→128 partitions: 1.04s→2.7s on 7.9k pages).
-    # Page-count skew is already broken by the per-page salt itself;
-    # clusters with heterogeneous page cost can raise cfg.page_partitions.
-    k = cfg.page_partitions or spark.sparkContext.defaultParallelism
-    heavy_out = (
+    # Page-count skew is already broken by the per-page salt itself.
+    k = heavy.sparkSession.sparkContext.defaultParallelism
+    return (
         # Explode IN PLACE at the scan — no pre-spread shuffle. The
         # explode is a byte split (no parse, ~2 ms/doc), so input-file
-        # clustering of heavy docs costs microseconds per task, while the
-        # pre-repartition it replaced shuffled every heavy document's
-        # RAW payload a second time (the salt exchange right after this
-        # ships the same bytes page-split — once is enough).
+        # clustering of heavy docs costs microseconds per task, while a
+        # pre-repartition would ship every heavy document's RAW payload
+        # a second time (the salt exchange right after this ships the
+        # same bytes page-split — once is enough).
         heavy.mapInPandas(lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA)
         .repartition(k, F.xxhash64("url", "page_no"))
-        .mapInPandas(lambda it: (_page_text_rows(pdf, cfg) for pdf in it), PAGE_TEXT_SCHEMA)
+    )
+
+
+def _extract_plan(
+    corpus_df: DataFrame,
+    cfg: ExtractConfig,
+    light_rows, light_schema,
+    page_rows, page_schema,
+) -> DataFrame:
+    """The one extraction plan (module doc): ``light_rows`` maps light
+    docs to ``light_schema`` rows; ``page_rows`` maps salted page rows to
+    ``page_schema`` (PAGE_TEXT_SCHEMA, optionally plus ``lines``), which
+    ``_jvm_reassemble`` folds back into documents."""
+    light, heavy = _split(corpus_df, cfg)
+    light_out = light.mapInPandas(lambda it: (light_rows(pdf, cfg) for pdf in it), light_schema)
+    heavy_out = _salted_pages(heavy, cfg).mapInPandas(
+        lambda it: (page_rows(pdf, cfg) for pdf in it), page_schema
     )
     return light_out.unionByName(_jvm_reassemble(heavy_out, cfg))
+
+
+def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
+    """Full extraction: corpus rows → EXTRACTED_SCHEMA rows (module doc)."""
+    cfg = cfg or ExtractConfig()
+    # resolve ONCE on the driver so executors never probe PATH; the
+    # resolved value ships inside the broadcast config closure. Always
+    # routed through resolve_ocr_strategy so a typo'd strategy string
+    # raises here instead of silently running the builtin codec.
+    from dataclasses import replace
+
+    from . import envcheck
+
+    cfg = replace(cfg, ocr_strategy=envcheck.resolve_ocr_strategy(cfg.ocr_strategy))
+    return _extract_plan(
+        corpus_df, cfg, _extract_rows, EXTRACTED_SCHEMA, _page_text_rows, PAGE_TEXT_SCHEMA
+    )
 
 
 def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -51,16 +50,6 @@ LINE_SCHEMA = StructType(
         StructField("textangle", IntegerType(), True),
         StructField("baseline", ArrayType(DoubleType()), True),
         StructField("words", ArrayType(WORD_SCHEMA), True),
-    ]
-)
-
-# Geometry struct (SURVEY §1.1 #3; ref: pypdfocr/pypdfocr_gs.py:117-166).
-GEOMETRY_SCHEMA = StructType(
-    [
-        StructField("output_dpi", IntegerType(), True),
-        StructField("greyscale", BooleanType(), True),
-        StructField("width_pt", DoubleType(), True),
-        StructField("height_pt", DoubleType(), True),
     ]
 )
 
@@ -111,7 +100,7 @@ PAGE_TEXT_SCHEMA = StructType(
         # per-page S6 normalization + first-matching route folder, computed
         # in the same Python pass as the page text so document reassembly
         # can stay entirely JVM-side (collect_list + array_sort + array_join
-        # — no applyInPandas stage, no second Arrow round trip of the text)
+        # — no grouped Python stage, no second Arrow round trip of the text)
         StructField("norm_text", StringType(), True),
         StructField("route_match", StringType(), True),
         StructField("status", StringType(), False),

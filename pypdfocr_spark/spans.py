@@ -3,23 +3,21 @@
 baseline and positioned words (render-mode-3 "text layer" as data,
 SURVEY §1.1 #5; ref: pypdfocr/pypdfocr_pdf.py:269-351).
 
-Same two-path plan shape as pipeline.extract (light intra-row / heavy
-per-page exploded), with the parsed spans carried as data:
-
-* light docs: nested structs straight through Arrow;
-* heavy docs: spans JSON per page through the salted shuffle, decoded at
-  reassembly (the shuffle carries text + spans only, never payloads).
+``extract_spans`` runs ``pipeline``'s one extraction plan (source
+filter, light/heavy split, in-place explode, salt, JVM reassembly) with
+the two span kernels below. Light docs carry their nested span structs
+straight through Arrow; heavy pages carry their parsed ``lines`` as a
+nested column through the salted shuffle, and
+``pipeline._jvm_reassemble`` folds them into ``spans`` — the shuffle
+carries per-page results only, never payloads.
 """
 
 from __future__ import annotations
 
-import json
 import time
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -31,9 +29,9 @@ from . import corpus as ck
 from .config import ExtractConfig
 from .kernels import codec, hocr
 from .kernels.normalize import normalize_page_text
-from .kernels.route import route_document
-from .pipeline import _explode_rows, source_filter
-from .schema import EXTRACTED_SCHEMA, LINE_SCHEMA, PAGE_SCHEMA
+from .kernels.route import first_matching_folder, route_document
+from .pipeline import _extract_plan
+from .schema import EXTRACTED_SCHEMA, LINE_SCHEMA, PAGE_TEXT_SCHEMA
 
 PAGE_SPANS_FIELD = StructField(
     "spans",
@@ -48,6 +46,10 @@ PAGE_SPANS_FIELD = StructField(
     True,
 )
 EXTRACTED_SPANS_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [PAGE_SPANS_FIELD])
+# heavy-path page rows: PAGE_TEXT_SCHEMA plus the page's parsed lines
+PAGE_SPANS_SCHEMA = StructType(
+    PAGE_TEXT_SCHEMA.fields + [StructField("lines", ArrayType(LINE_SCHEMA), True)]
+)
 
 
 def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
@@ -79,89 +81,52 @@ def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return res
 
 
-def _page_rows_with_spans(pdf: pd.DataFrame) -> pd.DataFrame:
+def _page_span_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+    """Per-page span kernel: PAGE_SPANS_SCHEMA rows — ``_page_text_rows``'s
+    columns (text from the parsed lines) plus the page's ``lines``."""
     t0 = time.monotonic()
     out = []
     for url, ts, lang, pno, n, height, dpi, pjson, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
         pdf["height_pt"], pdf["output_dpi"], pdf["page_json"], pdf["byte_count"],
     ):
-        status = "ok"
+        status, text, lines = "ok", "", []
         try:
-            page = json.loads(pjson)
-            if not isinstance(page, dict):
-                page = None
+            page = codec.loads_json(pjson)
         except Exception:
             page = None
-        if page is None:
-            text, spans_json, status = "", "[]", "decode_error"
+        if not isinstance(page, dict):
+            status = "decode_error"
         else:
             try:
                 if "unsupported" in page:
-                    lines, status = [], "unsupported"
+                    status = "unsupported"
                 elif "empty" in page:
-                    lines = []
+                    pass
                 elif "raw" in page:
-                    spans_by_page, raw_status = ck.extract_doc_spans(
-                        page["raw"].encode("utf-8")
-                    )
+                    spans_by_page, status = ck.extract_doc_spans(page["raw"].encode("utf-8"))
                     lines = spans_by_page[0] if spans_by_page else []
-                    status = raw_status
                 else:
                     raster = codec.rasterize([page], int(dpi))
                     hocr_doc = hocr.emit_hocr(raster)
                     lines = hocr.parse_hocr_page(hocr_doc, 1, float(height), int(dpi))
                 text = hocr.page_text_from_spans(lines)
-                spans_json = json.dumps(lines, separators=(",", ":"))
-            except Exception as exc:
-                text, spans_json, status = "", "[]", f"error:{type(exc).__name__}"
-        out.append((url, ts, lang, int(pno), int(n), int(nbytes), text, spans_json, status))
-    res = pd.DataFrame(
-        out,
-        columns=["url", "warc_ts", "lang", "page_no", "n_pages", "byte_count",
-                 "page_text", "spans_json", "status"],
-    )
+            except Exception as exc:  # data error → row, never task failure
+                text, lines, status = "", [], f"error:{type(exc).__name__}"
+        norm = normalize_page_text(text)
+        out.append(
+            (url, ts, lang, int(pno), int(n), text, norm,
+             first_matching_folder(norm, cfg.targets), status, int(nbytes), 0.0, lines)
+        )
+    res = pd.DataFrame(out, columns=[f.name for f in PAGE_SPANS_SCHEMA.fields])
     res["wall_ms"] = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
     return res
 
 
-def _make_reassemble_spans(cfg: ExtractConfig):
-    cols = [f.name for f in EXTRACTED_SPANS_SCHEMA.fields]
-
-    def reassemble(pdf):
-        pdf = pdf.sort_values("page_no")
-        url = pdf["url"].iloc[0]
-        status = next((s for s in pdf["status"] if s != "ok"), "ok")
-        if status == "ok":
-            n_pages = int(pdf["n_pages"].iloc[0])
-            page_texts = (
-                ["" if t is None else t for t in pdf["page_text"]] if n_pages else []
-            )
-            text = "\n".join(page_texts)
-            spans = [
-                {"page_no": int(p), "lines": json.loads(sj) if sj else []}
-                for p, sj in zip(pdf["page_no"], pdf["spans_json"])
-            ][:n_pages]
-        else:
-            # light-path parity: a failed doc is (text="", n_pages=0, [])
-            n_pages, page_texts, text, spans = 0, [], "", []
-        norm_pages = [normalize_page_text(p) for p in page_texts]
-        route = route_document(
-            norm_pages, url, cfg.targets,
-            use_filename=cfg.use_filename, default=cfg.default_route,
-        )
-        return pd.DataFrame(
-            [(url, pdf["warc_ts"].iloc[0], pdf["lang"].iloc[0], text,
-              normalize_page_text(text), route, n_pages, status,
-              int(pdf["byte_count"].iloc[0]), float(pdf["wall_ms"].sum()), spans)],
-            columns=cols,
-        )
-
-    return reassemble
-
-
 def extract_spans(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
-    """Extraction with the ``spans`` nested column populated (both paths).
+    """Extraction with the ``spans`` nested column populated (both paths):
+    EXTRACTED_SPANS_SCHEMA rows from ``pipeline._extract_plan``, the same
+    plan ``pipeline.extract`` runs, with the span kernels.
 
     Always runs the builtin codec chain: the span tree comes from the
     engine's own hOCR emit/parse round-trip. (A subprocess-backed spans
@@ -171,37 +136,8 @@ def extract_spans(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> Dat
     from dataclasses import replace
 
     cfg = replace(cfg or ExtractConfig(), ocr_strategy="builtin")
-    spark = corpus_df.sparkSession
-    src = source_filter(corpus_df)
-
-    # bare-column comparison so the size filter pushes to the scan
-    # (see pipeline.extract)
-    if "n_bytes" in corpus_df.columns:
-        light = src.where(
-            F.col("n_bytes").isNull() | (F.col("n_bytes") <= cfg.heavy_payload_bytes)
-        )
-        heavy = src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
-    else:
-        is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
-        light = src.where(~is_heavy)
-        heavy = src.where(is_heavy)
-
-    light_out = light.mapInPandas(
-        lambda it: (_doc_rows_with_spans(pdf, cfg) for pdf in it), EXTRACTED_SPANS_SCHEMA
+    return _extract_plan(
+        corpus_df, cfg,
+        _doc_rows_with_spans, EXTRACTED_SPANS_SCHEMA,
+        _page_span_rows, PAGE_SPANS_SCHEMA,
     )
-
-    k = cfg.page_partitions or spark.sparkContext.defaultParallelism * 4
-    page_text_spans_schema = (
-        "url string, warc_ts timestamp, lang string, page_no int, n_pages int, "
-        "byte_count long, page_text string, spans_json string, status string, "
-        "wall_ms double"
-    )
-    heavy_out = (
-        heavy.repartition(spark.sparkContext.defaultParallelism, F.xxhash64("url"))
-        .mapInPandas(lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA)
-        .repartition(k, F.xxhash64("url", "page_no"))
-        .mapInPandas(lambda it: (_page_rows_with_spans(pdf) for pdf in it), page_text_spans_schema)
-        .groupBy("url")
-        .applyInPandas(_make_reassemble_spans(cfg), EXTRACTED_SPANS_SCHEMA)
-    )
-    return light_out.unionByName(heavy_out)

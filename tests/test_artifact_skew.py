@@ -70,17 +70,13 @@ def test_with_artifacts_column(spark):
 
 def test_heavy_pages_spread_across_partitions(spark):
     """Skew evidence: a multi-hundred-page doc's pages land on many
-    partitions after the salt (north rule: explicit skew handling)."""
-    corpus = pipeline.build_corpus_df(spark, SF_SMOKE)
+    partitions after the salt (north rule: explicit skew handling) —
+    measured on the heavy page stage both extractions run."""
     cfg = ExtractConfig()
-    heavy = pipeline.source_filter(corpus).where(F.col("n_bytes") > cfg.heavy_payload_bytes)
-    k = spark.sparkContext.defaultParallelism * 4
-    pages = (
-        heavy.mapInPandas(
-            lambda it: (pipeline._explode_rows(p, cfg) for p in it), pipeline.PAGE_SCHEMA
-        )
-        .repartition(k, F.xxhash64("url", "page_no"))
-        .select("url", F.spark_partition_id().alias("pid"))
+    _, heavy = pipeline._split(pipeline.build_corpus_df(spark, SF_SMOKE), cfg)
+    k = spark.sparkContext.defaultParallelism
+    pages = pipeline._salted_pages(heavy, cfg).select(
+        "url", F.spark_partition_id().alias("pid")
     )
     per_doc = (
         pages.groupBy("url")

@@ -209,6 +209,12 @@ def test_strip_boilerplate():
         "<script>evil()</script><footer>foot</footer></body></html>"
     )
     assert htmlx.strip_boilerplate(html) == "real content here\nsecond para"
+    # tag-level filtering keeps a link farm living in a plain <div>
+    farm = (
+        "<div><a href='/a'>Related story one</a> <a href='/b'>Another story"
+        "</a></div><p>Closing thought.</p>"
+    )
+    assert htmlx.strip_boilerplate(farm) == "Related story one Another story\nClosing thought."
 
 
 def test_strip_boilerplate_entities_and_whitespace():
@@ -320,38 +326,6 @@ def test_oracle_extract_excludes_and_routes():
     by_url = {r["url"]: r for r in out}
     assert [r["route"] for r in out] == ["sparky", "default", "sparky"]
     assert all(r["status"] == "ok" for r in out)
-
-
-def test_strip_boilerplate_dom_link_density():
-    """Link-farm blocks (mostly anchor text) drop even in plain divs the
-    tag filter can't see; content blocks with an inline link survive."""
-    html = (
-        "<html><body>"
-        "<div>This is a long real paragraph with <a href='/x'>one link</a>"
-        " inside plenty of ordinary prose text around it.</div>"
-        "<div><a href='/a'>Related story one</a> <a href='/b'>Another story"
-        "</a> <a href='/c'>More links here</a></div>"
-        "<p>Closing thought.</p>"
-        "</body></html>"
-    )
-    out = htmlx.strip_boilerplate_dom(html)
-    assert "real paragraph" in out and "Closing thought." in out
-    assert "Related story" not in out
-    # the plain extractor keeps the link farm — that's the gap the
-    # heuristic closes
-    assert "Related story" in htmlx.strip_boilerplate(html)
-
-
-def test_strip_boilerplate_dom_threshold_and_garbage():
-    html = "<div><a href='/'>half link</a> and equal text.</div>"
-    # anchor chars ≈ 9/29 < 0.5 → kept; with a tiny threshold → dropped
-    assert "half link" in htmlx.strip_boilerplate_dom(html)
-    assert htmlx.strip_boilerplate_dom(html, max_link_density=0.1) == ""
-    # garbage input: html.parser is tolerant — must not raise, and the
-    # non-anchor text simply survives as one block
-    assert isinstance(htmlx.strip_boilerplate_dom("\x00<not html"), str)
-    # skip subtrees still never count
-    assert htmlx.strip_boilerplate_dom("<nav><a href='/'>x</a></nav><p>body text</p>") == "body text"
 
 
 def test_page_texts_from_hocr_matches_full_parse():

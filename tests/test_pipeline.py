@@ -12,19 +12,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from pypdfocr_spark import corpus as ck
-from pypdfocr_spark import lineage, pipeline
+from pypdfocr_spark import lineage, pipeline, spans
 from pypdfocr_spark.config import DEFAULT_ROUTE, DEFAULT_TARGETS, ExtractConfig
 
 from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
-def oracle_rows():
+def corpus_rows():
     tbl = pq.read_table(f"{SF_SMOKE}/documents.parquet").to_pylist()
-    rows = [
+    return [
         ck.build_corpus_row(r["doc_id"], r["text"], r["lang"], r["source"]) for r in tbl
     ]
-    return ck.oracle_extract(rows, DEFAULT_TARGETS, DEFAULT_ROUTE)
+
+
+@pytest.fixture(scope="module")
+def oracle_rows(corpus_rows):
+    return ck.oracle_extract(corpus_rows, DEFAULT_TARGETS, DEFAULT_ROUTE)
 
 
 @pytest.fixture(scope="module")
@@ -178,11 +182,16 @@ def test_extract_rows_error_rows_do_not_leak(monkeypatch):
         assert "spark window" in out["extracted_norm"][i]
 
 
-def test_jvm_reassembly_parity(spark, oracle_rows):
-    """The JVM heavy-path reassembly must be row-identical to
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
+def test_jvm_reassembly_parity(spark, corpus_rows, oracle_rows, extract_fn):
+    """Both extractions run the one plan, so both must be row-identical to
     ``corpus.oracle_extract`` — over the real corpus (heavy tail
     included) AND the heavy failure fixtures (decode_error, unsupported,
-    mixed-page statuses, heavy HTML), on all six oracle columns."""
+    mixed-page statuses, heavy HTML), on all six oracle columns.
+    ``extract_spans``'s ``spans`` column must equal
+    ``corpus.extract_doc_spans`` page by page for ok docs, and be empty
+    for failed ones, on both paths."""
     import datetime
 
     from pypdfocr_spark.kernels import codec
@@ -218,12 +227,47 @@ def test_jvm_reassembly_parity(spark, oracle_rows):
         [{"url": u, "html": p} for (u, _, p, _, _) in fixtures],
         cfg.targets, cfg.default_route,
     )
-    got = sorted(map(tuple, pipeline.extract(corpus_df, cfg).select(cols).collect()))
+    out = extract_fn(corpus_df, cfg).collect()
+    got = sorted(tuple(r[c] for c in cols) for r in out)
     assert got == sorted(tuple(o[c] for c in cols) for o in want)
     assert len(got) == len(oracle_rows) + len(fixtures)
     by_url = {r[0]: r for r in got}
     assert by_url["https://a.example/late-route.pdf"][cols.index("route")] == "spark_docs"
     assert by_url["https://a.example/table-report.pdf"][cols.index("route")] == "storage"
+    if extract_fn is spans.extract_spans:
+        payloads = {r["url"]: r["html"] for r in corpus_rows}
+        payloads.update((u, p) for (u, _, p, _, _) in fixtures)
+        heavy = 0
+        for r in out:
+            pages, status = ck.extract_doc_spans(payloads[r["url"]])
+            want_spans = (
+                [{"page_no": i, "lines": lines} for i, lines in enumerate(pages)]
+                if r["status"] == "ok" else []
+            )
+            assert [p.asDict(recursive=True) for p in r["spans"]] == want_spans, r["url"]
+            heavy += r["n_pages"] > 50
+        assert heavy >= 5
+
+
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
+def test_extraction_plan_shape(spark, tmp_path, extract_fn):
+    """Python stages and exchanges per plan are tracked figures: both
+    extractions run the one plan — three mapInPandas stages (light,
+    explode, page), no grouped Python stage, and two exchanges (the salt
+    and the JVM reassembly's groupBy)."""
+    import re
+
+    pipeline.build_corpus_df(spark, SF_SMOKE).write.parquet(str(tmp_path / "c"))
+    corpus = spark.read.parquet(str(tmp_path / "c"))
+    plan = extract_fn(corpus, ExtractConfig())._jdf.queryExecution().executedPlan().toString()
+
+    def nodes(name):
+        return len(re.findall(rf"^[\s:+-]*{name}\b", plan, re.M))
+
+    assert (nodes("MapInPandas"), nodes("FlatMapGroupsInPandas"), nodes("Exchange")) == (
+        3, 0, 2
+    ), plan
 
 
 def test_heavy_path_failures_reach_status_and_lineage(spark, tmp_path):
