@@ -12,9 +12,10 @@ watcher's processed-set sentinel ``-1``
   the partition id — a map-side-combinable agg).
 * ``commit`` — append results, then lineage, to two tables. The
   extraction runs once, in the first append; the lineage rollup reads
-  back exactly the data files that append added (explicit versions, not
-  a re-run of a plan the append has changed) and takes each row's
-  partition from its file's name. On a real cluster the appends are
+  back exactly the data files that append added through
+  ``append_read_back``, which ``webtext.crawl_commit`` shares (explicit
+  versions, not a re-run of a plan the append has changed), and takes
+  each row's partition from its file's name. On a real cluster the appends are
   Iceberg ``writeTo(...).append()`` snapshots; parquet + directory
   convention stands in when no Iceberg runtime jar is present.
   Two assumptions: one committer per output directory (the parquet
@@ -97,16 +98,38 @@ _FILE_PARTITION = r"^(?:part-)?(\d+)-"
 _ROLLUP_COLUMNS = ("url", "status", "byte_count", "wall_ms")
 
 
+def append_read_back(
+    df: DataFrame, target: str, columns: tuple[str, ...]
+) -> DataFrame | None:
+    """Append ``df`` to ``target``, then read back exactly the data files
+    that append added (``catalog.append`` returns them), with only
+    ``columns``. None when the append added no file (reading no paths
+    raises).
+
+    The plan behind ``df`` runs once, in the append. A rollup over the
+    returned frame reads committed files; it never re-runs a plan that
+    the append may have changed.
+    """
+    from . import catalog
+
+    added = catalog.append(df, target)
+    if not added:
+        return None
+    narrow = StructType([f for f in df.schema if f.name in columns])
+    return df.sparkSession.read.schema(narrow).parquet(*added)
+
+
 def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dict:
     """Append extraction output, then its lineage; returns commit stats.
 
     The extraction runs once, in the append to ``<out_dir>/extracted``.
     The lineage rollup then reads back only the data files that append
-    added (``catalog.append`` returns them), and only the narrow columns
-    it aggregates. It never re-runs the extraction plan: a resume plan
-    scans ``<out_dir>/extracted`` through ``resume_filter``'s anti-join,
-    so re-running it after the append would drop every url just written.
-    Each row's partition is the write task's index in its file's name.
+    added, and only the narrow columns it aggregates
+    (``append_read_back``). It never re-runs the extraction plan: a
+    resume plan scans ``<out_dir>/extracted`` through ``resume_filter``'s
+    anti-join, so re-running it after the append would drop every url
+    just written. Each row's partition is the write task's index in its
+    file's name.
 
     Assumes one committer per ``out_dir``, as resume does: the parquet
     backend finds the added files by listing the directory before and
@@ -119,11 +142,9 @@ def commit(extracted: DataFrame, out_dir: str, run_id: str | None = None) -> dic
 
     run_id = run_id or new_run_id()
     t0 = time.monotonic()
-    added = catalog.append(extracted, f"{out_dir}/extracted")
+    written = append_read_back(extracted, f"{out_dir}/extracted", _ROLLUP_COLUMNS)
     wall_ms = int((time.monotonic() - t0) * 1000)
-    if added:  # reading no paths raises; an append that adds no file has no lineage
-        narrow = StructType([f for f in extracted.schema if f.name in _ROLLUP_COLUMNS])
-        written = extracted.sparkSession.read.schema(narrow).parquet(*added)
+    if written is not None:  # an append that adds no file has no lineage
         part = F.regexp_extract("_metadata.file_name", _FILE_PARTITION, 1)
         catalog.append(
             lineage_rows(written, run_id, part, wall_ms),

@@ -2996,22 +2996,18 @@ def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
 _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _gif_walk(data: bytes, first_only: bool = False):
-    """Full block walk: header + every extension and image descriptor →
-    (screen_w, screen_h, gct, bg_index, frames). Each frame dict carries
-    its sub-rectangle, palette, interlace flag, raw LZW bytes, and the
-    Graphic Control Extension (disposal / transparency / delay) that
-    preceded it. ``first_only`` stops after the first image — the cheap
-    still-decode path."""
+def _gif_walk(data: bytes) -> dict:
+    """Block walk from the header to the first image descriptor → that
+    image's dict: its size, palette (local, else global), interlace
+    flag, LZW minimum code size and raw LZW bytes. Extensions before it
+    are skipped structurally."""
     import struct
 
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError(f"not a GIF payload: {data[:6]!r}")
     if len(data) < 13:
         raise ValueError("truncated GIF logical screen descriptor")
-    screen_w, screen_h = struct.unpack_from("<HH", data, 6)
     packed = data[10]
-    bg_index = data[11]
     pos = 13
     gct = None
     if packed & 0x80:
@@ -3020,60 +3016,38 @@ def _gif_walk(data: bytes, first_only: bool = False):
             raise ValueError("truncated GIF global color table")
         gct = np.frombuffer(data[pos : pos + 3 * n], dtype="u1").reshape(n, 3)
         pos += 3 * n
-    frames = []
-    gce = None
-    while True:
+    while True:  # skip extensions up to the first image descriptor
         if pos >= len(data):
-            if frames:
-                break  # missing trailer: tolerate, like most readers
             raise ValueError("GIF ended without an image descriptor")
         block = data[pos]
         pos += 1
+        if block == 0x2C:
+            break
         if block == 0x3B:
-            if not frames:
-                raise ValueError("GIF trailer reached before any image data")
-            break
-        if block == 0x21:  # extension: label byte, then sub-blocks
-            if pos >= len(data):
-                raise ValueError("truncated GIF extension")
-            label = data[pos]
-            body, pos = _gif_subblocks(data, pos + 1)
-            if label == 0xF9 and len(body) >= 4:
-                gpacked, delay = body[0], struct.unpack_from("<H", body, 1)[0]
-                gce = {
-                    "disposal": (gpacked >> 2) & 7,
-                    "transparent": body[3] if gpacked & 1 else None,
-                    "delay_cs": delay,
-                }
-            continue
-        if block != 0x2C:
+            raise ValueError("GIF trailer reached before any image data")
+        if block != 0x21:
             raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            if pos + 3 * n > len(data):
-                raise ValueError("truncated GIF local color table")
-            pal = np.frombuffer(data[pos : pos + 3 * n], dtype="u1").reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image has neither global nor local color table")
-        if w == 0 or h == 0:
-            raise ValueError(f"invalid GIF image dimensions {w}x{h}")
-        if pos >= len(data):
-            raise ValueError("truncated GIF image data")
-        mcs = data[pos]
-        lzw, pos = _gif_subblocks(data, pos + 1)
-        frames.append(
-            {"left": left, "top": top, "w": w, "h": h, "pal": pal,
-             "interlace": bool(ipacked & 0x40), "mcs": mcs, "lzw": lzw,
-             "gce": gce}
-        )
-        gce = None
-        if first_only:
-            break
-    return screen_w, screen_h, gct, bg_index, frames
+        if pos >= len(data):  # extension: label byte, then sub-blocks
+            raise ValueError("truncated GIF extension")
+        _, pos = _gif_subblocks(data, pos + 1)
+    _, _, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
+    pos += 9
+    pal = gct
+    if ipacked & 0x80:
+        n = 2 << (ipacked & 0x07)
+        if pos + 3 * n > len(data):
+            raise ValueError("truncated GIF local color table")
+        pal = np.frombuffer(data[pos : pos + 3 * n], dtype="u1").reshape(n, 3)
+        pos += 3 * n
+    if pal is None:
+        raise ValueError("GIF image has neither global nor local color table")
+    if w == 0 or h == 0:
+        raise ValueError(f"invalid GIF image dimensions {w}x{h}")
+    if pos >= len(data):
+        raise ValueError("truncated GIF image data")
+    lzw, _ = _gif_subblocks(data, pos + 1)
+    return {"w": w, "h": h, "pal": pal, "interlace": bool(ipacked & 0x40),
+            "mcs": data[pos], "lzw": lzw}
 
 
 def _gif_frame_indices(fr: dict) -> "np.ndarray":
@@ -3105,8 +3079,7 @@ def _decode_gif(payload: bytes) -> "np.ndarray":
     skipped structurally; transparency is ignored — the transparent
     index still has palette RGB, and feature extraction wants pixels,
     not compositing."""
-    _, _, _, _, frames = _gif_walk(bytes(payload), first_only=True)
-    fr = frames[0]
+    fr = _gif_walk(bytes(payload))
     rgb = fr["pal"][_gif_frame_indices(fr)]  # (h, w, 3)
     if bool((rgb[:, :, 0] == rgb[:, :, 1]).all() and (rgb[:, :, 1] == rgb[:, :, 2]).all()):
         return np.ascontiguousarray(rgb[:, :, 0])  # grayscale palette

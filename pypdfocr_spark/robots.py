@@ -163,7 +163,8 @@ def crawl_delay(rules: RobotsRules, agent: str) -> "float | None":
     return group.crawl_delay if group else None
 
 
-_PATH_RE = r"^[a-z][a-z0-9+.-]*://[^/]*(/.*)?$"
+# the scheme is case-insensitive (RFC 3986 §3.1): ``HTTPS://h/p`` has path ``/p``
+_PATH_RE = r"(?i)^[a-z][a-z0-9+.-]*://[^/]*(/.*)?$"
 
 
 def robots_filter(

@@ -83,16 +83,9 @@ def watch_warc(
 
     Two resume layers compose: checkpointed source offsets make each
     archive's delivery exactly-once across restarts, and
-    ``crawl_resume_filter``'s anti-join against the committed lineage
-    makes even a re-delivered or pre-existing archive a no-op — the
-    same belt-and-braces the batch path's interrupted-run e2e pins.
-    Caveat (ADVICE r5): ``crawl_commit`` appends the docs and THEN the
-    lineage row, non-atomically — a crash in that window followed by a
-    batch replay re-appends the batch's documents (the resume filter
-    sees no lineage row yet). Downstream exact dedup absorbs the
-    duplicates; a transactional sink (e.g. an Iceberg multi-table
-    transaction, wired the day the runtime jar is present) closes the
-    window outright.
+    ``crawl_resume_filter``'s anti-join against the committed docs
+    table makes even a re-delivered or pre-existing archive a no-op —
+    the same belt-and-braces the batch path's interrupted-run e2e pins.
     Parallelism stays the archive count (one task per archive, no
     shuffle anywhere in the batch function), so the streaming form
     scales exactly like the batch form."""

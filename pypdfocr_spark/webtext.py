@@ -1086,205 +1086,6 @@ def encode_warc(records: "list[dict]", gzip_members: bool = False) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# robots.txt (RFC 9309) — the crawl politeness gate
-# --------------------------------------------------------------------------
-#
-# A crawl pipeline needs two things from robots.txt: a per-host compiled
-# rule set (robots_rules_table — parse once per host, ship the compact
-# rules, never the raw text, through the join) and a URL-level verdict
-# (robots_filter). RFC 9309 semantics: group selection by longest
-# user-agent product-token match with '*' fallback; per-path decision by
-# longest-octets matching rule; allow wins length ties; '*' wildcards
-# and '$' end anchors in patterns; unmatched paths and missing/empty
-# robots.txt are allowed.
-
-
-def parse_robots(text: str, user_agent: str = "*") -> dict:
-    """Compile a robots.txt into the rule set that applies to
-    ``user_agent``: ``{"rules": [(pattern, allow), ...], "crawl_delay":
-    float|None, "sitemaps": [...]}``. Group selection per RFC 9309
-    §2.2.1: the group(s) whose User-agent token is the longest
-    case-insensitive match for our product token win; ``*`` groups are
-    the fallback. Unknown directives are ignored; a blank line does NOT
-    end a group (only a new User-agent line after rules does)."""
-    ua = user_agent.lower()
-    groups: "list[tuple[list[str], list[tuple[str, bool]], float | None]]" = []
-    sitemaps: "list[str]" = []
-    cur_agents: "list[str]" = []
-    cur_rules: "list[tuple[str, bool]]" = []
-    cur_delay: "float | None" = None
-    agents_open = False  # collecting consecutive User-agent lines
-
-    def flush():
-        nonlocal cur_agents, cur_rules, cur_delay
-        if cur_agents:
-            groups.append((cur_agents, cur_rules, cur_delay))
-        cur_agents, cur_rules, cur_delay = [], [], None
-
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, val = line.split(":", 1)
-        key = key.strip().lower()
-        val = val.strip()
-        if key == "user-agent":
-            if not agents_open:
-                flush()
-                agents_open = True
-            cur_agents.append(val.lower())
-        elif key in ("allow", "disallow"):
-            agents_open = False
-            if val:
-                cur_rules.append((val, key == "allow"))
-            # empty Disallow: allows everything — no rule needed
-        elif key == "crawl-delay":
-            agents_open = False
-            try:
-                cur_delay = float(val)
-            except ValueError:
-                pass
-        elif key == "sitemap":
-            sitemaps.append(val)
-    flush()
-
-    best_len = -1
-    rules: "list[tuple[str, bool]]" = []
-    delay = None
-    for agents, grules, gdelay in groups:
-        for a in agents:
-            if a == "*":
-                match_len = 0
-            elif a in ua or ua in a:
-                match_len = len(a)
-            else:
-                continue
-            if match_len > best_len:
-                best_len, rules, delay = match_len, list(grules), gdelay
-            elif match_len == best_len and match_len >= 0:
-                rules = rules + list(grules)  # RFC: merge equal groups
-                delay = delay if delay is not None else gdelay
-    return {"rules": rules, "crawl_delay": delay, "sitemaps": sitemaps}
-
-
-def _robots_pattern_re(pattern: str) -> "re.Pattern":
-    """A robots path pattern → anchored regex: ``*`` matches any run,
-    ``$`` at the end anchors, everything else is literal."""
-    anchored = pattern.endswith("$")
-    body = pattern[:-1] if anchored else pattern
-    rx = "".join(".*" if c == "*" else re.escape(c) for c in body)
-    return re.compile("^" + rx + ("$" if anchored else ""))
-
-
-def robots_allowed(rules: "list[tuple[str, bool]]", path: str) -> bool:
-    """RFC 9309 §2.2.2 decision: among matching rules the longest
-    pattern (octets) wins; on a length tie allow wins; no match →
-    allowed."""
-    best_len = -1
-    verdict = True
-    for pattern, allow in rules:
-        if _robots_pattern_re(pattern).match(path):
-            plen = len(pattern)
-            if plen > best_len or (plen == best_len and allow):
-                best_len, verdict = plen, allow
-    return verdict
-
-
-ROBOTS_RULES_SCHEMA = StructType(
-    [
-        StructField("host", StringType()),
-        StructField("patterns", ArrayType(StringType())),
-        StructField("allows", ArrayType(BooleanType())),
-        StructField("crawl_delay", DoubleType()),
-        StructField("n_sitemaps", IntegerType()),
-    ]
-)
-
-
-def robots_rules_table(
-    robots_df: DataFrame,
-    user_agent: str = "*",
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, robots.txt text) → the compact per-host compiled rule set
-    for ``user_agent``. Parse once per host HERE so the politeness join
-    ships small pattern arrays, never the raw robots text."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ROBOTS_RULES_SCHEMA]
-        for pdf in batches:
-            rows = []
-            for host, text in zip(pdf[host_col], pdf[text_col]):
-                g = parse_robots(text or "", user_agent)
-                rows.append(
-                    (
-                        host,
-                        [p for p, _ in g["rules"]],
-                        [a for _, a in g["rules"]],
-                        g["crawl_delay"],
-                        len(g["sitemaps"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return robots_df.mapInPandas(run, ROBOTS_RULES_SCHEMA)
-
-
-_URL_HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)"
-
-
-def robots_filter(
-    urls_df: DataFrame, rules_df: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Politeness verdict per URL: left-join the compiled per-host rule
-    sets (hosts without robots.txt → allowed, per RFC 9309 §2.3.1.2),
-    then one Arrow stage evaluates the longest-match decision. The join
-    key is the host — at crawl scale the rules table is tiny next to
-    the URL table, so AQE broadcasts it; a hot host skews only the
-    probe side, which AQE skew-split handles. Output: input columns +
-    ``host`` + ``allowed`` + ``crawl_delay``."""
-    with_host = urls_df.withColumn(
-        "host",
-        F.lower(F.regexp_extract(F.col(url_col), _URL_HOST_RE, 1)),
-    )
-    joined = with_host.join(
-        rules_df.withColumnRenamed("host", "_rhost"),
-        F.col("host") == F.col("_rhost"),
-        "left",
-    ).drop("_rhost", "n_sitemaps")
-
-    out_schema = StructType(
-        [f for f in joined.schema.fields if f.name not in ("patterns", "allows", "crawl_delay")]
-        + [StructField("allowed", BooleanType()), StructField("crawl_delay", DoubleType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: "dict[tuple, list]" = {}
-        for pdf in batches:
-            verdicts = []
-            for url, pats, allows in zip(
-                pdf[url_col], pdf["patterns"], pdf["allows"]
-            ):
-                if pats is None or len(pats) == 0:
-                    verdicts.append(True)
-                    continue
-                key = (tuple(pats), tuple(allows))
-                rules = cache.get(key)
-                if rules is None:
-                    rules = cache[key] = list(zip(pats, allows))
-                m = re.match(_URL_HOST_RE, url)
-                path = url[m.end() :] if m else url
-                verdicts.append(robots_allowed(rules, path or "/"))
-            out = pdf.drop(columns=["patterns", "allows", "crawl_delay"])
-            out["allowed"] = verdicts
-            out["crawl_delay"] = pdf["crawl_delay"]
-            yield out
-
-    return joined.mapInPandas(run, out_schema)
-
-
-# --------------------------------------------------------------------------
 # CDX-style record index (SURT keys + archive byte spans)
 # --------------------------------------------------------------------------
 #
@@ -1810,7 +1611,9 @@ def crawl_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
     natural lineage unit for the crawl path, because one task processes
     one archive end-to-end: (run_id, archive, doc_count, ok_count,
     char_count, failures). JVM-side map-side-combinable aggregation,
-    one shuffle on the archive key."""
+    one shuffle on the archive key. An observability table:
+    :func:`crawl_commit` rolls it up from the docs it committed, and
+    resume reads the docs table, not this one."""
     return (
         extracted.groupBy("archive")
         .agg(
@@ -1831,47 +1634,53 @@ def crawl_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+# the only columns crawl_lineage reads back from the committed docs
+_CRAWL_ROLLUP_COLUMNS = ("archive", "url", "ok", "n_chars")
+
+
 def crawl_commit(
     extracted: DataFrame, out_dir: str, run_id: "str | None" = None
 ) -> dict:
-    """Append crawl extraction output + per-archive lineage in one
-    computation (persist feeds both writes; Iceberg
-    ``writeTo(...).append()`` when the runtime is present, parquet
-    otherwise). The persist survives the first append because this
-    plan's resume filter scans the lineage table, not the docs table.
-    An archive therefore appears in the lineage table only when ALL its
-    documents are in the docs table — the invariant archive-granularity
-    resume relies on."""
+    """Append crawl extraction output to ``<out_dir>/docs``, then its
+    per-archive lineage to ``<out_dir>/crawl_lineage``; returns the
+    run id. The same contract as ``lineage.commit``: the extraction
+    runs once, in the docs append, and :func:`crawl_lineage` rolls up
+    only the data files that append added, read back with the four
+    columns it aggregates (``lineage.append_read_back``).
+
+    The two appends are not atomic. A crash between them leaves
+    committed documents without lineage rows; a replay still skips
+    their archives, because :func:`crawl_resume_filter` reads the docs
+    table, not the lineage. One committer per ``out_dir``."""
     from . import catalog, lineage
 
     run_id = run_id or lineage.new_run_id()
-    extracted = extracted.persist()
-    try:
-        n_docs = extracted.count()  # materialize once, both writes reuse
-        catalog.append(extracted, f"{out_dir}/docs")
+    written = lineage.append_read_back(
+        extracted, f"{out_dir}/docs", _CRAWL_ROLLUP_COLUMNS
+    )
+    if written is not None:  # an append that adds no file has no lineage
         catalog.append(
-            crawl_lineage(extracted, run_id), f"{out_dir}/crawl_lineage"
+            crawl_lineage(written, run_id), f"{out_dir}/crawl_lineage"
         )
-    finally:
-        extracted.unpersist()
-    return {"run_id": run_id, "n_docs": n_docs}
+    return {"run_id": run_id}
 
 
 def crawl_resume_filter(
     archives_df: DataFrame, out_dir: str, url_col: str = "url"
 ) -> DataFrame:
     """Drop whole archives already committed: input LEFT ANTI JOIN the
-    lineage table on the archive name. Resume granularity is the
-    archive — exactly the task granularity, so a re-run after an
-    interruption re-reads only unprocessed archives and never
-    double-appends documents (lineage rows are written atomically with
-    their docs by crawl_commit). The committed side is one slim string
-    column; AQE broadcasts it until the crawl history grows past the
-    threshold, then it's a shuffled anti-join."""
+    ``archive`` column of ``<out_dir>/docs``, the way
+    ``lineage.resume_filter`` reads the data table. Resume granularity
+    is the archive, exactly the task granularity: a re-run after an
+    interruption re-reads only archives with no committed document, and
+    never double-appends. An archive that yields no document row (no
+    HTML 200 response) is re-read on every run. The committed side is
+    one slim string column; AQE broadcasts it until the crawl history
+    grows past the threshold, then it is a shuffled anti-join."""
     spark = archives_df.sparkSession
     try:
         done = (
-            spark.read.parquet(f"{out_dir}/crawl_lineage")
+            spark.read.parquet(f"{out_dir}/docs")
             .select(F.col("archive").alias(url_col))
             .distinct()
         )

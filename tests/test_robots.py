@@ -1,6 +1,7 @@
-"""robots.txt gate (robots.py): RFC 9309 parse/match semantics (group
-selection, longest-match precedence, wildcard/anchor patterns, empty
-Disallow, tie→Allow) and the Spark host-join filter + metadata table."""
+"""robots.txt gate (robots.py), the one RFC 9309 implementation: parse
+and match semantics (group selection, longest-match precedence,
+wildcard/anchor patterns, empty Disallow, tie→Allow) and the Spark
+host-join filter + metadata table."""
 
 import pytest
 
@@ -28,6 +29,26 @@ Sitemap: https://ex.com/sitemap2.xml
 
 User-agent: crawler-x
 Disallow: /extra/
+"""
+
+
+# a second fixture: a '*' group with a crawl delay, and a two-agent
+# group with '$' anchors and '*' wildcards
+ROBOTS = """\
+# fixture robots.txt
+User-agent: *
+Disallow: /private/
+Allow: /private/public*
+Crawl-delay: 2
+
+User-agent: examplebot
+User-agent: otherbot
+Disallow: /fish*.php$
+Allow: /fish
+Disallow: /tmp
+
+Sitemap: https://example.com/sitemap.xml
+Sitemap: https://example.com/sitemap2.xml
 """
 
 
@@ -84,7 +105,48 @@ def test_pattern_edge_cases():
     assert robots.is_allowed(r, "b", "/aXYZb/c") is False  # inner wildcard
 
 
+def test_parse_robots_fixture_verdicts():
+    """The ``ROBOTS`` fixture: group selection by longest agent-token
+    match with ``*`` fallback; longest rule wins per path; ``$`` anchors
+    and ``*`` wildcards; blank lines do not close a group; sitemaps are
+    global."""
+    r = robots.parse_robots(ROBOTS)
+    star = "somecrawler/1.0"
+    assert robots.crawl_delay(r, star) == 2.0
+    assert robots.is_allowed(r, star, "/public/x")
+    assert not robots.is_allowed(r, star, "/private/secret")
+    assert robots.is_allowed(r, star, "/private/public-data")
+    # examplebot and otherbot share one group, which sets no crawl delay
+    for bot in ("ExampleBot/2.1", "otherbot"):
+        assert robots.crawl_delay(r, bot) is None
+        assert robots.is_allowed(r, bot, "/fish/tuna.html")
+        assert not robots.is_allowed(r, bot, "/fishery/x.php")  # $ anchor
+        assert not robots.is_allowed(r, bot, "/fish-page.php")
+        assert robots.is_allowed(r, bot, "/fish.phpx")  # not at the end
+        assert not robots.is_allowed(r, bot, "/tmp/x")
+        assert robots.is_allowed(r, bot, "/elsewhere")
+        assert robots.is_allowed(r, bot, "/private/secret")  # no '*' rules
+    # 'bot' is a substring of 'examplebot', not a match for it (RFC 9309
+    # §2.2.1: a group token matches within the crawler's product token)
+    assert not robots.is_allowed(r, "bot", "/private/secret")
+    assert robots.is_allowed(r, "bot", "/tmp/x")
+    assert robots.crawl_delay(r, "bot") == 2.0
+    assert r.sitemaps == (
+        "https://example.com/sitemap.xml", "https://example.com/sitemap2.xml",
+    )
+    # allow wins an exact length tie, in either order (RFC 9309 §2.2.2)
+    for body in ("Disallow: /page\nAllow: /page", "Allow: /page\nDisallow: /page"):
+        tie = robots.parse_robots("User-agent: *\n" + body + "\n")
+        assert robots.is_allowed(tie, "any", "/page")
+    # an empty Disallow: allows everything
+    allow_all = robots.parse_robots("User-agent: *\nDisallow:\n")
+    assert robots.is_allowed(allow_all, "any", "/private/x")
+
+
 def test_robots_filter_spark(spark):
+    """The filter over the RFC fixture, a ``Disallow: /`` host and an
+    empty body: hosts without a robots row, or with an empty one, are allowed
+    (RFC 9309 §2.3.1.2); host and scheme match case-insensitively."""
     urls = spark.createDataFrame(
         [
             ("https://EX.com/private/x?q=1", 1),
@@ -92,16 +154,23 @@ def test_robots_filter_spark(spark):
             ("https://ex.com/ok.html", 3),
             ("https://norules.org/anything", 4),   # no robots row
             ("https://ex.com", 5),                 # empty path -> "/"
+            ("HTTPS://ex.com/private/x", 6),       # scheme is case-insensitive
+            ("Https://EX.com/private/x", 7),
+            ("https://closed.example/anything", 14),
+            ("https://empty.example/private/x", 15),
         ],
         "url STRING, doc_id INT",
     )
     bots = spark.createDataFrame(
-        [("ex.com", RFC_BODY)], "host STRING, robots_txt STRING"
+        [("ex.com", RFC_BODY), ("closed.example", "User-agent: *\nDisallow: /\n"),
+         ("empty.example", "")],
+        "host STRING, robots_txt STRING",
     )
     out = robots.robots_filter(urls, bots, agent="somebot")
     assert set(out.columns) == {"url", "doc_id", "allowed"}
     got = {r["doc_id"]: r["allowed"] for r in out.collect()}
-    assert got == {1: False, 2: True, 3: True, 4: True, 5: True}
+    assert got == {1: False, 2: True, 3: True, 4: True, 5: True, 6: False,
+                   7: False, 14: False, 15: True}
 
 
 def test_robots_meta_spark(spark):

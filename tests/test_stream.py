@@ -441,7 +441,7 @@ def test_watch_warc_streaming_front_door(spark, tmp_path_factory):
     assert spark.read.parquet(f"{out_dir}/crawl_lineage").count() == 2
 
     # checkpoint wiped (simulated redelivery of EVERYTHING): the
-    # lineage anti-join still makes it a no-op
+    # anti-join against the committed docs table still makes it a no-op
     shutil.rmtree(ckpt)
     q = st.watch_warc(spark, str(inbox), out_dir, str(base / "ckpt2"))
     q.awaitTermination(120)

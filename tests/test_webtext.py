@@ -247,73 +247,18 @@ def test_warc_extract_spark_e2e(spark):
     assert bad["error"] and bad["warc_type"] is None
 
 
-ROBOTS = """\
-# fixture robots.txt
-User-agent: *
-Disallow: /private/
-Allow: /private/public*
-Crawl-delay: 2
-
-User-agent: examplebot
-User-agent: otherbot
-Disallow: /fish*.php$
-Allow: /fish
-Disallow: /tmp
-
-Sitemap: https://example.com/sitemap.xml
-Sitemap: https://example.com/sitemap2.xml
-"""
-
-
-def test_parse_robots_rfc9309_semantics():
-    """RFC 9309: group selection by longest UA match with '*' fallback;
-    longest-octets rule wins per path; allow wins length ties; '$'
-    anchors and '*' wildcards; missing/empty robots allows; blank lines
-    do not close a group; sitemaps are global."""
-    star = webtext.parse_robots(ROBOTS, "somecrawler/1.0")
-    assert star["rules"] == [("/private/", False), ("/private/public*", True)]
-    assert star["crawl_delay"] == 2.0
-    assert star["sitemaps"] == [
-        "https://example.com/sitemap.xml", "https://example.com/sitemap2.xml"
-    ]
-    bot = webtext.parse_robots(ROBOTS, "ExampleBot/2.1")
-    assert bot["rules"] == [
-        ("/fish*.php$", False), ("/fish", True), ("/tmp", False)
-    ]
-    assert bot["crawl_delay"] is None  # the specific group sets none
-    # otherbot shares the same group (two User-agent lines)
-    assert webtext.parse_robots(ROBOTS, "otherbot")["rules"] == bot["rules"]
-
-    assert webtext.robots_allowed(star["rules"], "/public/x")
-    assert not webtext.robots_allowed(star["rules"], "/private/secret")
-    assert webtext.robots_allowed(star["rules"], "/private/public-data")
-    assert webtext.robots_allowed(bot["rules"], "/fish/tuna.html")
-    assert not webtext.robots_allowed(bot["rules"], "/fishery/x.php")  # $ anchor
-    assert not webtext.robots_allowed(bot["rules"], "/fish-page.php")
-    assert webtext.robots_allowed(bot["rules"], "/fish.phpx")  # not at end
-    assert not webtext.robots_allowed(bot["rules"], "/tmp/x")
-    assert webtext.robots_allowed(bot["rules"], "/elsewhere")
-    # allow wins an exact length tie (RFC 9309 §2.2.2)
-    tie = [("/page", False), ("/page", True)]
-    assert webtext.robots_allowed(tie, "/page")
-    assert webtext.parse_robots("", "any")["rules"] == []
-    # empty Disallow: == allow everything (no rule emitted)
-    assert webtext.parse_robots("User-agent: *\nDisallow:\n")["rules"] == []
-
-
 def test_robots_filter_spark(spark):
-    """The politeness gate end-to-end: compile per-host rule sets once
-    (robots_rules_table), left-join on host, verdict per URL; hosts
-    without robots.txt are allowed; crawl_delay rides along."""
-    robots = spark.createDataFrame(
+    """The politeness gate over a crawl's URLs: robots.robots_filter
+    left-joins the per-host robots relation on the case-folded host and
+    stamps a verdict per URL (hosts without robots.txt are allowed);
+    robots.robots_meta carries each host's crawl delay and sitemaps."""
+    from pypdfocr_spark import robots
+    from tests.test_robots import ROBOTS
+
+    bots = spark.createDataFrame(
         [("example.com", ROBOTS), ("closed.example", "User-agent: *\nDisallow: /\n")],
         "host string, robots_txt string",
     )
-    rules = webtext.robots_rules_table(robots, user_agent="somecrawler")
-    got = {r["host"]: r for r in rules.collect()}
-    assert got["example.com"]["patterns"] == ["/private/", "/private/public*"]
-    assert got["example.com"]["allows"] == [False, True]
-    assert got["example.com"]["n_sitemaps"] == 2
     urls = spark.createDataFrame(
         [(1, "https://example.com/ok.html"),
          (2, "https://EXAMPLE.com/private/secret"),
@@ -322,13 +267,18 @@ def test_robots_filter_spark(spark):
          (5, "https://norobots.example/x")],
         "doc_id long, url string",
     )
-    out = {r["doc_id"]: r for r in webtext.robots_filter(urls, rules).collect()}
-    assert [out[i]["allowed"] for i in (1, 2, 3, 4, 5)] == [
-        True, False, True, False, True
-    ]
-    assert out[1]["crawl_delay"] == 2.0
-    assert out[5]["crawl_delay"] is None
-    assert out[2]["host"] == "example.com"  # case-folded join key
+    out = {r["doc_id"]: r["allowed"] for r in
+           robots.robots_filter(urls, bots, agent="somecrawler").collect()}
+    assert [out[i] for i in (1, 2, 3, 4, 5)] == [True, False, True, False, True]
+    # examplebot takes ROBOTS' two-agent group, which has no /private/ rule
+    out = {r["doc_id"]: r["allowed"] for r in
+           robots.robots_filter(urls, bots, agent="examplebot").collect()}
+    assert [out[i] for i in (1, 2, 3, 4, 5)] == [True, True, True, False, True]
+    meta = {r["host"]: r for r in
+            robots.robots_meta(bots, agent="somecrawler").collect()}
+    assert meta["example.com"]["crawl_delay"] == 2.0
+    assert len(meta["example.com"]["sitemaps"]) == 2
+    assert meta["closed.example"]["crawl_delay"] is None
 
 
 def test_surt_and_cdx_index(spark):
@@ -439,7 +389,10 @@ def test_sitemap_parsing_and_table(spark):
     assert good[0]["priority"] == 0.8 and good[0]["kind"] == "urlset"
 
     # robots.txt sitemap discovery feeds this: the seeding loop
-    assert webtext.parse_robots(ROBOTS)["sitemaps"][0].endswith("sitemap.xml")
+    from pypdfocr_spark import robots
+    from tests.test_robots import ROBOTS
+
+    assert robots.parse_robots(ROBOTS).sitemaps[0].endswith("sitemap.xml")
 
 
 def test_warc_to_wet_roundtrip(spark):
@@ -484,26 +437,25 @@ def test_warc_to_wet_roundtrip(spark):
     assert recs[0]["headers"]["warc-refers-to"].startswith("<urn:uuid:")
 
 
+def _arc(host, n):
+    return webtext.encode_warc(
+        [{"type": "response", "uri": f"http://{host}/p{i}",
+          "block": webtext.encode_http_response(PAGE)}
+         for i in range(n)],
+        gzip_members=True,
+    )
+
+
 def test_crawl_lineage_commit_resume(spark, tmp_path):
-    """The resumable crawl job: commit appends docs + per-archive
-    lineage atomically (one persisted computation feeds both), lineage
+    """The resumable crawl job: commit appends the docs once, then rolls
+    per-archive lineage up from the files that append added; lineage
     counts and failure lists are exact, and a resume run sees ONLY the
-    archives absent from the committed lineage — re-running after an
+    archives absent from the committed docs — re-running after an
     interruption never double-appends. Archive provenance rides every
     output row (warc_extract's first column)."""
-    from pypdfocr_spark import webtext
-
-    def arc(host, n):
-        return webtext.encode_warc(
-            [{"type": "response", "uri": f"http://{host}/p{i}",
-              "block": webtext.encode_http_response(PAGE)}
-             for i in range(n)],
-            gzip_members=True,
-        )
-
     out_dir = str(tmp_path / "crawl_out")
     batch1 = spark.createDataFrame(
-        [("s3://c/a1.warc.gz", bytearray(arc("a.example", 2))),
+        [("s3://c/a1.warc.gz", bytearray(_arc("a.example", 2))),
          ("s3://c/bad.warc.gz", bytearray(b"\x1f\x8bgarbage"))],
         "url string, payload binary",
     )
@@ -511,7 +463,7 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
     assert webtext.crawl_resume_filter(batch1, out_dir).count() == 2
 
     stats = webtext.crawl_commit(webtext.warc_extract(batch1), out_dir)
-    assert stats["n_docs"] == 3  # 2 pages + 1 error row
+    assert spark.read.parquet(f"{out_dir}/docs").count() == 3  # 2 pages + 1 error row
     lin = {r["archive"]: r for r in
            spark.read.parquet(f"{out_dir}/crawl_lineage").collect()}
     assert lin["s3://c/a1.warc.gz"]["doc_count"] == 2
@@ -528,7 +480,7 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
     # resume: batch = old archives + one new; only the new one survives
     batch2 = batch1.union(
         spark.createDataFrame(
-            [("s3://c/a2.warc.gz", bytearray(arc("b.example", 3)))],
+            [("s3://c/a2.warc.gz", bytearray(_arc("b.example", 3)))],
             "url string, payload binary",
         )
     )
@@ -540,6 +492,33 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
     assert docs.select("url").distinct().count() == 6  # incl. error row
     # a third run has nothing left to do
     assert webtext.crawl_resume_filter(batch2, out_dir).count() == 0
+
+
+def test_crawl_commit_replay_after_lineage_crash(spark, tmp_path, monkeypatch):
+    """A crash between the docs append and the lineage append, then a
+    replay of the same batch: resume reads the committed docs, so the
+    replay skips the archive and its pages are in the docs table once."""
+    out_dir = str(tmp_path / "crawl_out")
+    batch = spark.createDataFrame(
+        [("s3://c/a1.warc.gz", bytearray(_arc("a.example", 2)))],
+        "url string, payload binary",
+    )
+    real_lineage = webtext.crawl_lineage
+
+    def crash_once(extracted, run_id):
+        monkeypatch.setattr(webtext, "crawl_lineage", real_lineage)
+        raise RuntimeError("injected crash before the lineage append")
+
+    monkeypatch.setattr(webtext, "crawl_lineage", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        webtext.crawl_commit(webtext.warc_extract(batch), out_dir)
+
+    todo = webtext.crawl_resume_filter(batch, out_dir)
+    webtext.crawl_commit(webtext.warc_extract(todo), out_dir)
+    docs = spark.read.parquet(f"{out_dir}/docs")
+    assert sorted(r["url"] for r in docs.collect()) == [
+        "http://a.example/p0", "http://a.example/p1",
+    ]
 
 
 def test_warc_extract_with_outlinks(spark):
