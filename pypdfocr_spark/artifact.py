@@ -10,10 +10,14 @@ and merges page k of the original with page k of the text layer —
 applying a rotate-around-page-center CTM when the original page carries a
 nonzero ``/Rotate`` (ref: pypdfocr/pypdfocr_pdf.py:165-201,92-130).
 
-Without a PDF library in this sandbox, the artifact is a deterministic
-JSON "searchable document": per page, the final device-space placement of
-every invisible word after the rotation merge. The placement math is the
-reference's, via kernels.merge.
+Two forms carry the same placement, computed once by
+:func:`render_text_page` with the reference's merge math (kernels.merge):
+
+* :func:`render_searchable_doc` — a deterministic JSON "searchable
+  document": per page, the final device-space placement of every
+  invisible word after the rotation merge;
+* :func:`render_searchable_pdf` — a real PDF with that layer, written by
+  the minimal :class:`PdfWriter` below (no reportlab/PyPDF2).
 """
 
 from __future__ import annotations
@@ -77,6 +81,77 @@ def render_searchable_doc(
     return b"%SYNOCR1%" + json.dumps({"pages": pages}, separators=(",", ":")).encode()
 
 
+class PdfRef:
+    """An ``n 0 R`` indirect reference."""
+
+    __slots__ = ("num",)
+
+    def __init__(self, num: int):
+        self.num = num
+
+
+def _ser(v) -> bytes:
+    """Serialize a Python value as a PDF object (``str`` is a name)."""
+    if isinstance(v, dict):
+        return b"<< " + b" ".join(
+            b"/" + k.encode() + b" " + _ser(x) for k, x in v.items()
+        ) + b" >>"
+    if isinstance(v, list):
+        return b"[ " + b" ".join(_ser(x) for x in v) + b" ]"
+    if isinstance(v, PdfRef):
+        return f"{v.num} 0 R".encode()
+    if isinstance(v, str):
+        return b"/" + v.encode()
+    if isinstance(v, float):
+        return f"{v:.4f}".rstrip("0").rstrip(".").encode() or b"0"
+    return str(v).encode()
+
+
+class PdfWriter:
+    """Deterministic PDF emitter: numbered objects and streams, written
+    in number order (plain objects first, then streams) behind a
+    classic xref table."""
+
+    def __init__(self):
+        self.objects: "dict[int, bytes]" = {}
+        self.streams: "dict[int, tuple[bytes, bytes]]" = {}
+        self._next = 1
+
+    def alloc(self) -> int:
+        n = self._next
+        self._next += 1
+        return n
+
+    def put(self, num: int, obj) -> PdfRef:
+        self.objects[num] = _ser(obj)
+        return PdfRef(num)
+
+    def put_stream(self, num: int, dic: dict, raw: bytes) -> PdfRef:
+        self.streams[num] = (_ser({**dic, "Length": len(raw)}), raw)
+        return PdfRef(num)
+
+    def finish(self, root: PdfRef) -> bytes:
+        out = bytearray(b"%PDF-1.4\n")
+        offsets: "dict[int, int]" = {}
+        for num in sorted(self.objects):
+            offsets[num] = len(out)
+            out += f"{num} 0 obj\n".encode() + self.objects[num] + b"\nendobj\n"
+        for num in sorted(self.streams):
+            offsets[num] = len(out)
+            body, raw = self.streams[num]
+            out += f"{num} 0 obj\n".encode() + body + b"\nstream\n" + raw
+            out += b"\nendstream\nendobj\n"
+        xref_off = len(out)
+        size = self._next
+        out += f"xref\n0 {size}\n".encode()
+        out += b"0000000000 65535 f \n"
+        for n in range(1, size):
+            out += f"{offsets[n]:010d} 00000 n \n".encode()
+        out += b"trailer\n" + _ser({"Size": size, "Root": root})
+        out += b"\nstartxref\n" + str(xref_off).encode() + b"\n%%EOF\n"
+        return bytes(out)
+
+
 def _pdf_escape(text: str) -> bytes:
     out = text.encode("latin-1", "replace")
     return out.replace(b"\\", b"\\\\").replace(b"(", b"\\(").replace(b")", b"\\)")
@@ -90,26 +165,22 @@ def render_searchable_pdf(
     page_images: "list | None" = None,
     compress: bool = True,
 ) -> bytes:
-    """K1 as a REAL PDF: the invisible text layer (render mode 3,
+    """K1 as a real PDF: the invisible text layer (render mode 3,
     Helvetica, one Tm+Tj per word — the reference's reportlab form,
-    ref: pypdfocr/pypdfocr_pdf.py:58-78) over an optional page-image
-    XObject, built with the in-repo :class:`pdfimages.PdfWriter` — no
-    reportlab/PyPDF2. The placement math is byte-for-byte the JSON
-    artifact's (:func:`render_text_page`), so
-    :func:`pdfimages.extract_pdf_text` reads back exactly what
-    :func:`render_searchable_doc` records — the searchable round trip
-    the reference never had a check for. Page rotation is carried as
-    the page's ``/Rotate`` with the merge CTM applied to the words, the
+    ref: pypdfocr/pypdfocr_pdf.py:58-78) over an optional Flate
+    page-image XObject, built with :class:`PdfWriter`. The placement is
+    :func:`render_text_page`'s, so every ``Tm`` carries exactly the
+    position :func:`render_searchable_doc` records, with the word's
+    angle as the text-matrix rotation. Page rotation is carried as the
+    page's ``/Rotate`` with the merge CTM applied to the words, the
     reference's merge-time behavior."""
     import math
     import zlib
 
     import numpy as np
 
-    from . import pdfimages
-
     rotations = rotations or [0] * len(spans_pages)
-    wr = pdfimages.PdfWriter()
+    wr = PdfWriter()
     catalog_num, pages_num, font_num = wr.alloc(), wr.alloc(), wr.alloc()
     font_ref = wr.put(
         font_num, {"Type": "Font", "Subtype": "Type1", "BaseFont": "Helvetica"}
@@ -156,18 +227,18 @@ def render_searchable_pdf(
         num = wr.alloc()
         page_nums.append(num)
         page: dict = {
-            "Type": "Page", "Parent": pdfimages.PdfRef(pages_num, 0),
+            "Type": "Page", "Parent": PdfRef(pages_num),
             "MediaBox": [0, 0, layer["w"], layer["h"]],
             "Resources": resources, "Contents": content_ref,
         }
         if rot:
             page["Rotate"] = rot
         wr.put(num, page)
-    root = wr.put(catalog_num, {"Type": "Catalog", "Pages": pdfimages.PdfRef(pages_num, 0)})
+    root = wr.put(catalog_num, {"Type": "Catalog", "Pages": PdfRef(pages_num)})
     wr.put(
         pages_num,
         {"Type": "Pages", "Count": len(page_nums),
-         "Kids": [pdfimages.PdfRef(n, 0) for n in page_nums]},
+         "Kids": [PdfRef(n) for n in page_nums]},
     )
     return wr.finish(root)
 
@@ -176,8 +247,8 @@ def with_artifacts(spans_df: DataFrame, fmt: str = "json") -> DataFrame:
     """Append an ``artifact`` binary column to span-level extraction
     output (spans.extract_spans) via an Arrow-batched stage. ``fmt``
     "json" emits the byte-identity JSON form (%SYNOCR1%); "pdf" emits a
-    REAL searchable PDF (:func:`render_searchable_pdf`) whose text layer
-    :func:`pdfimages.extract_pdf_text` reads back verbatim."""
+    real searchable PDF (:func:`render_searchable_pdf`) with the same
+    word placement."""
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     if fmt not in ("json", "pdf"):

@@ -12,9 +12,6 @@ codepoints > 127 — which is exactly what we implement.
 
 from __future__ import annotations
 
-_ASCII_TABLE = {i: None for i in range(128, 0x110000)}
-
-
 def ascii_ignore(s: str) -> str:
     """Drop every non-ASCII codepoint (``encode('ascii','ignore')``)."""
     return s.encode("ascii", "ignore").decode("ascii")

@@ -1,27 +1,9 @@
-"""Image codecs for the PDF image filters, and the binary media columns
-of the ``multimodal_features`` query.
+"""The binary media columns of the ``multimodal_features`` query.
 
-Two things live here:
-
-* The opaque-binary column path: :func:`media_table` packs each
-  embedding as a little-endian float32 payload, and
-  :func:`extract_features` decodes it back over Arrow batches to
-  (dim, md5 checksum, first/last/sum, L2 norm). The SQL oracle checks
-  that round trip byte for byte.
-* Stdlib+numpy image codecs, used by :mod:`pypdfocr_spark.pdfimages`.
-  :func:`decode_image` decodes the netpbm family (P2/P3/P5/P6),
-  uncompressed BMP, 8/16-bit PNG (incl. Adam7 interlace), the first
-  frame of a GIF, baseline TIFF (strips or tiles; uncompressed, LZW,
-  Deflate, PackBits, JPEG and CCITT fax), lossless WebP (VP8L), and
-  Huffman JPEG, sequential and progressive. The PDF filters call the
-  kernels directly: PNG unfilter, TIFF LZW, the CCITT G3/G4 fax coders
-  and :func:`encode_jpeg`. Formats that need a real codec library
-  (arithmetic-coded JPEG, lossy WebP, old-style JPEG-in-TIFF) raise
-  ``NotImplementedError``.
-
-The ``encode_*`` functions and the G3/MH fax encoders build the
-deterministic inputs that the decoder tests round-trip; they are not
-rate-optimized coders.
+:func:`media_table` packs each embedding as a little-endian float32
+payload in an opaque binary column, and :func:`extract_features` decodes
+it back over Arrow batches to (dim, md5 checksum, first/last/sum, L2
+norm). The SQL oracle checks that round trip byte for byte.
 """
 
 from __future__ import annotations
@@ -68,3066 +50,6 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _parse_pnm_header(payload: bytes, n_fields: int) -> tuple[list[int], int]:
-    """Parse ``n_fields`` whitespace-separated integer header fields after
-    the PNM magic, honoring ``#`` comments; returns (fields, offset of the
-    first data byte). The spec separator is ONE whitespace char past the
-    last field; a CRLF pair (Windows-written files) is consumed as one
-    separator — without that, the raster would silently start at the LF
-    and every pixel would be shifted one byte (caught in r4 review)."""
-    fields: list[int] = []
-    i = 2  # past the 2-byte magic
-    n = len(payload)
-    while len(fields) < n_fields:
-        while i < n and payload[i : i + 1].isspace():
-            i += 1
-        if i < n and payload[i : i + 1] == b"#":
-            while i < n and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < n and not payload[j : j + 1].isspace():
-            j += 1
-        if j == i:
-            raise ValueError("truncated PNM header")
-        fields.append(int(payload[i:j]))
-        i = j
-    if payload[i : i + 2] == b"\r\n":
-        return fields, i + 2  # CRLF counts as one separator
-    return fields, i + 1  # exactly ONE whitespace byte separates header and raster
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Decode an image payload to an ndarray — pure stdlib+numpy, no PIL.
-
-    Supported: the netpbm family — the exact interchange formats the
-    reference's toolchain emits (ghostscript's ``pnmraw`` devices and
-    ``pdfimages`` both write PPM/PGM — ref: pypdfocr/pypdfocr_gs.py
-    device table): P5/P6 binary and P2/P3 ASCII, 8- and 16-bit
-    (binary 16-bit is big-endian per the netpbm spec) — plus uncompressed
-    BMP (BI_RGB, 8-bit paletted / 24-bit / 32-bit), a format real crawls
-    actually contain and whose layout is header + padded rows, no
-    entropy coding (VERDICT r4 #8) — plus 8/16-bit PNG incl. Adam7
-    interlace (:func:`_decode_png`), sequential + progressive Huffman
-    JPEG (:func:`_decode_jpeg`), GIF87a/89a incl. interlace
-    (:func:`_decode_gif` — LZW is pure table bookkeeping, no codec
-    library needed), and baseline TIFF — both byte orders; uncompressed,
-    LZW, Deflate, and PackBits strips; CCITT fax bilevel (T.6 Group 4,
-    T.4 Group 3 1-D/2-D, and MH-RLE — the scanned-document codings);
-    predictor 2;
-    palette/MinIsWhite (:func:`_decode_tiff`) — and lossless WebP
-    (RIFF/VP8L, :func:`_decode_webp`: all four transforms, color cache,
-    LZ77, meta prefix groups). Returns uint8 or uint16, shape (h, w)
-    for grayscale, (h, w, 3) for RGB.
-
-    Formats genuinely needing an external codec (arithmetic-coded /
-    hierarchical JPEG, lossy VP8, …) still raise
-    ``NotImplementedError`` — the pluggable-strategy gate, mirroring the
-    reference's binary override design (ref: pypdfocr/pypdfocr.py:314-324).
-    """
-    if bytes(payload[:8]) == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(payload)
-    magic = bytes(payload[:2])
-    if magic == b"\xff\xd8":
-        return _decode_jpeg(payload)
-    if magic == b"BM":
-        return _decode_bmp(payload)
-    if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(payload)
-    if bytes(payload[:4]) in (b"II*\x00", b"MM\x00*"):
-        return _decode_tiff(payload)
-    if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WEBP":
-        return _decode_webp(payload)
-    if magic not in (b"P2", b"P3", b"P5", b"P6"):
-        raise NotImplementedError(
-            f"unsupported image magic {magic!r}: only PNM (P2/P3/P5/P6), "
-            "uncompressed BMP, GIF, baseline TIFF, PNG, Huffman JPEG, and "
-            "lossless WebP (VP8L) decode without PIL/cv2 on the cluster"
-        )
-    channels = 3 if magic in (b"P3", b"P6") else 1
-    (w, h, maxval), data_off = _parse_pnm_header(payload, 3)
-    if not (0 < maxval < 65536 and w > 0 and h > 0):
-        raise ValueError(f"invalid PNM dimensions {w}x{h} maxval={maxval}")
-    count = w * h * channels
-    if magic in (b"P5", b"P6"):
-        dtype = np.dtype(">u2") if maxval > 255 else np.dtype("u1")
-        # strict framing: the raster must be EXACTLY the remaining bytes —
-        # a length mismatch in either direction means the separator or
-        # dimensions were mis-parsed, and silently slicing would return
-        # shifted pixels instead of an error
-        raster = payload[data_off:]
-        if len(raster) < count * dtype.itemsize:
-            raise ValueError("truncated PNM raster")
-        if len(raster) > count * dtype.itemsize:
-            raise ValueError(
-                f"PNM raster has {len(raster)} bytes, expected {count * dtype.itemsize}"
-            )
-        arr = np.frombuffer(raster, dtype=dtype).astype(
-            "uint16" if maxval > 255 else "uint8"
-        )
-    else:
-        vals = bytes(payload[data_off - 1 :]).split()
-        if len(vals) != count:
-            raise ValueError(f"ASCII PNM has {len(vals)} samples, expected {count}")
-        arr = np.array([int(v) for v in vals], dtype="uint16" if maxval > 255 else "uint8")
-    return arr.reshape((h, w, 3) if channels == 3 else (h, w))
-
-
-# Adam7 pass layout (PNG spec §8.2): (x_start, y_start, x_step, y_step).
-# Each pass is an independently-filtered sub-image; empty passes (a
-# dimension rounds to zero) contribute no scanlines at all.
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _png_unfilter(raw: bytes, off: int, n_rows: int, width_px: int, bpp: int):
-    """Un-filter ``n_rows`` scanlines of ``width_px`` pixels starting at
-    byte ``off`` of the decompressed IDAT stream; returns the (n_rows,
-    width_px*bpp) int32 sample bytes and the offset past the block.
-    Un-filtering: None/Up are whole-row numpy; Sub is a per-channel
-    cumulative sum (mod 256 distributes over addition); Average/Paeth
-    need the in-row recurrence, so they run a per-pixel loop vectorized
-    across channels — fine for feature extraction and thumbnails, and an
-    explicit note that codec-speed raster decode at crawl scale belongs
-    in a real codec stage."""
-    stride = width_px * bpp
-    nbytes = (stride + 1) * n_rows
-    block = raw[off : off + nbytes]
-    if len(block) != nbytes:
-        raise ValueError(
-            f"PNG scanline data is {len(raw) - off} bytes from offset {off}, "
-            f"expected {nbytes}"
-        )
-    lines = np.frombuffer(block, dtype="u1").reshape(n_rows, stride + 1)
-    filters = lines[:, 0]
-    rows = lines[:, 1:].astype("int32")
-    out = np.zeros((n_rows, stride), dtype="int32")
-    prev = np.zeros(stride, dtype="int32")
-    for y in range(n_rows):
-        f, row = int(filters[y]), rows[y]
-        if f == 0:
-            cur = row
-        elif f == 2:  # Up
-            cur = (row + prev) & 0xFF
-        elif f == 1:  # Sub: per-channel prefix sum, mod distributes
-            cur = (np.cumsum(row.reshape(width_px, bpp), axis=0) & 0xFF).reshape(stride)
-        elif f in (3, 4):  # Average / Paeth: in-row recurrence, loop pixels
-            cur = row.copy()
-            for x in range(width_px):
-                i = x * bpp
-                a = cur[i - bpp : i] if x else np.zeros(bpp, dtype="int32")
-                b = prev[i : i + bpp]
-                if f == 3:
-                    cur[i : i + bpp] = (cur[i : i + bpp] + ((a + b) >> 1)) & 0xFF
-                else:
-                    c = prev[i - bpp : i] if x else np.zeros(bpp, dtype="int32")
-                    p = a + b - c
-                    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
-                    )
-                    cur[i : i + bpp] = (cur[i : i + bpp] + pred) & 0xFF
-        else:
-            raise ValueError(f"invalid PNG filter type {f}")
-        out[y] = cur
-        prev = cur
-    return out, off + nbytes
-
-
-def _decode_png(payload: bytes) -> "np.ndarray":
-    """8/16-bit PNG decode with stdlib zlib + numpy — no PIL (VERDICT r4
-    #8 'PNG(stored)' extended to all five scanline filters, then to
-    Adam7 interlace in r5). Color types: 0 gray → (h, w); 2 RGB →
-    (h, w, 3); 3 palette → RGB via PLTE lookup; 4 gray+alpha / 6 RGBA →
-    alpha dropped. 16-bit samples are big-endian per the spec and
-    filtering stays byte-wise, so the un-filter path
-    (:func:`_png_unfilter`) is shared; output dtype matches the depth
-    (uint8/uint16, like the PNM path). Interlaced images are seven
-    independently-filtered Adam7 sub-images scattered back with strided
-    numpy assignment — same un-filter, no extra cases."""
-    import struct
-    import zlib
-
-    pos = 8
-    ihdr = None
-    plte = None
-    idat = []
-    n = len(payload)
-    while pos + 8 <= n:
-        length, typ = struct.unpack_from(">I4s", payload, pos)
-        pos += 8
-        data = bytes(payload[pos : pos + length])
-        if len(data) < length:
-            raise ValueError("truncated PNG chunk")
-        pos += length + 4  # skip CRC (integrity is the transport's job here)
-        if typ == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif typ == b"PLTE":
-            plte = np.frombuffer(data, dtype="u1").reshape(-1, 3)
-        elif typ == b"IDAT":
-            idat.append(data)
-        elif typ == b"IEND":
-            break
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, depth, ctype, comp, filt, interlace = ihdr
-    if interlace not in (0, 1):
-        raise ValueError(f"invalid PNG interlace method {interlace}")
-    if depth not in (8, 16) or (depth == 16 and ctype == 3):
-        raise NotImplementedError(f"PNG bit depth {depth}: only 8/16 decode")
-    if ctype not in (0, 2, 3, 4, 6) or comp != 0 or filt != 0:
-        raise NotImplementedError(f"PNG color/compression type {ctype}/{comp}")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype]
-    raw = zlib.decompress(b"".join(idat))
-    bpp = channels * (depth // 8)  # filtering is byte-wise at every depth
-    stride = w * bpp
-    if interlace:
-        scatter = np.zeros((h, w, bpp), dtype="int32")
-        off = 0
-        for x0, y0, xs, ys in _ADAM7:
-            pw = -(-(w - x0) // xs) if w > x0 else 0
-            ph = -(-(h - y0) // ys) if h > y0 else 0
-            if pw == 0 or ph == 0:
-                continue
-            sub, off = _png_unfilter(raw, off, ph, pw, bpp)
-            scatter[y0::ys, x0::xs] = sub.reshape(ph, pw, bpp)
-        if off != len(raw):
-            raise ValueError(
-                f"PNG Adam7 data is {len(raw)} bytes, expected {off}"
-            )
-        out = scatter.reshape(h, stride)
-    else:
-        out, end = _png_unfilter(raw, 0, h, w, bpp)
-        if end != len(raw):
-            raise ValueError(
-                f"PNG scanline data is {len(raw)} bytes, expected {end}"
-            )
-    if depth == 16:
-        b = out.astype("uint16").reshape(h, w, channels, 2)
-        arr = (b[..., 0] << 8) | b[..., 1]  # network byte order
-    else:
-        arr = out.astype("uint8").reshape(h, w, channels)
-    if ctype == 3:
-        if plte is None:
-            raise ValueError("paletted PNG without PLTE")
-        idx = arr[:, :, 0]
-        if int(idx.max()) >= len(plte):
-            raise ValueError("PNG palette index out of range")
-        rgb = plte[idx]
-        if bool((rgb[:, :, 0] == rgb[:, :, 1]).all() and (rgb[:, :, 1] == rgb[:, :, 2]).all()):
-            return np.ascontiguousarray(rgb[:, :, 0])  # grayscale palette
-        return np.ascontiguousarray(rgb)
-    if ctype == 0:
-        return np.ascontiguousarray(arr[:, :, 0])
-    if ctype == 4:
-        return np.ascontiguousarray(arr[:, :, 0])  # gray, alpha dropped
-    return np.ascontiguousarray(arr[:, :, :3])  # RGB / RGBA→RGB
-
-
-def _png_filter_rows(px: "np.ndarray", bpp: int, filter_type: int) -> bytes:
-    """Filter the (n_rows, stride) int32 sample-byte array with
-    ``filter_type`` (0–4), straight per-pixel spec definition — the
-    deterministic replica :func:`_png_unfilter` is tested against. The
-    previous-row state starts at zero, so one call covers exactly one
-    image (or one Adam7 pass)."""
-    raws = []
-    prev = np.zeros(px.shape[1], dtype="int32")
-    for y in range(px.shape[0]):
-        cur = px[y]
-        if filter_type == 0:
-            enc = cur
-        elif filter_type == 1:
-            left = np.concatenate([np.zeros(bpp, dtype="int32"), cur[:-bpp]])
-            enc = (cur - left) & 0xFF
-        elif filter_type == 2:
-            enc = (cur - prev) & 0xFF
-        elif filter_type == 3:
-            left = np.concatenate([np.zeros(bpp, dtype="int32"), cur[:-bpp]])
-            enc = (cur - ((left + prev) >> 1)) & 0xFF
-        elif filter_type == 4:
-            left = np.concatenate([np.zeros(bpp, dtype="int32"), cur[:-bpp]])
-            upleft = np.concatenate([np.zeros(bpp, dtype="int32"), prev[:-bpp]])
-            p = left + prev - upleft
-            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - upleft)
-            pred = np.where((pa <= pb) & (pa <= pc), left,
-                            np.where(pb <= pc, prev, upleft))
-            enc = (cur - pred) & 0xFF
-        else:
-            raise ValueError(f"filter_type {filter_type}")
-        raws.append(bytes([filter_type]) + enc.astype("uint8").tobytes())
-        prev = cur
-    return b"".join(raws)
-
-
-def encode_png(
-    arr: "np.ndarray",
-    filter_type: int = 0,
-    palette: "np.ndarray | None" = None,
-    interlace: bool = False,
-) -> bytes:
-    """Minimal PNG encoder for round-trip tests: 8-bit (uint8 input) or
-    16-bit (uint16 input) gray/RGB, or paletted when ``palette`` is given
-    with a uint8 index array; every row filtered with ``filter_type``
-    (0–4) so each un-filter branch of :func:`_decode_png` is exercisable,
-    and ``interlace=True`` writes the seven Adam7 passes (each filtered
-    independently, per spec) so the de-interlace scatter is too."""
-    import struct
-    import zlib
-
-    arr = np.asarray(arr)
-    depth = 16 if arr.dtype == np.uint16 else 8
-    arr = arr.astype("uint16" if depth == 16 else "uint8")
-    if palette is not None:
-        ctype, channels = 3, 1
-        assert arr.ndim == 2 and depth == 8
-    elif arr.ndim == 2:
-        ctype, channels = 0, 1
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        ctype, channels = 2, 3
-    else:
-        raise ValueError(f"expected (h,w)[,3], got {arr.shape}")
-    h, w = arr.shape[:2]
-    if depth == 16:
-        px = np.frombuffer(arr.astype(">u2").tobytes(), dtype="u1")
-        px = px.reshape(h, w * channels * 2).astype("int32")
-    else:
-        px = arr.reshape(h, w * channels).astype("int32")
-    bpp = channels * (depth // 8)
-    if interlace:
-        grid = px.reshape(h, w, bpp)
-        raws = []
-        for x0, y0, xs, ys in _ADAM7:
-            sub = grid[y0::ys, x0::xs]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            raws.append(
-                _png_filter_rows(
-                    sub.reshape(sub.shape[0], sub.shape[1] * bpp), bpp, filter_type
-                )
-            )
-        raw = b"".join(raws)
-    else:
-        raw = _png_filter_rows(px, bpp, filter_type)
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, int(interlace))
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += chunk(b"PLTE", np.asarray(palette, dtype="uint8").tobytes())
-    out += chunk(b"IDAT", zlib.compress(raw))
-    return out + chunk(b"IEND", b"")
-
-
-# Zigzag scan: position k in the coded coefficient sequence holds the
-# coefficient at row-major index _ZIGZAG[k] of the 8x8 block (ITU T.81 §A.3.6).
-_ZIGZAG = np.array(
-    [0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63],
-    dtype="int64",
-)
-
-
-def _dct_basis() -> "np.ndarray":
-    """Orthonormal 8-point DCT-II basis A[u, x] = C(u)/2·cos((2x+1)uπ/16),
-    C(0)=1/√2 (T.81 §A.3.3 written as a matrix): forward S = A·s·Aᵀ,
-    inverse s = Aᵀ·S·A."""
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    a = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-    a[0] /= np.sqrt(2.0)
-    return a
-
-
-def _huff_decode_tables(bits: list[int], values: bytes):
-    """Canonical Huffman decode tables from a DHT payload (T.81 §C.2/F.2.2.3):
-    per code length l, the smallest and largest code and the huffval offset."""
-    mincode = [0] * 17
-    maxcode = [-1] * 17
-    valptr = [0] * 17
-    code = 0
-    k = 0
-    for l in range(1, 17):
-        valptr[l] = k
-        mincode[l] = code
-        code += bits[l - 1]
-        k += bits[l - 1]
-        maxcode[l] = code - 1 if bits[l - 1] else -1
-        code <<= 1
-    if k != len(values):
-        raise ValueError(f"DHT declares {k} codes but carries {len(values)} values")
-    return mincode, maxcode, valptr, values
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded JPEG data: un-stuffs
-    0xFF00, and surfaces restart markers only at the explicit
-    :meth:`restart` boundary (any other mid-scan marker is an error)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self.p = pos
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> None:
-        if self.p >= len(self.d):
-            raise ValueError("truncated JPEG entropy stream")
-        b = self.d[self.p]
-        if b == 0xFF:
-            nxt = self.d[self.p + 1] if self.p + 1 < len(self.d) else None
-            if nxt != 0x00:
-                raise ValueError(
-                    f"marker 0xFF{nxt:02X} inside entropy data" if nxt is not None
-                    else "truncated JPEG entropy stream"
-                )
-            self.p += 1  # stuffed zero
-        self.p += 1
-        self.acc = (self.acc << 8) | b
-        self.n += 8
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            self._fill()
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def restart(self, expect: int) -> None:
-        """Byte-align and consume the RSTn marker (T.81 §F.2.1.3.1)."""
-        self.acc = 0
-        self.n = 0
-        if self.p + 1 >= len(self.d) or self.d[self.p] != 0xFF or self.d[self.p + 1] != 0xD0 + expect:
-            got = bytes(self.d[self.p : self.p + 2])
-            raise ValueError(f"expected RST{expect} marker, found {got!r}")
-        self.p += 2
-
-
-def _huff_decode(rd: "_JpegBitReader", table) -> int:
-    mincode, maxcode, valptr, values = table
-    code = 0
-    for l in range(1, 17):
-        code = (code << 1) | rd.read_bit()
-        if maxcode[l] >= 0 and code <= maxcode[l]:
-            return values[valptr[l] + code - mincode[l]]
-    raise ValueError("invalid Huffman code in JPEG entropy stream")
-
-
-def _extend(v: int, t: int) -> int:
-    """Sign-extend a t-bit magnitude (T.81 §F.2.2.1 EXTEND)."""
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
-def _decode_jpeg(payload: bytes, color_transform: "str | None" = None) -> "np.ndarray":
-    """Huffman JPEG decode — baseline/extended sequential (SOF0/SOF1,
-    single- or multi-scan) AND progressive (SOF2) — with stdlib + numpy,
-    no PIL. Closes the remaining raster gap from VERDICT r4 ('a real
-    crawl's images aren't netpbm'): the marker walk, DQT/DHT tables,
-    Huffman entropy decode with restart markers over per-component
-    coefficient grids that successive SOS scans fill in (T.81 §G
-    spectral selection + successive approximation for progressive),
-    dequantize + batched orthonormal IDCT (one einsum over every block),
-    nearest-neighbor chroma upsampling, and JFIF YCbCr→RGB. Grayscale →
-    (h, w); 3-component YCbCr → (h, w, 3); 8-bit frames decode to uint8
-    and 12-bit extended-sequential/progressive frames (SOF1/SOF2,
-    level shift 2048) to uint16 in [0, 4095]; Adobe 4-component
-    CMYK/YCCK (APP14 transform honored, inverted-channel convention)
-    composes to RGB. Arithmetic coding and
-    hierarchical/lossless frames stay behind
-    the NotImplementedError gate — and, like the PNG Paeth loop, the
-    per-block Python entropy loop is for feature extraction and
-    thumbnails; codec-speed decode at crawl scale belongs in a real
-    codec stage."""
-    import struct
-
-    qt: dict[int, "np.ndarray"] = {}
-    huff: dict[tuple[int, int], tuple] = {}  # (class 0=DC/1=AC, id) -> tables
-    sof = None
-    progressive = False
-    coefs: "dict[int, np.ndarray] | None" = None
-    scans = 0
-    restart_interval = 0
-    adobe = None  # APP14 transform flag; also marks Adobe-inverted CMYK
-    pos = 2
-    n = len(payload)
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at byte {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD8:  # stray SOI
-            pos += 2
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        if pos + 4 > n:
-            raise ValueError("truncated JPEG stream")
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        seg = bytes(payload[pos + 4 : pos + 2 + seglen])
-        if marker == 0xDB:  # DQT: one or more (precision|id, 64 values) runs
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                if pq == 0:
-                    qt[tq] = np.frombuffer(seg[i + 1 : i + 65], dtype="u1").astype("int32")
-                    i += 65
-                else:
-                    qt[tq] = np.frombuffer(seg[i + 1 : i + 129], dtype=">u2").astype("int32")
-                    i += 129
-                if qt[tq].size != 64:
-                    raise ValueError("truncated DQT segment")
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 sequential, SOF2 progressive
-            progressive = marker == 0xC2
-            prec, h, w, nf = struct.unpack_from(">BHHB", seg, 0)
-            if prec not in (8, 12) or (prec == 12 and marker == 0xC0):
-                raise NotImplementedError(
-                    f"JPEG precision {prec}: 8-bit, or 12-bit under "
-                    "extended-sequential/progressive frames, decodes"
-                )
-            if h == 0 or w == 0:
-                raise NotImplementedError("JPEG with DNL-deferred height")
-            comps = []
-            for ci in range(nf):
-                cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * ci)
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            sof = (h, w, comps, prec)
-            # per-component coefficient grids over the padded MCU tiling;
-            # every scan (sequential or progressive) deposits into these
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mx_n = -(-w // (8 * hmax))
-            my_n = -(-h // (8 * vmax))
-            coefs = {
-                c["id"]: np.zeros((my_n * c["v"], mx_n * c["h"], 64), dtype="int32")
-                for c in comps
-            }
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG SOF marker 0xFF{marker:02X}: only sequential/progressive "
-                "Huffman (SOF0/SOF1/SOF2) decodes"
-            )
-        elif marker == 0xC4:  # DHT: one or more tables per segment
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                bits = list(seg[i + 1 : i + 17])
-                nvals = sum(bits)
-                huff[(tc, th)] = _huff_decode_tables(bits, seg[i + 17 : i + 17 + nvals])
-                i += 17 + nvals
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:  # SOS: scan header, then entropy data
-            if sof is None or coefs is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = seg[0]
-            scan = []
-            for si in range(ns):
-                cs, tdta = seg[1 + 2 * si], seg[2 + 2 * si]
-                comp = next(c for c in sof[2] if c["id"] == cs)
-                scan.append((comp, tdta >> 4, tdta & 15))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-            rd = _JpegBitReader(payload, pos + 2 + seglen)
-            if progressive:
-                _jpeg_progressive_scan(
-                    rd, sof, scan, ss, se, ah, al, huff, coefs, restart_interval
-                )
-            else:
-                if (ss, se, ah, al) != (0, 63, 0, 0):
-                    raise ValueError(
-                        "sequential JPEG scan must cover Ss=0..Se=63 with Ah=Al=0"
-                    )
-                _jpeg_sequential_scan(rd, sof, scan, huff, coefs, restart_interval)
-            scans += 1
-            # resync past padding/stuffing/stray RSTn to the next true marker
-            pos = rd.p
-            while pos + 1 < n and not (
-                payload[pos] == 0xFF
-                and payload[pos + 1] != 0x00
-                and not 0xD0 <= payload[pos + 1] <= 0xD7
-            ):
-                pos += 1
-            continue
-        elif marker == 0xEE and seg[:5] == b"Adobe":
-            adobe = seg[11]  # APP14 color-transform flag (0/1/2)
-            pos += 2 + seglen
-            continue
-        # APPn / COM / anything else: skip via the declared length
-        pos += 2 + seglen
-    if scans == 0:
-        raise ValueError("JPEG ended without an SOS scan")
-    if color_transform == "rgb":
-        # caller (JPEG-in-TIFF photometric 2) asserts the components are
-        # already RGB — same meaning as an Adobe APP14 transform-0 flag
-        adobe = 0
-    elif color_transform == "ycbcr":
-        adobe = None
-    elif color_transform is not None:
-        raise ValueError(f"unknown color_transform {color_transform!r}")
-    return _jpeg_reconstruct(sof, qt, coefs, adobe)
-
-
-def _jpeg_scan_units(sof, scan):
-    """Data-unit coordinates in scan order, one list per restart unit
-    (T.81 §A.2): an interleaved scan walks MCUs over the global grid
-    with each component contributing h×v blocks; a single-component scan
-    is non-interleaved and walks that component's own ceil(cw/8) ×
-    ceil(ch/8) block grid one block per unit (padded MCU-grid blocks
-    outside it are never entropy-coded)."""
-    h, w, comps = sof[0], sof[1], sof[2]  # encoder passes a 3-tuple
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if len(scan) == 1:
-        comp, td, ta = scan[0]
-        bx_n = -(-(-(-w * comp["h"] // hmax)) // 8)
-        by_n = -(-(-(-h * comp["v"] // vmax)) // 8)
-        for by in range(by_n):
-            for bx in range(bx_n):
-                yield [(comp, td, ta, by, bx)]
-    else:
-        mcus_x = -(-w // (8 * hmax))
-        mcus_y = -(-h // (8 * vmax))
-        for m in range(mcus_x * mcus_y):
-            my, mx = divmod(m, mcus_x)
-            units = []
-            for comp, td, ta in scan:
-                for b in range(comp["v"] * comp["h"]):
-                    v, hh = divmod(b, comp["h"])
-                    units.append(
-                        (comp, td, ta, my * comp["v"] + v, mx * comp["h"] + hh)
-                    )
-            yield units
-
-
-def _jpeg_sequential_scan(rd, sof, scan, huff, coefs, restart_interval):
-    """One sequential scan (full DC+AC per block) into the coefficient
-    grids — interleaved or, with a single component, non-interleaved, so
-    baseline files written as three separate scans decode too."""
-    pred = {c["id"]: 0 for c, _, _ in scan}
-    rst = 0
-    for m, units in enumerate(_jpeg_scan_units(sof, scan)):
-        if restart_interval and m and m % restart_interval == 0:
-            rd.restart(rst)
-            rst = (rst + 1) & 7
-            pred = dict.fromkeys(pred, 0)
-        for comp, td, ta, by, bx in units:
-            dc_tab = huff.get((0, td))
-            ac_tab = huff.get((1, ta))
-            if dc_tab is None or ac_tab is None:
-                raise ValueError("JPEG scan references an undefined Huffman table")
-            zz = coefs[comp["id"]][by, bx]
-            t = _huff_decode(rd, dc_tab)
-            pred[comp["id"]] += _extend(rd.receive(t), t)
-            zz[0] = pred[comp["id"]]
-            k = 1
-            while k < 64:
-                rs = _huff_decode(rd, ac_tab)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r != 15:  # EOB
-                        break
-                    k += 16  # ZRL: sixteen zeros
-                    continue
-                k += r
-                if k > 63:
-                    raise ValueError("JPEG AC run past the end of the block")
-                zz[k] = _extend(rd.receive(s), s)
-                k += 1
-
-
-def _jpeg_progressive_scan(rd, sof, scan, ss, se, ah, al, huff, coefs, restart_interval):
-    """One progressive (SOF2) scan into the coefficient grids — the four
-    T.81 §G.2 scan kinds: DC first (diff-coded, scaled by 2^Al, may be
-    interleaved), DC refinement (one raw bit per block), AC first (band
-    Ss..Se of ONE component, with EOBn end-of-band run lengths), and AC
-    refinement (newly-significant ±2^Al coefficients interleaved with
-    one correction bit per already-nonzero coefficient passed, EOB runs
-    still consuming the correction bits). The refinement control flow
-    follows the §G.1.2.3 flowcharts; two's-complement & / | on Python
-    ints implement the sign-magnitude bit tests exactly."""
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        pred = {c["id"]: 0 for c, _, _ in scan}
-        rst = 0
-        for m, units in enumerate(_jpeg_scan_units(sof, scan)):
-            if restart_interval and m and m % restart_interval == 0:
-                rd.restart(rst)
-                rst = (rst + 1) & 7
-                pred = dict.fromkeys(pred, 0)
-            for comp, td, ta, by, bx in units:
-                zz = coefs[comp["id"]][by, bx]
-                if ah == 0:  # first scan: diff-coded like sequential, << Al
-                    dc_tab = huff.get((0, td))
-                    if dc_tab is None:
-                        raise ValueError(
-                            "JPEG scan references an undefined Huffman table"
-                        )
-                    t = _huff_decode(rd, dc_tab)
-                    pred[comp["id"]] += _extend(rd.receive(t), t)
-                    zz[0] = pred[comp["id"]] << al
-                elif rd.read_bit():  # refinement: append one magnitude bit
-                    zz[0] = int(zz[0]) | (1 << al)
-        return
-    # AC scan: single component only (T.81 §G.1.1.1.1)
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    if not ss <= se <= 63:
-        raise ValueError(f"invalid spectral band {ss}..{se}")
-    comp, td, ta = scan[0]
-    ac_tab = huff.get((1, ta))
-    if ac_tab is None:
-        raise ValueError("JPEG scan references an undefined Huffman table")
-    p1, m1 = 1 << al, -1 << al
-    eobrun = 0
-    rst = 0
-    for m, units in enumerate(_jpeg_scan_units(sof, scan)):
-        if restart_interval and m and m % restart_interval == 0:
-            rd.restart(rst)
-            rst = (rst + 1) & 7
-            eobrun = 0
-        ((_, _, _, by, bx),) = units
-        zz = coefs[comp["id"]][by, bx]
-        if ah == 0:  # first scan of this band
-            if eobrun:
-                eobrun -= 1
-                continue
-            k = ss
-            while k <= se:
-                rs = _huff_decode(rd, ac_tab)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r == 15:
-                        k += 16  # ZRL
-                        continue
-                    eobrun = (1 << r) - 1  # EOBn covers this block too
-                    if r:
-                        eobrun += rd.receive(r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("JPEG AC run past the end of the band")
-                zz[k] = _extend(rd.receive(s), s) << al
-                k += 1
-            continue
-        # refinement scan
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                rs = _huff_decode(rd, ac_tab)
-                r, s = rs >> 4, rs & 15
-                newval = 0
-                if s == 0:
-                    if r != 15:
-                        eobrun = 1 << r
-                        if r:
-                            eobrun += rd.receive(r)
-                        break  # current block finishes in the correction pass
-                    # else ZRL: run of 16 zero-history coefficients
-                elif s == 1:
-                    newval = p1 if rd.read_bit() else m1
-                else:
-                    raise ValueError("AC refinement magnitude must be 1")
-                # advance over r zero-history coefficients, reading one
-                # correction bit per nonzero-history coefficient passed
-                while k <= se:
-                    c = int(zz[k])
-                    if c != 0:
-                        if rd.read_bit() and (c & p1) == 0:
-                            zz[k] = c + (p1 if c >= 0 else m1)
-                    else:
-                        if r == 0:
-                            break
-                        r -= 1
-                    k += 1
-                if newval:
-                    if k > se:
-                        raise ValueError("JPEG AC run past the end of the band")
-                    zz[k] = newval
-                k += 1
-        if eobrun:  # EOB run: correction bits for the rest of the band
-            while k <= se:
-                c = int(zz[k])
-                if c != 0 and rd.read_bit() and (c & p1) == 0:
-                    zz[k] = c + (p1 if c >= 0 else m1)
-                k += 1
-            eobrun -= 1
-
-
-def _jpeg_reconstruct(sof, qt, coefs, adobe=None):
-    """Dequantize + IDCT the per-component coefficient grids and compose
-    the image: one einsum over every block, pure-reshape block placement
-    (the grids are already in raster block order), nearest-neighbor
-    chroma upsampling, crop to (h, w), JFIF YCbCr→RGB for 3 components.
-    4 components are Adobe CMYK/YCCK (APP14 transform 2 runs the
-    YCbCr inverse on the first three; Adobe stores CMYK INVERTED, so
-    with APP14 present RGB = stored_cmy × stored_k / maxv) composed
-    down to RGB. The level shift, clip ceiling, and output dtype follow
-    the frame precision: 8-bit → uint8, 12-bit → uint16 in [0, 4095]."""
-    h, w, comps, prec = sof
-    mid = float(1 << (prec - 1))
-    maxv = (1 << prec) - 1
-    dt = "uint16" if prec > 8 else "uint8"
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    a = _dct_basis()
-    planes = {}
-    for comp in comps:
-        cid = comp["id"]
-        q = qt.get(comp["tq"])
-        if q is None:
-            raise ValueError(f"JPEG component {cid} references undefined DQT {comp['tq']}")
-        grid = coefs[cid]
-        bh, bw = grid.shape[:2]
-        zz = grid.reshape(-1, 64)
-        nat = np.zeros_like(zz)
-        nat[:, _ZIGZAG] = zz * q  # dequantize + de-zigzag in one scatter
-        blocks = np.einsum("ux,nuv,vy->nxy", a, nat.reshape(-1, 8, 8).astype("float64"), a)
-        plane = blocks.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-        # nearest-neighbor upsample to full resolution, then crop the pad
-        plane = np.repeat(
-            np.repeat(plane, vmax // comp["v"], axis=0), hmax // comp["h"], axis=1
-        )
-        planes[cid] = plane[:h, :w] + mid
-    if len(comps) == 1:
-        return np.clip(np.round(planes[comps[0]["id"]]), 0, maxv).astype(dt)
-    if len(comps) == 4:
-        c1, c2, c3, c4 = (planes[c["id"]] for c in comps)
-        if adobe == 2:  # YCCK: YCbCr inverse recovers the stored CMY
-            y_, cb_, cr_ = c1, c2, c3
-            c1 = y_ + 1.402 * (cr_ - mid)
-            c2 = y_ - 0.344136 * (cb_ - mid) - 0.714136 * (cr_ - mid)
-            c3 = y_ + 1.772 * (cb_ - mid)
-        sc = np.clip(np.stack([c1, c2, c3], axis=-1), 0, maxv)
-        sk = np.clip(c4, 0, maxv)[:, :, None]
-        if adobe is None:
-            sc, sk = maxv - sc, maxv - sk  # plain (non-inverted) CMYK
-        rgb = sc * sk / float(maxv)  # R = (maxv−C)(maxv−K)/maxv
-        return np.clip(np.round(rgb), 0, maxv).astype(dt)
-    if len(comps) != 3:
-        raise NotImplementedError(f"{len(comps)}-component JPEG needs a codec")
-    if adobe == 0:  # APP14 transform 0 with 3 channels: plain RGB, no YCbCr
-        rgb = np.stack([planes[c["id"]] for c in comps], axis=-1)
-        return np.clip(np.round(rgb), 0, maxv).astype(dt)
-    y, cb, cr = (planes[c["id"]] for c in comps)
-    r = y + 1.402 * (cr - mid)
-    g = y - 0.344136 * (cb - mid) - 0.714136 * (cr - mid)
-    b = y + 1.772 * (cb - mid)
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, maxv).astype(dt)
-
-
-# Typical Huffman tables from the public T.81 spec Annex K — used only by
-# the test ENCODER below; the decoder always builds its tables from the
-# file's own DHT segments.
-_K_DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0], bytes(range(12)))
-_K_DC_CHROMA = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0], bytes(range(12)))
-_K_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    bytes([
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-        0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-        0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-        0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-        0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-        0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-        0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-        0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-        0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-        0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-        0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-        0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-        0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-        0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-        0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-        0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-        0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-        0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-        0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-        0xF9, 0xFA,
-    ]),
-)
-_K_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    bytes([
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-        0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-        0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-        0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-        0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-        0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-        0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-        0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-        0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-        0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-        0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-        0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-        0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-        0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-        0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-        0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-        0xF9, 0xFA,
-    ]),
-)
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer with 0xFF byte stuffing; pads the final
-    partial byte with 1-bits (T.81 §F.1.2.3)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-
-    def flush(self) -> None:
-        if self.n:
-            self.write((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
-def _huff_encode_map(bits: list[int], values: bytes) -> dict[int, tuple[int, int]]:
-    """value -> (code, length) under the canonical assignment — the exact
-    inverse of :func:`_huff_decode_tables`."""
-    out = {}
-    code = 0
-    k = 0
-    for l in range(1, 17):
-        for _ in range(bits[l - 1]):
-            out[values[k]] = (code, l)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _jpeg_plan(
-    arr: "np.ndarray", quant: int, subsample: tuple[int, int],
-    adobe: "int | None" = None, rgb_direct: bool = False,
-):
-    """Shared front half of the test encoders: color transform, optional
-    4:2:0 box-average, pad to the MCU grid, forward DCT + uniform
-    quantization. Returns (color, h, w, planes_meta [(cid, h, v)],
-    blocks_zz {cid: (n_padded_blocks, 64) int64 zigzag}, mcus_x, mcus_y,
-    q, prec) — blocks are raster-ordered over the padded grid with row
-    stride mcus_x * h_i. A uint16 input (values < 4096) builds a 12-bit
-    frame: level shift 2048, same pipeline."""
-    arr = np.asarray(arr)
-    if arr.dtype not in (np.dtype("uint8"), np.dtype("uint16")):
-        raise ValueError(f"expected uint8/uint16, got {arr.dtype}")
-    prec = 12 if arr.dtype == np.dtype("uint16") else 8
-    if prec == 12 and int(arr.max(initial=0)) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    mid = float(1 << (prec - 1))
-    color = arr.ndim == 3
-    cmyk = color and arr.shape[2] == 4
-    if cmyk:
-        if adobe not in (0, 2):
-            raise ValueError("4-channel input needs adobe_transform 0 (CMYK) or 2 (YCCK)")
-        if prec != 8 or subsample != (1, 1):
-            raise ValueError("CMYK encoding: 8-bit, no subsampling")
-    elif adobe is not None:
-        raise ValueError("adobe_transform needs a (h, w, 4) CMYK input")
-    if color and not cmyk and arr.shape[2] != 3:
-        raise ValueError(f"expected (h,w), (h,w,3) or (h,w,4), got {arr.shape}")
-    sh, sv = subsample if color else (1, 1)
-    if (sh, sv) not in ((1, 1), (2, 2)):
-        raise ValueError("subsample must be (1,1) or (2,2)")
-    h, w = arr.shape[:2]
-    mcus_x = -(-w // (8 * sh))
-    mcus_y = -(-h // (8 * sv))
-    q = np.full(64, int(quant), dtype="int32")  # zigzag order (uniform: same)
-
-    if cmyk:
-        # Adobe stores CMYK inverted; YCCK (transform 2) additionally
-        # runs the forward YCbCr on the inverted CMY channels
-        s = 255.0 - arr.astype("float64")
-        if adobe == 2:
-            y = 0.299 * s[:, :, 0] + 0.587 * s[:, :, 1] + 0.114 * s[:, :, 2]
-            cb = -0.168736 * s[:, :, 0] - 0.331264 * s[:, :, 1] + 0.5 * s[:, :, 2] + mid
-            cr = 0.5 * s[:, :, 0] - 0.418688 * s[:, :, 1] - 0.081312 * s[:, :, 2] + mid
-            chans = [y, cb, cr, s[:, :, 3]]
-        else:
-            chans = [s[:, :, i] for i in range(4)]
-        planes = [(i + 1, chans[i], 1, 1) for i in range(4)]
-    elif color and rgb_direct:
-        # store R/G/B as components 1/2/3 with no color transform — the
-        # JPEG-in-TIFF photometric-2 form (TIFF 6.0 §22 / TechNote 2)
-        if subsample != (1, 1):
-            raise ValueError("rgb_direct stores full-resolution components")
-        f = arr.astype("float64")
-        planes = [(i + 1, f[:, :, i], 1, 1) for i in range(3)]
-    elif color:
-        f = arr.astype("float64")
-        y = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-        cb = -0.168736 * f[:, :, 0] - 0.331264 * f[:, :, 1] + 0.5 * f[:, :, 2] + mid
-        cr = 0.5 * f[:, :, 0] - 0.418688 * f[:, :, 1] - 0.081312 * f[:, :, 2] + mid
-        if (sh, sv) == (2, 2):
-            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
-            cbp = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-            crp = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-            cb = cbp.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            cr = crp.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        planes = [(1, y, sh, sv), (2, cb, 1, 1), (3, cr, 1, 1)]
-    else:
-        planes = [(1, arr.astype("float64"), 1, 1)]
-
-    a = _dct_basis()
-    q_nat = np.empty(64, dtype="int64")
-    q_nat[_ZIGZAG] = q  # DQT is stored zigzag; quantization runs in natural order
-    blocks_zz = {}
-    for cid, plane, ch_, cv in planes:
-        th, tw = mcus_y * cv * 8, mcus_x * ch_ * 8
-        padded = np.pad(
-            plane, ((0, th - plane.shape[0]), (0, tw - plane.shape[1])), mode="edge"
-        ) - mid
-        tiles = padded.reshape(th // 8, 8, tw // 8, 8).transpose(0, 2, 1, 3)
-        s = np.einsum("ux,nxy,vy->nuv", a, tiles.reshape(-1, 8, 8), a)
-        nat = np.round(s.reshape(-1, 64) / q_nat).astype("int64")
-        blocks_zz[cid] = nat[:, _ZIGZAG]
-    return (
-        color, h, w, [(cid, ch_, cv) for cid, _, ch_, cv in planes],
-        blocks_zz, mcus_x, mcus_y, q, prec,
-    )
-
-
-def _jpeg_headers(
-    sof_marker: int,
-    h: int,
-    w: int,
-    planes_meta,
-    q: "np.ndarray",
-    color: bool,
-    dht_list,
-    restart_interval: int,
-    prec: int = 8,
-) -> bytearray:
-    """SOI + DQT(+chroma) + SOFn + DHTs (+DRI): the marker preamble both
-    test encoders share; scans are appended by the caller."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + q.astype("u1").tobytes())
-    if color:
-        out += seg(0xDB, bytes([0x01]) + q.astype("u1").tobytes())
-    comps = b""
-    for cid, ch_, cv in planes_meta:
-        comps += bytes([cid, (ch_ << 4) | cv, 0 if cid == 1 else 1])
-    out += seg(sof_marker, struct.pack(">BHHB", prec, h, w, len(planes_meta)) + comps)
-    for tc, th_, (bits, vals) in dht_list:
-        out += seg(0xC4, bytes([(tc << 4) | th_] + bits) + vals)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    return out
-
-
-def encode_jpeg(
-    arr: "np.ndarray",
-    quant: int = 1,
-    subsample: tuple[int, int] = (1, 1),
-    restart_interval: int = 0,
-    interleave: bool = True,
-    adobe_transform: "int | None" = None,
-    rgb_direct: bool = False,
-) -> bytes:
-    """Minimal baseline-JPEG encoder for round-trip tests: 8-bit gray or
-    RGB, uniform quantization step ``quant`` (1 = near-lossless — flat
-    blocks round-trip exactly), optional ``subsample=(2, 2)`` 4:2:0
-    chroma (box-averaged), optional DRI/RSTn restart markers, Annex K
-    typical Huffman tables. ``interleave=False`` writes one scan per
-    component (the non-interleaved multi-scan form some encoders emit
-    for 4:4:4) instead of one interleaved scan. Like
-    :func:`encode_png`/:func:`encode_bmp`, this is the deterministic
-    spec-literal replica the decoder is tested against — not a
-    production encoder. A (h, w, 4) input with ``adobe_transform`` 0
-    (CMYK) or 2 (YCCK) writes the Adobe four-component form — inverted
-    channels + APP14 marker — real print-origin documents carry."""
-    import struct
-
-    color, h, w, pmeta, blocks_zz, mcus_x, mcus_y, q, prec = _jpeg_plan(
-        arr, quant, subsample, adobe_transform, rgb_direct
-    )
-    sof_like = (h, w, [{"id": cid, "h": ch_, "v": cv} for cid, ch_, cv in pmeta])
-    comp_of = {c["id"]: c for c in sof_like[2]}
-    tiles_x = {cid: mcus_x * ch_ for cid, ch_, _ in pmeta}
-    if prec == 12:
-        dc_tabs = {1: _K12_DC, 2: _K12_DC}
-        ac_tabs = {1: _K12_AC, 2: _K12_AC}
-    else:
-        dc_tabs = {1: _K_DC_LUMA, 2: _K_DC_CHROMA}
-        ac_tabs = {1: _K_AC_LUMA, 2: _K_AC_CHROMA}
-    dc_maps = {k: _huff_encode_map(*t) for k, t in dc_tabs.items()}
-    ac_maps = {k: _huff_encode_map(*t) for k, t in ac_tabs.items()}
-    cids = [cid for cid, *_ in pmeta]
-
-    dht = [(0, 0, dc_tabs[1]), (1, 0, ac_tabs[1])] + (
-        [(0, 1, dc_tabs[2]), (1, 1, ac_tabs[2])] if color else []
-    )
-    out = _jpeg_headers(0xC1 if prec == 12 else 0xC0, h, w, pmeta, q, color,
-                        dht, restart_interval, prec)
-    if adobe_transform is not None:
-        body = b"Adobe" + bytes([0, 100, 0, 0, 0, 0, adobe_transform])
-        out += bytes([0xFF, 0xEE]) + struct.pack(">H", len(body) + 2) + body
-
-    for scan_cids in [cids] if interleave else [[cid] for cid in cids]:
-        scan = [
-            (comp_of[cid], 0 if cid == 1 else 1, 0 if cid == 1 else 1)
-            for cid in scan_cids
-        ]
-        sos = bytes([len(scan)])
-        for comp, td, ta in scan:
-            sos += bytes([comp["id"], (td << 4) | ta])
-        out += bytes([0xFF, 0xDA]) + struct.pack(">H", len(sos) + 5) + sos + b"\x00\x3f\x00"
-        wtr = _JpegBitWriter()
-        pred = {cid: 0 for cid in scan_cids}
-        rst = 0
-        for m, units in enumerate(_jpeg_scan_units(sof_like, scan)):
-            if restart_interval and m and m % restart_interval == 0:
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) & 7
-                pred = dict.fromkeys(pred, 0)
-            for comp, td, ta, by, bx in units:
-                cid = comp["id"]
-                dc_map, ac_map = dc_maps[td + 1], ac_maps[ta + 1]
-                zz = blocks_zz[cid][by * tiles_x[cid] + bx]
-                diff = int(zz[0]) - pred[cid]
-                pred[cid] = int(zz[0])
-                s = abs(diff).bit_length()
-                code, length = dc_map[s]
-                wtr.write(code, length)
-                if s:
-                    wtr.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-                k = 1
-                run = 0
-                last_nz = max(np.nonzero(zz)[0], default=0)
-                while k <= last_nz:
-                    if zz[k] == 0:
-                        run += 1
-                        k += 1
-                        continue
-                    while run >= 16:
-                        c, ln = ac_map[0xF0]  # ZRL
-                        wtr.write(c, ln)
-                        run -= 16
-                    val = int(zz[k])
-                    s = abs(val).bit_length()
-                    c, ln = ac_map[(run << 4) | s]
-                    wtr.write(c, ln)
-                    wtr.write(val if val >= 0 else val + (1 << s) - 1, s)
-                    run = 0
-                    k += 1
-                if last_nz < 63:
-                    c, ln = ac_map[0x00]  # EOB
-                    wtr.write(c, ln)
-        wtr.flush()
-        out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# AC table for the progressive test encoder: every (run, size) symbol a
-# progressive scan can emit — EOBn (n 0..14), ZRL, and (r, s≤13) — as a
-# flat 8-bit canonical code (224 codes < 255, so the all-ones code stays
-# reserved per T.81 §C.2). The Annex K tables can't serve here: they
-# carry only EOB0/ZRL of the s=0 column, and progressive EOB runs need
-# the full EOBn family.
-_PROG_AC_SYMS = bytes(
-    sorted(
-        {n << 4 for n in range(15)}
-        | {0xF0}
-        | {(r << 4) | s for r in range(16) for s in range(1, 14)}
-    )
-)
-_PROG_AC = (
-    [0, 0, 0, 0, 0, 0, 0, len(_PROG_AC_SYMS), 0, 0, 0, 0, 0, 0, 0, 0],
-    _PROG_AC_SYMS,
-)
-
-# 12-bit frames need categories the 8-bit Annex-K tables stop short of
-# (DC to 15, AC size to 15). Simple canonical tables: 16 five-bit DC
-# codes; AC symbols split 128/8-bit + rest/9-bit (Kraft 0.75, all-ones
-# reserved). The decoder always rebuilds from the DHT segment, so only
-# the encoders care which tables these are.
-_K12_DC = ([0, 0, 0, 0, 16] + [0] * 11, bytes(range(16)))
-_K12_AC_SYMS = bytes(
-    sorted({0x00, 0xF0} | {(r << 4) | s for r in range(16) for s in range(1, 16)})
-)
-_K12_AC = (
-    [0, 0, 0, 0, 0, 0, 0, 128, len(_K12_AC_SYMS) - 128, 0, 0, 0, 0, 0, 0, 0],
-    _K12_AC_SYMS,
-)
-_PROG_AC12_SYMS = bytes(
-    sorted(
-        {n << 4 for n in range(15)}
-        | {0xF0}
-        | {(r << 4) | s for r in range(16) for s in range(1, 16)}
-    )
-)
-_PROG_AC12 = (
-    [0, 0, 0, 0, 0, 0, 0, 128, len(_PROG_AC12_SYMS) - 128, 0, 0, 0, 0, 0, 0, 0],
-    _PROG_AC12_SYMS,
-)
-
-
-def _emit_eobrun(wtr: "_JpegBitWriter", ac_map, state: list) -> None:
-    """Flush the pending end-of-band run: EOBn code (n = bit length − 1,
-    low bits appended) followed by the correction bits buffered while the
-    run accumulated. ``state`` is the mutable [eobrun, bits] pair."""
-    if state[0] > 0:
-        nbits = state[0].bit_length() - 1
-        code, ln = ac_map[nbits << 4]
-        wtr.write(code, ln)
-        if nbits:
-            wtr.write(state[0] & ((1 << nbits) - 1), nbits)
-    for b in state[1]:
-        wtr.write(b, 1)
-    state[0] = 0
-    state[1] = []
-
-
-def _emit_ac_first(wtr, ac_map, zz, ss, se, al, state) -> None:
-    """Encode one block's band for an AC first scan (T.81 §G.1.2.2):
-    point-transformed magnitudes, ZRL for 16+ zero runs, all-zero bands
-    folded into the lazily-emitted EOB run."""
-    r = 0
-    for k in range(ss, se + 1):
-        t = int(zz[k])
-        if t >= 0:
-            t >>= al
-            t2 = t
-        else:
-            t = (-t) >> al
-            t2 = ~t  # one's complement carries the sign, as _extend expects
-        if t == 0:
-            r += 1
-            continue
-        if state[0] > 0:
-            _emit_eobrun(wtr, ac_map, state)
-        while r > 15:
-            c, ln = ac_map[0xF0]
-            wtr.write(c, ln)
-            r -= 16
-        s = t.bit_length()
-        c, ln = ac_map[(r << 4) | s]
-        wtr.write(c, ln)
-        wtr.write(t2 & ((1 << s) - 1), s)
-        r = 0
-    if r > 0:
-        state[0] += 1
-        if state[0] == 0x7FFF:
-            _emit_eobrun(wtr, ac_map, state)
-
-
-def _emit_ac_refine(wtr, ac_map, zz, ss, se, al, state) -> None:
-    """Encode one block's band for an AC refinement scan (T.81 §G.1.2.3):
-    newly-significant coefficients (|coef| >> Al == 1) as (run, 1) + sign
-    bit; already-nonzero coefficients contribute one buffered correction
-    bit each, emitted after the next symbol (or with the EOB run) so the
-    decoder reads them positionally."""
-    absvals = [0] * (se + 1)
-    eob = ss - 1  # position of the last newly-significant coefficient
-    for k in range(ss, se + 1):
-        t = abs(int(zz[k])) >> al
-        absvals[k] = t
-        if t == 1:
-            eob = k
-    r = 0
-    br: list = []
-    for k in range(ss, se + 1):
-        t = absvals[k]
-        if t == 0:
-            r += 1
-            continue
-        while r > 15 and k <= eob:  # ZRLs not foldable into the EOB run
-            _emit_eobrun(wtr, ac_map, state)
-            c, ln = ac_map[0xF0]
-            wtr.write(c, ln)
-            r -= 16
-            for b in br:
-                wtr.write(b, 1)
-            br = []
-        if t > 1:  # already nonzero: one correction bit, run unaffected
-            br.append(t & 1)
-            continue
-        _emit_eobrun(wtr, ac_map, state)
-        c, ln = ac_map[(r << 4) | 1]
-        wtr.write(c, ln)
-        wtr.write(1 if int(zz[k]) > 0 else 0, 1)
-        for b in br:
-            wtr.write(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        state[0] += 1
-        state[1].extend(br)
-        if state[0] == 0x7FFF or len(state[1]) > 900:
-            _emit_eobrun(wtr, ac_map, state)
-
-
-def encode_jpeg_progressive(
-    arr: "np.ndarray",
-    quant: int = 1,
-    subsample: tuple[int, int] = (1, 1),
-    restart_interval: int = 0,
-) -> bytes:
-    """Minimal progressive-JPEG (SOF2) encoder for round-trip tests:
-    spectral selection (interleaved DC scan, then per-component AC bands
-    1–5 and 6–63) with one round of successive approximation (Al=1
-    first scans, then the Al=0 refinements), so every progressive decode
-    path — DC first/refine, AC first/refine, EOBn run lengths, buffered
-    correction bits — is exercised. Annex K DC tables + the flat
-    ``_PROG_AC`` table. Quantizes exactly like :func:`encode_jpeg`, so
-    the two encodings of one image decode bit-identically — the parity
-    the tests pin."""
-    import struct
-
-    color, h, w, pmeta, blocks_zz, mcus_x, mcus_y, q, prec = _jpeg_plan(arr, quant, subsample)
-    sof_like = (h, w, [{"id": cid, "h": ch_, "v": cv} for cid, ch_, cv in pmeta])
-    comp_of = {c["id"]: c for c in sof_like[2]}
-    tiles_x = {cid: mcus_x * ch_ for cid, ch_, _ in pmeta}
-    dc_luma, dc_chroma = (_K12_DC, _K12_DC) if prec == 12 else (_K_DC_LUMA, _K_DC_CHROMA)
-    prog_ac = _PROG_AC12 if prec == 12 else _PROG_AC
-    dc_maps = {
-        cid: _huff_encode_map(*(dc_luma if cid == 1 else dc_chroma))
-        for cid, *_ in pmeta
-    }
-    ac_map = _huff_encode_map(*prog_ac)
-    cids = [cid for cid, *_ in pmeta]
-
-    # cjpeg-style simple script: DC first, AC bands coarse, refine AC, refine DC
-    script = (
-        [(cids, 0, 0, 0, 1)]
-        + [([cid], 1, 5, 0, 1) for cid in cids]
-        + [([cid], 6, 63, 0, 1) for cid in cids]
-        + [([cid], 1, 5, 1, 0) for cid in cids]
-        + [([cid], 6, 63, 1, 0) for cid in cids]
-        + [(cids, 0, 0, 1, 0)]
-    )
-
-    dht = [(0, 0, dc_luma), (1, 0, prog_ac)] + (
-        [(0, 1, dc_chroma)] if color else []
-    )
-    out = _jpeg_headers(0xC2, h, w, pmeta, q, color, dht, restart_interval, prec)
-
-    def block(cid: int, by: int, bx: int):
-        return blocks_zz[cid][by * tiles_x[cid] + bx]
-
-    for scan_cids, ss, se, ah, al in script:
-        scan = [
-            (comp_of[cid], (0 if cid == 1 else 1) if ss == 0 else 0, 0)
-            for cid in scan_cids
-        ]
-        sos = bytes([len(scan)])
-        for comp, td, ta in scan:
-            sos += bytes([comp["id"], (td << 4) | ta])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += bytes([0xFF, 0xDA]) + struct.pack(">H", len(sos) + 2) + sos
-        wtr = _JpegBitWriter()
-        state = [0, []]  # [eobrun, buffered correction bits]
-        pred = {cid: 0 for cid in scan_cids}
-        rst = 0
-        for m, units in enumerate(_jpeg_scan_units(sof_like, scan)):
-            if restart_interval and m and m % restart_interval == 0:
-                _emit_eobrun(wtr, ac_map, state)
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) & 7
-                pred = dict.fromkeys(pred, 0)
-            for comp, td, ta, by, bx in units:
-                cid = comp["id"]
-                zz = block(cid, by, bx)
-                if ss == 0:  # DC scan
-                    t = int(zz[0]) >> al  # arithmetic shift, like the decoder's <<
-                    if ah == 0:
-                        diff = t - pred[cid]
-                        pred[cid] = t
-                        s = abs(diff).bit_length()
-                        c, ln = dc_maps[cid][s]
-                        wtr.write(c, ln)
-                        if s:
-                            wtr.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-                    else:  # refinement: the Al bit, raw
-                        wtr.write(t & 1, 1)
-                elif ah == 0:
-                    _emit_ac_first(wtr, ac_map, zz, ss, se, al, state)
-                else:
-                    _emit_ac_refine(wtr, ac_map, zz, ss, se, al, state)
-        _emit_eobrun(wtr, ac_map, state)
-        wtr.flush()
-        out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _decode_bmp(payload: bytes) -> "np.ndarray":
-    """Uncompressed BMP (BI_RGB) decode: BITMAPFILEHEADER + a DIB header
-    of ≥40 bytes (BITMAPINFOHEADER or its V4/V5 extensions), rows padded
-    to 4-byte multiples, stored bottom-up unless height is negative.
-    8-bit paletted (grayscale palettes collapse to (h, w), color palettes
-    expand to RGB), 24-bit BGR, and 32-bit BGRA (alpha dropped). Strict
-    framing like the PNM path: short pixel arrays raise instead of
-    returning shifted rows. RLE/bitfield compression stays behind the
-    NotImplementedError gate — those genuinely need a codec pass."""
-    import struct
-
-    if len(payload) < 54:
-        raise ValueError("truncated BMP header")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    dib_size = struct.unpack_from("<I", payload, 14)[0]
-    if dib_size < 40:
-        raise NotImplementedError(
-            f"BMP DIB header of {dib_size} bytes (OS/2 core): only "
-            "BITMAPINFOHEADER(40)+ decodes"
-        )
-    w, h_signed = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if compression != 0:
-        raise NotImplementedError(
-            f"BMP compression {compression}: only uncompressed BI_RGB decodes "
-            "without a codec"
-        )
-    if bpp not in (8, 24, 32):
-        raise NotImplementedError(f"BMP bpp {bpp}: only 8/24/32 decode")
-    h = abs(h_signed)
-    if w <= 0 or h == 0:
-        raise ValueError(f"invalid BMP dimensions {w}x{h_signed}")
-    pal = None
-    if bpp == 8:
-        n_colors = struct.unpack_from("<I", payload, 46)[0] or 256
-        pal_off = 14 + dib_size
-        pal = np.frombuffer(
-            payload[pal_off : pal_off + 4 * n_colors], dtype="u1"
-        ).reshape(-1, 4)[:, :3][:, ::-1]  # BGRA entries → RGB
-        if len(pal) < n_colors:
-            raise ValueError("truncated BMP palette")
-    return _dib_to_array(payload[data_off:], w, h_signed, bpp, pal)
-
-
-def _dib_to_array(raster: bytes, w: int, h_signed: int, bpp: int,
-                  pal: "np.ndarray | None") -> "np.ndarray":
-    """DIB raster-to-array kernel of :func:`_decode_bmp`: 4-byte-padded
-    rows, bottom-up unless height is negative, 8-bit palette / 24-bit
-    BGR / 32-bit BGRA.
-    Grayscale palettes collapse to (h, w); strict length framing."""
-    h = abs(h_signed)
-    row_size = ((bpp * w + 31) // 32) * 4
-    need = row_size * h
-    if len(raster) < need:
-        raise ValueError(
-            f"truncated DIB pixel array: {len(raster)} bytes, expected {need}"
-        )
-    rows = np.frombuffer(raster[:need], dtype="u1").reshape(h, row_size)
-    if bpp == 8:
-        if pal is None or len(pal) == 0:
-            raise ValueError("8-bit DIB without a palette")
-        idx = rows[:, :w]
-        arr = pal[idx]  # (h, w, 3)
-        if bool((arr[:, :, 0] == arr[:, :, 1]).all() and (arr[:, :, 1] == arr[:, :, 2]).all()):
-            arr = arr[:, :, 0]  # grayscale palette → (h, w)
-    else:
-        ch = bpp // 8
-        px = rows[:, : w * ch].reshape(h, w, ch)
-        arr = px[:, :, 2::-1]  # BGR(A) → RGB, alpha dropped
-    if h_signed > 0:
-        arr = arr[::-1]  # bottom-up storage → top-down array
-    return np.ascontiguousarray(arr)
-
-
-def encode_bmp(arr: "np.ndarray") -> bytes:
-    """Inverse of the 24-bit branch of :func:`_decode_bmp` — the
-    deterministic fixture builder for round-trip tests. Grayscale input
-    is expanded to RGB (BMP has no 8-bit non-paletted form)."""
-    import struct
-
-    arr = np.asarray(arr, dtype="uint8")
-    if arr.ndim == 2:
-        arr = np.stack([arr] * 3, axis=-1)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError(f"expected (h,w) or (h,w,3), got {arr.shape}")
-    h, w = arr.shape[:2]
-    row_size = ((24 * w + 31) // 32) * 4
-    body = np.zeros((h, row_size), dtype="u1")
-    body[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up, BGR
-    header = struct.pack(
-        "<2sIHHI", b"BM", 14 + 40 + h * row_size, 0, 0, 14 + 40
-    ) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, h * row_size, 2835, 2835, 0, 0
-    )
-    return header + body.tobytes()
-
-
-def encode_pnm(arr: "np.ndarray", binary: bool = True) -> bytes:
-    """Inverse of :func:`decode_image` for PNM — the deterministic fixture
-    builder the tests use (uint8 only)."""
-    arr = np.asarray(arr, dtype="uint8")
-    if arr.ndim == 2:
-        magic = b"P5" if binary else b"P2"
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        magic = b"P6" if binary else b"P3"
-    else:
-        raise ValueError(f"expected (h,w) or (h,w,3), got {arr.shape}")
-    h, w = arr.shape[:2]
-    header = b"%s\n%d %d\n255\n" % (magic, w, h)
-    if binary:
-        return header + arr.tobytes()
-    return header + (" ".join(str(int(v)) for v in arr.reshape(-1)) + "\n").encode()
-
-
-# --- TIFF ------------------------------------------------------------------
-#
-# Baseline TIFF is the remaining scanner/archival format a crawl contains
-# that needs no codec library: the container is an endian-tagged IFD walk
-# (TIFF 6.0 §2), and the two baseline compressions are "none" and
-# PackBits (§9 — a one-page byte RLE, like GIF's LZW pure bookkeeping).
-# LZW/JPEG-in-TIFF/deflate variants stay behind the NotImplementedError
-# gate with the other entropy-coded formats.
-
-
-def _packbits_decode(data: bytes, expected: int) -> bytes:
-    """TIFF PackBits (Apple RLE) decode to exactly ``expected`` bytes.
-    Control byte n: 0..127 → copy n+1 literals; 129..255 → repeat the
-    next byte 257−n times; 128 is a spec no-op. Overrun past ``expected``
-    is framing corruption, same strictness as the PNM/BMP paths."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while len(out) < expected:
-        if i >= n:
-            raise ValueError("truncated PackBits stream")
-        c = data[i]
-        i += 1
-        if c < 128:
-            lit = data[i : i + c + 1]
-            if len(lit) != c + 1:
-                raise ValueError("truncated PackBits literal run")
-            out += lit
-            i += c + 1
-        elif c > 128:
-            if i >= n:
-                raise ValueError("truncated PackBits replicate run")
-            out += data[i : i + 1] * (257 - c)
-            i += 1
-    if len(out) != expected or i != n:
-        raise ValueError(
-            f"PackBits framing: decoded {len(out)}/{expected} bytes, "
-            f"consumed {i}/{n}"
-        )
-    return bytes(out)
-
-
-def _packbits_encode(row: bytes) -> bytes:
-    """Deterministic PackBits encode (per row, per the TIFF spec note):
-    runs of ≥3 identical bytes become replicate records, everything else
-    literal records of ≤128 — the exact inverse under
-    :func:`_packbits_decode`."""
-    out = bytearray()
-    i, n = 0, len(row)
-    while i < n:
-        j = i + 1
-        while j < n and row[j] == row[i] and j - i < 128:
-            j += 1
-        if j - i >= 3:
-            out += bytes((257 - (j - i), row[i]))
-            i = j
-            continue
-        # literal: scan until the next ≥3-run or 128 bytes
-        k = i
-        while k < n and k - i < 128:
-            if k + 2 < n and row[k] == row[k + 1] == row[k + 2]:
-                break
-            k += 1
-        out += bytes((k - i - 1,)) + row[i:k]
-        i = k
-    return bytes(out)
-
-
-_TIFF_LZW_CLEAR, _TIFF_LZW_EOI = 256, 257
-
-
-def _tiff_lzw_decode(data: bytes, expected: "int | None") -> bytes:
-    """TIFF-variant LZW decode (TIFF 6.0 §13) to exactly ``expected``
-    bytes — or, with ``expected=None``, until the EOI code (the PDF
-    LZWDecode framing, which shares this exact variant). Differs from
-    the GIF variant in every framing detail while
-    sharing the table bookkeeping: codes pack MOST-significant-bit
-    first, the alphabet is fixed at 8-bit bytes (Clear=256, EOI=257,
-    first dynamic code 258), and the width bump is one code EARLY —
-    the decoder widens when the next assignment would be code
-    2**width − 1, so 511/1023/2047 are read at the wider width."""
-    width = 9
-    table: list[bytes] = []
-    out = bytearray()
-    prev = None
-    acc = nbits = pos = 0
-    while expected is None or len(out) < expected:
-        while nbits < width:
-            if pos >= len(data):
-                if expected is None:
-                    return bytes(out)  # EOI-less stream: pad bits discarded
-                raise ValueError("TIFF LZW stream ended mid-raster")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == _TIFF_LZW_CLEAR:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            continue
-        if code == _TIFF_LZW_EOI:
-            break
-        if prev is None:
-            if not table:
-                raise ValueError("TIFF LZW stream did not start with Clear")
-            if code > 255:
-                raise ValueError(f"TIFF LZW first code {code} is not a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-        elif code == len(table) < 4096:  # code being defined (cScSc)
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"TIFF LZW code {code} beyond table size {len(table)}")
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1  # early change: one before the GIF schedule
-        out += entry
-        prev = entry
-    if expected is not None and len(out) != expected:
-        raise ValueError(
-            f"TIFF LZW decoded {len(out)} bytes, expected {expected}"
-        )
-    return bytes(out)
-
-
-def _tiff_lzw_encode(raw: bytes) -> bytes:
-    """True LZW compression mirroring :func:`_tiff_lzw_decode`'s MSB
-    packing and early-change width schedule; emits Clear up front and at
-    the spec's 4094-entry table-full point, EOI at the end."""
-    out = bytearray()
-    acc = nbits = 0
-    width = 9
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    def reset() -> "dict[bytes, int]":
-        return {bytes([i]): i for i in range(256)}
-
-    table = reset()
-    next_code = 258
-    emit(_TIFF_LZW_CLEAR)
-    w = b""
-    for k in raw:
-        wk = w + bytes([k])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        table[wk] = next_code
-        next_code += 1
-        # the decoder's table trails by one entry, so its early change
-        # (at 2**w − 1 entries) lands when next_code here reaches 2**w
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        if next_code == 4094:  # spec: Clear before the table fills
-            emit(_TIFF_LZW_CLEAR)
-            table = reset()
-            next_code = 258
-            width = 9
-        w = bytes([k])
-    if w:
-        emit(table[w])
-        next_code += 1
-        if next_code == (1 << width) and width < 12:
-            width += 1  # EOI below must use the width the decoder expects
-    emit(_TIFF_LZW_EOI)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-# --- CCITT fax (T.4 Modified Huffman / T.6 Group 4) ------------------------
-#
-# The compression scanned bilevel TIFFs actually carry. Like GIF/TIFF
-# LZW, this is static-table bookkeeping, not entropy-coder territory:
-# the run-length codes below are transcribed from ITU-T T.4 Tables 2-4
-# (terminating + makeup + shared extended makeup) and the 2-D mode
-# codes from T.6 §2.2.4/T.4 Table 7. Group 3 2-D with EOL framing
-# (TIFF compression 3) stays gated — G4 (4) and byte-aligned MH RLE (2)
-# are what TIFF writers emit.
-
-_FAX_WHITE_TERM = (
-    "00110101 000111 0111 1000 1011 1100 1110 1111 10011 10100 00111 01000"
-    " 001000 000011 110100 110101 101010 101011 0100111 0001100 0001000"
-    " 0010111 0000011 0000100 0101000 0101011 0010011 0100100 0011000"
-    " 00000010 00000011 00011010 00011011 00010010 00010011 00010100"
-    " 00010101 00010110 00010111 00101000 00101001 00101010 00101011"
-    " 00101100 00101101 00000100 00000101 00001010 00001011 01010010"
-    " 01010011 01010100 01010101 00100100 00100101 01011000 01011001"
-    " 01011010 01011011 01001010 01001011 00110010 00110011 00110100"
-).split()
-_FAX_WHITE_MAKEUP = (
-    "11011 10010 010111 0110111 00110110 00110111 01100100 01100101"
-    " 01101000 01100111 011001100 011001101 011010010 011010011 011010100"
-    " 011010101 011010110 011010111 011011000 011011001 011011010"
-    " 011011011 010011000 010011001 010011010 011000 010011011"
-).split()
-_FAX_BLACK_TERM = (
-    "0000110111 010 11 10 011 0011 0010 00011 000101 000100 0000100"
-    " 0000101 0000111 00000100 00000111 000011000 0000010111 0000011000"
-    " 0000001000 00001100111 00001101000 00001101100 00000110111"
-    " 00000101000 00000010111 00000011000 000011001010 000011001011"
-    " 000011001100 000011001101 000001101000 000001101001 000001101010"
-    " 000001101011 000011010010 000011010011 000011010100 000011010101"
-    " 000011010110 000011010111 000001101100 000001101101 000011011010"
-    " 000011011011 000001010100 000001010101 000001010110 000001010111"
-    " 000001100100 000001100101 000001010010 000001010011 000000100100"
-    " 000000110111 000000111000 000000100111 000000101000 000001011000"
-    " 000001011001 000000101011 000000101100 000001011010 000001100110"
-    " 000001100111"
-).split()
-_FAX_BLACK_MAKEUP = (
-    "0000001111 000011001000 000011001001 000001011011 000000110011"
-    " 000000110100 000000110101 0000001101100 0000001101101 0000001001010"
-    " 0000001001011 0000001001100 0000001001101 0000001110010 0000001110011"
-    " 0000001110100 0000001110101 0000001110110 0000001110111 0000001010010"
-    " 0000001010011 0000001010100 0000001010101 0000001011010 0000001011011"
-    " 0000001100100 0000001100101"
-).split()
-_FAX_EXT_MAKEUP = (  # 1792..2560, shared by both colors
-    "00000001000 00000001100 00000001101 000000010010 000000010011"
-    " 000000010100 000000010101 000000010110 000000010111 000000011100"
-    " 000000011101 000000011110 000000011111"
-).split()
-# T.6 vertical/pass/horizontal mode codes, longest-first is not needed —
-# the set is prefix-free; values are the a1−b1 offset for V modes
-_FAX_MODES = {
-    "1": ("V", 0), "011": ("V", 1), "000011": ("V", 2), "0000011": ("V", 3),
-    "010": ("V", -1), "000010": ("V", -2), "0000010": ("V", -3),
-    "001": ("H", 0), "0001": ("P", 0),
-}
-
-
-def _fax_tables():
-    """Lazily-built (decode maps, encode maps): decode maps key on
-    (n_bits, code_value) → run; encode maps run → (n_bits, value)."""
-    global _FAX_CACHE
-    try:
-        return _FAX_CACHE
-    except NameError:
-        pass
-    dec = ({}, {})
-    enc = ({}, {})
-    for color, term, makeup in (
-        (0, _FAX_WHITE_TERM, _FAX_WHITE_MAKEUP),
-        (1, _FAX_BLACK_TERM, _FAX_BLACK_MAKEUP),
-    ):
-        runs = [(i, b) for i, b in enumerate(term)]
-        runs += [(64 * (i + 1), b) for i, b in enumerate(makeup)]
-        runs += [(1792 + 64 * i, b) for i, b in enumerate(_FAX_EXT_MAKEUP)]
-        for run, bits in runs:
-            dec[color][(len(bits), int(bits, 2))] = run
-            enc[color][run] = (len(bits), int(bits, 2))
-    modes = {(len(b), int(b, 2)): mv for b, mv in _FAX_MODES.items()}
-    _FAX_CACHE = (dec, enc, modes)
-    return _FAX_CACHE
-
-
-class _FaxReader:
-    """MSB-first bit reader over a strip's coded bytes."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.bit = 0
-
-    def read_code(self, table: dict, max_len: int, what: str):
-        n = val = 0
-        total_bits = len(self.data) * 8
-        while n < max_len:
-            if self.bit >= total_bits:
-                raise ValueError(f"fax stream ended inside a {what} code")
-            byte = self.data[self.bit >> 3]
-            val = (val << 1) | ((byte >> (7 - (self.bit & 7))) & 1)
-            self.bit += 1
-            n += 1
-            hit = table.get((n, val))
-            if hit is not None:
-                return hit
-        raise ValueError(f"invalid fax {what} code near bit {self.bit}")
-
-    def read_run(self, color: int) -> int:
-        """One run length: zero or more makeup codes then a terminating
-        code (<64); repeated 2560 makeups extend runs past 2560."""
-        dec = _fax_tables()[0][color]
-        total = 0
-        while True:
-            run = self.read_code(dec, 14, "run")
-            total += run
-            if run < 64:
-                return total
-
-    def align(self) -> None:
-        self.bit = (self.bit + 7) & ~7
-
-
-class _FaxWriter:
-    """MSB-first bit writer mirroring :class:`_FaxReader`."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, n: int, val: int) -> None:
-        self.acc = (self.acc << n) | val
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-
-    def write_run(self, run: int, color: int) -> None:
-        enc = _fax_tables()[1][color]
-        while run >= 64:
-            m = min((run // 64) * 64, 2560)
-            self.write(*enc[m])
-            run -= m
-        self.write(*enc[run])
-
-    def align(self) -> None:
-        if self.nbits:
-            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.nbits = 0
-
-    def bytes(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
-def _fax_b1_b2(ref: "list[int]", a0: int, color: int, w: int):
-    """(b1, b2) per T.4 §4.2.1.3.1: b1 is the first changing element on
-    the reference line right of ``a0`` whose color is opposite the
-    current color (even transition indices change to black), b2 the next
-    one after it; both default to ``w`` past the line end."""
-    i = 0
-    while i < len(ref) and ref[i] <= a0:
-        i += 1
-    if (i & 1) != color:
-        i += 1
-    b1 = ref[i] if i < len(ref) else w
-    b2 = ref[i + 1] if i + 1 < len(ref) else w
-    return b1, b2
-
-
-def _fax_fill(cur: "list[int]", w: int) -> "np.ndarray":
-    row = np.zeros(w, dtype="uint8")
-    for i in range(0, len(cur), 2):
-        start = cur[i]
-        end = cur[i + 1] if i + 1 < len(cur) else w
-        row[start:end] = 1
-    return row
-
-
-def _fax_2d_row(rd: "_FaxReader", ref: "list[int]", w: int, y: int) -> "list[int]":
-    """One 2-D-coded row (T.6, and T.4 2-D rows): pass/horizontal/
-    vertical moves against the reference line's transition list; returns
-    the new line's transitions."""
-    modes = _fax_tables()[2]
-    cur: "list[int]" = []
-    a0 = -1
-    color = 0
-    while a0 < w:
-        kind, d = rd.read_code(modes, 7, "mode")
-        b1, b2 = _fax_b1_b2(ref, a0, color, w)
-        if kind == "P":
-            a0 = b2
-        elif kind == "H":
-            s = max(a0, 0)
-            r1 = rd.read_run(color)
-            r2 = rd.read_run(color ^ 1)
-            t1, t2 = s + r1, s + r1 + r2
-            if t2 > w:
-                raise ValueError(f"fax horizontal runs overrun row {y}")
-            if t2 <= a0 and a0 >= 0:
-                raise ValueError(f"fax horizontal move stalls in row {y}")
-            cur += [t1, t2]
-            a0 = t2
-        else:  # vertical
-            a1 = b1 + d
-            if not (0 <= a1 <= w) or a1 <= a0 and a0 >= 0:
-                raise ValueError(f"fax vertical move out of order in row {y}")
-            cur.append(a1)
-            a0 = a1
-            color ^= 1
-    return cur
-
-
-def _fax_1d_row(rd: "_FaxReader", w: int, y: int) -> "list[int]":
-    """One T.4 1-D Modified-Huffman row: alternating runs from white;
-    returns the line's transition list (run ends except the final w)."""
-    pos = 0
-    color = 0
-    cur: "list[int]" = []
-    while pos < w:
-        run = rd.read_run(color)
-        if run == 0 and cur:
-            raise ValueError(
-                f"zero-length fax run mid-row {y}: only the leading "
-                "white run may be empty"
-            )
-        if pos + run > w:
-            raise ValueError(f"fax MH run overruns row {y}")
-        pos += run
-        cur.append(pos)
-        color ^= 1
-    return cur[:-1]
-
-
-def _g4_decode(data: bytes, w: int, h: int) -> "np.ndarray":
-    """T.6 Group 4 decode of one strip to (h, w) samples (1 = black in
-    the fax sense). The reference line starts imaginary all-white; every
-    row is 2-D coded against the previous one. Per-row state is the
-    transition-position list, so cost scales with ink, not pixels.
-    Extension codes (uncompressed mode) are gated."""
-    rd = _FaxReader(data)
-    ref: "list[int]" = []
-    out = np.zeros((h, w), dtype="uint8")
-    for y in range(h):
-        cur = _fax_2d_row(rd, ref, w, y)
-        out[y] = _fax_fill(cur, w)
-        ref = cur
-    if len(data) * 8 - rd.bit > 64:
-        raise ValueError(
-            f"{len(data) * 8 - rd.bit} unread bits after the last fax row"
-        )
-    return out
-
-
-_FAX_MODE_BITS = {
-    ("V", 0): "1", ("V", 1): "011", ("V", 2): "000011", ("V", 3): "0000011",
-    ("V", -1): "010", ("V", -2): "000010", ("V", -3): "0000010",
-    ("H", 0): "001", ("P", 0): "0001",
-}
-
-
-def _fax_row_transitions(row: "np.ndarray") -> "list[int]":
-    cur = (np.flatnonzero(np.diff(row.astype("int8"))) + 1).tolist()
-    return ([0] + cur) if row[0] else cur
-
-
-def _fax_2d_encode_row(
-    wr: "_FaxWriter", cur: "list[int]", ref: "list[int]", w: int
-) -> None:
-    """Encode one row's transitions 2-D against the reference line —
-    the inverse of :func:`_fax_2d_row`."""
-
-    def emit(kind: str, d: int = 0) -> None:
-        b = _FAX_MODE_BITS[(kind, d)]
-        wr.write(len(b), int(b, 2))
-
-    a0 = -1
-    color = 0
-    while a0 < w:
-        i = 0
-        while i < len(cur) and cur[i] <= a0:
-            i += 1
-        if (i & 1) != color:
-            i += 1
-        a1 = cur[i] if i < len(cur) else w
-        a2 = cur[i + 1] if i + 1 < len(cur) else w
-        b1, b2 = _fax_b1_b2(ref, a0, color, w)
-        if b2 < a1:
-            emit("P")
-            a0 = b2
-        elif abs(a1 - b1) <= 3:
-            emit("V", a1 - b1)
-            a0 = a1
-            color ^= 1
-        else:
-            emit("H")
-            s = max(a0, 0)
-            wr.write_run(a1 - s, color)
-            wr.write_run(a2 - a1, color ^ 1)
-            a0 = a2
-
-
-def _fax_1d_encode_row(wr: "_FaxWriter", row: "np.ndarray", w: int) -> None:
-    """Encode one row 1-D: alternating runs from white (a leading
-    0-length white run when the row starts black)."""
-    bounds = (np.flatnonzero(np.diff(row.astype("int8"))) + 1).tolist() + [w]
-    pos = 0
-    color = 0
-    if row[0]:
-        wr.write_run(0, 0)
-        color = 1
-    for b in bounds:
-        wr.write_run(b - pos, color)
-        pos = b
-        color ^= 1
-
-
-def _g4_encode(img: "np.ndarray") -> bytes:
-    """T.6 encoder mirroring :func:`_g4_decode` — the deterministic
-    fixture builder. Emits the closing EOFB the spec requires."""
-    h, w = img.shape
-    wr = _FaxWriter()
-    ref: "list[int]" = []
-    for y in range(h):
-        cur = _fax_row_transitions(img[y])
-        _fax_2d_encode_row(wr, cur, ref, w)
-        ref = cur
-    wr.write(24, 0b000000000001000000000001)  # EOFB
-    return wr.bytes()
-
-
-_FAX_EOL = (12, 0b000000000001)
-
-
-def _g3_decode(data: bytes, w: int, h: int, two_d: bool) -> "np.ndarray":
-    """T.4 Group 3 decode (TIFF compression 3): every row is preceded by
-    an EOL — zero or more fill zeros then 000000000001 — and in 2-D mode
-    (T4Options bit 0) a tag bit picks 1-D or 2-D coding for the row that
-    follows. The trailing RTC (six EOLs) is consumed and checked."""
-    rd = _FaxReader(data)
-
-    def read_eol(what: str) -> None:
-        # fill bits are extra leading zeros: absorb them by restarting
-        # the 12-bit window on each zero past the 11th
-        zeros = 0
-        while True:
-            total = len(rd.data) * 8
-            if rd.bit >= total:
-                raise ValueError(f"fax stream ended looking for {what} EOL")
-            bit = (rd.data[rd.bit >> 3] >> (7 - (rd.bit & 7))) & 1
-            rd.bit += 1
-            if bit:
-                if zeros < 11:
-                    raise ValueError(f"fax {what} EOL has only {zeros} zeros")
-                return
-            zeros += 1
-
-    out = np.zeros((h, w), dtype="uint8")
-    ref: "list[int]" = []
-    for y in range(h):
-        read_eol(f"row-{y}")
-        one_d = True
-        if two_d:
-            total = len(rd.data) * 8
-            if rd.bit >= total:
-                raise ValueError("fax stream ended at a 2-D tag bit")
-            one_d = bool((rd.data[rd.bit >> 3] >> (7 - (rd.bit & 7))) & 1)
-            rd.bit += 1
-        cur = _fax_1d_row(rd, w, y) if one_d else _fax_2d_row(rd, ref, w, y)
-        out[y] = _fax_fill(cur, w)
-        ref = cur
-    # RTC: six EOLs (each tagged 1-D in 2-D mode), possibly fill-padded
-    remaining = len(data) * 8 - rd.bit
-    if remaining > 6 * (12 + 1 + 7) + 7:
-        raise ValueError(f"{remaining} unread bits after the last G3 row")
-    return out
-
-
-def _g3_encode(img: "np.ndarray", two_d: bool = False, byte_align: bool = False) -> bytes:
-    """T.4 encoder mirroring :func:`_g3_decode`: EOL before every row
-    (fill-padded to a byte boundary when ``byte_align``); in 2-D mode
-    the first row is 1-D and the rest 2-D (K = ∞), each flagged by its
-    tag bit; closes with the six-EOL RTC."""
-    h, w = img.shape
-    wr = _FaxWriter()
-
-    def eol(tag: "int | None") -> None:
-        if byte_align:
-            used = (wr.nbits + 12 + (0 if tag is None else 1)) % 8
-            if used:
-                wr.write(8 - used, 0)  # fill zeros so data restarts aligned
-        wr.write(*_FAX_EOL)
-        if tag is not None:
-            wr.write(1, tag)
-
-    ref: "list[int]" = []
-    for y in range(h):
-        one_d = (not two_d) or y == 0
-        eol(None if not two_d else (1 if one_d else 0))
-        if one_d:
-            _fax_1d_encode_row(wr, img[y], w)
-        else:
-            _fax_2d_encode_row(wr, _fax_row_transitions(img[y]), ref, w)
-        ref = _fax_row_transitions(img[y])
-    for _ in range(6):  # RTC
-        eol(None if not two_d else 1)
-    return wr.bytes()
-
-
-def _mh_decode(data: bytes, w: int, h: int) -> "np.ndarray":
-    """TIFF compression 2 ("CCITT RLE"): T.4 one-dimensional Modified
-    Huffman rows, each starting white and byte-aligned — no EOL codes."""
-    rd = _FaxReader(data)
-    out = np.zeros((h, w), dtype="uint8")
-    for y in range(h):
-        out[y] = _fax_fill(_fax_1d_row(rd, w, y), w)
-        rd.align()
-    if len(data) - (rd.bit >> 3) > 0:
-        raise ValueError("trailing bytes after the last MH row")
-    return out
-
-
-def _mh_encode(img: "np.ndarray") -> bytes:
-    """Inverse of :func:`_mh_decode`: per row, alternating runs from
-    white (a leading 0-length white run when the row starts black),
-    byte-aligned after every row."""
-    h, w = img.shape
-    wr = _FaxWriter()
-    for y in range(h):
-        _fax_1d_encode_row(wr, img[y], w)
-        wr.align()
-    return wr.bytes()
-
-
-_TIFF_TYPE_SIZES = {1: 1, 3: 2, 4: 4, 7: 1}  # BYTE, SHORT, LONG, UNDEFINED
-
-
-def _tiff_read_ifd(
-    payload: bytes, bo: str, ifd_off: int
-) -> "tuple[dict[int, list[int]], int]":
-    """Parse one IFD into ({tag: [values]}, next-IFD offset).
-    Integer-typed tags only; other types (ASCII, RATIONAL, …) are
-    skipped — none of the raster-defining tags use them."""
-    import struct
-
-    if ifd_off + 2 > len(payload):
-        raise ValueError("truncated TIFF IFD")
-    (n_entries,) = struct.unpack_from(bo + "H", payload, ifd_off)
-    tags: dict[int, list[int]] = {}
-    for k in range(n_entries):
-        entry = ifd_off + 2 + 12 * k
-        if entry + 12 > len(payload):
-            raise ValueError("truncated TIFF IFD entry")
-        tag, typ, count = struct.unpack_from(bo + "HHI", payload, entry)
-        size = _TIFF_TYPE_SIZES.get(typ)
-        if size is None:
-            continue
-        off = entry + 8 if size * count <= 4 else struct.unpack_from(
-            bo + "I", payload, entry + 8
-        )[0]
-        if off + size * count > len(payload):
-            raise ValueError(f"TIFF tag {tag} values out of bounds")
-        fmt = {1: "B", 3: "H", 4: "I", 7: "B"}[typ]
-        tags[tag] = list(struct.unpack_from(bo + str(count) + fmt, payload, off))
-    nxt = ifd_off + 2 + 12 * n_entries
-    if nxt + 4 > len(payload):
-        raise ValueError("truncated TIFF next-IFD pointer")
-    return tags, struct.unpack_from(bo + "I", payload, nxt)[0]
-
-
-def _tiff_ifds(payload: bytes) -> "tuple[str, list[dict[int, list[int]]]]":
-    """Walk the whole IFD chain (one IFD per page) with a cycle guard;
-    returns (byte-order char, [tags per page])."""
-    import struct
-
-    bo = {b"II": "<", b"MM": ">"}.get(bytes(payload[:2]))
-    if bo is None or struct.unpack_from(bo + "H", payload, 2)[0] != 42:
-        raise ValueError("not a TIFF: bad byte-order mark or magic 42")
-    (ifd_off,) = struct.unpack_from(bo + "I", payload, 4)
-    pages = []
-    seen = set()
-    while ifd_off:
-        if ifd_off in seen:
-            raise ValueError("TIFF IFD chain cycles")
-        seen.add(ifd_off)
-        tags, ifd_off = _tiff_read_ifd(payload, bo, ifd_off)
-        pages.append(tags)
-    if not pages:
-        raise ValueError("TIFF has no IFD")
-    return bo, pages
-
-
-def _tiff_tags(payload: bytes) -> "tuple[str, dict[int, list[int]]]":
-    """(byte-order char, first IFD's tags) — the single-page view."""
-    bo, pages = _tiff_ifds(payload)
-    return bo, pages[0]
-
-
-def _decode_tiff(payload: bytes) -> "np.ndarray":
-    """Baseline TIFF decode — both byte orders; uncompressed (tag
-    259=1), LZW (=5, :func:`_tiff_lzw_decode`), Deflate (=8 Adobe /
-    =32946 old-style, stdlib zlib), and PackBits (=32773) strips;
-    horizontal-differencing predictor
-    (317=2, modular cumsum), photometric 0 (MinIsWhite → inverted),
-    1 (MinIsBlack), 2 (RGB), 3 (8-bit palette, 16-bit ColorMap entries
-    scaled ≫8 like every reader), 8/16-bit chunky samples, and bilevel
-    1-bit rasters — packed MSB-first under the byte compressions, or
-    CCITT fax coded: T.6 Group 4 (=4, :func:`_g4_decode`),
-    byte-aligned T.4 Modified Huffman rows (=2, :func:`_mh_decode`),
-    and EOL-framed T.4 Group 3 in 1-D and 2-D modes (=3,
-    :func:`_g3_decode`, T4Options honored);
-    bilevel output is uint8 {0, 255} after the photometric mapping.
-    Both segment layouts decode: strips (273/278/279) and the tiled grid
-    (322-325, :func:`_tiff_layout`) whose edge tiles store full-size
-    padding the placement crops. New-style JPEG (=7) decodes each
-    strip/tile as a complete or JPEGTables-abbreviated stream
-    (:func:`_jpeg_abbrev_merge`, tag 347) through :func:`_decode_jpeg`
-    — photometric 1 gray, 2 stored-RGB (no color transform), or
-    6 YCbCr (converted to RGB like every JFIF decode).
-    Multi-page files decode their FIRST IFD (the GIF first-frame rule).
-    Strict segment framing throughout; old-style JPEG (=6), T.4
-    uncompressed-extension mode, and planar storage raise
-    ``NotImplementedError`` — the genuine codec-library gate."""
-    bo, tags = _tiff_tags(payload)
-    return _decode_tiff_ifd(payload, bo, tags)
-
-
-def _tiff_layout(
-    tags: "dict[int, list[int]]", w: int, h: int, rps: int
-) -> "list[tuple[int, int, int, int, int, int]]":
-    """Segment placement for one IFD: a list of (offset, byte_count,
-    seg_w, seg_h, dest_y, dest_x). Strips are full-width bands; tiles
-    (TIFF 6.0 §15, tags 322-325) are a fixed grid laid out across then
-    down, every tile stored FULL SIZE — edge tiles carry padding the
-    placement crops off."""
-    if 322 in tags or 323 in tags:
-        if 273 in tags:
-            raise ValueError("TIFF with both strip and tile tags")
-        tw = tags.get(322, [0])[0]
-        tl = tags.get(323, [0])[0]
-        if tw <= 0 or tl <= 0 or tw % 16 or tl % 16:
-            raise ValueError(f"TIFF tile size {tw}x{tl}: multiples of 16 required")
-        offsets, counts = tags.get(324), tags.get(325)
-        if not offsets or not counts or len(offsets) != len(counts):
-            raise ValueError("TIFF tile offsets/byte-counts missing or mismatched")
-        across, down = -(-w // tw), -(-h // tl)
-        if len(offsets) != across * down:
-            raise ValueError(
-                f"TIFF has {len(offsets)} tiles, expected {across * down}"
-            )
-        return [
-            (off, cnt, tw, tl, (i // across) * tl, (i % across) * tw)
-            for i, (off, cnt) in enumerate(zip(offsets, counts))
-        ]
-    offsets, counts = tags.get(273), tags.get(279)
-    if not offsets or not counts or len(offsets) != len(counts):
-        raise ValueError("TIFF strip offsets/byte-counts missing or mismatched")
-    segs = []
-    for s, (off, cnt) in enumerate(zip(offsets, counts)):
-        n_rows = min(rps, h - s * rps)
-        if n_rows <= 0:
-            raise ValueError("TIFF has more strips than image rows")
-        segs.append((off, cnt, w, n_rows, s * rps, 0))
-    return segs
-
-
-def _jpeg_abbrev_merge(tables: bytes, stream: bytes) -> bytes:
-    """TIFF TechNote 2: tag 347 (JPEGTables) holds an abbreviated
-    tables-only JPEG stream (SOI, DQT/DHT/DRI…, EOI) shared by every
-    strip/tile; each segment is an abbreviated image stream. Splice the
-    tables in right after the segment's SOI so the plain decoder sees
-    one complete stream."""
-    if tables[:2] != b"\xff\xd8" or tables[-2:] != b"\xff\xd9":
-        raise ValueError("JPEGTables must be an SOI…EOI tables stream")
-    if stream[:2] != b"\xff\xd8":
-        raise ValueError("JPEG-in-TIFF segment missing SOI")
-    return stream[:2] + tables[2:-2] + stream[2:]
-
-
-def _decode_tiff_ifd(
-    payload: bytes, bo: str, tags: "dict[int, list[int]]"
-) -> "np.ndarray":
-    """Decode one IFD's raster — the worker behind :func:`_decode_tiff`."""
-
-    def one(tag: int, default: "int | None" = None) -> int:
-        if tag not in tags:
-            if default is None:
-                raise ValueError(f"TIFF missing required tag {tag}")
-            return default
-        return tags[tag][0]
-
-    w, h = one(256), one(257)
-    compression = one(259, 1)
-    photometric = one(262)
-    spp = one(277, 1)
-    bits = tags.get(258, [1])
-    predictor = one(317, 1)
-    if compression not in (1, 2, 3, 4, 5, 7, 8, 32773, 32946):
-        raise NotImplementedError(
-            f"TIFF compression {compression}: only uncompressed (1), "
-            "CCITT MH-RLE (2) / Group 3 (3) / Group 4 (4), LZW (5), "
-            "new-style JPEG (7), Deflate (8/32946), and PackBits (32773) "
-            "decode without a codec"
-        )
-    if one(284, 1) != 1:
-        raise NotImplementedError("TIFF planar configuration 2: chunky only")
-    if one(266, 1) != 1:
-        raise NotImplementedError("TIFF FillOrder 2: MSB-first bit order only")
-    if len(bits) != spp or len(set(bits)) != 1 or bits[0] not in (1, 8, 16):
-        raise NotImplementedError(
-            f"TIFF bits-per-sample {bits}: uniform 1/8/16-bit only"
-        )
-    if compression in (2, 4) and bits[0] != 1:
-        raise ValueError(f"CCITT compression on a {bits[0]}-bit raster")
-    if bits[0] == 1 and (spp != 1 or photometric not in (0, 1)):
-        raise NotImplementedError("bilevel TIFF: single-sample gray only")
-    if bits[0] == 1 and predictor != 1:
-        raise NotImplementedError("TIFF predictor on a bilevel raster")
-    if predictor not in (1, 2):
-        raise NotImplementedError(f"TIFF predictor {predictor}")
-    if compression == 7:
-        # new-style JPEG (TechNote 2): the segments are complete or
-        # tables-abbreviated JPEG streams — gray (photo 1), stored-RGB
-        # (photo 2), or YCbCr (photo 6, the JPEG stream itself converts)
-        if bits[0] != 8:
-            raise NotImplementedError("JPEG-in-TIFF: 8-bit samples only")
-        if predictor != 1:
-            raise ValueError("TIFF predictor with JPEG compression")
-        if photometric not in (1, 2, 6):
-            raise NotImplementedError(
-                f"JPEG-in-TIFF photometric {photometric}: gray/RGB/YCbCr only"
-            )
-        if (photometric == 1 and spp != 1) or (photometric in (2, 6) and spp != 3):
-            raise ValueError(
-                f"JPEG-in-TIFF photometric {photometric} with {spp} samples"
-            )
-    elif photometric not in (0, 1, 2, 3):
-        raise NotImplementedError(f"TIFF photometric {photometric}")
-    if photometric == 2 and spp < 3:
-        raise ValueError("TIFF RGB with <3 samples per pixel")
-    if photometric == 3 and (spp != 1 or bits[0] != 8):
-        raise NotImplementedError("TIFF palette: 8-bit single-sample only")
-    if w <= 0 or h <= 0:
-        raise ValueError(f"invalid TIFF dimensions {w}x{h}")
-    segs = _tiff_layout(tags, w, h, one(278, h))
-    if bits[0] == 1:
-        canvas = np.zeros((h, w), dtype="u1")
-        for s, (off, cnt, sw, sh, dy, dx) in enumerate(segs):
-            row_bytes = (sw + 7) // 8
-            raw = bytes(payload[off : off + cnt])
-            if len(raw) < cnt:
-                raise ValueError("truncated TIFF segment")
-            if compression == 4:
-                rows = _g4_decode(raw, sw, sh)
-            elif compression == 3:
-                t4 = one(292, 0)  # T4Options
-                if t4 & 2:
-                    raise NotImplementedError(
-                        "T.4 uncompressed-extension mode (T4Options bit 1)"
-                    )
-                rows = _g3_decode(raw, sw, sh, two_d=bool(t4 & 1))
-            elif compression == 2:
-                rows = _mh_decode(raw, sw, sh)
-            else:
-                if compression == 32773:
-                    raw = _packbits_decode(raw, sh * row_bytes)
-                elif compression == 5:
-                    raw = _tiff_lzw_decode(raw, sh * row_bytes)
-                elif compression in (8, 32946):
-                    import zlib
-
-                    raw = zlib.decompress(raw)
-                if len(raw) != sh * row_bytes:
-                    raise ValueError(
-                        f"TIFF bilevel segment {s} has {len(raw)} bytes, "
-                        f"expected {sh * row_bytes}"
-                    )
-                packed = np.frombuffer(raw, dtype="u1").reshape(sh, row_bytes)
-                rows = np.unpackbits(packed, axis=1)[:, :sw]
-            ch_, cw_ = min(sh, h - dy), min(sw, w - dx)
-            canvas[dy : dy + ch_, dx : dx + cw_] = rows[:ch_, :cw_]
-        arr = canvas * np.uint8(255)
-        if photometric == 0:
-            arr = 255 - arr  # MinIsWhite: sample 0 renders white
-        return np.ascontiguousarray(arr)
-    jpegtables = bytes(tags[347]) if 347 in tags else None
-    out_dt = "uint16" if bits[0] == 16 else "uint8"
-    canvas = np.zeros((h, w, spp), dtype=out_dt)
-    for s, (off, cnt, sw, sh, dy, dx) in enumerate(segs):
-        raw = bytes(payload[off : off + cnt])
-        if len(raw) < cnt:
-            raise ValueError("truncated TIFF segment")
-        if compression == 7:
-            stream = _jpeg_abbrev_merge(jpegtables, raw) if jpegtables else raw
-            seg_arr = _decode_jpeg(
-                stream, color_transform="rgb" if photometric == 2 else None
-            )
-            if seg_arr.ndim == 2:
-                seg_arr = seg_arr[:, :, None]
-            if seg_arr.shape != (sh, sw, spp):
-                raise ValueError(
-                    f"JPEG-in-TIFF segment {s} decodes to {seg_arr.shape}, "
-                    f"expected {(sh, sw, spp)}"
-                )
-            seg_arr = seg_arr.astype(out_dt)
-        else:
-            row_bytes = sw * spp * (bits[0] // 8)
-            if compression == 32773:
-                raw = _packbits_decode(raw, sh * row_bytes)
-            elif compression == 5:
-                raw = _tiff_lzw_decode(raw, sh * row_bytes)
-            elif compression in (8, 32946):
-                import zlib
-
-                raw = zlib.decompress(raw)
-            if len(raw) != sh * row_bytes:
-                raise ValueError(
-                    f"TIFF segment {s} has {len(raw)} bytes, "
-                    f"expected {sh * row_bytes}"
-                )
-            dtype = np.dtype(bo + "u2") if bits[0] == 16 else np.dtype("u1")
-            seg_arr = np.frombuffer(raw, dtype=dtype).reshape(sh, sw, spp)
-            seg_arr = seg_arr.astype(out_dt)
-            if predictor == 2:
-                # horizontal differencing restarts at every row and is
-                # scoped to the segment (each tile differences its own
-                # rows); modular cumsum restores them (dtype-targeted
-                # cumsum wraps exactly like the encoder's subtraction)
-                seg_arr = np.cumsum(seg_arr, axis=1, dtype=seg_arr.dtype)
-        ch_, cw_ = min(sh, h - dy), min(sw, w - dx)
-        canvas[dy : dy + ch_, dx : dx + cw_] = seg_arr[:ch_, :cw_]
-    arr = canvas
-    if photometric == 3:
-        cmap = tags.get(320)
-        if cmap is None or len(cmap) != 3 * 256:
-            raise ValueError("TIFF palette image without a 3x256 ColorMap")
-        pal = (np.array(cmap, dtype="uint16").reshape(3, 256).T >> 8).astype("uint8")
-        rgb = pal[arr[:, :, 0]]
-        if bool((rgb[:, :, 0] == rgb[:, :, 1]).all() and (rgb[:, :, 1] == rgb[:, :, 2]).all()):
-            return np.ascontiguousarray(rgb[:, :, 0])  # grayscale palette
-        return np.ascontiguousarray(rgb)
-    if photometric == 0:
-        arr = (65535 if bits[0] == 16 else 255) - arr  # MinIsWhite
-    if photometric in (0, 1):
-        return np.ascontiguousarray(arr[:, :, 0])
-    return np.ascontiguousarray(arr[:, :, :3])  # RGB, extra samples dropped
-
-
-def encode_tiff(
-    arr: "np.ndarray",
-    compression: str = "none",
-    byteorder: str = "<",
-    rows_per_strip: "int | None" = None,
-    predictor: int = 1,
-    photometric: "str | None" = None,
-    bilevel: bool = False,
-    tile: "tuple[int, int] | None" = None,
-    jpeg_quant: int = 1,
-    jpeg_subsample: "tuple[int, int]" = (1, 1),
-    jpeg_tables: bool = False,
-) -> bytes:
-    """Inverse of :func:`_decode_tiff` for chunky 8/16-bit gray and RGB —
-    the deterministic fixture builder (layout: header, strip data, IFD
-    last). ``compression`` "none"/"lzw"/"deflate"/"packbits"/"jpeg"
-    (plus "mh"/"g3"/"g3_2d"/"g4" when ``bilevel``), either ``byteorder``,
-    optional multi-strip layout OR a tiled grid (``tile=(tw, tl)``,
-    multiples of 16, edge tiles stored full-size), predictor 2
-    (horizontal differencing, per segment),
-    and ``photometric="miniswhite"`` (stores inverted samples under
-    photometric 0 — decode inverts back). ``bilevel`` takes a (h, w)
-    uint8 array of {0, 255} and writes a 1-bit MinIsWhite raster — the
-    scanned-document shape — packed MSB-first or CCITT-coded.
-    ``compression="jpeg"`` writes new-style JPEG (7) segments via
-    :func:`encode_jpeg` — gray → photometric 1, RGB → YCbCr photometric
-    6 (``jpeg_subsample`` honored) or stored-RGB photometric 2 with
-    ``photometric="rgb"``; ``jpeg_tables=True`` factors the shared
-    DQT/DHT/DRI into a tag-347 JPEGTables stream with abbreviated
-    segments (TIFF TechNote 2)."""
-    import struct
-
-    spec = _tiff_page_spec(
-        arr, compression, byteorder, rows_per_strip, predictor,
-        photometric, bilevel, tile, jpeg_quant, jpeg_subsample, jpeg_tables,
-    )
-    return _tiff_chain(struct, byteorder, [spec])
-
-
-def _jpeg_split_tables(stream: bytes) -> "tuple[bytes, bytes]":
-    """Split a full JPEG stream into (tables, abbreviated image stream):
-    DQT/DHT/DRI segments move to a SOI…EOI tables stream (the tag-347
-    JPEGTables payload), everything else keeps its order — the encoder
-    inverse of :func:`_jpeg_abbrev_merge`."""
-    import struct
-
-    if stream[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream")
-    tables = bytearray(b"\xff\xd8")
-    abbrev = bytearray(b"\xff\xd8")
-    pos = 2
-    while pos + 2 <= len(stream):
-        if stream[pos] != 0xFF:
-            raise ValueError(f"expected JPEG marker at byte {pos}")
-        marker = stream[pos + 1]
-        if marker in (0xD9, 0xDA):
-            # SOS (entropy data follows) or EOI: the rest moves verbatim
-            abbrev += stream[pos:]
-            break
-        (seglen,) = struct.unpack_from(">H", stream, pos + 2)
-        seg = stream[pos : pos + 2 + seglen]
-        if marker in (0xDB, 0xC4, 0xDD):
-            tables += seg
-        else:
-            abbrev += seg
-        pos += 2 + seglen
-    else:
-        raise ValueError("JPEG stream ended before SOS/EOI")
-    return bytes(tables + b"\xff\xd9"), bytes(abbrev)
-
-
-def _tiff_segment_blocks(sample, h: int, w: int, rps: int, tile):
-    """Per-segment pixel blocks in layout order: full-width strip bands,
-    or full-size tiles with edge-replicated padding on the right/bottom
-    edges (the decoder crops it back off)."""
-    if tile is None:
-        return [sample[y0 : y0 + rps] for y0 in range(0, h, rps)]
-    tw, tl = tile
-    if tw <= 0 or tl <= 0 or tw % 16 or tl % 16:
-        raise ValueError(f"TIFF tile size {tw}x{tl}: multiples of 16 required")
-    blocks = []
-    for r in range(0, h, tl):
-        for c in range(0, w, tw):
-            blk = sample[r : r + tl, c : c + tw]
-            ph, pw = tl - blk.shape[0], tw - blk.shape[1]
-            if ph or pw:
-                pad = [(0, ph), (0, pw)] + [(0, 0)] * (blk.ndim - 2)
-                blk = np.pad(blk, pad, mode="edge")
-            blocks.append(blk)
-    return blocks
-
-
-def _tiff_page_spec(
-    arr: "np.ndarray",
-    compression: str,
-    byteorder: str,
-    rows_per_strip: "int | None",
-    predictor: int,
-    photometric: "str | None",
-    bilevel: bool,
-    tile: "tuple[int, int] | None" = None,
-    jpeg_quant: int = 1,
-    jpeg_subsample: "tuple[int, int]" = (1, 1),
-    jpeg_tables: bool = False,
-) -> dict:
-    """Encode one page's strips/tiles and collect its IFD fields."""
-    arr = np.asarray(arr)
-    if arr.dtype not in (np.dtype("uint8"), np.dtype("uint16")):
-        raise ValueError(f"expected uint8/uint16, got {arr.dtype}")
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    if arr.ndim != 3 or arr.shape[2] not in (1, 3):
-        raise ValueError(f"expected (h,w), (h,w,1) or (h,w,3), got {arr.shape}")
-    h, w, spp = arr.shape
-    comp_tags = {
-        "none": 1, "lzw": 5, "deflate": 8, "packbits": 32773,
-        "mh": 2, "g3": 3, "g3_2d": 3, "g4": 4, "jpeg": 7,
-    }
-    fax = ("mh", "g3", "g3_2d", "g4")
-    if compression not in comp_tags or (compression in fax and not bilevel):
-        raise ValueError(f"unsupported compression {compression!r}")
-    if compression == "jpeg" and bilevel:
-        raise ValueError("jpeg compression on a bilevel raster")
-    if bilevel:
-        if spp != 1 or arr.dtype != np.dtype("uint8"):
-            raise ValueError("bilevel input must be (h, w) uint8")
-        if photometric not in (None, "miniswhite") or predictor != 1:
-            raise ValueError("bilevel writes MinIsWhite, predictor 1")
-        black = arr[:, :, 0] == 0
-        if not bool(((arr[:, :, 0] == 0) | (arr[:, :, 0] == 255)).all()):
-            raise ValueError("bilevel input values must be 0 or 255")
-        sample = black.astype("uint8")  # MinIsWhite: 1 = black
-        bits, photo = 1, 0
-        rps = h if rows_per_strip is None else rows_per_strip
-        strips = []
-        for rows in _tiff_segment_blocks(sample, h, w, rps, tile):
-            if compression == "g4":
-                strips.append(_g4_encode(rows))
-            elif compression in ("g3", "g3_2d"):
-                strips.append(_g3_encode(rows, two_d=compression == "g3_2d"))
-            elif compression == "mh":
-                strips.append(_mh_encode(rows))
-            else:
-                packed = np.packbits(rows, axis=1)
-                if compression == "packbits":
-                    strips.append(
-                        b"".join(_packbits_encode(r.tobytes()) for r in packed)
-                    )
-                elif compression == "lzw":
-                    strips.append(_tiff_lzw_encode(packed.tobytes()))
-                elif compression == "deflate":
-                    import zlib
-
-                    strips.append(zlib.compress(packed.tobytes(), 6))
-                else:
-                    strips.append(packed.tobytes())
-        return {
-            "w": w, "h": h, "spp": 1, "bits": bits, "photo": photo,
-            "comp_tag": comp_tags[compression], "rps": rps, "strips": strips,
-            "predictor": predictor, "tile": tile, "jpegtables": None,
-            "t4": {"g3": 0, "g3_2d": 1}.get(compression),
-        }
-    bits = 16 if arr.dtype == np.dtype("uint16") else 8
-    photo = 2 if spp == 3 else 1
-    if compression == "jpeg":
-        if bits != 8:
-            raise ValueError("jpeg TIFF: 8-bit samples only")
-        if predictor != 1:
-            raise ValueError("predictor with jpeg compression")
-        if photometric == "rgb":
-            if spp != 3:
-                raise ValueError("photometric 'rgb' needs 3 samples per pixel")
-            photo = 2  # stored-RGB components, no color transform
-        elif photometric is not None:
-            raise ValueError(f"unsupported photometric {photometric!r} for jpeg")
-        elif spp == 3:
-            photo = 6  # the JPEG stream carries YCbCr (TechNote 2 default)
-    elif photometric == "miniswhite":
-        if spp != 1:
-            raise ValueError("miniswhite is a grayscale photometric")
-        photo = 0
-        arr = ((65535 if bits == 16 else 255) - arr.astype("int64")).astype(arr.dtype)
-    elif photometric is not None:
-        raise ValueError(f"unsupported photometric {photometric!r}")
-    if predictor not in (1, 2):
-        raise ValueError(f"unsupported predictor {predictor}")
-    rps = h if rows_per_strip is None else rows_per_strip
-    blocks = _tiff_segment_blocks(arr, h, w, rps, tile)
-    strips = []
-    jpegtables = None
-    if compression == "jpeg":
-        streams = [
-            encode_jpeg(
-                blk[:, :, 0] if spp == 1 else blk,
-                quant=jpeg_quant,
-                subsample=jpeg_subsample if photo == 6 else (1, 1),
-                rgb_direct=photo == 2,
-            )
-            for blk in blocks
-        ]
-        if jpeg_tables:
-            split = [_jpeg_split_tables(s) for s in streams]
-            jpegtables = split[0][0]
-            if any(t != jpegtables for t, _ in split):
-                raise ValueError("JPEGTables differ across segments")
-            strips = [a for _, a in split]
-        else:
-            strips = streams
-    else:
-        for blk in blocks:
-            if predictor == 2:
-                # horizontal differencing is per row WITHIN the segment
-                # (each tile restarts at its own left edge)
-                d = blk.astype("int64")
-                d[:, 1:] -= blk[:, :-1].astype("int64")
-                blk = (d % (1 << bits)).astype(arr.dtype)
-            rows = blk.astype(np.dtype(byteorder + "u2")) if bits == 16 else blk
-            if compression == "packbits":
-                # the spec restarts the RLE at every row; the decoder only
-                # needs segment framing, but emit the canonical form
-                strips.append(b"".join(_packbits_encode(r.tobytes()) for r in rows))
-            elif compression == "lzw":
-                strips.append(_tiff_lzw_encode(rows.tobytes()))
-            elif compression == "deflate":
-                import zlib
-
-                strips.append(zlib.compress(rows.tobytes(), 6))
-            else:
-                strips.append(rows.tobytes())
-    return {
-        "w": w, "h": h, "spp": spp, "bits": bits, "photo": photo,
-        "comp_tag": comp_tags[compression], "rps": rps, "strips": strips,
-        "predictor": predictor, "tile": tile, "jpegtables": jpegtables,
-        "t4": None,
-    }
-
-
-def _tiff_chain(struct, byteorder, specs: "list[dict]") -> bytes:
-    """Assemble header + every page's strip data + the chained IFDs
-    (each IFD immediately followed by its out-of-line value arrays, the
-    next IFD after those)."""
-    pos = 8
-    for sp in specs:
-        offs = []
-        for s in sp["strips"]:
-            offs.append(pos)
-            pos += len(s)
-        sp["strip_offs"] = offs
-    first_ifd = pos
-    ifd_blobs = []
-    ifd_off = first_ifd
-    for pi, sp in enumerate(specs):
-        tiled = sp.get("tile") is not None
-        jt = sp.get("jpegtables")
-        n_entries = (
-            (10 if tiled else 9)
-            + (1 if sp["t4"] is not None else 0)
-            + (1 if sp["predictor"] == 2 else 0)
-            + (1 if jt else 0)
-        )
-        extra_off = ifd_off + 2 + 12 * n_entries + 4
-        extra = b""
-
-        def many(vals: list[int]) -> "tuple[int, int, bytes]":
-            """(count, inline-or-offset word, trailing bytes) for LONGs."""
-            nonlocal extra_off
-            if len(vals) == 1:
-                return 1, vals[0], b""
-            blob = struct.pack(byteorder + f"{len(vals)}I", *vals)
-            off = extra_off
-            extra_off += len(blob)
-            return len(vals), off, blob
-
-        bps_count, bps_val, bps_extra = many([sp["bits"]] * sp["spp"])
-        extra += bps_extra
-        so_count, so_val, so_extra = many(sp["strip_offs"])
-        extra += so_extra
-        sc_count, sc_val, sc_extra = many([len(s) for s in sp["strips"]])
-        extra += sc_extra
-        # entries in ascending-tag order (TIFF 6.0 requires sorted IFDs)
-        entries = [
-            (256, 4, 1, sp["w"]),
-            (257, 4, 1, sp["h"]),
-            (258, 4, bps_count, bps_val),
-            (259, 4, 1, sp["comp_tag"]),
-            (262, 4, 1, sp["photo"]),
-        ]
-        if not tiled:
-            entries.append((273, 4, so_count, so_val))
-        entries.append((277, 4, 1, sp["spp"]))
-        if not tiled:
-            entries.append((278, 4, 1, sp["rps"]))
-            entries.append((279, 4, sc_count, sc_val))
-        if sp["t4"] is not None:
-            entries.append((292, 4, 1, sp["t4"]))
-        if sp["predictor"] == 2:
-            entries.append((317, 4, 1, 2))
-        if tiled:
-            entries.append((322, 4, 1, sp["tile"][0]))
-            entries.append((323, 4, 1, sp["tile"][1]))
-            entries.append((324, 4, so_count, so_val))
-            entries.append((325, 4, sc_count, sc_val))
-        if jt:
-            jt_off = extra_off
-            extra_off += len(jt)
-            extra += jt
-            entries.append((347, 7, len(jt), jt_off))
-        ifd_len = 2 + 12 * len(entries) + 4 + len(extra)
-        next_ifd = ifd_off + ifd_len if pi + 1 < len(specs) else 0
-        blob = struct.pack(byteorder + "H", len(entries))
-        for tag, typ, count, val in entries:
-            blob += struct.pack(byteorder + "HHII", tag, typ, count, val)
-        blob += struct.pack(byteorder + "I", next_ifd) + extra
-        ifd_blobs.append(blob)
-        ifd_off += len(blob)
-    out = struct.pack(
-        byteorder + "2sHI", b"II" if byteorder == "<" else b"MM", 42, first_ifd
-    )
-    for sp in specs:
-        out += b"".join(sp["strips"])
-    return out + b"".join(ifd_blobs)
-
-
-# --- GIF (LZW) -------------------------------------------------------------
-#
-# GIF is the remaining still-image format real crawls contain in volume
-# that needs no external codec: its only compression is LZW over palette
-# indices, which is a few dozen lines of table bookkeeping — unlike
-# arithmetic-coded JPEG or AV1, there is no entropy-coder dependency to
-# gate. Decode covers GIF87a/GIF89a, global and local color tables,
-# interlaced rasters, extension blocks (skipped), and the deferred-clear
-# encoder variant; animated GIFs decode their FIRST frame (decode_image
-# returns one still).
-
-
-def _gif_subblocks(data: bytes, pos: int) -> "tuple[bytes, int]":
-    """Concatenate a GIF sub-block chain starting at ``pos``; returns the
-    joined payload and the position just past the 0x00 terminator."""
-    parts = []
-    while True:
-        if pos >= len(data):
-            raise ValueError("GIF sub-block chain ran past end of payload")
-        n = data[pos]
-        pos += 1
-        if n == 0:
-            return b"".join(parts), pos
-        if pos + n > len(data):
-            raise ValueError("truncated GIF sub-block")
-        parts.append(data[pos : pos + n])
-        pos += n
-
-
-def _gif_lzw_decode(data: bytes, mcs: int) -> bytearray:
-    """GIF-variant LZW decode: codes are packed least-significant-bit
-    first, start at ``mcs``+1 bits, widen when the table reaches the
-    current width's capacity ("early change"), cap at 12 bits, and the
-    table freezes at 4096 entries until a Clear code (deferred clear).
-    Strict: a stream that ends without an End-of-Information code or
-    references an out-of-range code raises instead of returning a
-    shifted raster."""
-    if not 2 <= mcs <= 11:
-        raise ValueError(f"GIF LZW minimum code size {mcs} outside [2, 11]")
-    clear = 1 << mcs
-    eoi = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]  # clear/eoi stubs
-    table = list(base)
-    width = mcs + 1
-    out = bytearray()
-    prev = None
-    acc = nbits = pos = 0
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream ended without EOI")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = mcs + 1
-            prev = None
-            continue
-        if code == eoi:
-            return out
-        if prev is None:  # first code after (implicit) clear: a literal
-            if code >= clear:
-                raise ValueError(f"GIF LZW first code {code} is not a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-        elif code == len(table) < 4096:  # the cScSc case: code being defined
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"GIF LZW code {code} beyond table size {len(table)}")
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-        out += entry
-        prev = entry
-
-
-def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
-    """True LZW compression (not the unit-code shortcut), mirroring
-    :func:`_gif_lzw_decode`'s width schedule: the encoder widens when it
-    assigns the first code that no longer fits the current width — at
-    that moment the decoder's table (one entry behind) has just reached
-    2**width, so both sides switch for the same next code. At 4096
-    entries it emits a Clear and restarts."""
-    clear = 1 << mcs
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-    width = mcs + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    w = b""
-    for k in indices:
-        wk = w + bytes([k])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        if next_code < 4096:
-            table[wk] = next_code
-            next_code += 1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            emit(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = mcs + 1
-        w = bytes([k])
-    if w:
-        emit(table[w])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-# Interlaced GIF row schedule (GIF89a spec appendix E): four passes over
-# (start, step) row groups, finest last.
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_walk(data: bytes) -> dict:
-    """Block walk from the header to the first image descriptor → that
-    image's dict: its size, palette (local, else global), interlace
-    flag, LZW minimum code size and raw LZW bytes. Extensions before it
-    are skipped structurally."""
-    import struct
-
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError(f"not a GIF payload: {data[:6]!r}")
-    if len(data) < 13:
-        raise ValueError("truncated GIF logical screen descriptor")
-    packed = data[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        if pos + 3 * n > len(data):
-            raise ValueError("truncated GIF global color table")
-        gct = np.frombuffer(data[pos : pos + 3 * n], dtype="u1").reshape(n, 3)
-        pos += 3 * n
-    while True:  # skip extensions up to the first image descriptor
-        if pos >= len(data):
-            raise ValueError("GIF ended without an image descriptor")
-        block = data[pos]
-        pos += 1
-        if block == 0x2C:
-            break
-        if block == 0x3B:
-            raise ValueError("GIF trailer reached before any image data")
-        if block != 0x21:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        if pos >= len(data):  # extension: label byte, then sub-blocks
-            raise ValueError("truncated GIF extension")
-        _, pos = _gif_subblocks(data, pos + 1)
-    _, _, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
-    pos += 9
-    pal = gct
-    if ipacked & 0x80:
-        n = 2 << (ipacked & 0x07)
-        if pos + 3 * n > len(data):
-            raise ValueError("truncated GIF local color table")
-        pal = np.frombuffer(data[pos : pos + 3 * n], dtype="u1").reshape(n, 3)
-        pos += 3 * n
-    if pal is None:
-        raise ValueError("GIF image has neither global nor local color table")
-    if w == 0 or h == 0:
-        raise ValueError(f"invalid GIF image dimensions {w}x{h}")
-    if pos >= len(data):
-        raise ValueError("truncated GIF image data")
-    lzw, _ = _gif_subblocks(data, pos + 1)
-    return {"w": w, "h": h, "pal": pal, "interlace": bool(ipacked & 0x40),
-            "mcs": data[pos], "lzw": lzw}
-
-
-def _gif_frame_indices(fr: dict) -> "np.ndarray":
-    """One frame's LZW bytes → (h, w) palette-index array, deinterlaced."""
-    raster = _gif_lzw_decode(fr["lzw"], fr["mcs"])
-    w, h = fr["w"], fr["h"]
-    if len(raster) != w * h:
-        raise ValueError(f"GIF raster has {len(raster)} pixels, expected {w * h}")
-    idx = np.frombuffer(bytes(raster), dtype="u1").reshape(h, w)
-    if int(idx.max()) >= len(fr["pal"]):
-        raise ValueError("GIF pixel index beyond palette size")
-    if fr["interlace"]:  # rows were stored in 4-pass order
-        order = np.concatenate(
-            [np.arange(start, h, step) for start, step in _GIF_INTERLACE]
-        )
-        deinterlaced = np.empty_like(idx)
-        deinterlaced[order] = idx
-        idx = deinterlaced
-    return idx
-
-
-def _decode_gif(payload: bytes) -> "np.ndarray":
-    """GIF87a/GIF89a decode to uint8 — first image descriptor only (an
-    animated GIF's later frames are deltas against screen state; a still
-    decode returns frame 0, the same choice PIL's ``Image.open`` makes
-    before ``seek``). Grayscale palettes collapse to (h, w) and color
-    palettes expand to RGB via lookup, matching the PNG/BMP palette
-    convention. Extensions (GCE, comments, application blocks) are
-    skipped structurally; transparency is ignored — the transparent
-    index still has palette RGB, and feature extraction wants pixels,
-    not compositing."""
-    fr = _gif_walk(bytes(payload))
-    rgb = fr["pal"][_gif_frame_indices(fr)]  # (h, w, 3)
-    if bool((rgb[:, :, 0] == rgb[:, :, 1]).all() and (rgb[:, :, 1] == rgb[:, :, 2]).all()):
-        return np.ascontiguousarray(rgb[:, :, 0])  # grayscale palette
-    return np.ascontiguousarray(rgb)
-
-
-def encode_gif(arr: "np.ndarray", interlace: bool = False) -> bytes:
-    """Inverse of :func:`_decode_gif` — the deterministic fixture builder.
-    Builds the palette from the image's unique colors (≤256 or raises:
-    GIF cannot hold more — quantization is a lossy modeling choice this
-    lossless fixture path refuses to make silently), always writes a
-    GIF89a with a Graphic Control Extension and a comment block so every
-    round-trip exercises the decoder's extension-skipping path."""
-    import struct
-
-    arr = np.asarray(arr, dtype="uint8")
-    rgb = np.stack([arr] * 3, axis=-1) if arr.ndim == 2 else arr
-    if rgb.ndim != 3 or rgb.shape[2] != 3:
-        raise ValueError(f"expected (h,w) or (h,w,3), got {arr.shape}")
-    h, w = rgb.shape[:2]
-    pal, inv = np.unique(rgb.reshape(-1, 3), axis=0, return_inverse=True)
-    if len(pal) > 256:
-        raise ValueError(f"GIF palette overflow: {len(pal)} unique colors > 256")
-    pal_bits = max(1, (len(pal) - 1).bit_length())  # table sizes are 2^(1..8)
-    table = np.zeros((1 << pal_bits, 3), dtype="uint8")
-    table[: len(pal)] = pal
-    idx = inv.reshape(h, w).astype("uint8")
-    if interlace:
-        order = np.concatenate(
-            [np.arange(start, h, step) for start, step in _GIF_INTERLACE]
-        )
-        idx = idx[order]
-    mcs = max(2, pal_bits)
-    lzw = _gif_lzw_encode(idx.tobytes(), mcs)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((pal_bits - 1) & 0x07), 0, 0)
-    out += table.tobytes()
-    out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE: no transparency, delay 0
-    out += b"\x21\xfe\x09synthetic\x00"  # comment extension
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlace else 0)
-    out += bytes([mcs])
-    for off in range(0, len(lzw), 255):
-        chunk = lzw[off : off + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
 def media_table(emb: DataFrame) -> DataFrame:
     """Build the opaque-binary media table from the embeddings table:
     each vector serialized as a little-endian float32 tensor payload."""
@@ -3147,1029 +69,6 @@ def media_table(emb: DataFrame) -> DataFrame:
             )
 
     return emb.mapInPandas(pack, MEDIA_SCHEMA)
-
-
-# --- WebP: RIFF container + VP8L lossless bitstream ------------------------
-#
-# VP8L (the WebP lossless coding, RFC 9649 §3-§5) is deflate-shaped:
-# LSB-first bit packing, canonical prefix codes read MSB-of-code first,
-# LZ77 back-references, plus four image transforms (predictor / color /
-# subtract-green / color-indexing), an LRU-less color cache, and optional
-# per-block "meta" prefix-code groups. Everything below is stdlib+numpy;
-# the encoder exists to build deterministic fixtures that exercise every
-# decode path (it is NOT a rate-optimized coder). Lossy VP8 stays behind
-# the codec gate — its boolean arithmetic coder + loop filter is a real
-# codec-library dependency.
-
-# Back-reference distance codes 1..120 name near offsets (dx, dy) rather
-# than linear distances. The RFC's 120-entry table is exactly the offsets
-# with dx in [-7, 8], dy in [0, 7] (dy == 0 only with dx >= 1), ordered by
-# squared euclidean length with ties broken by |dx| ascending then
-# positive-dx first — the generation rule below reproduces the published
-# table and the test pins its head literally against the RFC excerpt.
-_VP8L_DIST_MAP: "list[tuple[int, int]]" = sorted(
-    (
-        (dx, dy)
-        for dy in range(8)
-        for dx in range(-7, 9)
-        if dy > 0 or dx >= 1
-    ),
-    key=lambda p: (p[0] * p[0] + p[1] * p[1], abs(p[0]), -p[0]),
-)
-
-# code-length-code symbol order (RFC 9649 §5.2.2) — differs from deflate
-_VP8L_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
-
-
-class _Vp8lReader:
-    """LSB-first bit reader over a VP8L stream (same packing as deflate:
-    bits fill each byte from bit 0 up)."""
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0  # bit offset
-
-    def bits(self, n: int) -> int:
-        end = self.pos + n
-        if end > 8 * len(self.buf):
-            raise ValueError("VP8L stream truncated")
-        v = 0
-        for i in range(n):
-            p = self.pos + i
-            v |= ((self.buf[p >> 3] >> (p & 7)) & 1) << i
-        self.pos = end
-        return v
-
-
-class _Vp8lWriter:
-    """LSB-first bit writer, inverse of :class:`_Vp8lReader`."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def bits(self, v: int, n: int) -> None:
-        if v < 0 or v >> n:
-            raise ValueError(f"value {v} does not fit in {n} bits")
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (v >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) & 7
-
-    def code(self, code: int, length: int) -> None:
-        # prefix codes are emitted MSB-of-code first (deflate convention)
-        for i in range(length - 1, -1, -1):
-            self.bits((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        return bytes(self.out)
-
-
-class _Vp8lPrefixCode:
-    """A canonical prefix code built from per-symbol code lengths.
-
-    Canonical assignment is deflate-style (codes count up within each
-    length, symbols in ascending order); decoding walks the stream one
-    bit at a time accumulating the code MSB-first. A code with exactly
-    one used symbol is the degenerate zero-bit code — decoding consumes
-    nothing (RFC 9649 simple codes with one symbol behave identically)."""
-
-    def __init__(self, lengths: "list[int]"):
-        used = [(s, l) for s, l in enumerate(lengths) if l > 0]
-        if not used:
-            raise ValueError("VP8L prefix code with no symbols")
-        self.single: "int | None" = used[0][0] if len(used) == 1 else None
-        self.table: "dict[tuple[int, int], int]" = {}
-        self.max_len = 0
-        if self.single is not None:
-            return
-        kraft = sum(1 << (15 - l) for _, l in used)
-        if kraft != 1 << 15:
-            raise ValueError(
-                f"VP8L prefix code is {'over' if kraft > 1 << 15 else 'under'}"
-                "-subscribed (Kraft sum != 1)"
-            )
-        self.max_len = max(l for _, l in used)
-        counts = [0] * (self.max_len + 1)
-        for _, l in used:
-            counts[l] += 1
-        next_code = [0] * (self.max_len + 1)
-        c = 0
-        for l in range(1, self.max_len + 1):
-            c = (c + counts[l - 1]) << 1
-            next_code[l] = c
-        encode: "dict[int, tuple[int, int]]" = {}
-        for s, l in used:  # ascending symbol order → canonical
-            encode[s] = (next_code[l], l)
-            self.table[(l, next_code[l])] = s
-            next_code[l] += 1
-        self.encode = encode
-
-    def decode(self, rd: _Vp8lReader) -> int:
-        if self.single is not None:
-            return self.single
-        code, length = 0, 0
-        while True:
-            code = (code << 1) | rd.bits(1)
-            length += 1
-            sym = self.table.get((length, code))
-            if sym is not None:
-                return sym
-            if length > self.max_len:
-                raise ValueError("invalid VP8L prefix code in stream")
-
-    def emit(self, wr: _Vp8lWriter, sym: int) -> None:
-        if self.single is not None:
-            if sym != self.single:
-                raise ValueError(f"symbol {sym} not in single-symbol code")
-            return
-        code, length = self.encode[sym]
-        wr.code(code, length)
-
-
-def _vp8l_prefix_value(sym: int, rd: _Vp8lReader) -> int:
-    """LZ77 length/distance-code values use a shared prefix scheme
-    (RFC 9649 §4.2.2.1): symbols 0-3 are the values 1-4; above that each
-    symbol names a power-of-two bucket with (sym-2)>>1 extra bits."""
-    if sym < 4:
-        return sym + 1
-    extra = (sym - 2) >> 1
-    offset = (2 + (sym & 1)) << extra
-    return offset + rd.bits(extra) + 1
-
-
-def _vp8l_prefix_sym(value: int) -> "tuple[int, int, int]":
-    """Inverse of :func:`_vp8l_prefix_value`: (symbol, extra_bits_value,
-    extra_bits_count) for a length/distance-code value >= 1."""
-    if value < 1:
-        raise ValueError("prefix-coded values start at 1")
-    if value <= 4:
-        return value - 1, 0, 0
-    u = value - 1
-    extra = u.bit_length() - 2
-    sym = 2 * extra + (u >> extra)
-    return sym, u & ((1 << extra) - 1), extra
-
-
-def _vp8l_read_prefix_code(rd: _Vp8lReader, alphabet: int) -> _Vp8lPrefixCode:
-    """One prefix code (RFC 9649 §5.2.2): either the 'simple' form (one
-    or two literal symbols) or the normal form — a 3-bit-per-entry
-    code-length code over 19 symbols, then per-symbol code lengths with
-    16 (copy previous non-zero ×3-6), 17 (zeros ×3-10), and 18 (zeros
-    ×11-138) repeats, optionally truncated by an explicit max_symbol."""
-    if rd.bits(1):  # simple code
-        n_syms = rd.bits(1) + 1
-        syms = [rd.bits(8) if rd.bits(1) else rd.bits(1)]
-        if n_syms == 2:
-            syms.append(rd.bits(8))
-        lengths = [0] * alphabet
-        for s in syms:
-            if s >= alphabet:
-                raise ValueError(f"VP8L simple-code symbol {s} out of alphabet")
-            if lengths[s]:
-                raise ValueError("VP8L simple code repeats a symbol")
-            lengths[s] = 1
-        return _Vp8lPrefixCode(lengths)
-    n_cl = 4 + rd.bits(4)
-    if n_cl > len(_VP8L_CLC_ORDER):
-        raise ValueError(f"VP8L declares {n_cl} code-length codes")
-    clc_lengths = [0] * 19
-    for i in range(n_cl):
-        clc_lengths[_VP8L_CLC_ORDER[i]] = rd.bits(3)
-    clc = _Vp8lPrefixCode(clc_lengths)
-    if rd.bits(1):  # explicit bound on the number of length entries read
-        length_nbits = 2 + 2 * rd.bits(3)
-        max_symbol = 2 + rd.bits(length_nbits)
-    else:
-        max_symbol = alphabet
-    lengths = [0] * alphabet
-    prev_nz = 8
-    sym = 0
-    while sym < alphabet:
-        if max_symbol == 0:
-            break  # remaining lengths stay zero
-        max_symbol -= 1
-        cl = clc.decode(rd)
-        if cl < 16:
-            lengths[sym] = cl
-            sym += 1
-            if cl:
-                prev_nz = cl
-            continue
-        if cl == 16:
-            repeat, fill = 3 + rd.bits(2), prev_nz
-        elif cl == 17:
-            repeat, fill = 3 + rd.bits(3), 0
-        else:
-            repeat, fill = 11 + rd.bits(7), 0
-        if sym + repeat > alphabet:
-            raise ValueError("VP8L code-length repeat overruns the alphabet")
-        for _ in range(repeat):
-            lengths[sym] = fill
-            sym += 1
-    return _Vp8lPrefixCode(lengths)
-
-
-def _vp8l_alphabets(cache_bits: int) -> "tuple[int, ...]":
-    """Alphabet sizes of the five codes in one group, in stream order:
-    green+length+cache, red, blue, alpha, distance."""
-    return (256 + 24 + ((1 << cache_bits) if cache_bits else 0), 256, 256, 256, 40)
-
-
-def _vp8l_decode_pixels(
-    rd: _Vp8lReader,
-    w: int,
-    h: int,
-    groups: "list[list[_Vp8lPrefixCode]]",
-    meta: "list[int] | None",
-    meta_bits: int,
-    cache_bits: int,
-) -> "list[int]":
-    """The LZ77 + color-cache pixel loop (RFC 9649 §4.2.2): green symbol
-    < 256 is a literal (red/blue/alpha codes follow), 256-279 a
-    back-reference length, >= 280 a color-cache hit. Every produced
-    pixel is inserted into the cache. Returns h*w ARGB ints."""
-    n = w * h
-    pixels: "list[int]" = [0] * n
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    shift = 32 - cache_bits if cache_bits else 0
-    meta_w = -(-w // (1 << meta_bits)) if meta is not None else 0
-    pos = 0
-    group = groups[0]
-    while pos < n:
-        if meta is not None:
-            y, x = divmod(pos, w)
-            gi = meta[(y >> meta_bits) * meta_w + (x >> meta_bits)]
-            if gi >= len(groups):
-                raise ValueError(f"VP8L meta group {gi} out of range")
-            group = groups[gi]
-        g = group[0].decode(rd)
-        if g < 256:
-            r = group[1].decode(rd)
-            b = group[2].decode(rd)
-            a = group[3].decode(rd)
-            px = (a << 24) | (r << 16) | (g << 8) | b
-            pixels[pos] = px
-            if cache is not None:
-                cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> shift] = px
-            pos += 1
-        elif g < 280:
-            length = _vp8l_prefix_value(g - 256, rd)
-            dist_code = _vp8l_prefix_value(group[4].decode(rd), rd)
-            if dist_code > 120:
-                dist = dist_code - 120
-            else:
-                dx, dy = _VP8L_DIST_MAP[dist_code - 1]
-                dist = max(1, dy * w + dx)
-            if dist > pos:
-                raise ValueError("VP8L back-reference before image start")
-            if pos + length > n:
-                raise ValueError("VP8L back-reference overruns the image")
-            for _ in range(length):
-                px = pixels[pos - dist]
-                pixels[pos] = px
-                if cache is not None:
-                    cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> shift] = px
-                pos += 1
-        else:
-            if cache is None:
-                raise ValueError("VP8L cache symbol without a color cache")
-            pixels[pos] = cache[g - 280]
-            pos += 1
-    return pixels
-
-
-def _vp8l_avg2(a: "tuple[int, ...]", b: "tuple[int, ...]") -> "tuple[int, ...]":
-    return tuple((x + y) >> 1 for x, y in zip(a, b))
-
-
-def _vp8l_predict(
-    mode: int,
-    L: "tuple[int, ...]",
-    T: "tuple[int, ...]",
-    TL: "tuple[int, ...]",
-    TR: "tuple[int, ...]",
-) -> "tuple[int, ...]":
-    """The 14 spatial predictors (RFC 9649 §4.2.2, channel-wise ARGB)."""
-    if mode == 0:
-        return (255, 0, 0, 0)
-    if mode == 1:
-        return L
-    if mode == 2:
-        return T
-    if mode == 3:
-        return TR
-    if mode == 4:
-        return TL
-    if mode == 5:
-        return _vp8l_avg2(_vp8l_avg2(L, TR), T)
-    if mode == 6:
-        return _vp8l_avg2(L, TL)
-    if mode == 7:
-        return _vp8l_avg2(L, T)
-    if mode == 8:
-        return _vp8l_avg2(TL, T)
-    if mode == 9:
-        return _vp8l_avg2(T, TR)
-    if mode == 10:
-        return _vp8l_avg2(_vp8l_avg2(L, TL), _vp8l_avg2(T, TR))
-    if mode == 11:
-        # Select: pick whichever of T, L is closer (L1 over channels) to
-        # the gradient L + T - TL; ties go to T
-        d = sum(abs(lc - tlc) - abs(tc - tlc) for lc, tc, tlc in zip(L, T, TL))
-        return T if d <= 0 else L
-    if mode == 12:
-        return tuple(
-            min(255, max(0, lc + tc - tlc)) for lc, tc, tlc in zip(L, T, TL)
-        )
-    if mode == 13:
-        ave = _vp8l_avg2(L, T)
-        out = []
-        for ac, tlc in zip(ave, TL):
-            d = ac - tlc
-            half = d // 2 if d >= 0 else -((-d) // 2)  # C trunc-toward-zero
-            out.append(min(255, max(0, ac + half)))
-        return tuple(out)
-    raise ValueError(f"VP8L predictor mode {mode}")
-
-
-def _vp8l_unpredict(
-    arr: "np.ndarray", modes: "np.ndarray", bits: int
-) -> "np.ndarray":
-    """Inverse predictor transform: residuals + prediction mod 256, pixel
-    by pixel since predictions read already-reconstructed neighbors.
-    Edge rules: (0,0) predicts ARGB black, the rest of row 0 predicts L,
-    column 0 predicts T, and TR in the last column wraps to the first
-    pixel of the SAME row (already decoded). Sequential by nature — the
-    crawl-scale raster path belongs in a codec library, this is the
-    feature-extraction path (same caveat as PNG Paeth)."""
-    h, w, _ = arr.shape
-    out = [[None] * w for _ in range(h)]
-    res = arr.astype("int64")
-    for y in range(h):
-        row = out[y]
-        above = out[y - 1] if y else None
-        for x in range(w):
-            if y == 0:
-                pred = (255, 0, 0, 0) if x == 0 else row[x - 1]
-            elif x == 0:
-                pred = above[0]
-            else:
-                mode = int(modes[y >> bits, x >> bits])
-                if mode > 13:
-                    raise ValueError(f"VP8L predictor mode {mode}")
-                tr = above[x + 1] if x + 1 < w else row[0]
-                pred = _vp8l_predict(
-                    mode, row[x - 1], above[x], above[x - 1], tr
-                )
-            px = res[y, x]
-            row[x] = tuple(int(px[c] + pred[c]) & 0xFF for c in range(4))
-    return np.array(out, dtype="uint8")
-
-
-def _vp8l_ct_delta(t: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-    """ColorTransformDelta: (int8)t * (int8)c >> 5, arithmetic shift."""
-    return (t.astype("int8").astype("int32") * c.astype("int8").astype("int32")) >> 5
-
-
-def _vp8l_uncolor(arr: "np.ndarray", cte: "np.ndarray", bits: int) -> "np.ndarray":
-    """Inverse color transform (RFC 9649 §4.2.3), fully vectorized: per
-    block the transform element packs green_to_red in its blue channel,
-    green_to_blue in green, red_to_blue in red; red is reconstructed
-    first and the red_to_blue delta uses the RECONSTRUCTED red."""
-    h, w, _ = arr.shape
-    by = np.arange(h) >> bits
-    bx = np.arange(w) >> bits
-    blk = cte[by][:, bx]  # (h, w, 4) ARGB transform elements
-    g = arr[:, :, 2].astype("int32")
-    red = (arr[:, :, 1].astype("int32") + _vp8l_ct_delta(blk[:, :, 3], g)) & 0xFF
-    blue = (
-        arr[:, :, 3].astype("int32")
-        + _vp8l_ct_delta(blk[:, :, 2], g)
-        + _vp8l_ct_delta(blk[:, :, 1], red)
-    ) & 0xFF
-    out = arr.copy()
-    out[:, :, 1] = red.astype("uint8")
-    out[:, :, 3] = blue.astype("uint8")
-    return out
-
-
-def _vp8l_decode_stream(
-    rd: _Vp8lReader, w: int, h: int, level0: bool
-) -> "np.ndarray":
-    """One entropy-coded image (RFC 9649 §5): transforms (level 0 only),
-    color-cache declaration, optional meta prefix-code image (level 0
-    only), prefix-code groups, then the pixel loop; inverse transforms
-    apply in reverse read order. Returns (h, w, 4) uint8 ARGB."""
-    transforms = []
-    if level0:
-        seen = set()
-        while rd.bits(1):
-            t = rd.bits(2)
-            if t in seen:
-                raise ValueError(f"VP8L transform {t} declared twice")
-            seen.add(t)
-            if t == 2:  # subtract green
-                transforms.append(("sub_green",))
-            elif t in (0, 1):  # predictor / color
-                bits = rd.bits(3) + 2
-                bw, bh = -(-w // (1 << bits)), -(-h // (1 << bits))
-                sub = _vp8l_decode_stream(rd, bw, bh, False)
-                transforms.append(("predictor" if t == 0 else "color", bits, sub))
-            else:  # color indexing, with pixel bundling below 17 colors
-                n_colors = rd.bits(8) + 1
-                pal = _vp8l_decode_stream(rd, n_colors, 1, False)
-                pal = np.cumsum(pal[0].astype("int64"), axis=0).astype("uint8")
-                wbits = 3 if n_colors <= 2 else 2 if n_colors <= 4 else (
-                    1 if n_colors <= 16 else 0
-                )
-                transforms.append(("palette", pal, wbits, w))
-                w = -(-w // (1 << wbits))
-    cache_bits = rd.bits(4) if rd.bits(1) else 0
-    if cache_bits and not 1 <= cache_bits <= 11:
-        raise ValueError(f"VP8L color-cache bits {cache_bits}")
-    meta = None
-    meta_bits = 0
-    n_groups = 1
-    if level0 and rd.bits(1):
-        meta_bits = rd.bits(3) + 2
-        mw, mh = -(-w // (1 << meta_bits)), -(-h // (1 << meta_bits))
-        meta_img = _vp8l_decode_stream(rd, mw, mh, False)
-        # group index lives in (red << 8) | green of each meta pixel
-        meta = [
-            (int(p[1]) << 8) | int(p[2]) for p in meta_img.reshape(-1, 4)
-        ]
-        n_groups = max(meta) + 1
-    sizes = _vp8l_alphabets(cache_bits)
-    groups = [
-        [_vp8l_read_prefix_code(rd, s) for s in sizes] for _ in range(n_groups)
-    ]
-    pixels = _vp8l_decode_pixels(rd, w, h, groups, meta, meta_bits, cache_bits)
-    arr = np.array(pixels, dtype="uint32")
-    arr = np.stack(
-        [(arr >> 24) & 0xFF, (arr >> 16) & 0xFF, (arr >> 8) & 0xFF, arr & 0xFF],
-        axis=1,
-    ).astype("uint8").reshape(h, w, 4)
-    for tr in reversed(transforms):
-        if tr[0] == "sub_green":
-            g = arr[:, :, 2].astype("int32")
-            arr = arr.copy()
-            arr[:, :, 1] = ((arr[:, :, 1] + g) & 0xFF).astype("uint8")
-            arr[:, :, 3] = ((arr[:, :, 3] + g) & 0xFF).astype("uint8")
-        elif tr[0] == "predictor":
-            arr = _vp8l_unpredict(arr, tr[2][:, :, 2], tr[1])
-        elif tr[0] == "color":
-            arr = _vp8l_uncolor(arr, tr[2], tr[1])
-        else:  # palette: unbundle indices, then look up
-            pal, wbits, full_w = tr[1], tr[2], tr[3]
-            idx = arr[:, :, 2].astype("int64")  # packed indices, green
-            if wbits:
-                per = 1 << wbits
-                bpp = 8 >> wbits
-                mask = (1 << bpp) - 1
-                cols = np.arange(full_w)
-                idx = (
-                    idx[:, cols // per] >> (bpp * (cols % per))
-                ) & mask
-            else:
-                idx = idx[:, :full_w]
-            if int(idx.max()) >= pal.shape[0]:
-                raise ValueError("VP8L palette index out of range")
-            arr = pal[idx]
-    return arr
-
-
-def _decode_vp8l(data: bytes) -> "np.ndarray":
-    """VP8L chunk payload → (h, w, 4) uint8 ARGB."""
-    if not data or data[0] != 0x2F:
-        raise ValueError("VP8L signature byte missing")
-    rd = _Vp8lReader(data)
-    rd.bits(8)
-    w = rd.bits(14) + 1
-    h = rd.bits(14) + 1
-    rd.bits(1)  # alpha-is-used hint
-    version = rd.bits(3)
-    if version:
-        raise ValueError(f"VP8L version {version}: only 0 is defined")
-    return _vp8l_decode_stream(rd, w, h, True)
-
-
-def _webp_chunks(payload: bytes) -> "list[tuple[str, bytes]]":
-    """Walk the RIFF container: returns [(fourcc, chunk_payload), ...].
-    Odd-sized chunks carry a pad byte (RIFF rule); strict framing."""
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        raise ValueError("not a WebP (RIFF/WEBP) payload")
-    (total,) = struct.unpack_from("<I", payload, 4)
-    if total + 8 != len(payload):
-        raise ValueError(
-            f"RIFF declares {total + 8} bytes, payload has {len(payload)}"
-        )
-    chunks = []
-    pos = 12
-    while pos < len(payload):
-        if pos + 8 > len(payload):
-            raise ValueError("truncated RIFF chunk header")
-        fourcc = payload[pos : pos + 4].decode("latin-1")
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"truncated RIFF chunk {fourcc!r}")
-        chunks.append((fourcc, bytes(body)))
-        pos += 8 + size + (size & 1)
-    return chunks
-
-
-def _decode_webp(payload: bytes) -> "np.ndarray":
-    """WebP container decode: VP8L (lossless) decodes in full; lossy VP8
-    and animation remain behind the codec gate (the VP8 boolean
-    arithmetic decoder + reconstruction filter is a genuine codec-library
-    dependency). Returns RGB (alpha dropped, like PNG RGBA)."""
-    chunks = _webp_chunks(payload)
-    kinds = [c[0] for c in chunks]
-    if "ANIM" in kinds or "ANMF" in kinds:
-        raise NotImplementedError("animated WebP: still images only")
-    for fourcc, body in chunks:
-        if fourcc == "VP8L":
-            argb = _decode_vp8l(body)
-            return np.ascontiguousarray(argb[:, :, 1:4])
-        if fourcc == "VP8 ":
-            raise NotImplementedError(
-                "lossy WebP (VP8) needs a codec library; only VP8L "
-                "lossless decodes in-process"
-            )
-    raise ValueError(f"WebP container without an image chunk: {kinds}")
-
-
-def _vp8l_huff_lengths(counts: "dict[int, int]", max_len: int) -> "dict[int, int]":
-    """Length-limited Huffman code lengths via package-merge: optimal
-    under the depth bound and Kraft-complete by construction (asserted).
-    Zero-count alphabets collapse to the single symbol 0 (the degenerate
-    zero-bit code both ends special-case)."""
-    syms = sorted(s for s, c in counts.items() if c > 0)
-    if not syms:
-        return {0: 1}
-    if len(syms) == 1:
-        return {syms[0]: 1}
-    if len(syms) > (1 << max_len):
-        raise ValueError(f"{len(syms)} symbols cannot fit {max_len}-bit codes")
-    leaves = sorted((counts[s], (s,)) for s in syms)
-    prev: "list[tuple[int, tuple[int, ...]]]" = []
-    for _ in range(max_len):
-        items = list(leaves)
-        for i in range(0, len(prev) - 1, 2):
-            items.append((prev[i][0] + prev[i + 1][0], prev[i][1] + prev[i + 1][1]))
-        items.sort()
-        prev = items
-    lengths = {s: 0 for s in syms}
-    for _, pack in prev[: 2 * len(syms) - 2]:
-        for s in pack:
-            lengths[s] += 1
-    kraft = sum(1 << (max_len - l) for l in lengths.values())
-    if kraft != 1 << max_len or max(lengths.values()) > max_len:
-        raise ValueError("package-merge produced an invalid code")  # unreachable
-    return lengths
-
-
-def _vp8l_write_prefix_code(
-    wr: _Vp8lWriter, lengths: "dict[int, int]", alphabet: int
-) -> _Vp8lPrefixCode:
-    """Serialize one prefix code (inverse of
-    :func:`_vp8l_read_prefix_code`) and return the code for emitting
-    symbols. Uses the simple two-symbol form when legal; otherwise the
-    code-length code with 17/18 zero-runs and 16 repeats — so fixture
-    streams exercise every decoder branch."""
-    syms = sorted(lengths)
-    if len(syms) <= 2 and all(s <= 255 for s in syms):
-        wr.bits(1, 1)  # simple
-        wr.bits(len(syms) - 1, 1)
-        s0 = syms[0]
-        if s0 <= 1:
-            wr.bits(0, 1)
-            wr.bits(s0, 1)
-        else:
-            wr.bits(1, 1)
-            wr.bits(s0, 8)
-        if len(syms) == 2:
-            wr.bits(syms[1], 8)
-        full = [0] * alphabet
-        for s in syms:
-            full[s] = 1
-        return _Vp8lPrefixCode(full)
-    wr.bits(0, 1)
-    arr = [lengths.get(s, 0) for s in range(alphabet)]
-    tokens: "list[tuple[int, int, int]]" = []  # (clc symbol, extra, extra bits)
-    i = 0
-    while i < alphabet:
-        v = arr[i]
-        run = 1
-        while i + run < alphabet and arr[i + run] == v:
-            run += 1
-        i += run
-        if v == 0:
-            while run:
-                if run >= 11:
-                    take = min(138, run)
-                    tokens.append((18, take - 11, 7))
-                elif run >= 3:
-                    take = run
-                    tokens.append((17, take - 3, 3))
-                else:
-                    take = 1
-                    tokens.append((0, 0, 0))
-                run -= take
-        else:
-            tokens.append((v, 0, 0))
-            run -= 1
-            while run:
-                if run >= 3:
-                    take = min(6, run)
-                    tokens.append((16, take - 3, 2))
-                else:
-                    take = 1
-                    tokens.append((v, 0, 0))
-                run -= take
-    hist: "dict[int, int]" = {}
-    for s, _, _ in tokens:
-        hist[s] = hist.get(s, 0) + 1
-    clc_lengths = _vp8l_huff_lengths(hist, 7)
-    if len(clc_lengths) == 1:
-        # a lone code-length symbol would be an under-subscribed 1-bit
-        # code; declare a never-emitted sibling to complete it
-        only = next(iter(clc_lengths))
-        clc_lengths = {only: 1, (18 if only != 18 else 17): 1}
-    posmap = {s: i for i, s in enumerate(_VP8L_CLC_ORDER)}
-    n_cl = max(4, 1 + max(posmap[s] for s in clc_lengths))
-    wr.bits(n_cl - 4, 4)
-    for k in range(n_cl):
-        wr.bits(clc_lengths.get(_VP8L_CLC_ORDER[k], 0), 3)
-    wr.bits(0, 1)  # lengths for the whole alphabet follow (no max_symbol)
-    full19 = [0] * 19
-    for s, l in clc_lengths.items():
-        full19[s] = l
-    clc = _Vp8lPrefixCode(full19)
-    for s, extra, n_extra in tokens:
-        clc.emit(wr, s)
-        if n_extra:
-            wr.bits(extra, n_extra)
-    return _Vp8lPrefixCode(arr)
-
-
-def _vp8l_tokenize(
-    pixels: "list[int]", w: int, cache_bits: int, lz77: bool
-) -> "list[tuple]":
-    """Greedy LZ77 + color-cache tokenizer over ARGB ints. Back-reference
-    candidates are the near offsets real encoders favor (left run,
-    above-row runs) so the neighborhood distance codes get exercised;
-    anything else would encode via literals anyway. Tokens:
-    ("lit", pos, px) / ("copy", pos, length, dist_code) /
-    ("cache", pos, index)."""
-    n = len(pixels)
-    rev: "dict[int, int]" = {}
-    for ci, (dx, dy) in enumerate(_VP8L_DIST_MAP):
-        d = dy * w + dx
-        if d >= 1 and d not in rev:
-            rev[d] = ci + 1
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    shift = 32 - cache_bits if cache_bits else 0
-
-    def insert(px: int) -> None:
-        if cache is not None:
-            cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> shift] = px
-
-    tokens: "list[tuple]" = []
-    pos = 0
-    while pos < n:
-        best_len = best_d = 0
-        if lz77:
-            for d in (1, w - 1, w, w + 1, 2 * w):
-                if 1 <= d <= pos:
-                    l = 0
-                    while pos + l < n and l < 4096 and pixels[pos + l] == pixels[pos + l - d]:
-                        l += 1
-                    if l > best_len:
-                        best_len, best_d = l, d
-        if best_len >= 3:
-            tokens.append(("copy", pos, best_len, rev.get(best_d, best_d + 120)))
-            for i in range(pos, pos + best_len):
-                insert(pixels[i])
-            pos += best_len
-            continue
-        px = pixels[pos]
-        if cache is not None:
-            k = ((0x1E35A7BD * px) & 0xFFFFFFFF) >> shift
-            if cache[k] == px:
-                tokens.append(("cache", pos, k))
-                pos += 1
-                continue
-        tokens.append(("lit", pos, px))
-        insert(px)
-        pos += 1
-    return tokens
-
-
-def _vp8l_write_stream(
-    wr: _Vp8lWriter,
-    pixels: "list[int]",
-    w: int,
-    h: int,
-    level0: bool,
-    cache_bits: int = 0,
-    lz77: bool = True,
-    meta_bits: "int | None" = None,
-    n_meta: int = 2,
-) -> None:
-    """Write one entropy-coded image (cache declaration, optional meta
-    prefix-code image at level 0, per-group prefix codes, pixel stream).
-    Transform declarations, when any, are the level-0 caller's job and
-    precede this. Inverse of :func:`_vp8l_decode_stream`."""
-    if cache_bits:
-        wr.bits(1, 1)
-        wr.bits(cache_bits, 4)
-    else:
-        wr.bits(0, 1)
-    meta = None
-    meta_w = 0
-    n_groups = 1
-    if level0:
-        if meta_bits:
-            if not 2 <= meta_bits <= 9:
-                raise ValueError(f"meta_bits {meta_bits} out of range 2-9")
-            wr.bits(1, 1)
-            wr.bits(meta_bits - 2, 3)
-            meta_w = -(-w // (1 << meta_bits))
-            meta_h = -(-h // (1 << meta_bits))
-            meta = [
-                ((bx + by) % n_meta)
-                for by in range(meta_h)
-                for bx in range(meta_w)
-            ]
-            meta_px = [0xFF000000 | (g << 8) for g in meta]
-            _vp8l_write_stream(wr, meta_px, meta_w, meta_h, False, 0, False)
-            n_groups = n_meta
-        else:
-            wr.bits(0, 1)
-    tokens = _vp8l_tokenize(pixels, w, cache_bits, lz77)
-
-    def group_of(pos: int) -> int:
-        if meta is None:
-            return 0
-        y, x = divmod(pos, w)
-        return meta[(y >> meta_bits) * meta_w + (x >> meta_bits)]
-
-    hists = [[{} for _ in range(5)] for _ in range(n_groups)]
-
-    def bump(g: int, ch: int, sym: int) -> None:
-        hists[g][ch][sym] = hists[g][ch].get(sym, 0) + 1
-
-    for tok in tokens:
-        g = group_of(tok[1])
-        if tok[0] == "lit":
-            px = tok[2]
-            bump(g, 0, (px >> 8) & 0xFF)
-            bump(g, 1, (px >> 16) & 0xFF)
-            bump(g, 2, px & 0xFF)
-            bump(g, 3, (px >> 24) & 0xFF)
-        elif tok[0] == "copy":
-            bump(g, 0, 256 + _vp8l_prefix_sym(tok[2])[0])
-            bump(g, 4, _vp8l_prefix_sym(tok[3])[0])
-        else:
-            bump(g, 0, 280 + tok[2])
-    sizes = _vp8l_alphabets(cache_bits)
-    codes = [
-        [
-            _vp8l_write_prefix_code(
-                wr, _vp8l_huff_lengths(hists[g][ch], 15), sizes[ch]
-            )
-            for ch in range(5)
-        ]
-        for g in range(n_groups)
-    ]
-    for tok in tokens:
-        grp = codes[group_of(tok[1])]
-        if tok[0] == "lit":
-            px = tok[2]
-            grp[0].emit(wr, (px >> 8) & 0xFF)
-            grp[1].emit(wr, (px >> 16) & 0xFF)
-            grp[2].emit(wr, px & 0xFF)
-            grp[3].emit(wr, (px >> 24) & 0xFF)
-        elif tok[0] == "copy":
-            sym, extra, n_extra = _vp8l_prefix_sym(tok[2])
-            grp[0].emit(wr, 256 + sym)
-            if n_extra:
-                wr.bits(extra, n_extra)
-            sym, extra, n_extra = _vp8l_prefix_sym(tok[3])
-            grp[4].emit(wr, sym)
-            if n_extra:
-                wr.bits(extra, n_extra)
-        else:
-            grp[0].emit(wr, 280 + tok[2])
-
-
-def _vp8l_forward_predict(
-    arr: "np.ndarray", modes: "np.ndarray", bits: int
-) -> "np.ndarray":
-    """Forward predictor transform: residual = pixel - prediction mod
-    256, predictions from ORIGINAL neighbors (the decoder reconstructs
-    them progressively, so they agree). Same edge rules as the inverse."""
-    h, w, _ = arr.shape
-    src = [[tuple(int(v) for v in arr[y, x]) for x in range(w)] for y in range(h)]
-    out = np.zeros_like(arr)
-    for y in range(h):
-        for x in range(w):
-            if y == 0:
-                pred = (255, 0, 0, 0) if x == 0 else src[0][x - 1]
-            elif x == 0:
-                pred = src[y - 1][0]
-            else:
-                tr = src[y - 1][x + 1] if x + 1 < w else src[y][0]
-                pred = _vp8l_predict(
-                    int(modes[y >> bits, x >> bits]),
-                    src[y][x - 1], src[y - 1][x], src[y - 1][x - 1], tr,
-                )
-            out[y, x] = [(src[y][x][c] - pred[c]) & 0xFF for c in range(4)]
-    return out
-
-
-def _argb_ints(arr: "np.ndarray") -> "list[int]":
-    """(h, w, 4) uint8 ARGB → row-major list of packed uint32 pixels."""
-    v = (
-        (arr[:, :, 0].astype("uint32") << 24)
-        | (arr[:, :, 1].astype("uint32") << 16)
-        | (arr[:, :, 2].astype("uint32") << 8)
-        | arr[:, :, 3].astype("uint32")
-    )
-    return [int(x) for x in v.reshape(-1)]
-
-
-def encode_webp(
-    arr: "np.ndarray",
-    *,
-    lz77: bool = True,
-    cache_bits: int = 0,
-    subtract_green: bool = False,
-    predictor: "int | str | None" = None,
-    color_transform: "tuple | list | None" = None,
-    palette: bool = False,
-    meta_bits: "int | None" = None,
-    n_meta: int = 2,
-    transform_bits: int = 3,
-    extended: bool = False,
-) -> bytes:
-    """Deterministic lossless WebP (VP8L) encoder for round-trip tests —
-    inverse of :func:`_decode_webp`, not a rate-optimized coder.
-
-    Every decoder path is reachable by flag: LZ77 back-references
-    (``lz77``), a color cache (``cache_bits`` 1-11), the subtract-green
-    transform, the spatial predictor (``predictor`` = mode 0-13 or
-    ``"cycle"`` to vary the mode per block), the color transform
-    (``color_transform`` = one ``(green_to_red, green_to_blue,
-    red_to_blue)`` int8 triple or a list cycled across blocks),
-    color-indexing with pixel bundling (``palette``, <= 256 distinct
-    colors), and per-block meta prefix-code groups (``meta_bits``).
-    ``palette`` is mutually exclusive with the pixel transforms — real
-    encoders never stack them and the fixture stays unambiguous.
-    ``extended=True`` wraps the stream in a VP8X container. Input is
-    uint8 (h, w) gray (stored as replicated RGB — VP8L has no gray mode)
-    or (h, w, 3) RGB; alpha is always 255."""
-    import struct
-
-    a = np.asarray(arr)
-    if a.dtype != np.dtype("uint8"):
-        raise ValueError(f"expected uint8, got {a.dtype}")
-    if a.ndim == 2:
-        a = np.repeat(a[:, :, None], 3, axis=2)
-    if a.ndim != 3 or a.shape[2] != 3:
-        raise ValueError(f"expected (h, w) or (h, w, 3), got {a.shape}")
-    h, w = a.shape[:2]
-    if not (0 < w <= 1 << 14 and 0 < h <= 1 << 14):
-        raise ValueError(f"VP8L dimensions {w}x{h} out of 14-bit range")
-    if palette and (subtract_green or predictor is not None or color_transform):
-        raise ValueError("palette does not combine with pixel transforms")
-    if not 2 <= transform_bits <= 9:
-        raise ValueError(f"transform_bits {transform_bits} out of range 2-9")
-    px = np.concatenate([np.full((h, w, 1), 255, "uint8"), a], axis=2)
-    wr = _Vp8lWriter()
-    wr.bits(0x2F, 8)
-    wr.bits(w - 1, 14)
-    wr.bits(h - 1, 14)
-    wr.bits(0, 1)  # no alpha in use
-    wr.bits(0, 3)  # version
-    cur_w = w
-    if subtract_green:
-        wr.bits(1, 1)
-        wr.bits(2, 2)
-        g = px[:, :, 2].astype("int32")
-        px = px.copy()
-        px[:, :, 1] = ((px[:, :, 1] - g) & 0xFF).astype("uint8")
-        px[:, :, 3] = ((px[:, :, 3] - g) & 0xFF).astype("uint8")
-    if color_transform is not None:
-        wr.bits(1, 1)
-        wr.bits(1, 2)
-        wr.bits(transform_bits - 2, 3)
-        bw = -(-cur_w // (1 << transform_bits))
-        bh = -(-h // (1 << transform_bits))
-        ctes = (
-            [tuple(color_transform)]
-            if isinstance(color_transform[0], int)
-            else [tuple(c) for c in color_transform]
-        )
-        cte = np.zeros((bh, bw, 4), dtype="uint8")
-        for by in range(bh):
-            for bx in range(bw):
-                g2r, g2b, r2b = ctes[(bx + by) % len(ctes)]
-                cte[by, bx] = (255, r2b & 0xFF, g2b & 0xFF, g2r & 0xFF)
-        _vp8l_write_stream(wr, _argb_ints(cte), bw, bh, False, 0, False)
-        blk = cte[np.arange(h) >> transform_bits][:, np.arange(cur_w) >> transform_bits]
-        g = px[:, :, 2].astype("int32")
-        red0 = px[:, :, 1].astype("int32")
-        res_red = (red0 - _vp8l_ct_delta(blk[:, :, 3], g)) & 0xFF
-        res_blue = (
-            px[:, :, 3].astype("int32")
-            - _vp8l_ct_delta(blk[:, :, 2], g)
-            - _vp8l_ct_delta(blk[:, :, 1], red0)
-        ) & 0xFF
-        px = px.copy()
-        px[:, :, 1] = res_red.astype("uint8")
-        px[:, :, 3] = res_blue.astype("uint8")
-    if predictor is not None:
-        wr.bits(1, 1)
-        wr.bits(0, 2)
-        wr.bits(transform_bits - 2, 3)
-        bw = -(-cur_w // (1 << transform_bits))
-        bh = -(-h // (1 << transform_bits))
-        if predictor == "cycle":
-            modes = np.fromfunction(
-                lambda by, bx: (bx + by) % 14, (bh, bw), dtype=int
-            ).astype("int64")
-        else:
-            if not 0 <= int(predictor) <= 13:
-                raise ValueError(f"predictor mode {predictor}")
-            modes = np.full((bh, bw), int(predictor), dtype="int64")
-        sub = np.zeros((bh, bw, 4), dtype="uint8")
-        sub[:, :, 0] = 255
-        sub[:, :, 2] = modes.astype("uint8")
-        _vp8l_write_stream(wr, _argb_ints(sub), bw, bh, False, 0, False)
-        px = _vp8l_forward_predict(px, modes, transform_bits)
-    if palette:
-        wr.bits(1, 1)
-        wr.bits(3, 2)
-        flat = _argb_ints(px)
-        colors = sorted(set(flat))
-        if len(colors) > 256:
-            raise ValueError(f"{len(colors)} distinct colors exceed the palette")
-        wr.bits(len(colors) - 1, 8)
-        deltas = []
-        prev = 0
-        for c in colors:
-            d = 0
-            for sh in (24, 16, 8, 0):
-                d |= (((c >> sh) - (prev >> sh)) & 0xFF) << sh
-            deltas.append(d)
-            prev = c
-        _vp8l_write_stream(wr, deltas, len(colors), 1, False, 0, False)
-        lookup = {c: i for i, c in enumerate(colors)}
-        idx = np.array([lookup[p] for p in flat], dtype="int64").reshape(h, cur_w)
-        n = len(colors)
-        wbits = 3 if n <= 2 else 2 if n <= 4 else 1 if n <= 16 else 0
-        if wbits:
-            per = 1 << wbits
-            bpp = 8 >> wbits
-            packed_w = -(-cur_w // per)
-            packed = np.zeros((h, packed_w), dtype="int64")
-            for x in range(cur_w):
-                packed[:, x // per] |= idx[:, x] << (bpp * (x % per))
-            idx = packed
-            cur_w = packed_w
-        px = np.zeros((h, cur_w, 4), dtype="uint8")
-        px[:, :, 0] = 255
-        px[:, :, 2] = idx.astype("uint8")
-    wr.bits(0, 1)  # end of transforms
-    _vp8l_write_stream(
-        wr, _argb_ints(px), cur_w, h, True, cache_bits, lz77, meta_bits, n_meta
-    )
-    chunks: "list[tuple[str, bytes]]" = []
-    if extended:
-        chunks.append(
-            (
-                "VP8X",
-                bytes([0, 0, 0, 0])
-                + (w - 1).to_bytes(3, "little")
-                + (h - 1).to_bytes(3, "little"),
-            )
-        )
-    chunks.append(("VP8L", wr.bytes()))
-    body = b"".join(
-        cc.encode("latin-1")
-        + struct.pack("<I", len(b))
-        + b
-        + (b"\x00" if len(b) & 1 else b"")
-        for cc, b in chunks
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
 
 
 def extract_features(media: DataFrame) -> DataFrame:
