@@ -1,9 +1,13 @@
-"""PDF standard-security-handler crypto — the decryption half that lets
-the pure-Python PDF reader (`pdfimages.PdfDocument`) open the encrypted
-PDFs a real crawl contains. Everything here is the PUBLIC spec (ISO
-32000-1:2008 §7.6 / ISO 32000-2 §7.6.4) plus FIPS-197 (AES) — no code
-from the reference, which never reads PDFs back at all (it only shells
-out to gs/tesseract, ref: pypdfocr/pypdfocr_pdf.py).
+"""PDF standard-security-handler crypto: RC4, AES and the standard
+security handler's key derivation, both directions. Everything here is
+the PUBLIC spec (ISO 32000-1:2008 §7.6 / ISO 32000-2 §7.6.4) plus
+FIPS-197 (AES) — no code from the reference, which never reads PDFs
+back at all (it only shells out to gs/tesseract, ref:
+pypdfocr/pypdfocr_pdf.py).
+
+No entry point imports this module and no PDF reader in the package
+calls it any more; only its unit tests do. It is on the reachability
+allowlist and ROADMAP §1 schedules its deletion.
 
 Scope — the crawl-relevant population: the *standard* security handler
 with an EMPTY USER PASSWORD (DRM-style "encrypted but openable", the
@@ -26,12 +30,12 @@ legacy path; real crawl PDFs since ~2008 are AES). AES is vectorized
 with numpy ACROSS blocks — SubBytes/ShiftRows/MixColumns are table
 lookups and index permutations over an (n_blocks, 16) array, so
 CBC *decryption* (where every block's cipher input is independent and
-the chaining XOR is a post-pass) runs all blocks per round in parallel,
-the same batched-table style as the in-repo JPEG/PNG decoders. CBC
-encryption chains block-to-block and is used only by the fixture
-encoder and the R6 hash loop. The S-box and GF(2^8) multiply tables are
-*generated* at import from the FIPS-197 definitions (Rijndael field
-x^8+x^4+x^3+x+1, affine transform) rather than pasted as literals.
+the chaining XOR is a post-pass) runs all blocks per round in parallel.
+CBC encryption chains block-to-block and is used only by
+``StandardEncryptor`` and the R6 hash loop. The S-box and GF(2^8)
+multiply tables are *generated* at import from the FIPS-197
+definitions (Rijndael field x^8+x^4+x^3+x+1, affine transform) rather
+than pasted as literals.
 """
 
 from __future__ import annotations
@@ -289,7 +293,7 @@ class _AesCbcEncryptor:
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes, pad: bool = True) -> bytes:
-    """CBC encrypt (fixture encoder + the R6 hash loop). Chaining makes
+    """CBC encrypt (``StandardEncryptor`` + the R6 hash loop). Chaining makes
     this inherently sequential across blocks; uses the scalar T-table
     path with the key expanded once."""
     if pad:
@@ -460,12 +464,12 @@ class StandardDecryptor:
 
 
 class StandardEncryptor:
-    """The write half, for fixtures and the searchable-PDF artifact:
+    """The write half:
     computes /O and /U (Algorithms 3/5 for R≤4; the R6 salted-hash
     layout with /UE /OE /Perms) for an empty-or-given user password and
     encrypts per object. ``mode``: ``rc4`` → V2/R3 RC4-128, ``aesv2`` →
     V4/R4 AES-128, ``aesv3`` → V5/R6 AES-256. Salts and the AES IVs are
-    derived deterministically from (id0, object number) so fixtures are
+    derived deterministically from (id0, object number) so output is
     byte-stable; determinism costs nothing here because each (key, IV)
     pair still encrypts a distinct object exactly once."""
 

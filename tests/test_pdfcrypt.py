@@ -1,17 +1,12 @@
-"""PDF standard-security-handler crypto (pdfcrypt) and its wiring into
-the pure-Python PDF reader: primitives against published known-answer
-vectors, then full encrypted-PDF round trips through every handler
-revision the crawl population contains (R3 RC4-128, R4 AES-128 crypt
-filters, R6 AES-256) in both xref layouts. The reference never reads
-PDFs back (ref: pypdfocr/pypdfocr_pdf.py only merges via hocr-pdf), so
-this surface is crawl-scale-native: DRM-style empty-user-password PDFs
-must flow through the extraction pipeline instead of erroring out."""
+"""PDF standard-security-handler crypto (pdfcrypt): the primitives
+against published known-answer vectors, and the handler's key agreement
+between its write and read halves for every revision it implements
+(R3 RC4-128, R4 AES-128 crypt filters, R6 AES-256)."""
 
 import numpy as np
 import pytest
 
-from pypdfocr_spark import pdfcrypt, pdfimages
-from tests.conftest import SF_SMOKE
+from pypdfocr_spark import pdfcrypt
 
 
 # -- primitives ---------------------------------------------------------------
@@ -80,83 +75,3 @@ def test_standard_handler_key_agreement():
             assert dec.key == enc.key, (mode, pw)
             data = b"Tj (secret text run) BT ET" * 7
             assert dec.decrypt(enc.encrypt(data, 12), 12, 0) == data, (mode, pw)
-
-
-# -- encrypted-PDF round trips ------------------------------------------------
-
-TEXT_PAGE = [{
-    "content": b"BT /F1 12 Tf 72 700 Td (Hello encrypted world) Tj ET",
-    "fonts": {"F1": {"Type": "Font", "Subtype": "Type1", "BaseFont": "Helvetica"}},
-}]
-
-
-@pytest.mark.parametrize("mode", ["rc4", "aesv2", "aesv3"])
-@pytest.mark.parametrize("xref_stream", [False, True])
-def test_encrypted_pdf_roundtrip(mode, xref_stream):
-    """Images and the text layer extracted from an encrypted PDF match
-    the plaintext build exactly, for classic xref tables and xref
-    STREAMS (where page dicts live inside an object STREAM whose
-    members inherit the container's encryption, ISO 32000 §7.6.2)."""
-    rng = np.random.RandomState(3)
-    gray = rng.randint(0, 256, size=(9, 13), dtype=np.uint8)
-    spec = [[{"img": gray, "filter": "flate"}, {"img": gray, "filter": "lzw"}]]
-    ref = list(pdfimages.extract_pdf_images(pdfimages.build_pdf(spec)))
-
-    enc = pdfimages.build_pdf(spec, xref_stream=xref_stream, encrypt=mode)
-    assert b"/Encrypt" in enc and gray.tobytes() not in enc
-    got = list(pdfimages.extract_pdf_images(enc))
-    assert len(got) == len(ref) == 2
-    for (no_a, name_a, img_a), (no_b, name_b, img_b) in zip(got, ref):
-        assert (no_a, name_a) == (no_b, name_b)
-        assert np.array_equal(img_a, img_b)
-    meta = pdfimages.probe_pdf(enc)
-    assert meta["n_pages"] == 1 and meta["n_images"] == 2
-
-    plain_txt = pdfimages.pdf_page_text(pdfimages.build_text_pdf(TEXT_PAGE))
-    enc_txt = pdfimages.build_text_pdf(
-        TEXT_PAGE, xref_stream=xref_stream, encrypt=mode
-    )
-    assert b"Hello encrypted world" not in enc_txt
-    assert pdfimages.pdf_page_text(enc_txt) == plain_txt == ["Hello encrypted world"]
-
-
-@pytest.mark.parametrize("mode", ["rc4", "aesv2", "aesv3"])
-def test_encrypted_pdf_password_auth(mode):
-    """A non-empty user password opens the document when supplied (str
-    or bytes) and every wrong password — including the empty crawl
-    default — fails CLOSED with ValueError, never a silent
-    mis-decrypt."""
-    gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    enc = pdfimages.build_pdf(
-        [[{"img": gray, "filter": "flate"}]], encrypt=mode, user_pw=b"s3cret"
-    )
-    ((_, _, out),) = list(pdfimages.extract_pdf_images(enc, password=b"s3cret"))
-    assert np.array_equal(out, gray)
-    ((_, _, out),) = list(pdfimages.extract_pdf_images(enc, password="s3cret"))
-    assert np.array_equal(out, gray)
-    for bad in (b"", b"wrong"):
-        with pytest.raises(ValueError, match="does not authenticate"):
-            pdfimages.probe_pdf(enc, password=bad)
-
-
-def test_encrypted_pdf_media_table_over_spark(spark):
-    """The distributed path: an AESV2-encrypted synthetic scanned-PDF
-    media table decodes through extract_pdf_image_features to EXACTLY
-    the same per-image feature rows as the plaintext table — encrypted
-    crawl PDFs are a first-class input to the mapInPandas stage, not an
-    error branch."""
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(3)
-    plain = pdfimages.pdf_media_table(emb, width=8, filters=("flate",))
-    enc = pdfimages.pdf_media_table(
-        emb, width=8, filters=("flate",), encrypt="aesv2"
-    )
-    key = ["vec_id", "page_no", "image_name"]
-    a = {tuple(r[k] for k in key): r.asDict()
-         for r in pdfimages.extract_pdf_image_features(plain).collect()}
-    b = {tuple(r[k] for k in key): r.asDict()
-         for r in pdfimages.extract_pdf_image_features(enc).collect()}
-    assert a and a == b
-    # and the payloads really differ (ciphertext, not a passthrough)
-    pa = {r["vec_id"]: bytes(r["media"]) for r in plain.collect()}
-    pb = {r["vec_id"]: bytes(r["media"]) for r in enc.collect()}
-    assert all(pa[k] != pb[k] for k in pa)

@@ -24,6 +24,7 @@ ALLOWED_UNREACHED = {
     "kernels.merge",
     "kernels.preprocess",
     "lm",
+    "pdfcrypt",
     "robots",
     "sinks",
     "substr",
