@@ -16,10 +16,9 @@ so the artifact coordinates stay pinned to the running Spark version:
 Then ``append(df, "lake.db.extracted")`` is an atomic Iceberg snapshot,
 ``read(spark, "lake.db.extracted")`` a snapshot-isolated scan, and
 resume-from-snapshot is exactly lineage.resume_filter over the committed
-table. ``append`` returns the data files it added — the new snapshot's
-added manifest entries on Iceberg, a before/after directory listing on
-parquet (sound only with one committer per table directory) — so
-lineage.commit rolls lineage up from exactly what it wrote.
+table. A commit is one ``append`` and nothing else: lineage is a grouped
+read of the committed rows (lineage.lineage_table), so no writer needs to
+know which files its append added.
 tests/test_ops.py::test_iceberg_catalog_roundtrip runs the real
 append/read/resume path whenever the runtime jar is present (it skips
 cleanly in jar-less sandboxes) — ``spark.sql.catalog.*`` confs are
@@ -82,58 +81,13 @@ def iceberg_available(spark: SparkSession) -> bool:
     )
 
 
-def append(df: DataFrame, target: str) -> list[str]:
+def append(df: DataFrame, target: str) -> None:
     """Append rows to a table: Iceberg ``writeTo(...).append()`` (atomic
-    snapshot) when available, parquet append otherwise. Returns the data
-    files this append added, so a caller can read back exactly what it
-    wrote (explicit versions, not inferred ones).
-
-    Parquet finds them by listing the table directory before and after
-    the write. That is only sound with ONE committer per directory: a
-    concurrent append would count as this one's. Resume already assumes
-    a single committer per output directory. Iceberg takes them from the
-    manifest entries its new snapshot ADDED (status 1).
-    """
-    spark = df.sparkSession
-    if iceberg_available(spark):
-        before = _iceberg_snapshot(spark, target)
+    snapshot) when available, parquet append otherwise."""
+    if iceberg_available(df.sparkSession):
         df.writeTo(target).append()
-        after = _iceberg_snapshot(spark, target)
-        if after == before:  # no new snapshot, nothing added
-            return []
-        return [
-            r[0]
-            for r in spark.sql(
-                f"SELECT data_file.file_path FROM {target}.entries "
-                f"WHERE status = 1 AND snapshot_id = {after}"
-            ).collect()
-        ]
-    before = _parquet_data_files(spark, target)
-    df.write.mode("append").parquet(target)
-    return sorted(_parquet_data_files(spark, target) - before)
-
-
-def _iceberg_snapshot(spark: SparkSession, table: str) -> int | None:
-    row = spark.sql(
-        f"SELECT snapshot_id FROM {table}.snapshots ORDER BY committed_at DESC LIMIT 1"
-    ).first()
-    return None if row is None else row[0]
-
-
-def _parquet_data_files(spark: SparkSession, path: str) -> set[str]:
-    """Data files of a parquet table directory, through the Hadoop
-    FileSystem so any URI scheme works. Spark's rule: names starting with
-    ``_`` or ``.`` (``_SUCCESS``, checksums) are not data."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return set()
-    files = set()
-    for status in fs.listStatus(jpath):
-        uri = status.getPath().toString()
-        if not uri.rsplit("/", 1)[-1].startswith(("_", ".")):
-            files.add(uri)
-    return files
+    else:
+        df.write.mode("append").parquet(target)
 
 
 def read(spark: SparkSession, target: str) -> DataFrame:

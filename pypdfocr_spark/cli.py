@@ -75,7 +75,7 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="pypdfocr-spark")
     p.add_argument("--sf-dir", help="driver table dir to derive the corpus from")
     p.add_argument("--corpus", help="existing corpus parquet path (F1 schema)")
-    p.add_argument("--out", required=True, help="output/lineage table dir")
+    p.add_argument("--out", required=True, help="output dir: commits append to <out>/extracted")
     p.add_argument("--config", help="routing config (JSON)")
     p.add_argument("--resume", action="store_true", help="skip committed urls")
     p.add_argument("--watch", help="streaming: watch this dir for corpus files")

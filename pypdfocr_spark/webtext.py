@@ -36,7 +36,8 @@ from html.parser import HTMLParser
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -1606,62 +1607,45 @@ def warc_to_wet(
 # --------------------------------------------------------------------------
 
 
-def crawl_lineage(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Per-ARCHIVE metrics over :func:`warc_extract` output — the
+def crawl_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Per-ARCHIVE metrics of every crawl commit to ``out_dir`` — the
     natural lineage unit for the crawl path, because one task processes
     one archive end-to-end: (run_id, archive, doc_count, ok_count,
-    char_count, failures). JVM-side map-side-combinable aggregation,
-    one shuffle on the archive key. An observability table:
-    :func:`crawl_commit` rolls it up from the docs it committed, and
-    resume reads the docs table, not this one."""
-    return (
-        extracted.groupBy("archive")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.col("ok").cast("long")).alias("ok_count"),
-            F.coalesce(
-                F.sum(F.when(F.col("ok"), F.col("n_chars"))), F.lit(0)
-            ).alias("char_count"),
-            F.filter(
-                F.collect_list(F.when(~F.col("ok"), F.col("url"))),
-                lambda x: x.isNotNull(),
-            ).alias("failures"),
+    char_count, failures). A grouped read of the committed docs table by
+    ``run_id`` and ``archive``, JVM-side and map-side-combinable; empty
+    before the first commit."""
+    try:
+        docs = spark.read.parquet(f"{out_dir}/docs")
+    except AnalysisException:  # no commit yet
+        return spark.createDataFrame(
+            [], "run_id string, archive string, doc_count long, ok_count long, "
+            "char_count long, failures array<string>",
         )
-        .select(
-            F.lit(run_id).alias("run_id"), "archive", "doc_count",
-            "ok_count", "char_count", "failures",
-        )
+    return docs.groupBy("run_id", "archive").agg(
+        F.count(F.lit(1)).alias("doc_count"),
+        F.sum(F.col("ok").cast("long")).alias("ok_count"),
+        F.coalesce(
+            F.sum(F.when(F.col("ok"), F.col("n_chars"))), F.lit(0)
+        ).alias("char_count"),
+        F.filter(
+            F.collect_list(F.when(~F.col("ok"), F.col("url"))),
+            lambda x: x.isNotNull(),
+        ).alias("failures"),
     )
-
-
-# the only columns crawl_lineage reads back from the committed docs
-_CRAWL_ROLLUP_COLUMNS = ("archive", "url", "ok", "n_chars")
 
 
 def crawl_commit(
     extracted: DataFrame, out_dir: str, run_id: "str | None" = None
 ) -> dict:
-    """Append crawl extraction output to ``<out_dir>/docs``, then its
-    per-archive lineage to ``<out_dir>/crawl_lineage``; returns the
-    run id. The same contract as ``lineage.commit``: the extraction
-    runs once, in the docs append, and :func:`crawl_lineage` rolls up
-    only the data files that append added, read back with the four
-    columns it aggregates (``lineage.append_read_back``).
-
-    The two appends are not atomic. A crash between them leaves
-    committed documents without lineage rows; a replay still skips
-    their archives, because :func:`crawl_resume_filter` reads the docs
-    table, not the lineage. One committer per ``out_dir``."""
+    """Append crawl extraction output, each row stamped with ``run_id``,
+    to ``<out_dir>/docs``; returns the run id. The same contract as
+    ``lineage.commit``: one append per commit, in which the extraction
+    runs once. :func:`crawl_lineage` reads lineage from the committed
+    docs, and :func:`crawl_resume_filter` skips their archives."""
     from . import catalog, lineage
 
     run_id = run_id or lineage.new_run_id()
-    written = lineage.append_read_back(
-        extracted, f"{out_dir}/docs", _CRAWL_ROLLUP_COLUMNS
-    )
-    if written is not None:  # an append that adds no file has no lineage
-        catalog.append(
-            crawl_lineage(written, run_id), f"{out_dir}/crawl_lineage"
-        )
+    catalog.append(extracted.withColumn("run_id", F.lit(run_id)), f"{out_dir}/docs")
     return {"run_id": run_id}
 
 

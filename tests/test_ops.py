@@ -530,11 +530,9 @@ def test_iceberg_catalog_roundtrip(spark, tmp_path):
         assert catalog.iceberg_available(spark)
         tbl = "it_lake.db.extracted"
         df1 = spark.createDataFrame([("u1", "t1"), ("u2", "t2")], ["url", "text"])
-        added = catalog.append(df1, tbl)  # atomic snapshot commit
+        catalog.append(df1, tbl)  # atomic snapshot commit
         got = catalog.read(spark, tbl)
         assert {r["url"] for r in got.collect()} == {"u1", "u2"}
-        # the new snapshot's added data files hold exactly its rows
-        assert {r["url"] for r in spark.read.parquet(*added).collect()} == {"u1", "u2"}
 
         # resume: incoming LEFT ANTI committed — only the new url survives
         incoming = spark.createDataFrame(
@@ -542,9 +540,8 @@ def test_iceberg_catalog_roundtrip(spark, tmp_path):
         )
         fresh = incoming.join(catalog.read(spark, tbl), "url", "left_anti")
         assert [r["url"] for r in fresh.collect()] == ["u3"]
-        added = catalog.append(fresh, tbl)
+        catalog.append(fresh, tbl)
         assert catalog.read(spark, tbl).count() == 3
-        assert [r["url"] for r in spark.read.parquet(*added).collect()] == ["u3"]
         # second resume pass over the same inputs commits nothing (O4)
         assert incoming.join(
             catalog.read(spark, tbl), "url", "left_anti"

@@ -69,7 +69,9 @@ def test_lineage_accounts_every_doc(spark, tmp_path):
     out = pipeline.extract_from_documents(spark, SF_SMOKE, cfg)
     stats = lineage.commit(out, str(tmp_path), run_id="r1")
     assert stats["run_id"] == "r1"
-    lin = spark.read.parquet(f"{tmp_path}/lineage")
+    # one append per commit: lineage is a view, not a second table
+    assert not (tmp_path / "lineage").exists()
+    lin = lineage.lineage_table(spark, str(tmp_path))
     agg = lin.agg(F.sum("doc_count").alias("n"), F.sum("byte_count").alias("b")).first()
     assert agg["n"] == 400
     assert agg["b"] > 0
@@ -89,13 +91,17 @@ def test_resume_skips_committed(spark, tmp_path):
     done = {r["url"] for r in spark.read.parquet(f"{tmp_path}/extracted").select("url").collect()}
     todo = {r["url"] for r in remaining.select("url").collect()}
     assert not (done & todo)
+    # the anti-join's committed side is not de-duplicated first: a
+    # left-anti join does not need it
+    plan = remaining._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate(keys=[url#" not in plan, plan
 
     # commit the remainder: its plan scans the extracted table through the
     # anti-join, and its lineage must still count every row it appended
     lineage.commit(pipeline.extract(remaining, cfg), str(tmp_path), run_id="rest")
     appended = {
         r["run_id"]: r["n"]
-        for r in spark.read.parquet(f"{tmp_path}/lineage")
+        for r in lineage.lineage_table(spark, str(tmp_path))
         .groupBy("run_id").agg(F.sum("doc_count").alias("n")).collect()
     }
     assert appended == {"half": committed_n, "rest": 400 - committed_n}
@@ -109,7 +115,7 @@ def test_commit_empty_writes_no_lineage_rows(spark, tmp_path):
     stats = lineage.commit(empty, str(tmp_path), run_id="empty")
     assert stats["run_id"] == "empty"
     assert spark.read.parquet(f"{tmp_path}/extracted").count() == 0
-    assert spark.read.parquet(f"{tmp_path}/lineage").count() == 0
+    assert lineage.lineage_table(spark, str(tmp_path)).count() == 0
 
 
 def test_commit_lineage_partition_is_write_partition(spark, tmp_path):
@@ -124,27 +130,17 @@ def test_commit_lineage_partition_is_write_partition(spark, tmp_path):
         .agg(F.count("*").alias("n"), F.sum("byte_count").alias("b")).collect()
     }
     lineage.commit(df, str(tmp_path), run_id="p")
-    lin = spark.read.parquet(f"{tmp_path}/lineage").collect()
+    lin = lineage.lineage_table(spark, str(tmp_path)).collect()
     assert {(r["partition_id"], r["doc_count"], r["byte_count"]) for r in lin} == expected
     assert sorted(u for r in lin for u in r["failures"]) == sorted(
         u for u, st, _ in rows if st != "ok"
     )
 
 
-def test_catalog_append_returns_added_files(spark, tmp_path):
-    from pypdfocr_spark import catalog
-
-    target = str(tmp_path / "t")
-    a = catalog.append(spark.range(5).repartition(2), target)
-    b = catalog.append(spark.range(5, 8).coalesce(1), target)
-    assert a and b and not set(a) & set(b)
-    assert sorted(r[0] for r in spark.read.parquet(*a).collect()) == list(range(5))
-    assert sorted(r[0] for r in spark.read.parquet(*b).collect()) == [5, 6, 7]
-
-
 def test_resume_noop_without_snapshot(spark, tmp_path):
     corpus_df = pipeline.source_filter(pipeline.build_corpus_df(spark, SF_SMOKE))
     assert lineage.resume_filter(corpus_df, str(tmp_path / "nope")).count() == 400
+    assert lineage.lineage_table(spark, str(tmp_path / "nope")).count() == 0
 
 
 def test_extract_rows_error_rows_do_not_leak(monkeypatch):
@@ -310,7 +306,7 @@ def test_heavy_path_failures_reach_status_and_lineage(spark, tmp_path):
     assert out["https://a.example/good.pdf"]["n_pages"] == 400
 
     lineage.commit(pipeline.extract(corpus_df, ExtractConfig()), str(tmp_path), run_id="t")
-    lin = spark.read.parquet(f"{tmp_path}/lineage").collect()
+    lin = lineage.lineage_table(spark, str(tmp_path)).collect()
     assert sum(r["doc_count"] for r in lin) == 4
     failed = {u for r in lin for u in r["failures"]}
     assert "https://a.example/corrupt.pdf" in failed

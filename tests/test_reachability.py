@@ -24,7 +24,6 @@ ALLOWED_UNREACHED = {
     "kernels.merge",
     "kernels.preprocess",
     "lm",
-    "pdfcrypt",
     "robots",
     "sinks",
     "substr",

@@ -6,7 +6,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from pypdfocr_spark import pipeline, stream
+from pypdfocr_spark import lineage, pipeline, stream
 from pypdfocr_spark.config import ExtractConfig
 
 from tests.conftest import SF_SMOKE
@@ -59,9 +59,9 @@ def test_watch_processes_incrementally_and_resumes(spark, corpus_slices):
         pipeline.build_corpus_df(spark, SF_SMOKE), cfg
     ).count()
     assert n2 == batch_n
-    # every micro-batch's commit, the resumed second one included, rolls
-    # lineage up over all the rows it appended
-    lin_n = spark.read.parquet(f"{out}/lineage").agg(F.sum("doc_count")).first()[0]
+    # the lineage view counts every row each micro-batch's commit
+    # appended, the resumed second one included
+    lin_n = lineage.lineage_table(spark, out).agg(F.sum("doc_count")).first()[0]
     assert lin_n == n2
 
     # third restart with nothing new: no growth (idempotent)
@@ -438,7 +438,7 @@ def test_watch_warc_streaming_front_door(spark, tmp_path_factory):
     q.awaitTermination(120)
     docs = spark.read.parquet(f"{out_dir}/docs")
     assert docs.count() == 2
-    assert spark.read.parquet(f"{out_dir}/crawl_lineage").count() == 2
+    assert webtext.crawl_lineage(spark, out_dir).count() == 2
 
     # checkpoint wiped (simulated redelivery of EVERYTHING): the
     # anti-join against the committed docs table still makes it a no-op

@@ -62,9 +62,9 @@ def test_submit_runs_from_zip_and_resumes(submit_env):
     assert zip_path in stats2["pkg_source"]
     assert submit_bench.extracted_rows(out) == rows
 
-    # lineage metrics committed (the empty resume run appends no
-    # per-partition rows — nothing was extracted), totals match
-    lineage = duckdb.connect().execute(
-        f"SELECT count(DISTINCT run_id), sum(doc_count) FROM '{out}/lineage/*.parquet'"
+    # every committed row carries its run id (the empty resume run
+    # commits no rows — nothing was extracted)
+    committed = duckdb.connect().execute(
+        f"SELECT count(DISTINCT run_id), count(*) FROM '{out}/extracted/*.parquet'"
     ).fetchone()
-    assert lineage[0] == 1 and lineage[1] == rows
+    assert committed[0] == 1 and committed[1] == rows

@@ -447,8 +447,8 @@ def _arc(host, n):
 
 
 def test_crawl_lineage_commit_resume(spark, tmp_path):
-    """The resumable crawl job: commit appends the docs once, then rolls
-    per-archive lineage up from the files that append added; lineage
+    """The resumable crawl job: commit appends the docs once, and
+    per-archive lineage is a grouped read of the committed docs; lineage
     counts and failure lists are exact, and a resume run sees ONLY the
     archives absent from the committed docs — re-running after an
     interruption never double-appends. Archive provenance rides every
@@ -459,13 +459,14 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
          ("s3://c/bad.warc.gz", bytearray(b"\x1f\x8bgarbage"))],
         "url string, payload binary",
     )
-    # no snapshot yet: resume is a no-op
+    # no snapshot yet: resume is a no-op and the lineage view is empty
     assert webtext.crawl_resume_filter(batch1, out_dir).count() == 2
+    assert webtext.crawl_lineage(spark, out_dir).count() == 0
 
     stats = webtext.crawl_commit(webtext.warc_extract(batch1), out_dir)
     assert spark.read.parquet(f"{out_dir}/docs").count() == 3  # 2 pages + 1 error row
     lin = {r["archive"]: r for r in
-           spark.read.parquet(f"{out_dir}/crawl_lineage").collect()}
+           webtext.crawl_lineage(spark, out_dir).collect()}
     assert lin["s3://c/a1.warc.gz"]["doc_count"] == 2
     assert lin["s3://c/a1.warc.gz"]["ok_count"] == 2
     assert lin["s3://c/a1.warc.gz"]["char_count"] > 0
@@ -474,7 +475,7 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
     assert lin["s3://c/bad.warc.gz"]["failures"] == ["s3://c/bad.warc.gz"]
     assert lin["s3://c/a1.warc.gz"]["run_id"] == stats["run_id"]
     docs = spark.read.parquet(f"{out_dir}/docs")
-    assert set(docs.columns) == {f.name for f in webtext.WARC_DOC_SCHEMA}
+    assert set(docs.columns) == {f.name for f in webtext.WARC_DOC_SCHEMA} | {"run_id"}
     assert docs.where("ok").count() == 2
 
     # resume: batch = old archives + one new; only the new one survives
@@ -494,30 +495,38 @@ def test_crawl_lineage_commit_resume(spark, tmp_path):
     assert webtext.crawl_resume_filter(batch2, out_dir).count() == 0
 
 
-def test_crawl_commit_replay_after_lineage_crash(spark, tmp_path, monkeypatch):
-    """A crash between the docs append and the lineage append, then a
-    replay of the same batch: resume reads the committed docs, so the
-    replay skips the archive and its pages are in the docs table once."""
+def test_crawl_commit_replay_after_append_crash(spark, tmp_path, monkeypatch):
+    """A crash right after the docs append, then a replay of the same
+    batch: resume reads the committed docs, so the replay skips the
+    archive, its pages are in the docs table once, and the lineage view
+    shows the archive once, under the first run's id."""
+    from pypdfocr_spark import catalog
+
     out_dir = str(tmp_path / "crawl_out")
     batch = spark.createDataFrame(
         [("s3://c/a1.warc.gz", bytearray(_arc("a.example", 2)))],
         "url string, payload binary",
     )
-    real_lineage = webtext.crawl_lineage
+    real_append = catalog.append
 
-    def crash_once(extracted, run_id):
-        monkeypatch.setattr(webtext, "crawl_lineage", real_lineage)
-        raise RuntimeError("injected crash before the lineage append")
+    def append_then_crash(df, target):
+        real_append(df, target)
+        monkeypatch.setattr(catalog, "append", real_append)
+        raise RuntimeError("injected crash after the docs append")
 
-    monkeypatch.setattr(webtext, "crawl_lineage", crash_once)
+    monkeypatch.setattr(catalog, "append", append_then_crash)
     with pytest.raises(RuntimeError, match="injected crash"):
-        webtext.crawl_commit(webtext.warc_extract(batch), out_dir)
+        webtext.crawl_commit(webtext.warc_extract(batch), out_dir, run_id="first")
 
     todo = webtext.crawl_resume_filter(batch, out_dir)
-    webtext.crawl_commit(webtext.warc_extract(todo), out_dir)
+    webtext.crawl_commit(webtext.warc_extract(todo), out_dir, run_id="replay")
     docs = spark.read.parquet(f"{out_dir}/docs")
     assert sorted(r["url"] for r in docs.collect()) == [
         "http://a.example/p0", "http://a.example/p1",
+    ]
+    lin = webtext.crawl_lineage(spark, out_dir).collect()
+    assert [(r["run_id"], r["archive"], r["doc_count"]) for r in lin] == [
+        ("first", "s3://c/a1.warc.gz", 2),
     ]
 
 
