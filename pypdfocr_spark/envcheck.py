@@ -72,15 +72,6 @@ def resolve_ocr_strategy(requested: str = "auto") -> str:
     return "builtin"
 
 
-def select_preprocess_strategy() -> str:
-    """'subprocess' when ImageMagick's ``convert`` is on PATH (the
-    reference's exact option chain runs via kernels.subproc), else
-    'builtin' (the numpy stand-in in kernels.preprocess). Preprocessing
-    itself stays opt-in either way, matching the reference's
-    skip-by-default since v0.8.x (ref: pypdfocr/pypdfocr.py:142-146)."""
-    return "subprocess" if binary_available("convert") else "builtin"
-
-
 def select_ocr_strategy(required_tesseract: str = "3.02.02") -> str:
     """'subprocess' when a new-enough tesseract exists, else 'builtin'
     (the deterministic stand-in). Mirrors the reference's pluggable

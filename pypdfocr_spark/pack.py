@@ -1,8 +1,7 @@
 """Sequence packing — turning a curated, tokenized corpus into the
 fixed-length training examples an LLM loader actually consumes. The
 input is the slim (doc_id, n_tokens) relation ``textops.token_count_df``
-produces (or a real tokenizer's counts via ``bpe``); text never enters
-any shuffle here.
+produces; text never enters any shuffle here.
 
 Two standard layouts:
 

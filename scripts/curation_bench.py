@@ -7,7 +7,7 @@ identical job at local[4] and local[16] (16 physical cores; never 8 vs
 timed runs, MIN estimator with medians disclosed. Inputs are
 deterministic synthetic corpora (seeded, byte-stable across runs).
 
-Two jobs, the two plan shapes the new operators use:
+Two jobs, one gate through two plan shapes:
 
 * **gate**: parquet scan → fix_text_df → bloom_probe_df → survivor
   filter → classifier_score_df (fixed seeded weights) → threshold count.
@@ -21,12 +21,9 @@ Two jobs, the two plan shapes the new operators use:
   Arrow stages — the production front door). Same n_out as gate by
   construction (cross-checked), fewer Python crossings, and a less
   oversubscription-distorted ratio.
-* **substr**: substring_dup_spans().count() over a corpus with planted
-  shared fragments — winnow (map) → capped fp join → verify join,
-  the bounded-shuffle shape.
 
-Env knobs: CURATION_BENCH_DOCS (default 400000 gate / a quarter of that
-for substr), CURATION_BENCH_LEVELS (default "4,16").
+Env knobs: CURATION_BENCH_DOCS (default 400000), CURATION_BENCH_LEVELS
+(default "4,16").
 Writes BENCH/curation_scaling.json.
 """
 
@@ -88,7 +85,7 @@ import json, statistics, sys, time
 import numpy as np
 sys.path.insert(0, {repo!r})
 from pypdfocr_spark.session import get_spark
-from pypdfocr_spark import bloom, classifier, substr, textfix
+from pypdfocr_spark import bloom, classifier, textfix
 from pyspark.sql import functions as F
 
 cores = int(sys.argv[1]); root = sys.argv[2]
@@ -100,36 +97,26 @@ docs = spark.read.parquet(root + "/docs.parquet").where(
 ).repartition(cores * 4).persist()
 docs.count()
 
-if job in ("gate", "gate_fused"):
-    nb = 1 << 16
-    model = classifier.QualityModel(
-        np.random.RandomState(7).standard_normal(nb), 0.0, nb, True, []
-    )
-    bitmap = bloom.bloom_build(
-        docs.where(F.col("doc_id") % 11 == 0), "text",
-        num_bits=1 << 22, num_hashes=7,
-    )
-    if job == "gate":
-        def run_once():
-            fixed = textfix.fix_text_df(docs)
-            survivors = bloom.bloom_probe_df(fixed, bitmap).where(
-                ~F.col("maybe_seen")
-            )
-            scored = classifier.classifier_score_df(survivors, model)
-            return scored.where(F.col("quality_prob") >= 0.4).count()
-    else:
-        from pypdfocr_spark import recipe
-        def run_once():
-            return recipe.web_gate(docs, model, bitmap, threshold=0.4).count()
-else:
+nb = 1 << 16
+model = classifier.QualityModel(
+    np.random.RandomState(7).standard_normal(nb), 0.0, nb, True, []
+)
+bitmap = bloom.bloom_build(
+    docs.where(F.col("doc_id") % 11 == 0), "text",
+    num_bits=1 << 22, num_hashes=7,
+)
+if job == "gate":
     def run_once():
-        reg = []
-        n = substr.substring_dup_spans(
-            docs, min_len=50, max_df=64, cache_registry=reg
-        ).count()
-        for d in reg:
-            d.unpersist()
-        return n
+        fixed = textfix.fix_text_df(docs)
+        survivors = bloom.bloom_probe_df(fixed, bitmap).where(
+            ~F.col("maybe_seen")
+        )
+        scored = classifier.classifier_score_df(survivors, model)
+        return scored.where(F.col("quality_prob") >= 0.4).count()
+else:
+    from pypdfocr_spark import recipe
+    def run_once():
+        return recipe.web_gate(docs, model, bitmap, threshold=0.4).count()
 
 times, n = [], 0
 for i in range(4):
@@ -163,9 +150,9 @@ def main() -> None:
         for x in os.environ.get("CURATION_BENCH_LEVELS", "4,16").split(",")
     ]
     root = build_corpus(n_docs)
-    out = {"n_docs_gate": n_docs, "n_docs_substr": n_docs // 2, "jobs": {}}
-    for job, nd in (("gate", n_docs), ("gate_fused", n_docs), ("substr", n_docs // 2)):
-        results = [run_level(c, root, job, nd) for c in levels]
+    out = {"n_docs_gate": n_docs, "jobs": {}}
+    for job in ("gate", "gate_fused"):
+        results = [run_level(c, root, job, n_docs) for c in levels]
         lo, hi = results[0], results[-1]
         eff = (hi["docs_per_sec"] / lo["docs_per_sec"]) / (
             hi["cores"] / lo["cores"]

@@ -63,14 +63,21 @@ def ensure_corpus(sf_dir: str, mult: int) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     corpus_path = f"/tmp/pypdfocr_spark_corpus_{tag}" + (f"_x{mult}" if mult > 1 else "")
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
+        if mult == 1:
+            # the unreplicated path is the cache bench.py and
+            # __spark_entry__ reuse: write their split light/heavy layout
+            write = f"pipeline.materialize_corpus(s, {sf_dir!r}, {corpus_path!r})"
+        else:
+            write = (
+                f"pipeline.build_corpus_df(s, {sf_dir!r}, replicate={mult}).repartition(192)"
+                f".sortWithinPartitions('n_bytes').write.mode('overwrite').parquet({corpus_path!r})"
+            )
         code = (
             f"import sys; sys.path.insert(0, {REPO!r});"
             "from pypdfocr_spark.session import get_spark;"
             "from pypdfocr_spark import pipeline;"
             "s = get_spark('mat', master='local[32]'); s.sparkContext.setLogLevel('ERROR');"
-            f"df = pipeline.build_corpus_df(s, {sf_dir!r}, replicate={mult}).repartition(192)"
-            ".sortWithinPartitions('n_bytes'); "
-            f"df.write.mode('overwrite').parquet({corpus_path!r})"
+            + write
         )
         subprocess.run([sys.executable, "-c", code], check=True, cwd=REPO)
     return corpus_path

@@ -1,10 +1,8 @@
-"""Tests for the T3 preprocess kernel and the T5 version gate."""
+"""Tests for the T5 version gate and OCR strategy selection."""
 
-import numpy as np
 import pytest
 
 from pypdfocr_spark.envcheck import binary_available, select_ocr_strategy, version_is_uptodate
-from pypdfocr_spark.kernels import preprocess
 
 
 # --------------------------------------------------------------- T5 versions
@@ -32,42 +30,3 @@ def test_strategy_selection_without_binaries():
     assert not binary_available("tesseract")
     assert select_ocr_strategy() == "builtin"
 
-
-# --------------------------------------------------------------- T3 kernel
-def _page_with_text_and_rule():
-    """White page, one dark text blob, one 40-px vertical rule."""
-    img = np.zeros((60, 60))          # ink representation: 0 = blank
-    img[10:14, 5:25] = 1.0            # a "text line"
-    img[5:45, 40] = 1.0               # vertical table rule (40 px ≥ 30)
-    return img
-
-
-def test_threshold_picks_dark_pixels():
-    img = np.ones((40, 40))           # bright page
-    img[10:12, 10:20] = 0.0           # dark text
-    ink = preprocess.local_adaptive_threshold(img)
-    assert ink[11, 15] == 1.0
-    assert ink[30, 30] == 0.0
-
-
-def test_erase_vertical_rules_kills_long_runs_only():
-    ink = _page_with_text_and_rule()
-    out = preprocess.erase_vertical_rules(ink, min_run=30)
-    assert out[20, 40] == 0.0          # rule erased
-    assert out[11, 10] == 1.0          # text (4-px run) kept
-
-
-def test_blur_and_sharpen_shapes_and_range():
-    img = np.random.RandomState(7).rand(30, 30)
-    b = preprocess.blur3(img)
-    s = preprocess.sharpen(img)
-    assert b.shape == img.shape == s.shape
-    assert (s >= 0).all() and (s <= 1).all()
-    # blur reduces variance
-    assert b.var() < img.var()
-
-
-def test_preprocess_page_graceful_on_garbage():
-    bad = np.array([])  # will throw inside; kernel must return input
-    out = preprocess.preprocess_page(bad)
-    assert out is bad

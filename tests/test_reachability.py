@@ -19,14 +19,8 @@ PKG = "pypdfocr_spark"
 # Reached from tests only; each has a one-line reason in COVERAGE.md.
 ALLOWED_UNREACHED = {
     "artifact",
-    "bpe",
-    "frontier",
     "kernels.merge",
-    "kernels.preprocess",
-    "lm",
-    "robots",
     "sinks",
-    "substr",
 }
 
 

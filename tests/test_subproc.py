@@ -573,13 +573,6 @@ def test_extract_doc_subprocess_with_preprocess(monkeypatch):
     assert pages2 == ["hi"] and len(seen) == 1  # not called when off
 
 
-def test_select_preprocess_strategy(monkeypatch):
-    monkeypatch.setattr(envcheck, "binary_available", lambda n: n == "convert")
-    assert envcheck.select_preprocess_strategy() == "subprocess"
-    monkeypatch.setattr(envcheck, "binary_available", lambda n: False)
-    assert envcheck.select_preprocess_strategy() == "builtin"
-
-
 def test_scratch_dir_none_falls_back_to_whole_doc(monkeypatch):
     """Review fix: with no shared scratch configured, a real %PDF heavy
     doc must NOT be staged to executor-local /tmp (paths would be

@@ -247,40 +247,6 @@ def test_warc_extract_spark_e2e(spark):
     assert bad["error"] and bad["warc_type"] is None
 
 
-def test_robots_filter_spark(spark):
-    """The politeness gate over a crawl's URLs: robots.robots_filter
-    left-joins the per-host robots relation on the case-folded host and
-    stamps a verdict per URL (hosts without robots.txt are allowed);
-    robots.robots_meta carries each host's crawl delay and sitemaps."""
-    from pypdfocr_spark import robots
-    from tests.test_robots import ROBOTS
-
-    bots = spark.createDataFrame(
-        [("example.com", ROBOTS), ("closed.example", "User-agent: *\nDisallow: /\n")],
-        "host string, robots_txt string",
-    )
-    urls = spark.createDataFrame(
-        [(1, "https://example.com/ok.html"),
-         (2, "https://EXAMPLE.com/private/secret"),
-         (3, "https://example.com/private/public-x"),
-         (4, "https://closed.example/anything"),
-         (5, "https://norobots.example/x")],
-        "doc_id long, url string",
-    )
-    out = {r["doc_id"]: r["allowed"] for r in
-           robots.robots_filter(urls, bots, agent="somecrawler").collect()}
-    assert [out[i] for i in (1, 2, 3, 4, 5)] == [True, False, True, False, True]
-    # examplebot takes ROBOTS' two-agent group, which has no /private/ rule
-    out = {r["doc_id"]: r["allowed"] for r in
-           robots.robots_filter(urls, bots, agent="examplebot").collect()}
-    assert [out[i] for i in (1, 2, 3, 4, 5)] == [True, True, True, False, True]
-    meta = {r["host"]: r for r in
-            robots.robots_meta(bots, agent="somecrawler").collect()}
-    assert meta["example.com"]["crawl_delay"] == 2.0
-    assert len(meta["example.com"]["sitemaps"]) == 2
-    assert meta["closed.example"]["crawl_delay"] is None
-
-
 def test_surt_and_cdx_index(spark):
     """The capture index: SURT canonicalization groups URL variants;
     warc_cdx_table maps every response record to its (archive, offset,
@@ -387,12 +353,6 @@ def test_sitemap_parsing_and_table(spark):
     bad = [r for r in rows if r["error"] is not None]
     assert len(good) == 2 and len(bad) == 1
     assert good[0]["priority"] == 0.8 and good[0]["kind"] == "urlset"
-
-    # robots.txt sitemap discovery feeds this: the seeding loop
-    from pypdfocr_spark import robots
-    from tests.test_robots import ROBOTS
-
-    assert robots.parse_robots(ROBOTS).sitemaps[0].endswith("sitemap.xml")
 
 
 def test_warc_to_wet_roundtrip(spark):
