@@ -8,7 +8,7 @@ Logical plan::
       ├─ light docs (payload ≤ threshold):
       │    mapInPandas(light kernel)                # whole doc in one task, NO shuffle
       └─ heavy docs (payload > threshold):          # the skew tail
-           mapInPandas(explode_pages)               # doc → per-page rows
+           mapInPandas(explode_pages)               # doc → page/staged rows, or one doc row
            → repartition(K, xxhash64(url, page_no)) # salt: spread one doc's pages
            → mapInPandas(page kernel)               # per-page OCR+parse+norm+route-match
            → groupBy(url).agg(...)                  # JVM reassembly: collect_list
@@ -23,6 +23,13 @@ kernels, each with its output schema, differ:
 * ``spans.extract_spans`` (text columns + the nested ``spans`` column):
   ``spans._doc_rows_with_spans`` / ``spans._page_span_rows``, whose page
   rows also carry each page's parsed ``lines``.
+
+The payload kind (SYNPDF, HTML, real PDF, garbage) is decided in one
+place, the light path's dispatch (``_doc_kernel`` → ``corpus.extract_doc``,
+``corpus.extract_doc_spans`` for spans). The explode only splits what it
+can page-split and stamps each row's ``kind`` itself; a heavy doc it
+cannot split is one ``doc`` row that the page kernel hands to that same
+dispatch, so the two paths cannot disagree on what a payload is.
 
 Why this shape at 100 TB:
 
@@ -53,7 +60,7 @@ from pyspark.sql import functions as F
 
 from . import corpus as ck
 from .config import ExtractConfig
-from .kernels import codec, hocr, htmlx
+from .kernels import codec, hocr
 from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
 from .schema import (
@@ -138,8 +145,10 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 use_filename=cfg.use_filename, default=cfg.default_route,
             )
         except Exception as exc:  # data error → row, never task failure
-            text, n_pages, status, route = "", 0, f"error:{type(exc).__name__}", cfg.default_route
-            norm_pages = []
+            text, n_pages, status, norm_pages = "", 0, f"error:{type(exc).__name__}", []
+            route = route_document(
+                [], url, cfg.targets, use_filename=cfg.use_filename, default=cfg.default_route,
+            )
         # doc norm = per-page norms joined by space — equal to
         # normalize_page_text(text) because ascii-ignore distributes over
         # concat and the joining '\n' itself normalizes to ' ' (the same
@@ -156,108 +165,97 @@ def _extract_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
 
 
 # ----------------------------------------------------------- heavy-path UDFs
-def _explode_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Split a heavy document into per-page rows — a cheap splitter only
-    (decode + per-page re-encode). The expensive work (rasterize at the
-    output dpi, hOCR, parse) happens downstream in the salted per-page
-    stage; doing it here would pin one task per multi-hundred-page doc,
-    exactly the skew the explode exists to break.
+def _split_doc(payload: bytes, cfg: ExtractConfig) -> list[tuple] | None:
+    """A heavy payload's (page_no, n_pages, height_pt, output_dpi, kind,
+    page_json) rows, or ``None`` when it does not page-split: ``page``
+    rows for a SYNPDF doc with at least one line, every line valid UTF-8
+    and a first line that is a dict ``detect_geometry`` accepts;
+    ``staged`` rows for a probed real PDF (below)."""
+    page_lines = codec.split_pages(payload)  # byte split, no parse
+    if page_lines:
+        try:
+            # strict, like the light path's decode_doc: a non-UTF-8 line
+            # leaves the whole doc to the light dispatch (decode_error)
+            for ln in page_lines:
+                ln.decode("utf-8")
+            first = codec.loads_json(page_lines[0])
+            if not isinstance(first, dict):
+                return None
+            geom = codec.detect_geometry([first])
+        except Exception:
+            return None
+        n = len(page_lines)
+        return [
+            (pno, n, geom["height_pt"], geom["output_dpi"], "page", line)
+            for pno, line in enumerate(page_lines)
+        ]
+    # real PDF under the subprocess strategy: stage the payload once to
+    # shared scratch, probe the page count + geometry, and emit one slim
+    # (path, page) row per page — each rasterized by its own task via gs
+    # -dFirstPage/-dLastPage downstream. This is what breaks the
+    # multi-hundred-page skew the explode exists for; the reference's
+    # analog is the in-host page pool (pypdfocr_tesseract.py:138-150).
+    # Page-split staging REQUIRES cfg.scratch_dir (a mount every executor
+    # can reach): with an executor-local default the shuffled (path, page)
+    # rows would point at files that exist on one host only and pages
+    # would silently blank on a multi-host cluster — so no scratch_dir
+    # (or a probe failure) means the safe single-task ``doc`` row instead.
+    if not (cfg.ocr_strategy == "subprocess" and payload.startswith(b"%PDF")
+            and cfg.scratch_dir is not None):
+        return None
+    from .kernels import subproc
 
-    Payload dispatch mirrors the light path's ``corpus.extract_doc``
-    exactly: SYNPDF → page rows; HTML head → one raw pseudo-page; empty
-    SYNPDF body → an n_pages=0 carrier row; anything else → an
-    'unsupported' carrier row (n_pages=0), so the per-page stage can
-    stamp the same statuses the light path would."""
+    try:
+        path = subproc.stage_pdf(payload, cfg.scratch_dir)
+        n = subproc.pdf_page_count(path, pdfinfo=cfg.pdfinfo_binary)
+        geom = subproc.detect_dpi(
+            path, pdfimages=cfg.pdfimages_binary, identify=cfg.identify_binary,
+        )
+    except Exception:
+        return None
+    if not n:
+        return None
+    return [
+        (pno, n, geom["height_pt"], geom["output_dpi"], "staged",
+         json.dumps({"pdf_path": path, "page": pno + 1,
+                     "greyscale": geom["greyscale"]}).encode("utf-8"))
+        for pno in range(n)
+    ]
+
+
+def _explode_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+    """Split a heavy document into PAGE_SCHEMA rows — a cheap splitter
+    only (``_split_doc``). The expensive work (rasterize at the output
+    dpi, hOCR, parse) happens downstream in the salted per-page stage;
+    doing it here would pin one task per multi-hundred-page doc, exactly
+    the skew the explode exists to break.
+
+    A payload ``_split_doc`` cannot split (HTML, an empty or undecodable
+    SYNPDF, an unprobed PDF, anything else) becomes ONE ``doc`` row
+    carrying the payload, which the page kernel runs through the light
+    path's own dispatch — so the payload-kind decision is made in one
+    place, and nothing in the payload can pick a branch."""
     out = []
     for url, ts, payload, lang in zip(pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]):
         payload = bytes(payload)
-        nbytes = len(payload)
-        page_lines = codec.split_pages(payload)  # byte split, no parse
-        if page_lines:
-            try:
-                # strict, like the light path's decode_doc: any non-UTF-8
-                # page line fails the WHOLE doc as decode_error (a row,
-                # never a task failure)
-                decoded = [ln.decode("utf-8") for ln in page_lines]
-            except UnicodeDecodeError:
-                out.append(
-                    (url, ts, lang, 0, 0, 792.0, 300, "\x00not-json", nbytes)
-                )
-                continue
-            try:
-                first = codec.loads_json(decoded[0])
-            except Exception:
-                first = {}
-            geom = codec.detect_geometry([first] if first else [])
-            n = len(decoded)
-            for pno, line in enumerate(decoded):
-                out.append(
-                    (url, ts, lang, pno, n, geom["height_pt"], geom["output_dpi"],
-                     line, nbytes)
-                )
-        elif page_lines is not None:
-            # valid SYNPDF with zero pages: light path yields ([], "ok")
-            out.append((url, ts, lang, 0, 0, 792.0, 300, json.dumps({"empty": True}), nbytes))
-        elif cfg.ocr_strategy == "subprocess" and payload.startswith(b"%PDF"):
-            # real PDF under the subprocess strategy: stage the payload
-            # once to shared scratch, probe the page count + geometry, and
-            # emit one slim (path, page) row per page — each rasterized by
-            # its own task via gs -dFirstPage/-dLastPage downstream. This
-            # is what breaks the multi-hundred-page skew the explode
-            # exists for; the reference's analog is the in-host page pool
-            # (pypdfocr_tesseract.py:138-150). Page-split staging REQUIRES
-            # cfg.scratch_dir (a mount every executor can reach): with an
-            # executor-local default the shuffled (path, page) rows would
-            # point at files that exist on one host only and pages would
-            # silently blank on a multi-host cluster — so no scratch_dir
-            # (or a probe failure) means the safe single-task whole-doc
-            # carrier instead.
-            from .kernels import subproc
-
-            n = None
-            try:
-                if cfg.scratch_dir is None:
-                    raise RuntimeError("no shared scratch configured")
-                path = subproc.stage_pdf(payload, cfg.scratch_dir)
-                n = subproc.pdf_page_count(path, pdfinfo=cfg.pdfinfo_binary)
-                geom = subproc.detect_dpi(
-                    path, pdfimages=cfg.pdfimages_binary,
-                    identify=cfg.identify_binary,
-                )
-            except Exception:
-                n = None
-            if n:
-                for pno in range(n):
-                    out.append(
-                        (url, ts, lang, pno, n,
-                         geom["height_pt"], geom["output_dpi"],
-                         json.dumps({"pdf_path": path, "page": pno + 1,
-                                     "greyscale": geom["greyscale"]}),
-                         nbytes)
-                    )
-            else:
-                import base64
-
-                out.append(
-                    (url, ts, lang, 0, 1, 792.0, 300,
-                     json.dumps({"pdf_b64": base64.b64encode(payload).decode("ascii")}),
-                     nbytes)
-                )
-        else:
-            head = payload.lstrip()[:15].lower()
-            if head.startswith(b"<!doctype") or head.startswith(b"<html"):
-                # huge HTML doc: single raw pseudo-page, stripped downstream
-                out.append(
-                    (url, ts, lang, 0, 1, 792.0, 300,
-                     json.dumps({"raw": payload.decode("utf-8", errors="replace")}),
-                     nbytes)
-                )
-            else:
-                # light path would return ([], "unsupported")
-                out.append(
-                    (url, ts, lang, 0, 0, 792.0, 300, json.dumps({"unsupported": True}), nbytes)
-                )
+        rows = _split_doc(payload, cfg) or [(0, 0, 792.0, 300, "doc", payload)]
+        out.extend((url, ts, lang, *row, len(payload)) for row in rows)
     return pd.DataFrame(out, columns=[f.name for f in PAGE_SCHEMA.fields])
+
+
+def _doc_page_rows(url, ts, lang, texts, status, nbytes, cfg: ExtractConfig) -> list[tuple]:
+    """A ``doc`` row's page-kernel output: one row PER PAGE, so reassembly
+    keeps page boundaries and routes with the light path's per-page early
+    exit (P2); no pages → one empty row that matches no route, so the doc
+    routes by filename fallback / default, as on the light path."""
+    rows = []
+    for i, text in enumerate(texts):
+        norm = normalize_page_text(text)
+        rows.append(
+            (url, ts, lang, i, len(texts), text, norm,
+             first_matching_folder(norm, cfg.targets), status, int(nbytes))
+        )
+    return rows or [(url, ts, lang, 0, 0, "", "", None, status, int(nbytes))]
 
 
 def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
@@ -265,29 +263,32 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     output dpi, emit+parse hOCR, reassemble text — the compute-heavy stage,
     running on hash-spread page rows. Emits a per-page ``status`` so heavy
     failures reach lineage (statuses mirror corpus.extract_doc: ok /
-    decode_error / html_error / unsupported / error:<Type>)."""
+    decode_error / html_error / unsupported / error:<Type>). A ``doc`` row
+    runs ``_doc_kernel``, the light path's dispatch."""
     t0 = time.monotonic()
     out = []
-    for url, ts, lang, pno, n, height, dpi, pjson, nbytes in zip(
+    for url, ts, lang, pno, n, height, dpi, kind, data, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
-        pdf["height_pt"], pdf["output_dpi"], pdf["page_json"], pdf["byte_count"],
+        pdf["height_pt"], pdf["output_dpi"], pdf["kind"], pdf["page_json"],
+        pdf["byte_count"],
     ):
-        status = "ok"
+        if kind == "doc":
+            try:
+                texts, status = _doc_kernel(bytes(data), cfg)
+            except Exception as exc:  # data error → row, never task failure
+                texts, status = [], f"error:{type(exc).__name__}"
+            out.extend(_doc_page_rows(url, ts, lang, texts, status, nbytes, cfg))
+            continue
+        status, text = "ok", ""
         try:
-            page = codec.loads_json(pjson)
-            if not isinstance(page, dict):
-                page = None  # parity: corpus.decode_doc → None → decode_error
+            page = codec.loads_json(bytes(data))
         except Exception:
             page = None
-        if page is None:
-            status, text = "decode_error", ""
+        if not isinstance(page, dict):
+            status = "decode_error"  # parity: corpus.decode_doc → None
         else:
             try:
-                if "unsupported" in page:
-                    text, status = "", "unsupported"
-                elif "empty" in page:
-                    text = ""
-                elif "pdf_path" in page:
+                if kind == "staged":
                     # distributed page split of a staged real PDF: this
                     # task rasterizes + OCRs exactly ONE page
                     from .kernels import subproc
@@ -302,42 +303,9 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                             convert_binary=cfg.convert_binary,
                         )
                     except subproc.OcrError:
-                        text, status = "", "ocr_error"
+                        status = "ocr_error"
                     except subproc.SubprocessKernelError:
-                        text, status = "", "decode_error"
-                elif "pdf_b64" in page:
-                    import base64
-
-                    from .kernels import subproc
-
-                    pages, status = subproc.extract_doc_subprocess(
-                        base64.b64decode(page["pdf_b64"]),
-                        gs_binary=cfg.gs_binary,
-                        tesseract_binary=cfg.tesseract_binary,
-                        preprocess=cfg.preprocess,
-                        convert_binary=cfg.convert_binary,
-                        pdfimages_binary=cfg.pdfimages_binary,
-                        identify_binary=cfg.identify_binary,
-                    )
-                    # one output row PER PAGE, so reassembly keeps page
-                    # boundaries and routes with the same per-page
-                    # early-exit the light path uses (P2) — a combined
-                    # pseudo-page would route differently for the same doc
-                    for i, ptext in enumerate(pages):
-                        pnorm = normalize_page_text(ptext)
-                        out.append(
-                            (url, ts, lang, i, len(pages), ptext, pnorm,
-                             first_matching_folder(pnorm, cfg.targets),
-                             status, int(nbytes))
-                        )
-                    if pages:
-                        continue
-                    text, n = "", 0
-                elif "raw" in page:
-                    try:
-                        text = htmlx.strip_boilerplate(page["raw"])
-                    except Exception:
-                        text, status = "", "html_error"
+                        status = "decode_error"
                 else:
                     raster = codec.rasterize([page], int(dpi))
                     hocr_doc = hocr.emit_hocr(raster)

@@ -71,7 +71,11 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-# Per-page intermediate rows on the heavy (exploded) path.
+# Per-page intermediate rows on the heavy (exploded) path. ``kind`` is set
+# by the explode alone, never read from the payload: "page" (page_json is
+# one SYNPDF page line), "staged" (page_json is the explode's own
+# {pdf_path, page, greyscale} JSON) or "doc" (page_json is the whole
+# payload, n_pages 0, run by the light path's dispatch).
 PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -81,7 +85,8 @@ PAGE_SCHEMA = StructType(
         StructField("n_pages", IntegerType(), False),
         StructField("height_pt", DoubleType(), False),
         StructField("output_dpi", IntegerType(), False),
-        StructField("page_json", StringType(), False),
+        StructField("kind", StringType(), False),
+        StructField("page_json", BinaryType(), False),
         StructField("byte_count", LongType(), True),
     ]
 )

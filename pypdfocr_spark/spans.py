@@ -30,7 +30,7 @@ from .config import ExtractConfig
 from .kernels import codec, hocr
 from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
-from .pipeline import _extract_plan
+from .pipeline import _doc_page_rows, _extract_plan
 from .schema import EXTRACTED_SCHEMA, LINE_SCHEMA, PAGE_TEXT_SCHEMA
 
 PAGE_SPANS_FIELD = StructField(
@@ -71,7 +71,10 @@ def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 for i, lines in enumerate(spans_by_page)
             ]
         except Exception as exc:
-            text, status, route, spans, page_texts = "", f"error:{type(exc).__name__}", cfg.default_route, [], []
+            text, status, spans, page_texts = "", f"error:{type(exc).__name__}", [], []
+            route = route_document(
+                [], url, cfg.targets, use_filename=cfg.use_filename, default=cfg.default_route,
+            )
         out.append(
             (url, ts, lang, text, normalize_page_text(text), route,
              len(page_texts), status, len(payload), 0.0, spans)
@@ -83,33 +86,37 @@ def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
 
 def _page_span_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     """Per-page span kernel: PAGE_SPANS_SCHEMA rows — ``_page_text_rows``'s
-    columns (text from the parsed lines) plus the page's ``lines``."""
+    columns (text from the parsed lines) plus the page's ``lines``. A
+    ``doc`` row runs ``corpus.extract_doc_spans``, the light path's
+    dispatch."""
     t0 = time.monotonic()
     out = []
-    for url, ts, lang, pno, n, height, dpi, pjson, nbytes in zip(
+    for url, ts, lang, pno, n, height, dpi, kind, data, nbytes in zip(
         pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["page_no"], pdf["n_pages"],
-        pdf["height_pt"], pdf["output_dpi"], pdf["page_json"], pdf["byte_count"],
+        pdf["height_pt"], pdf["output_dpi"], pdf["kind"], pdf["page_json"],
+        pdf["byte_count"],
     ):
+        if kind == "doc":
+            try:
+                spans_by_page, status = ck.extract_doc_spans(bytes(data))
+                texts = [hocr.page_text_from_spans(s) for s in spans_by_page]
+            except Exception as exc:  # data error → row, never task failure
+                spans_by_page, texts, status = [], [], f"error:{type(exc).__name__}"
+            rows = _doc_page_rows(url, ts, lang, texts, status, nbytes, cfg)
+            out.extend(r + (0.0, lines) for r, lines in zip(rows, spans_by_page or [[]]))
+            continue
         status, text, lines = "ok", "", []
         try:
-            page = codec.loads_json(pjson)
+            page = codec.loads_json(bytes(data))
         except Exception:
             page = None
         if not isinstance(page, dict):
             status = "decode_error"
         else:
             try:
-                if "unsupported" in page:
-                    status = "unsupported"
-                elif "empty" in page:
-                    pass
-                elif "raw" in page:
-                    spans_by_page, status = ck.extract_doc_spans(page["raw"].encode("utf-8"))
-                    lines = spans_by_page[0] if spans_by_page else []
-                else:
-                    raster = codec.rasterize([page], int(dpi))
-                    hocr_doc = hocr.emit_hocr(raster)
-                    lines = hocr.parse_hocr_page(hocr_doc, 1, float(height), int(dpi))
+                raster = codec.rasterize([page], int(dpi))
+                hocr_doc = hocr.emit_hocr(raster)
+                lines = hocr.parse_hocr_page(hocr_doc, 1, float(height), int(dpi))
                 text = hocr.page_text_from_spans(lines)
             except Exception as exc:  # data error → row, never task failure
                 text, lines, status = "", [], f"error:{type(exc).__name__}"

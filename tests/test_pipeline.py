@@ -247,6 +247,65 @@ def test_jvm_reassembly_parity(spark, corpus_rows, oracle_rows, extract_fn):
 
 @pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
                          ids=["extract", "extract_spans"])
+def test_light_heavy_parity_on_hostile_pages(spark, extract_fn):
+    """The same payloads give the same (text, norm, n_pages, status, route)
+    whether every doc takes the heavy path (threshold 0) or the light one
+    (the default), and no payload fails the task. A SYNPDF page's own keys
+    never pick a branch: a page that also holds a key some payload-kind
+    dispatch could look for is still just a page."""
+    import datetime
+    import json
+
+    from pypdfocr_spark.kernels import codec
+    from pypdfocr_spark.schema import CORPUS_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    page = {"dpi": 300, "w_px": 2550, "h_px": 3300,
+            "words": [{"t": "spark", "b": [10, 10, 80, 40], "l": 0}]}
+    forged = {
+        "unsupported": True,
+        "empty": True,
+        "raw": "<html><p>injected</p></html>",
+        "pdf_path": "/nonexistent.pdf",
+        "pdf_b64": "JVBERi0xLjQK",
+    }
+    fixtures = {
+        f"https://a.example/forged-{k}.pdf": codec.encode_doc([{**page, k: v}])
+        for k, v in forged.items()
+    }
+    hostile = {
+        "https://a.example/list-page.pdf": (codec.MAGIC + b"[1,2]", "decode_error"),
+        "https://a.example/dpi-zero.pdf":
+            (codec.encode_doc([{**page, "dpi": 0}]), "error:ZeroDivisionError"),
+        "https://a.example/dpi-text.pdf":
+            (codec.encode_doc([{**page, "dpi": "x"}]), "error:ValueError"),
+        "https://a.example/my doc spark 7.pdf":
+            (codec.MAGIC + json.dumps(page).encode() + b'\n{"dpi":300}', "error:KeyError"),
+    }
+    fixtures.update((u, p) for u, (p, _) in hostile.items())
+    corpus_df = spark.createDataFrame(
+        [(u, ts, p, "", "en", len(p)) for u, p in fixtures.items()], CORPUS_SCHEMA
+    )
+    cols = ["extracted_text", "extracted_norm", "n_pages", "status", "route"]
+
+    def run(threshold):
+        cfg = ExtractConfig(heavy_payload_bytes=threshold)
+        return {r["url"]: tuple(r[c] for c in cols)
+                for r in extract_fn(corpus_df, cfg).collect()}
+
+    heavy, light = run(0), run(ExtractConfig().heavy_payload_bytes)
+    assert set(light) == set(fixtures)
+    assert heavy == light
+    for k in forged:
+        got = light[f"https://a.example/forged-{k}.pdf"]
+        assert (got[0], got[3]) == ("spark", "ok"), k
+    for u, (_, status) in hostile.items():
+        assert light[u][:4] == ("", "", 0, status), u
+    assert light["https://a.example/my doc spark 7.pdf"][4] == "spark_docs"
+
+
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
 def test_extraction_plan_shape(spark, tmp_path, extract_fn):
     """Python stages and exchanges per plan are tracked figures: both
     extractions run the one plan — three mapInPandas stages (light,

@@ -311,10 +311,10 @@ def test_light_path_dispatches_to_subprocess(monkeypatch):
 
 
 def test_heavy_path_carries_pdf_to_page_stage(monkeypatch):
-    """Probe-unavailable fallback: with no pdfinfo/pdfimages on PATH (this
-    sandbox), a real heavy PDF degrades to ONE whole-doc carrier row —
-    the pre-r3 behavior, now the graceful floor under the distributed
-    page split (test_heavy_real_pdf_page_split below)."""
+    """Probe-unavailable fallback: with no pdfinfo/pdfimages on PATH, a
+    real heavy PDF degrades to ONE ``doc`` row carrying the payload — the
+    graceful floor under the distributed page split
+    (test_heavy_real_pdf_page_split below)."""
     monkeypatch.setattr(subproc, "pdf_page_count", lambda path, **kw: None)
     monkeypatch.setattr(
         subproc, "extract_doc_subprocess",
@@ -324,7 +324,7 @@ def test_heavy_path_carries_pdf_to_page_stage(monkeypatch):
     pdf = pd.DataFrame([_corpus_pdf_row("https://x/a.pdf", PDF)])
     pages = pipeline._explode_rows(pdf, cfg)
     assert len(pages) == 1
-    assert "pdf_b64" in json.loads(pages["page_json"].iloc[0])
+    assert pages["kind"].iloc[0] == "doc" and pages["page_json"].iloc[0] == PDF
     page_out = pipeline._page_text_rows(pages, cfg)
     # one row PER PAGE so reassembly routes with per-page early exit
     assert list(page_out["page_text"]) == ["p1", "p2", "p3"]
@@ -456,8 +456,9 @@ def test_heavy_real_pdf_page_split(spark, monkeypatch, tmp_path):
 
     pages = pipeline._explode_rows(pdf, cfg)
     assert len(pages) == 3 and list(pages["page_no"]) == [0, 1, 2]
+    assert set(pages["kind"]) == {"staged"}
     metas = [json.loads(s) for s in pages["page_json"]]
-    assert all("pdf_path" in m and "pdf_b64" not in m for m in metas)
+    assert all("pdf_path" in m for m in metas)
     assert [m["page"] for m in metas] == [1, 2, 3]  # gs pages are 1-based
     staged = metas[0]["pdf_path"]
     with open(staged, "rb") as f:
@@ -577,15 +578,14 @@ def test_scratch_dir_none_falls_back_to_whole_doc(monkeypatch):
     """Review fix: with no shared scratch configured, a real %PDF heavy
     doc must NOT be staged to executor-local /tmp (paths would be
     unreachable after the shuffle on a multi-host cluster) — it takes the
-    single-task whole-doc carrier instead."""
+    single-task ``doc`` row instead."""
     _fake_page_range_ocr_stack(monkeypatch, [["a"], ["b"]])
     cfg = replace(ExtractConfig(), ocr_strategy="subprocess", heavy_payload_bytes=4)
     assert cfg.scratch_dir is None
     pdf = pd.DataFrame([_corpus_pdf_row("https://x/big.pdf", PDF)])
     pages = pipeline._explode_rows(pdf, cfg)
     assert len(pages) == 1
-    meta = json.loads(pages["page_json"].iloc[0])
-    assert "pdf_b64" in meta and "pdf_path" not in meta
+    assert pages["kind"].iloc[0] == "doc" and pages["page_json"].iloc[0] == PDF
 
 
 def test_preprocess_flag_reaches_page_kernel(monkeypatch, tmp_path):
@@ -606,8 +606,9 @@ def test_preprocess_flag_reaches_page_kernel(monkeypatch, tmp_path):
         [{
             "url": "https://x/p.pdf", "warc_ts": None, "lang": "en",
             "page_no": 0, "n_pages": 1, "height_pt": 792.0, "output_dpi": 300,
+            "kind": "staged",
             "page_json": json.dumps({"pdf_path": "/nonexistent", "page": 1,
-                                     "greyscale": True}),
+                                     "greyscale": True}).encode(),
             "byte_count": 10,
         }]
     )
