@@ -25,6 +25,14 @@ Design notes (vs the reference's subprocess-and-filesystem architecture):
 
 Kernels under :mod:`pypdfocr_spark.kernels` are importable without Spark and
 serve as the single-machine oracle for the byte-identity tests.
+
+Importing the package installs :func:`pyworker.keep_zip_directories`, so
+a Python worker that unpickles any of its UDFs stops re-reading every zip
+importer's directory at the start of each task.
 """
 
+from .pyworker import keep_zip_directories
+
 __version__ = "0.1.0"
+
+keep_zip_directories()

@@ -243,6 +243,12 @@ def _explode_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return pd.DataFrame(out, columns=[f.name for f in PAGE_SCHEMA.fields])
 
 
+# Phase rank of a failed ``page`` row, in the light path's order: it
+# decodes every page, then rasterizes, emits hOCR and parses each in turn
+# over all pages, so its first failure is the lowest (rank, page_no).
+DECODE, RASTERIZE, EMIT, PARSE = range(4)
+
+
 def _doc_page_rows(url, ts, lang, texts, status, nbytes, cfg: ExtractConfig) -> list[tuple]:
     """A ``doc`` row's page-kernel output: one row PER PAGE, so reassembly
     keeps page boundaries and routes with the light path's per-page early
@@ -253,9 +259,9 @@ def _doc_page_rows(url, ts, lang, texts, status, nbytes, cfg: ExtractConfig) -> 
         norm = normalize_page_text(text)
         rows.append(
             (url, ts, lang, i, len(texts), text, norm,
-             first_matching_folder(norm, cfg.targets), status, int(nbytes))
+             first_matching_folder(norm, cfg.targets), status, DECODE, int(nbytes))
         )
-    return rows or [(url, ts, lang, 0, 0, "", "", None, status, int(nbytes))]
+    return rows or [(url, ts, lang, 0, 0, "", "", None, status, DECODE, int(nbytes))]
 
 
 def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
@@ -263,8 +269,10 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     output dpi, emit+parse hOCR, reassemble text — the compute-heavy stage,
     running on hash-spread page rows. Emits a per-page ``status`` so heavy
     failures reach lineage (statuses mirror corpus.extract_doc: ok /
-    decode_error / html_error / unsupported / error:<Type>). A ``doc`` row
-    runs ``_doc_kernel``, the light path's dispatch."""
+    decode_error / html_error / unsupported / error:<Type>) and, for a
+    failed ``page`` row, the phase it failed in (``fail_phase``; ``staged``
+    and ``doc`` rows report ``DECODE``). A ``doc`` row runs ``_doc_kernel``,
+    the light path's dispatch."""
     t0 = time.monotonic()
     out = []
     for url, ts, lang, pno, n, height, dpi, kind, data, nbytes in zip(
@@ -279,7 +287,7 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 texts, status = [], f"error:{type(exc).__name__}"
             out.extend(_doc_page_rows(url, ts, lang, texts, status, nbytes, cfg))
             continue
-        status, text = "ok", ""
+        status, text, phase = "ok", "", DECODE
         try:
             page = codec.loads_json(bytes(data))
         except Exception:
@@ -307,8 +315,11 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                     except subproc.SubprocessKernelError:
                         status = "decode_error"
                 else:
+                    phase = RASTERIZE
                     raster = codec.rasterize([page], int(dpi))
+                    phase = EMIT
                     hocr_doc = hocr.emit_hocr(raster)
+                    phase = PARSE
                     # r6: text-only parse (see hocr.page_texts_from_hocr);
                     # emit_hocr of a single page always emits one
                     # page_1 div, so index 0 is the page parse_hocr_page
@@ -320,7 +331,7 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         norm = normalize_page_text(text)
         out.append(
             (url, ts, lang, int(pno), int(n), text, norm,
-             first_matching_folder(norm, cfg.targets), status, int(nbytes))
+             first_matching_folder(norm, cfg.targets), status, phase, int(nbytes))
         )
     share = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)
     res = pd.DataFrame(out, columns=[f.name for f in PAGE_TEXT_SCHEMA.fields][:-1])
@@ -355,8 +366,9 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
 
     Semantics:
 
-    * doc status = first non-ok page status in page order, via
-      ``min(struct(page_no, status))`` over non-ok rows;
+    * doc status = the status of the first failure in the light path's
+      order — lowest phase rank, then lowest page — via
+      ``min(struct(fail_phase, page_no, status))`` over non-ok rows;
     * failed docs collapse to (text='', n_pages=0) and route only through
       the filename fallback / default — page matches are ignored;
     * doc text = page texts joined by newline; doc norm = per-page norms
@@ -377,7 +389,7 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     g = pages_df.groupBy("url").agg(
         struct_sorted.alias("_p"),
         F.min(
-            F.when(F.col("status") != "ok", F.struct("page_no", "status"))
+            F.when(F.col("status") != "ok", F.struct("fail_phase", "page_no", "status"))
         ).alias("_bad"),
         F.min("warc_ts").alias("warc_ts"),
         F.min("lang").alias("lang"),

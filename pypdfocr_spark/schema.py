@@ -109,6 +109,10 @@ PAGE_TEXT_SCHEMA = StructType(
         StructField("norm_text", StringType(), True),
         StructField("route_match", StringType(), True),
         StructField("status", StringType(), False),
+        # phase a failed page row failed in (decode 0, rasterize 1, emit
+        # hOCR 2, parse 3): reassembly reports the failure the light path,
+        # which runs each phase over all pages before the next, hits first
+        StructField("fail_phase", IntegerType(), False),
         StructField("byte_count", LongType(), True),
         StructField("wall_ms", DoubleType(), True),
     ]

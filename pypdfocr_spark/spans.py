@@ -30,7 +30,7 @@ from .config import ExtractConfig
 from .kernels import codec, hocr
 from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
-from .pipeline import _doc_page_rows, _extract_plan
+from .pipeline import DECODE, EMIT, PARSE, RASTERIZE, _doc_page_rows, _extract_plan
 from .schema import EXTRACTED_SCHEMA, LINE_SCHEMA, PAGE_TEXT_SCHEMA
 
 PAGE_SPANS_FIELD = StructField(
@@ -105,7 +105,7 @@ def _page_span_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             rows = _doc_page_rows(url, ts, lang, texts, status, nbytes, cfg)
             out.extend(r + (0.0, lines) for r, lines in zip(rows, spans_by_page or [[]]))
             continue
-        status, text, lines = "ok", "", []
+        status, text, lines, phase = "ok", "", [], DECODE
         try:
             page = codec.loads_json(bytes(data))
         except Exception:
@@ -114,8 +114,11 @@ def _page_span_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             status = "decode_error"
         else:
             try:
+                phase = RASTERIZE
                 raster = codec.rasterize([page], int(dpi))
+                phase = EMIT
                 hocr_doc = hocr.emit_hocr(raster)
+                phase = PARSE
                 lines = hocr.parse_hocr_page(hocr_doc, 1, float(height), int(dpi))
                 text = hocr.page_text_from_spans(lines)
             except Exception as exc:  # data error → row, never task failure
@@ -123,7 +126,7 @@ def _page_span_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         norm = normalize_page_text(text)
         out.append(
             (url, ts, lang, int(pno), int(n), text, norm,
-             first_matching_folder(norm, cfg.targets), status, int(nbytes), 0.0, lines)
+             first_matching_folder(norm, cfg.targets), status, phase, int(nbytes), 0.0, lines)
         )
     res = pd.DataFrame(out, columns=[f.name for f in PAGE_SPANS_SCHEMA.fields])
     res["wall_ms"] = (time.monotonic() - t0) * 1000.0 / max(len(out), 1)

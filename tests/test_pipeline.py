@@ -281,6 +281,13 @@ def test_light_heavy_parity_on_hostile_pages(spark, extract_fn):
             (codec.encode_doc([{**page, "dpi": "x"}]), "error:ValueError"),
         "https://a.example/my doc spark 7.pdf":
             (codec.MAGIC + json.dumps(page).encode() + b'\n{"dpi":300}', "error:KeyError"),
+        # the light path decodes every page before it emits any hOCR, and
+        # rasterizes every page before it emits any: the earlier phase's
+        # failure wins over an earlier page's
+        "https://a.example/decode-after-emit.pdf":
+            (codec.MAGIC + json.dumps(page).encode() + b'\n{"dpi":300}\n[1]', "decode_error"),
+        "https://a.example/rasterize-after-emit.pdf":
+            (codec.encode_doc([page, {"dpi": 300}, {**page, "dpi": "x"}]), "error:ValueError"),
     }
     fixtures.update((u, p) for u, (p, _) in hostile.items())
     corpus_df = spark.createDataFrame(
