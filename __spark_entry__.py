@@ -479,10 +479,7 @@ def _q_extract_spans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc line/word counts over the parsed span tree — SQL-checkable
     because the corpus layout is deterministic (8 words/line on the PDF
     path, 12 per <p> on the HTML path)."""
-    try:
-        corpus_df = spark.read.parquet(_corpus_path(sf_dir))
-    except Exception:
-        corpus_df = pipeline.materialize_corpus(spark, sf_dir, _corpus_path(sf_dir))
+    corpus_df = pipeline.cached_corpus(spark, sf_dir, _corpus_path(sf_dir))
     df = spans.extract_spans(corpus_df, ExtractConfig())
     n_lines = F.aggregate(
         F.col("spans"), F.lit(0), lambda acc, p: acc + F.size(p["lines"])

@@ -58,15 +58,14 @@ def canonical_url_dedup(
     byte-level differences exact dedup can't see. Group key = the
     declared canonical when it is an absolute http(s) URL, else the
     page's own URL (relative/garbage canonicals fall back to self —
-    resolving them needs the page's base and is the metadata
-    extractor's job, not the group-by's); both sides run through
+    resolving them needs the page's base and is the caller's job, not
+    the group-by's); both sides run through
     :func:`webops.canonicalize_url` so ``:443`` / trailing-slash /
     utm variants of the SAME declared target still collapse.
 
     Returns (canon_key, keeper_id, dup_count), min-id keeper — the same
     contract as :func:`exact_dedup`; one hash aggregation, pure
-    expressions. Compose with ``warc_extract(with_metadata=True)``:
-    ``df.select("doc_id", "url", F.col("page_meta.canonical_url"))``.
+    expressions.
     """
     from .webops import canonicalize_url
 

@@ -1,26 +1,8 @@
-"""Web link graph: outlink extraction, host-level graph construction,
-and PageRank — the Common-Crawl-style webgraph ranking step a crawl
+"""Web link graph ranking: PageRank and harmonic centrality over an
+edge DataFrame — the Common-Crawl-style webgraph ranking step a crawl
 curation pipeline runs to score hosts (quality priors, crawl-frontier
 ordering, domain weighting for training-data sampling).
 
-Three layers, each independently usable:
-
-* :func:`outlinks_table` — per-page ``<a href>`` extraction from raw
-  HTML bytes (one mapInPandas stage, the only Python in the module):
-  charset sniff, ``<base href>`` resolution, relative→absolute via
-  ``urllib.parse.urljoin``, http(s)-only, anchor text and
-  ``rel=nofollow`` carried. Python does only the parsing; URL
-  canonicalization and host extraction stay JVM-side
-  (``webops.canonicalize_url`` / ``host_of``), so the hot path after
-  the parse is whole-stage codegen.
-* :func:`host_graph` — (src_host, dst_host, n_links) aggregation over
-  the outlinks: canonicalize → host → one map-side-combinable hash
-  aggregation. Self-loops dropped by default (intra-host nav links
-  dominate raw counts and carry no ranking signal).
-* :func:`anchor_text_table` — the anchor-text corpus: top-k anchor
-  strings per link target with link / distinct-source-host counts,
-  collapsed map-side before any ranking so mega-indegree targets sort
-  their distinct anchors, not their in-links.
 * :func:`pagerank` — classic damped PageRank with dangling-mass
   redistribution (Page et al. 1999; the power-iteration formulation),
   plus personalized (seed-teleport, TrustRank-style) mode:
@@ -53,243 +35,14 @@ fixtures (two-node cycle = [1/2, 1/2]) where order cannot matter.
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-from html.parser import HTMLParser
-from typing import TYPE_CHECKING
-from urllib.parse import urljoin
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     StringType,
     StructField,
     StructType,
 )
-
-from . import webops
-from .webtext import sniff_charset
-
-if TYPE_CHECKING:
-    import pandas as pd
-
-
-class _LinkParser(HTMLParser):
-    """Collect ``<a href>`` links with anchor text and rel flags.
-    Follows the same stdlib-HTMLParser tolerance model as
-    ``webtext._BlockParser``; honors the FIRST ``<base href>`` (HTML
-    spec: subsequent base elements are ignored)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.base: "str | None" = None
-        self.links: "list[tuple[str, str, bool]]" = []  # href, anchor, nofollow
-        self._href: "str | None" = None
-        self._nofollow = False
-        self._anchor: "list[str]" = []
-
-    def _close_anchor(self) -> None:
-        if self._href is not None:
-            text = re.sub(r"\s+", " ", "".join(self._anchor)).strip()
-            self.links.append((self._href, text, self._nofollow))
-        self._href = None
-        self._nofollow = False
-        self._anchor = []
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "base" and self.base is None:
-            href = dict(attrs).get("href")
-            if href:
-                self.base = href
-        elif tag == "a":
-            self._close_anchor()  # malformed nesting: flush the open one
-            d = dict(attrs)
-            self._href = d.get("href")
-            rel = (d.get("rel") or "").lower().split()
-            self._nofollow = "nofollow" in rel
-
-    def handle_endtag(self, tag):
-        if tag == "a":
-            self._close_anchor()
-
-    def handle_data(self, data):
-        if self._href is not None:
-            self._anchor.append(data)
-
-    def close(self):
-        super().close()
-        self._close_anchor()
-
-
-_SKIP_SCHEMES = ("mailto:", "javascript:", "tel:", "data:", "about:")
-
-
-def extract_outlinks(
-    payload: bytes, base_url: str, http_charset: "str | None" = None
-) -> "list[tuple[str, str, bool]]":
-    """(absolute_url, anchor_text, nofollow) for every followable
-    ``<a href>`` in the page. Fragment-only links and non-web schemes
-    are dropped; relative links resolve against ``<base href>`` when
-    present, else the page URL. Fragments are stripped here (cheap and
-    unconditional); full canonicalization is the caller's JVM-side step.
-    """
-    charset = http_charset or sniff_charset(bytes(payload))
-    try:
-        html = bytes(payload).decode(charset, errors="replace")
-    except LookupError:
-        html = bytes(payload).decode("utf-8", errors="replace")
-    p = _LinkParser()
-    p.feed(html)
-    p.close()
-    base = urljoin(base_url, p.base) if p.base else base_url
-    out = []
-    for href, anchor, nofollow in p.links:
-        href = href.strip()
-        if not href or href.startswith("#"):
-            continue
-        low = href.lower()
-        if any(low.startswith(s) for s in _SKIP_SCHEMES):
-            continue
-        try:
-            absu = urljoin(base, href)
-        except ValueError:
-            continue
-        if not absu.startswith(("http://", "https://")):
-            continue
-        absu = absu.split("#", 1)[0]
-        if absu:
-            out.append((absu, anchor, nofollow))
-    return out
-
-
-OUTLINKS_SCHEMA = StructType(
-    [
-        StructField("src_url", StringType()),
-        StructField("dst_url", StringType()),
-        StructField("anchor_text", StringType()),
-        StructField("nofollow", BooleanType()),
-    ]
-)
-
-
-def outlinks_table(
-    df: DataFrame, url_col: str = "url", payload_col: str = "html"
-) -> DataFrame:
-    """Explode pages into outlink rows — one Arrow stage, variable
-    fan-out handled naturally by mapInPandas (no JVM-side explode of a
-    Python-built array column, so link-heavy pages never materialize a
-    giant intermediate row). Parse failures contribute zero rows rather
-    than killing the task (malformed page ≠ dead task, the
-    ``warc_extract`` convention)."""
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        cols = [f.name for f in OUTLINKS_SCHEMA]
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf[url_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    for absu, anchor, nofollow in extract_outlinks(
-                        bytes(payload), url
-                    ):
-                        rows.append((url, absu, anchor, nofollow))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, OUTLINKS_SCHEMA)
-
-
-def host_graph(
-    links: DataFrame,
-    src_col: str = "src_url",
-    dst_col: str = "dst_url",
-    drop_self: bool = True,
-    follow_only: bool = True,
-) -> DataFrame:
-    """Host-level link graph: canonicalize both endpoints, extract
-    hosts, aggregate to (src, dst, n_links). One hash aggregation —
-    map-side partials collapse the page-level fan-out before the
-    shuffle, so the shuffled volume is O(|host pairs|), not O(|links|).
-    ``follow_only`` drops rel=nofollow edges when the column is present
-    (the webgraph convention — nofollow is an explicit no-endorsement
-    signal)."""
-    if follow_only and "nofollow" in links.columns:
-        links = links.where(~F.col("nofollow"))
-    g = links.select(
-        webops.host_of(webops.canonicalize_url(F.col(src_col))).alias("src"),
-        webops.host_of(webops.canonicalize_url(F.col(dst_col))).alias("dst"),
-    ).where((F.col("src") != "") & (F.col("dst") != ""))
-    if drop_self:
-        g = g.where(F.col("src") != F.col("dst"))
-    return g.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n_links"))
-
-
-def anchor_text_table(
-    links: DataFrame,
-    src_col: str = "src_url",
-    dst_col: str = "dst_url",
-    anchor_col: str = "anchor_text",
-    by_host: bool = False,
-    top_k: int = 10,
-    min_links: int = 1,
-) -> DataFrame:
-    """The anchor-text corpus: for each link target, the ``top_k`` most
-    frequent anchor strings with link and distinct-source-host counts —
-    off-page text describing the target (the classic web-search ranking
-    signal, reused in curation as a quality/topic prior and as weak
-    labels for training data). Nofollow links are excluded when the
-    column is present; empty anchors always are.
-
-    Returns (dst, anchor, n_links, n_src_hosts, rank) with rank 1..k per
-    dst ordered by n_links desc (anchor asc tiebreak — deterministic).
-
-    Scale shape: one map-side-combinable aggregation collapses the raw
-    |links| relation to distinct (dst, anchor) pairs before anything
-    ranks, and ``approx_count_distinct`` keeps the source-host
-    cardinality a fixed-size HLL partial rather than a per-group set.
-    The top-k window then partitions by dst over the already-collapsed
-    relation, so a mega-indegree host sorts its distinct anchor strings,
-    not its billions of in-links. Output is capped at k rows per target
-    by construction."""
-    if top_k < 1:
-        raise ValueError("top_k must be >= 1")
-    if "nofollow" in links.columns:
-        links = links.where(~F.col("nofollow"))
-    dst = webops.canonicalize_url(F.col(dst_col))
-    if by_host:
-        dst = webops.host_of(dst)
-    anchor = F.trim(F.col(anchor_col))
-    agg = (
-        links.select(
-            dst.alias("dst"),
-            anchor.alias("anchor"),
-            webops.host_of(webops.canonicalize_url(F.col(src_col))).alias(
-                "src_host"
-            ),
-        )
-        .where((F.col("dst") != "") & (F.col("anchor") != ""))
-        .groupBy("dst", "anchor")
-        .agg(
-            F.count(F.lit(1)).alias("n_links"),
-            F.approx_count_distinct("src_host").alias("n_src_hosts"),
-        )
-        .where(F.col("n_links") >= min_links)
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("dst").orderBy(
-        F.col("n_links").desc(), F.col("anchor")
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-    )
 
 
 def pagerank(

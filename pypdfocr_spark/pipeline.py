@@ -51,6 +51,7 @@ Why this shape at 100 TB:
 from __future__ import annotations
 
 import json
+import os
 import time
 from collections.abc import Iterator
 
@@ -516,6 +517,31 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
     )
 
 
+# The file layout materialize_corpus writes, stamped into the corpus
+# directory as ``_LAYOUT`` once both file sets are written (Spark and
+# pyarrow skip ``_``-prefixed files). A cached corpus is reused only under
+# this stamp; bump it whenever the layout or the corpus bytes change.
+CORPUS_LAYOUT = "size-class-split-v1"
+# The layout the benchmark scripts write for a replicated corpus
+# (``build_corpus_df(replicate=k)``): one repartition(192) sorted by
+# n_bytes, light and heavy rows mixed.
+REPLICATED_LAYOUT = "replicated-repartition192-v1"
+
+
+def corpus_layout(path: str) -> str | None:
+    """The ``_LAYOUT`` stamp of a materialized corpus, or None without one."""
+    try:
+        with open(os.path.join(path, "_LAYOUT")) as f:
+            return f.read().strip()
+    except OSError:
+        return None
+
+
+def stamp_corpus_layout(path: str, layout: str) -> None:
+    with open(os.path.join(path, "_LAYOUT"), "w") as f:
+        f.write(layout + "\n")
+
+
 def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     """Write the derived corpus as a parquet table and return a reader.
 
@@ -556,7 +582,17 @@ def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame
         "append"
     ).parquet(path)
     df.unpersist()
+    stamp_corpus_layout(path, CORPUS_LAYOUT)
     return spark.read.parquet(path)
+
+
+def cached_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """The corpus materialized at ``path``, reused only when it carries the
+    current ``CORPUS_LAYOUT`` stamp and rebuilt otherwise (the overwrite in
+    :func:`materialize_corpus` wipes the stale files)."""
+    if corpus_layout(path) == CORPUS_LAYOUT:
+        return spark.read.parquet(path)
+    return materialize_corpus(spark, sf_dir, path)
 
 
 def extract_from_documents(
@@ -567,15 +603,10 @@ def extract_from_documents(
 ) -> DataFrame:
     """Convenience: driver documents table → corpus → extraction.
 
-    With ``corpus_path`` the corpus is materialized (or reused if already
-    written) and extraction scans it like the production table.
+    With ``corpus_path`` the corpus is materialized (or reused if it
+    carries the current ``CORPUS_LAYOUT`` stamp) and extraction scans it
+    like the production table.
     """
     if corpus_path is None:
         return extract(build_corpus_df(spark, sf_dir), cfg)
-    try:
-        corpus_df = spark.read.parquet(corpus_path)
-        if not corpus_df.head(1):  # plan-level probe, no RDD conversion
-            raise ValueError("empty corpus")
-    except Exception:
-        corpus_df = materialize_corpus(spark, sf_dir, corpus_path)
-    return extract(corpus_df, cfg)
+    return extract(cached_corpus(spark, sf_dir, corpus_path), cfg)

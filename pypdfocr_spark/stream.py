@@ -63,64 +63,6 @@ def watch_extract(
     return writer.start()
 
 
-def watch_warc(
-    spark: SparkSession,
-    input_glob: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    with_outlinks: bool = False,
-    with_metadata: bool = False,
-    min_words: int = 5,
-    max_link_density: float = 0.33,
-) -> StreamingQuery:
-    """The crawl front door as a stream: watch a directory for new WARC
-    archives (the binaryFile source has a fixed schema, so no inference
-    config is needed) and run the fused ``warc_extract`` per
-    micro-batch with archive-granularity idempotent commits (streaming
-    file sources require an explicit schema — binaryFile's is fixed,
-    so it is spelled here once).
-
-    Two resume layers compose: checkpointed source offsets make each
-    archive's delivery exactly-once across restarts, and
-    ``crawl_resume_filter``'s anti-join against the committed docs
-    table makes even a re-delivered or pre-existing archive a no-op —
-    the same belt-and-braces the batch path's interrupted-run e2e pins.
-    Parallelism stays the archive count (one task per archive, no
-    shuffle anywhere in the batch function), so the streaming form
-    scales exactly like the batch form."""
-    from . import webtext
-
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .load(input_glob)
-        .select(F.col("path").alias("url"), F.col("content").alias("payload"))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        remaining = webtext.crawl_resume_filter(batch_df, out_dir)
-        docs = webtext.warc_extract(
-            remaining,
-            min_words=min_words,
-            max_link_density=max_link_density,
-            with_outlinks=with_outlinks,
-            with_metadata=with_metadata,
-        )
-        webtext.crawl_commit(docs, out_dir, run_id=f"stream-{batch_id}")
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def debounced_ready_stateful(
     df: DataFrame,
     key_col: str = "url",

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 from datetime import datetime, timezone
@@ -127,7 +128,11 @@ def main() -> None:
     mult = int(os.environ.get("SPARK_GRAFT_SCALING_MULT", "64"))
     tag = os.path.basename(os.path.normpath(sf_dir))
     corpus_path = f"/tmp/pypdfocr_spark_corpus_{tag}_x{mult}"
-    if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
+    sys.path.insert(0, REPO)
+    from pypdfocr_spark import pipeline
+
+    if pipeline.corpus_layout(corpus_path) != pipeline.REPLICATED_LAYOUT:
+        shutil.rmtree(corpus_path, ignore_errors=True)
         # materialize once with a throwaway session
         code = (
             f"import sys; sys.path.insert(0, {REPO!r});"
@@ -136,7 +141,8 @@ def main() -> None:
             f"s = get_spark('mat', master='local[32]'); s.sparkContext.setLogLevel('ERROR');"
             f"df = pipeline.build_corpus_df(s, {sf_dir!r}, replicate={mult}).repartition(192)"
             f".sortWithinPartitions('n_bytes'); "
-            f"df.write.mode('overwrite').parquet({corpus_path!r})"
+            f"df.write.mode('overwrite').parquet({corpus_path!r}); "
+            f"pipeline.stamp_corpus_layout({corpus_path!r}, pipeline.REPLICATED_LAYOUT)"
         )
         subprocess.run([sys.executable, "-c", code], check=True, cwd=REPO)
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -68,7 +69,11 @@ def main() -> None:
     runs_per_segment = 2
     tag = os.path.basename(os.path.normpath(sf_dir))
     corpus_path = f"/tmp/pypdfocr_spark_corpus_{tag}_x{mult}"
-    if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
+    sys.path.insert(0, REPO)
+    from pypdfocr_spark import pipeline
+
+    if pipeline.corpus_layout(corpus_path) != pipeline.REPLICATED_LAYOUT:
+        shutil.rmtree(corpus_path, ignore_errors=True)
         code = (
             f"import sys; sys.path.insert(0, {REPO!r});"
             "from pypdfocr_spark.session import get_spark;"
@@ -76,7 +81,8 @@ def main() -> None:
             "s = get_spark('mat', master='local[32]'); s.sparkContext.setLogLevel('ERROR');"
             f"df = pipeline.build_corpus_df(s, {sf_dir!r}, replicate={mult}).repartition(192)"
             ".sortWithinPartitions('n_bytes'); "
-            f"df.write.mode('overwrite').parquet({corpus_path!r})"
+            f"df.write.mode('overwrite').parquet({corpus_path!r}); "
+            f"pipeline.stamp_corpus_layout({corpus_path!r}, pipeline.REPLICATED_LAYOUT)"
         )
         subprocess.run([sys.executable, "-c", code], check=True, cwd=REPO)
 

@@ -60,9 +60,17 @@ def build_zip(dst: str) -> str:
 
 
 def ensure_corpus(sf_dir: str, mult: int) -> str:
+    """The cached corpus for ``sf_dir`` replicated ``mult`` times, rebuilt
+    unless its ``_LAYOUT`` stamp names the layout written here."""
+    if REPO not in sys.path:
+        sys.path.insert(0, REPO)
+    from pypdfocr_spark import pipeline
+
     tag = os.path.basename(os.path.normpath(sf_dir))
     corpus_path = f"/tmp/pypdfocr_spark_corpus_{tag}" + (f"_x{mult}" if mult > 1 else "")
-    if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
+    layout = pipeline.CORPUS_LAYOUT if mult == 1 else pipeline.REPLICATED_LAYOUT
+    if pipeline.corpus_layout(corpus_path) != layout:
+        shutil.rmtree(corpus_path, ignore_errors=True)
         if mult == 1:
             # the unreplicated path is the cache bench.py and
             # __spark_entry__ reuse: write their split light/heavy layout
@@ -70,7 +78,8 @@ def ensure_corpus(sf_dir: str, mult: int) -> str:
         else:
             write = (
                 f"pipeline.build_corpus_df(s, {sf_dir!r}, replicate={mult}).repartition(192)"
-                f".sortWithinPartitions('n_bytes').write.mode('overwrite').parquet({corpus_path!r})"
+                f".sortWithinPartitions('n_bytes').write.mode('overwrite').parquet({corpus_path!r});"
+                f"pipeline.stamp_corpus_layout({corpus_path!r}, {layout!r})"
             )
         code = (
             f"import sys; sys.path.insert(0, {REPO!r});"

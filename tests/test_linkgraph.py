@@ -1,83 +1,15 @@
-"""Link graph (linkgraph.py): outlink extraction semantics, host-graph
-aggregation, and PageRank vs a brute-force numpy replica (mass
-conservation, dangling redistribution, weight/duplicate equivalence,
-layout invariance, exact rational fixture)."""
+"""Link graph (linkgraph.py): PageRank vs a brute-force numpy replica
+(mass conservation, dangling redistribution, weight/duplicate
+equivalence, layout invariance, exact rational fixture), personalized
+PageRank, and HyperBall harmonic centrality."""
 
 import collections
 import random
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pypdfocr_spark import linkgraph
-
-PAGE = b"""<html><head><base href="https://ex.com/sub/">
-<meta charset="utf-8"><title>t</title></head><body>
-<a href="page2.html">Next page</a>
-<a href="/root.html">Root</a>
-<a href="https://other.org/x?a=1#frag">Other <b>site</b></a>
-<a href="#top">Top</a>
-<a href="mailto:a@b.c">mail</a>
-<a href="javascript:void(0)">js</a>
-<a rel="NOFOLLOW noopener" href="https://spam.example/">spam</a>
-<a href="//proto.rel/p">proto-relative</a>
-<p>no link here</p>
-</body></html>"""
-
-
-def test_extract_outlinks_resolution_and_filters():
-    links = linkgraph.extract_outlinks(PAGE, "https://ex.com/a/b.html")
-    by_url = {u: (t, nf) for u, t, nf in links}
-    # <base href> wins over the page URL for relative resolution
-    assert "https://ex.com/sub/page2.html" in by_url
-    assert by_url["https://ex.com/sub/page2.html"] == ("Next page", False)
-    assert "https://ex.com/root.html" in by_url          # host-absolute
-    assert by_url["https://other.org/x?a=1"][0] == "Other site"  # frag cut
-    assert "https://proto.rel/p" in by_url               # scheme-relative
-    assert by_url["https://spam.example/"] == ("spam", True)
-    assert not any(
-        u.startswith(("mailto:", "javascript:")) or "#" in u for u in by_url
-    )
-    assert len(links) == 5
-
-
-def test_extract_outlinks_no_base_and_malformed():
-    html = b'<a href="x.html">one<a href="y.html">two</a>'
-    links = linkgraph.extract_outlinks(html, "https://h.net/dir/page.html")
-    assert [u for u, _, _ in links] == [
-        "https://h.net/dir/x.html", "https://h.net/dir/y.html",
-    ]
-    # unterminated first anchor still captured with its text
-    assert links[0][1] == "one"
-    assert linkgraph.extract_outlinks(b"\xff\xfe garbage", "https://h.net/") == []
-
-
-def test_outlinks_table_and_host_graph(spark):
-    rows = [
-        ("https://a.com/1", bytearray(PAGE)),
-        ("https://b.com/1", bytearray(
-            b'<a href="https://a.com/x">A</a><a href="https://a.com/y">A2</a>'
-            b'<a href="https://b.com/self">self</a>'
-            b'<a rel="nofollow" href="https://c.com/">c</a>')),
-        ("https://bad.com/1", None),
-    ]
-    df = spark.createDataFrame(rows, "url STRING, html BINARY")
-    links = linkgraph.outlinks_table(df)
-    got = {(r["src_url"], r["dst_url"], r["nofollow"]) for r in links.collect()}
-    assert ("https://b.com/1", "https://a.com/x", False) in got
-    assert ("https://b.com/1", "https://c.com/", True) in got
-    assert len([g for g in got if g[0] == "https://a.com/1"]) == 5
-
-    g = {(r["src"], r["dst"]): r["n_links"]
-         for r in linkgraph.host_graph(links).collect()}
-    assert g[("b.com", "a.com")] == 2
-    assert ("b.com", "b.com") not in g          # self-loop dropped
-    assert ("b.com", "c.com") not in g          # nofollow dropped
-    g2 = {(r["src"], r["dst"]): r["n_links"]
-          for r in linkgraph.host_graph(links, follow_only=False,
-                                        drop_self=False).collect()}
-    assert g2[("b.com", "c.com")] == 1 and g2[("b.com", "b.com")] == 1
 
 
 def _random_edges(n_nodes, n_edges, seed):
@@ -160,42 +92,6 @@ def test_pagerank_layout_invariant_and_args(spark):
         linkgraph.pagerank(df, damping=1.0)
     with pytest.raises(ValueError):
         linkgraph.pagerank(df, iterations=0)
-
-
-def test_anchor_text_table(spark):
-    rows = [
-        # canonical variants of the same target collapse (case, slash)
-        ("https://s1.com/a", "https://T.com/page/", "Widgets", False),
-        ("https://s1.com/b", "https://t.com/page", "Widgets", False),
-        ("https://s2.com/a", "https://t.com/page", "Widgets", False),
-        ("https://s2.com/b", "https://t.com/page", "Buy widgets", False),
-        ("https://s2.com/c", "https://t.com/page", "Acme", False),
-        ("https://s3.com/x", "https://t.com/page", "ignored", True),
-        ("https://s3.com/y", "https://t.com/page", "  ", False),
-        ("https://s3.com/z", "https://other.net/", "Other", False),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "src_url STRING, dst_url STRING, anchor_text STRING, nofollow BOOLEAN",
-    )
-    out = linkgraph.anchor_text_table(df, top_k=2).collect()
-    t = {r["anchor"]: r for r in out if r["dst"] == "https://t.com/page"}
-    # top_k=2 caps the target's rows; ties break anchor-ascending
-    assert set(t) == {"Widgets", "Acme"}
-    assert t["Widgets"]["n_links"] == 3 and t["Widgets"]["rank"] == 1
-    assert t["Widgets"]["n_src_hosts"] == 2          # s1.com + s2.com
-    assert t["Acme"]["n_links"] == 1 and t["Acme"]["rank"] == 2
-    o = [r for r in out if r["dst"] == "https://other.net/"]
-    assert len(o) == 1 and o[0]["anchor"] == "Other"
-    # nofollow and blank anchors never appear
-    assert all(r["anchor"].strip() not in ("ignored", "") for r in out)
-
-    by_host = linkgraph.anchor_text_table(df, by_host=True, min_links=2)
-    h = {(r["dst"], r["anchor"]): r["n_links"] for r in by_host.collect()}
-    assert h == {("t.com", "Widgets"): 3}            # min_links prunes 1s
-
-    with pytest.raises(ValueError):
-        linkgraph.anchor_text_table(df, top_k=0)
 
 
 def _ppr_replica(edges, d, iters, seeds):

@@ -7,6 +7,8 @@ assert the extracted text — here byte-identical per url, which is
 strictly stronger than the reference's keyword-tolerant check.
 """
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -408,3 +410,22 @@ def test_materialize_corpus_size_class_file_layout(spark, tmp_path):
                     if lo <= HEAVY_PAYLOAD_BYTES < hi:
                         mixed.append((f, lo, hi))
     assert mixed == [], f"files mixing size classes: {mixed}"
+
+
+def test_extract_from_documents_rebuilds_stale_corpus(spark, tmp_path):
+    """A cached corpus is reused only under the current ``_LAYOUT`` stamp:
+    a stale stamp makes extract_from_documents wipe and rebuild it, and
+    a current one makes it read the files already there."""
+    path = str(tmp_path / "corpus")
+    pipeline.materialize_corpus(spark, SF_SMOKE, path)
+    assert pipeline.corpus_layout(path) == pipeline.CORPUS_LAYOUT
+    (tmp_path / "corpus" / "_LAYOUT").write_text("an-older-layout\n")
+    stale = set(os.listdir(path))
+
+    pipeline.extract_from_documents(spark, SF_SMOKE, corpus_path=path)
+    assert pipeline.corpus_layout(path) == pipeline.CORPUS_LAYOUT
+    rebuilt = set(os.listdir(path))
+    assert {f for f in rebuilt if f.endswith(".parquet")}.isdisjoint(stale)
+
+    pipeline.extract_from_documents(spark, SF_SMOKE, corpus_path=path)
+    assert set(os.listdir(path)) == rebuilt

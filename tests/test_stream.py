@@ -2,7 +2,6 @@
 commits across restarts, session-window debounce — the rebuild analog of
 the reference's watcher state-machine tests (test/test_watcher.py:37-79)."""
 
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -397,52 +396,3 @@ def test_curate_stream_dedup_ttl_dedupes_within_watermark(spark, tmp_path_factor
     # the duplicate's keeper is the first arrival, stamped with ITS time
     keeper = next(r for r in out if r["doc_id"] == 1)
     assert keeper["warc_ts"] == t0
-
-
-def test_watch_warc_streaming_front_door(spark, tmp_path_factory):
-    """The streaming crawl front door: archives dropped into a watched
-    directory extract through the fused warc_extract per micro-batch
-    with archive-granularity commits; a restart with the SAME
-    checkpoint plus the resume anti-join makes re-delivery a no-op
-    (doc counts stable), and a newly dropped archive is picked up."""
-    import shutil
-
-    from pypdfocr_spark import stream as st
-    from pypdfocr_spark import webtext
-
-    base = tmp_path_factory.mktemp("watch_warc")
-    inbox = base / "inbox"
-    inbox.mkdir()
-    out_dir, ckpt = str(base / "out"), str(base / "ckpt")
-
-    page = (b"<html><head><title>T</title></head><body><p>enough words "
-            b"to pass the minimum easily in this paragraph</p></body></html>")
-
-    def arc(uri):
-        return webtext.encode_warc(
-            [{"type": "response", "uri": uri,
-              "block": webtext.encode_http_response(page)}],
-            gzip_members=True,
-        )
-
-    (inbox / "a1.warc.gz").write_bytes(arc("http://a.example/1"))
-    q = st.watch_warc(spark, str(inbox), out_dir, ckpt)
-    q.awaitTermination(120)
-    docs = spark.read.parquet(f"{out_dir}/docs")
-    assert docs.count() == 1
-    assert docs.first()["url"] == "http://a.example/1"
-
-    # second run: one new archive; the old one must not re-extract
-    (inbox / "a2.warc.gz").write_bytes(arc("http://b.example/2"))
-    q = st.watch_warc(spark, str(inbox), out_dir, ckpt)
-    q.awaitTermination(120)
-    docs = spark.read.parquet(f"{out_dir}/docs")
-    assert docs.count() == 2
-    assert webtext.crawl_lineage(spark, out_dir).count() == 2
-
-    # checkpoint wiped (simulated redelivery of EVERYTHING): the
-    # anti-join against the committed docs table still makes it a no-op
-    shutil.rmtree(ckpt)
-    q = st.watch_warc(spark, str(inbox), out_dir, str(base / "ckpt2"))
-    q.awaitTermination(120)
-    assert spark.read.parquet(f"{out_dir}/docs").count() == 2
