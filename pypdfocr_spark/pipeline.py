@@ -34,7 +34,8 @@ dispatch, so the two paths cannot disagree on what a payload is.
 Why this shape at 100 TB:
 
 * The S3 filter and the light/heavy split are Catalyst expressions
-  (``endswith``, ``length(html)``) — pushed/pruned JVM-side, no Python.
+  (``endswith``, ``n_bytes``, and on the materialized corpus its
+  ``size_class`` partition column) — pushed/pruned JVM-side, no Python.
 * 99% of documents never shuffle: one Arrow round-trip, map-only.
 * The 1% multi-hundred-page tail — which would otherwise pin a task per
   AQE's inability to split a single row — is exploded to page granularity
@@ -58,9 +59,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from . import corpus as ck
-from .config import ExtractConfig
+from .config import HEAVY_PAYLOAD_BYTES, ExtractConfig
 from .kernels import codec, hocr
 from .kernels.normalize import normalize_page_text
 from .kernels.route import first_matching_folder, route_document
@@ -444,20 +446,27 @@ def source_filter(corpus_df: DataFrame) -> DataFrame:
 def _split(corpus_df: DataFrame, cfg: ExtractConfig) -> tuple[DataFrame, DataFrame]:
     """Source filter, then the (light, heavy) size split."""
     src = source_filter(corpus_df)
-    # prefer the stats-bearing n_bytes column: `n_bytes > T` prunes at the
-    # parquet/Iceberg row-group level (min/max stats), so each branch's
-    # scan skips the other branch's row groups. A coalesce() wrapper
-    # would defeat pushdown, so the bare column is compared and rows with
-    # a null n_bytes fall to the light branch (Or(IsNull, LtEq) pushes).
-    if "n_bytes" in corpus_df.columns:
-        light = src.where(
-            F.col("n_bytes").isNull() | (F.col("n_bytes") <= cfg.heavy_payload_bytes)
-        )
-        heavy = src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
-    else:
+    if "n_bytes" not in corpus_df.columns:
         is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
-        light = src.where(~is_heavy)
-        heavy = src.where(is_heavy)
+        return src.where(~is_heavy), src.where(is_heavy)
+    # The n_bytes predicates decide each row's branch, so any threshold
+    # and any unpartitioned table give the same rows. A coalesce()
+    # wrapper would defeat row-group pushdown, so the bare column is
+    # compared and rows with a null n_bytes fall to the light branch
+    # (Or(IsNull, LtEq) pushes).
+    light = src.where(F.col("n_bytes").isNull() | (F.col("n_bytes") <= cfg.heavy_payload_bytes))
+    heavy = src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
+    # On materialize_corpus's layout the size_class partition predicate
+    # prunes the other class's files at planning, so each branch lists
+    # and packs only its own files. It is added only where the threshold
+    # implies it: a light doc under a lower threshold sits in the light
+    # partition but belongs to the heavy branch, and vice versa.
+    if "size_class" in corpus_df.columns:
+        if cfg.heavy_payload_bytes <= HEAVY_PAYLOAD_BYTES:
+            light = light.where(F.col("size_class") == "light")
+        if cfg.heavy_payload_bytes >= HEAVY_PAYLOAD_BYTES:
+            heavy = heavy.where(F.col("size_class") == "heavy")
+        light, heavy = light.drop("size_class"), heavy.drop("size_class")
     return light, heavy
 
 
@@ -518,10 +527,10 @@ def extract(corpus_df: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame
 
 
 # The file layout materialize_corpus writes, stamped into the corpus
-# directory as ``_LAYOUT`` once both file sets are written (Spark and
-# pyarrow skip ``_``-prefixed files). A cached corpus is reused only under
-# this stamp; bump it whenever the layout or the corpus bytes change.
-CORPUS_LAYOUT = "size-class-split-v1"
+# directory as ``_LAYOUT`` once the write is done (Spark and pyarrow skip
+# ``_``-prefixed files). A cached corpus is reused only under this stamp;
+# bump it whenever the layout or the corpus bytes change.
+CORPUS_LAYOUT = "size-class-partition-v2"
 # The layout the benchmark scripts write for a replicated corpus
 # (``build_corpus_df(replicate=k)``): one repartition(192) sorted by
 # n_bytes, light and heavy rows mixed.
@@ -549,41 +558,43 @@ def materialize_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame
     pipeline scans it, it is not generated mid-query. Materializing makes
     the sandbox match that shape and keeps the light/heavy branch split
     from re-running the (expensive) payload construction: each branch
-    re-scans parquet with its own pushed filter instead.
+    re-scans parquet instead.
 
-    r6 layout (guide §6 "partitioning and sort order on write determine
-    how well readers can skip data"): light and heavy rows are written
-    as SEPARATE file sets (one overwrite + one append into the same
-    directory — same schema, no partition column). The former layout
-    round-robined heavy docs across every file and only sorted within
-    partitions, so each file's n_bytes min/max spanned the whole range
-    and NEITHER branch's pushed filter could skip anything — both
-    branches scanned (and Arrow-shipped) the full corpus. Now the light
-    branch's ``n_bytes <= T`` prunes every heavy file at file level and
-    vice versa. Each class gets ``par`` files (defaultParallelism): heavy
-    rows are few but fat — at sf1.0, 1% of docs carry ~60% of bytes.
-    Iceberg mapping: a size-class partition / z-order at ingest.
+    Layout (guide §6 "partitioning and sort order on write determine how
+    well readers can skip data"): one write, partitioned by a
+    ``size_class`` column (``size_class=light`` / ``size_class=heavy``
+    directories, split at ``HEAVY_PAYLOAD_BYTES``). ``_split`` turns each
+    branch's size test into a partition filter that is pruned at
+    planning, so each branch lists and packs only its own files: the
+    light files are not packed together with heavy ones into fewer tasks,
+    and on a corpus with no heavy rows the heavy branch has no files to
+    scan. Each class gets one file per core (``par`` = defaultParallelism)
+    sorted by n_bytes: heavy rows are few but fat (at sf1.0, 1% of docs
+    carry ~60% of bytes), and the heavy branch's page explode
+    parallelizes at file granularity. At warehouse scale the equivalent
+    knob is the table's target file size, not a file count. Iceberg
+    mapping: a size-class partition / z-order at ingest.
     """
-    from .config import HEAVY_PAYLOAD_BYTES
-
-    df = build_corpus_df(spark, sf_dir).persist()
     par = spark.sparkContext.defaultParallelism
-    light = df.where(F.col("n_bytes") <= HEAVY_PAYLOAD_BYTES)
-    heavy = df.where(F.col("n_bytes") > HEAVY_PAYLOAD_BYTES)
-    # both classes get one file per core: heavy docs are few but carry
-    # most bytes, and the heavy branch's page-explode stage parallelizes
-    # at FILE granularity (measured: 4 heavy files pinned the explode to
-    # 4 tasks ≈ 3 s; par files → sub-second). At warehouse scale the
-    # equivalent knob is the table's target file size, not a file count.
-    light.repartition(par).sortWithinPartitions("n_bytes").write.mode(
-        "overwrite"
-    ).parquet(path)
-    heavy.repartition(par).sortWithinPartitions("n_bytes").write.mode(
-        "append"
-    ).parquet(path)
-    df.unpersist()
+    size_class = F.when(F.col("n_bytes") > HEAVY_PAYLOAD_BYTES, "heavy").otherwise("light")
+    (
+        build_corpus_df(spark, sf_dir)
+        .withColumn("size_class", size_class)
+        .repartition(par)
+        .sortWithinPartitions("size_class", "n_bytes")
+        .write.mode("overwrite")
+        .partitionBy("size_class")
+        .parquet(path)
+    )
     stamp_corpus_layout(path, CORPUS_LAYOUT)
-    return spark.read.parquet(path)
+    return _read_corpus(spark, path)
+
+
+def _read_corpus(spark: SparkSession, path: str) -> DataFrame:
+    # the schema is given, not inferred: a corpus with no rows has no
+    # files to infer it from
+    schema = StructType(CORPUS_SCHEMA.fields + [StructField("size_class", StringType())])
+    return spark.read.schema(schema).parquet(path)
 
 
 def cached_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
@@ -591,7 +602,7 @@ def cached_corpus(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     current ``CORPUS_LAYOUT`` stamp and rebuilt otherwise (the overwrite in
     :func:`materialize_corpus` wipes the stale files)."""
     if corpus_layout(path) == CORPUS_LAYOUT:
-        return spark.read.parquet(path)
+        return _read_corpus(spark, path)
     return materialize_corpus(spark, sf_dir, path)
 
 

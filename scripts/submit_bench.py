@@ -180,7 +180,7 @@ def main() -> None:
     workdir = tempfile.mkdtemp(prefix="pypdfocr_submit_")
     zip_path = build_zip(workdir)
     n_docs = duckdb.connect().execute(
-        f"SELECT count(*) FROM '{corpus}/*.parquet'"
+        f"SELECT count(*) FROM '{corpus}/**/*.parquet'"
     ).fetchone()[0]
 
     segs: list[tuple[list[float], list[float]]] = []

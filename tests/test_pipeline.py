@@ -7,7 +7,9 @@ assert the extracted text — here byte-identical per url, which is
 strictly stronger than the reference's keyword-tolerant check.
 """
 
+import glob
 import os
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -383,23 +385,26 @@ def test_heavy_path_failures_reach_status_and_lineage(spark, tmp_path):
 
 
 def test_materialize_corpus_size_class_file_layout(spark, tmp_path):
-    """r6 layout: light and heavy rows land in DISJOINT files (each
-    file's n_bytes range sits entirely on one side of the threshold, so
-    the branches' pushed filters prune at file level), and the reader
-    returns exactly the same row set as the direct corpus build."""
-    import pyarrow.parquet as pq
-    import glob as _glob
-
+    """The corpus is partitioned by size class: light rows under
+    ``size_class=light`` and heavy rows under ``size_class=heavy``, with
+    every row group's n_bytes range on its own directory's side of the
+    threshold, and the reader returns exactly the same url set as the
+    direct corpus build."""
     from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
 
     path = str(tmp_path / "corpus")
-    out = pipeline.materialize_corpus(spark, "/root/testdata/sf0.001", path)
-    direct = pipeline.build_corpus_df(spark, "/root/testdata/sf0.001")
+    out = pipeline.materialize_corpus(spark, SF_SMOKE, path)
+    direct = pipeline.build_corpus_df(spark, SF_SMOKE)
     assert sorted(r["url"] for r in out.select("url").collect()) == sorted(
         r["url"] for r in direct.select("url").collect()
     )
-    mixed = []
-    for f in _glob.glob(path + "/*.parquet"):
+    files = glob.glob(path + "/size_class=*/*.parquet")
+    assert files
+    classes = {os.path.basename(os.path.dirname(f)) for f in files}
+    assert classes == {"size_class=light", "size_class=heavy"}
+    misplaced = []
+    for f in files:
+        heavy = os.path.basename(os.path.dirname(f)) == "size_class=heavy"
         md = pq.ParquetFile(f).metadata
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -407,9 +412,92 @@ def test_materialize_corpus_size_class_file_layout(spark, tmp_path):
                 c = g.column(i)
                 if c.path_in_schema == "n_bytes":
                     lo, hi = c.statistics.min, c.statistics.max
-                    if lo <= HEAVY_PAYLOAD_BYTES < hi:
-                        mixed.append((f, lo, hi))
-    assert mixed == [], f"files mixing size classes: {mixed}"
+                    if (lo <= HEAVY_PAYLOAD_BYTES) if heavy else (hi > HEAVY_PAYLOAD_BYTES):
+                        misplaced.append((f, lo, hi))
+    assert misplaced == [], f"row groups on the wrong side of the threshold: {misplaced}"
+
+
+def test_materialize_empty_corpus_reads_back_empty(spark, tmp_path):
+    """A corpus with no rows writes no partition directories, and still
+    reads back (and extracts) as an empty table of the corpus schema."""
+    os.makedirs(tmp_path / "sf")
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet").slice(0, 0)
+    pq.write_table(docs, str(tmp_path / "sf" / "documents.parquet"))
+    corpus_df = pipeline.materialize_corpus(spark, str(tmp_path / "sf"), str(tmp_path / "c"))
+    assert corpus_df.count() == 0
+    assert pipeline.extract(corpus_df, ExtractConfig()).count() == 0
+
+
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
+def test_partitioned_corpus_keeps_threshold_rule(spark, tmp_path, extract_fn):
+    """On the size-class partitioned corpus, every heavy_payload_bytes
+    gives the same rows: 0 (all docs heavy, so the light partition's docs
+    must reach the heavy branch), the default, and one above every
+    payload (all docs light, so the heavy partition's docs must reach the
+    light branch)."""
+    corpus_df = pipeline.materialize_corpus(spark, SF_SMOKE, str(tmp_path / "corpus"))
+    above_all = corpus_df.agg(F.max("n_bytes")).first()[0] + 1
+    cols = ["extracted_text", "extracted_norm", "n_pages", "status", "route"]
+    if extract_fn is spans.extract_spans:
+        cols.append("spans")
+
+    def run(threshold):
+        out = extract_fn(corpus_df, ExtractConfig(heavy_payload_bytes=threshold)).collect()
+        assert len(out) == 400
+        return {r["url"]: tuple(r[c] for c in cols) for r in out}
+
+    default = run(ExtractConfig().heavy_payload_bytes)
+    assert run(0) == default
+    assert run(above_all) == default
+
+
+def test_light_only_corpus_runs_no_explode_and_fills_every_core(spark, tmp_path):
+    """On a corpus with no heavy rows the heavy branch scans no files, so
+    its explode job never runs: an extract pass runs the page stage over
+    the empty salt shuffle and the light stage, which reads one light
+    file per task — not the light files packed two per task together
+    with the heavy branch's files."""
+    from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    light = [
+        len(ck.build_corpus_row(d, t, l, s)["html"]) <= HEAVY_PAYLOAD_BYTES
+        for d, t, l, s in zip(*(docs.column(c).to_pylist()
+                                for c in ("doc_id", "text", "lang", "source")))
+    ]
+    assert not all(light)
+    os.makedirs(tmp_path / "sf")
+    pq.write_table(docs.filter(light), str(tmp_path / "sf" / "documents.parquet"))
+    path = str(tmp_path / "corpus")
+    corpus_df = pipeline.materialize_corpus(spark, str(tmp_path / "sf"), path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("light-only-placement", "one extract pass")
+    try:
+        pipeline.extract(corpus_df, ExtractConfig()).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup("light-only-placement"))
+    # the status store is fed by the listener bus, which may lag the job
+    deadline = time.monotonic() + 30
+    while any(tracker.getJobInfo(j).status != "SUCCEEDED" for j in jobs):
+        assert time.monotonic() < deadline, [tracker.getJobInfo(j) for j in jobs]
+        time.sleep(0.05)
+    ran = []
+    for job in jobs:
+        for stage in sorted(tracker.getJobInfo(job).stageIds):
+            info = tracker.getStageInfo(stage)
+            if info is not None and info.numCompletedTasks > 0:
+                ran.append(info.numTasks)
+    # the page stage (one task per salt partition), then the light stage
+    # with one task per light file
+    par = sc.defaultParallelism
+    assert ran == [par, par], ran
+    assert not os.path.exists(os.path.join(path, "size_class=heavy"))
+    light_files = glob.glob(os.path.join(path, "size_class=light", "*.parquet"))
+    assert len(light_files) == par
 
 
 def test_extract_from_documents_rebuilds_stale_corpus(spark, tmp_path):
@@ -420,12 +508,17 @@ def test_extract_from_documents_rebuilds_stale_corpus(spark, tmp_path):
     pipeline.materialize_corpus(spark, SF_SMOKE, path)
     assert pipeline.corpus_layout(path) == pipeline.CORPUS_LAYOUT
     (tmp_path / "corpus" / "_LAYOUT").write_text("an-older-layout\n")
-    stale = set(os.listdir(path))
+
+    def parquet_files():
+        return set(glob.glob(path + "/**/*.parquet", recursive=True))
+
+    stale = parquet_files()
+    assert stale
 
     pipeline.extract_from_documents(spark, SF_SMOKE, corpus_path=path)
     assert pipeline.corpus_layout(path) == pipeline.CORPUS_LAYOUT
-    rebuilt = set(os.listdir(path))
-    assert {f for f in rebuilt if f.endswith(".parquet")}.isdisjoint(stale)
+    rebuilt = parquet_files()
+    assert rebuilt and rebuilt.isdisjoint(stale)
 
     pipeline.extract_from_documents(spark, SF_SMOKE, corpus_path=path)
-    assert set(os.listdir(path)) == rebuilt
+    assert parquet_files() == rebuilt

@@ -49,7 +49,7 @@ def test_submit_runs_from_zip_and_resumes(submit_env):
     # escape the LIKE underscores: the engine filter is a literal
     # endswith('_ocr.pdf'), not a single-char-wildcard match
     expected = duckdb.connect().execute(
-        f"SELECT count(*) FROM '{corpus}/*.parquet' "
+        f"SELECT count(*) FROM '{corpus}/**/*.parquet' "
         "WHERE NOT (url LIKE '%!_ocr.pdf' ESCAPE '!' "
         "OR url LIKE '%!_test.pdf' ESCAPE '!')"
     ).fetchone()[0]
