@@ -6,8 +6,11 @@ pruning). The Iceberg runtime jar is not in this container, so the
 functions below select the best available backend at session time and
 keep the call sites backend-agnostic.
 
-Production wiring (spark-submit) — generated by :func:`iceberg_submit_args`
-so the artifact coordinates stay pinned to the running Spark version:
+Production wiring (spark-submit). Iceberg releases one runtime artifact
+per Spark minor version, so ``<major.minor>`` must be the running Spark's
+(``pyspark.__version__``); a mismatched artifact fails at class load. The
+catalog class is :data:`ICEBERG_CATALOG_CLASS`, the one
+:func:`iceberg_available` probes for:
 
     --packages org.apache.iceberg:iceberg-spark-runtime-<major.minor>_2.13:1.10.0
     --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog
@@ -33,26 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 # The Iceberg Spark catalog plugin class (the probe target AND the value
 # of every spark.sql.catalog.<name> conf).
 ICEBERG_CATALOG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
-
-
-def iceberg_submit_args(
-    spark_version: str, catalog_name: str = "lake", catalog_type: str = "hive",
-    iceberg_version: str = "1.10.0",
-) -> list[str]:
-    """The spark-submit argv fragment that wires an Iceberg catalog,
-    with the runtime artifact derived from the RUNNING Spark version
-    (iceberg-spark-runtime is released per Spark minor; a mismatched
-    artifact fails at class-load). Kept as code, not prose, so the
-    pinned coordinates are testable."""
-    major_minor = ".".join(spark_version.split(".")[:2])
-    return [
-        "--packages",
-        f"org.apache.iceberg:iceberg-spark-runtime-{major_minor}_2.13:{iceberg_version}",
-        "--conf",
-        f"spark.sql.catalog.{catalog_name}={ICEBERG_CATALOG_CLASS}",
-        "--conf",
-        f"spark.sql.catalog.{catalog_name}.type={catalog_type}",
-    ]
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -94,32 +77,3 @@ def read(spark: SparkSession, target: str) -> DataFrame:
     if iceberg_available(spark):
         return spark.read.table(target)
     return spark.read.parquet(target)
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, buckets: int = 32, sort: bool = True
-) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) by ``key``.
-
-    Bucketing is the co-located-join primitive at 100 TB: two tables
-    bucketed by the same key with the same bucket count join with ZERO
-    exchange — each task zips bucket i with bucket i (sorted buckets also
-    skip the sort of a sort-merge join). This is how the resume anti-join
-    (committed urls vs incoming corpus) and repeated dedup self-joins
-    avoid re-shuffling the big side on every run. Iceberg mapping: a
-    ``bucket(N, key)`` partition transform on the table spec.
-
-    Uses ``saveAsTable`` (bucketing metadata lives in the session
-    catalog; plain ``.parquet(path)`` cannot record it).
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a table written by :func:`write_bucketed` with its bucketing
-    metadata intact (the reader must come from the catalog, not the
-    files, or the join planner won't see the bucket spec)."""
-    return spark.read.table(table)

@@ -443,8 +443,8 @@ def ngram_jaccard_pairs(
     # caller looping many invocations in one session can reclaim eagerly
     # via ``cache_registry`` (or spark.catalog.clearCache()). The 100-TB
     # analog is materializing the shingle index as a table bucketed by
-    # shingle before the self-join (catalog.write_bucketed) — one explode
-    # pass either way.
+    # shingle before the self-join (``bucketBy`` + ``saveAsTable``) — one
+    # explode pass either way.
     sh = sh.persist()
     if cache_registry is not None:
         cache_registry.append(sh)

@@ -1,9 +1,11 @@
 """Event-stream operators in batch form — the relational mirror of the
 reference's watch-mode semantics (SURVEY §2.9): quiescence debounce →
-gap-based sessionization; per-interval rollup → tumbling windows.
+gap-based sessionization; per-interval rollup → sliding windows;
+point-in-time lookup → as-of join. The tumbling rollup is the declared
+query ``tumbling_events`` itself (``__spark_entry__._q_tumbling_events``),
+its one implementation.
 
-Both are pure window/agg algebra (no Python); the Structured Streaming
-variants live in stream.py.
+All are pure window/agg algebra (no Python).
 """
 
 from __future__ import annotations
@@ -60,10 +62,12 @@ def sliding_counts(
 ) -> DataFrame:
     """Sliding (hopping) window rollup: every event contributes to the
     ``window_seconds / slide_seconds`` overlapping windows that contain
-    it, convention ``[start, start + window)``. Same zone-free
-    epoch-integer keying as :func:`tumbling_counts` (the r1/r2 lesson);
-    membership is an explode over ``F.sequence`` of slide indices —
-    bounded fan-out (W/S rows per event, a constant), then one
+    it, convention ``[start, start + window)``. The window key is epoch
+    seconds (long) by integer arithmetic on ``unix_micros``, never
+    ``date_trunc`` on a timestamp, whose rendering depends on the session
+    timezone (the r1/r2 lesson; the ``tumbling_events`` query also
+    keys by epoch seconds). Membership is an explode over an array of
+    slide starts — bounded fan-out (W/S rows per event, a constant), then one
     map-side-combinable agg. No Python, no window functions, no range
     join: at 100 TB the cost is (W/S)× the tumbling rollup, linear in
     input.
@@ -208,38 +212,4 @@ def asof_join(
         *[F.col(c) for c in left.columns],
         F.col("_m.ts").alias("matched_ts"),
         *[F.col(f"_m.{c}").alias(f"matched_{c}") for c in right_cols],
-    )
-
-
-def tumbling_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    by_col: str = "event_type",
-    value_col: str = "value",
-    window_seconds: int = 3600,
-) -> DataFrame:
-    """Tumbling-window rollup per event type.
-
-    The window key is **epoch seconds** (long), floored by integer
-    arithmetic on ``unix_micros`` — never ``date_trunc`` on a timestamp:
-    truncation/rendering of timestamps depends on the session timezone
-    (Spark shifts, DuckDB doesn't), which made the round-1 driver check
-    hash-diverge when its TZ ≠ UTC. Integer epochs are zone-free on both
-    engines; ``F.floor`` gives true floor semantics (pre-1970 included),
-    mirrored by the oracle's epoch-aligned ``time_bucket`` (integer ``//``
-    would truncate toward zero there).
-    """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    # integer-exact floor (same review fix as sliding_counts): pmod keeps
-    # it in long arithmetic; decimal division of the 10^6-multiple is exact
-    ws_us = us - F.pmod(us, F.lit(window_seconds * 1_000_000))
-    window_start = (
-        ws_us.cast("decimal(30,0)") / F.lit(1_000_000)
-    ).cast("long")
-    return (
-        df.groupBy(window_start.alias("window_start"), F.col(by_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 6).alias("sum_value"),
-        )
     )

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Scaling evidence for the round-5 curation operators.
 
-Same two-level protocol as scaling_bench.py / webtext_bench.py: the
-identical job at local[4] and local[16] (16 physical cores; never 8 vs
-32 — SMT pollutes the ratio), each level its own JVM, 1 warm-up + 3
-timed runs, MIN estimator with medians disclosed. Inputs are
-deterministic synthetic corpora (seeded, byte-stable across runs).
+Same two-level protocol as scaling_bench.py: the identical job at
+local[4] and local[16] (16 physical cores; never 8 vs 32 — SMT pollutes
+the ratio), each level its own JVM, 1 warm-up + 3 timed runs, MIN
+estimator with medians disclosed. Inputs are deterministic synthetic
+corpora (seeded, byte-stable across runs).
 
 Two jobs, one gate through two plan shapes:
 

@@ -104,8 +104,7 @@ def test_lsh_pairs_superset_sanity(spark):
 def test_contamination_overlap_udf_matches_expr_edge_cases(spark):
     """The broadcast-closure UDF form must reproduce the array-literal
     expression form exactly, including the n<k whole-text fallback,
-    empty strings, and nulls (curate_stream switches between them by
-    eval-suite size)."""
+    empty strings, and nulls (a caller picks one by eval-suite size)."""
     shingles = ["a b", "b c", "x y", ""]
     rows = [
         (1, "a b c d"),       # two overlapping 2-grams
@@ -458,52 +457,6 @@ def test_kmeans_centroids_deterministic_and_unit(spark):
     for (_, v1), (_, v2) in zip(c1, c2):
         assert v1 == pytest.approx(v2, abs=1e-12)  # fixed init + iterations
         assert sum(x * x for x in v1) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_bucketed_join_has_no_exchange(spark, docs, tmp_path):
-    """Co-located join: two tables bucketed+sorted by the same key join
-    with ZERO exchange (the 100-TB primitive for the resume anti-join and
-    repeated dedup self-joins; Iceberg: bucket(N, key) transform)."""
-    import contextlib
-    import io
-
-    from pypdfocr_spark import catalog
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        catalog.write_bucketed(docs.select("doc_id", "text"), "t_docs_b", "doc_id", buckets=8)
-        catalog.write_bucketed(docs.select("doc_id", "lang"), "t_meta_b", "doc_id", buckets=8)
-        joined = catalog.read_bucketed(spark, "t_docs_b").join(
-            catalog.read_bucketed(spark, "t_meta_b"), "doc_id"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-        spark.sql("DROP TABLE IF EXISTS t_meta_b")
-
-
-def test_iceberg_submit_args_pinned_to_running_spark(spark):
-    """The documented production wiring is code, not prose: the runtime
-    artifact must carry the RUNNING Spark's major.minor (iceberg
-    releases one runtime per Spark minor; a mismatch fails at
-    class-load), and the catalog class must be the same one
-    iceberg_available probes for."""
-    import pyspark
-
-    from pypdfocr_spark import catalog
-
-    args = catalog.iceberg_submit_args(pyspark.__version__)
-    mm = ".".join(pyspark.__version__.split(".")[:2])
-    pkg = args[args.index("--packages") + 1]
-    assert f"iceberg-spark-runtime-{mm}_2.13:" in pkg
-    assert f"spark.sql.catalog.lake={catalog.ICEBERG_CATALOG_CLASS}" in args
-    assert "spark.sql.catalog.lake.type=hive" in args
 
 
 def test_iceberg_catalog_roundtrip(spark, tmp_path):
