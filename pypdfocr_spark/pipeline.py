@@ -47,6 +47,29 @@ Why this shape at 100 TB:
 * All Python work is Arrow-batched ``mapInPandas``; per-batch failure
   capture keeps data errors out of task retries
   (graceful degradation, ref: pypdfocr/pypdfocr_pdf.py:276-281).
+
+Fixed driver cost per call. The filters, the split and the reassembly
+are SQL expression strings (``where("...")``, ``F.expr``,
+``selectExpr``): a composed ``Column`` costs py4j round trips per
+operator while the plan is built, a string one per expression. The plan
+is the same either way. Config values that reach SQL text (route
+keywords, folder names, the default route) go through ``sql_string``.
+
+When the heavy branch is left out. ``_extract_plan`` returns the light
+branch alone when ``_provably_empty`` shows that the heavy branch's
+input has no rows: its physical plan before AQE holds only file scans,
+filters and projections, and every scan is a path read whose pruned file
+listing is empty. That is the case for a light-only corpus materialized
+by ``materialize_corpus`` under a threshold at or above
+``HEAVY_PAYLOAD_BYTES``: the heavy branch's ``size_class = 'heavy'``
+partition has no files. It is sound because none of those operators can
+make a row out of no input rows, and the listing read is the one the
+plan would scan. Anything else keeps the branch: a join (a
+``resume_filter`` anti-join), an aggregate, a union, an in-memory, local
+or RDD leaf, a catalog table, a streaming frame. The proof runs no Spark
+job and generates no code, and the output schema is the same either way.
+Leaving the branch out saves a pass its page-stage job and AQE's
+re-planning between jobs.
 """
 
 from __future__ import annotations
@@ -342,20 +365,36 @@ def _page_text_rows(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return res
 
 
-def _filename_route_expr(url_col, targets):
-    """JVM form of ``first_matching_folder(url, targets)``: an ordered
-    when-chain of substring tests on the lowered url — exact parity with
-    the Python kernel because keywords are already lowercased
+def sql_string(value) -> str:
+    """``value`` as a Spark SQL string literal, or ``NULL`` for None.
+
+    Route keywords, folder names and the default route come from the
+    user's YAML config and are spliced into SQL text, so every backslash
+    and quote is escaped: the literal reads back as exactly ``str(value)``
+    (``%``, ``_`` and non-ASCII text included) and nothing in it can end
+    the literal. This assumes Spark's default string-literal parsing
+    (``spark.sql.parser.escapedStringLiterals=false``); under the legacy
+    setting the escapes are kept verbatim, which still cannot end the
+    literal."""
+    if value is None:
+        return "NULL"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _filename_route_expr(url_sql: str, targets) -> str:
+    """JVM form of ``first_matching_folder(url, targets)`` as SQL text: an
+    ordered CASE WHEN chain of substring tests on the lowered url — exact
+    parity with the Python kernel because keywords are already lowercased
     (route.normalize_targets) and the match is plain substring."""
-    low = F.lower(url_col)
-    expr = None
-    for folder, kws in targets:
-        for kw in kws:
-            cond = F.lit(True) if kw == "" else (F.instr(low, kw) > 0)
-            expr = F.when(cond, F.lit(folder)) if expr is None else expr.when(cond, F.lit(folder))
-    if expr is None:
-        return F.lit(None).cast("string")
-    return expr.otherwise(F.lit(None).cast("string"))
+    whens = [
+        f"WHEN {'true' if kw == '' else f'instr(lower({url_sql}), {sql_string(kw)}) > 0'}"
+        f" THEN {sql_string(folder)}"
+        for folder, kws in targets
+        for kw in kws
+    ]
+    if not whens:
+        return "CAST(NULL AS STRING)"
+    return f"CASE {' '.join(whens)} ELSE CAST(NULL AS STRING) END"
 
 
 def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -383,51 +422,49 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     * when the page rows carry parsed ``lines`` (``spans.extract_spans``),
       ``spans`` = ``struct(page_no, lines)`` of each page with
       ``page_no < n_pages`` in page order, and ``[]`` for failed docs.
+
+    The expressions are SQL text: each composed ``Column`` costs py4j
+    round trips while the plan is built, a SQL string one.
     """
-    fields = ["page_no", "n_pages", "page_text", "norm_text", "route_match"]
+    fields = "page_no, n_pages, page_text, norm_text, route_match"
     with_lines = "lines" in pages_df.columns
     if with_lines:
-        fields.append("lines")
-    struct_sorted = F.array_sort(F.collect_list(F.struct(*fields)))
+        fields += ", lines"
     g = pages_df.groupBy("url").agg(
-        struct_sorted.alias("_p"),
-        F.min(
-            F.when(F.col("status") != "ok", F.struct("fail_phase", "page_no", "status"))
-        ).alias("_bad"),
-        F.min("warc_ts").alias("warc_ts"),
-        F.min("lang").alias("lang"),
-        F.min("byte_count").alias("byte_count"),
-        F.sum("wall_ms").alias("wall_ms"),
+        F.expr(f"array_sort(collect_list(struct({fields}))) AS _p"),
+        F.expr("min(CASE WHEN status != 'ok' THEN struct(fail_phase, page_no, status) END) AS _bad"),
+        F.expr("min(warc_ts) AS warc_ts"),
+        F.expr("min(lang) AS lang"),
+        F.expr("min(byte_count) AS byte_count"),
+        F.expr("sum(wall_ms) AS wall_ms"),
     )
-    ok = F.col("_bad").isNull()
-    page_route = F.get(
-        F.filter("_p", lambda x: x["route_match"].isNotNull()), 0
-    )["route_match"]
-    route = F.when(ok, page_route).otherwise(F.lit(None).cast("string"))
+    ok = "_bad IS NULL"
+    route = (
+        f"CASE WHEN {ok} THEN get(filter(_p, x -> x.route_match IS NOT NULL), 0).route_match"
+        " ELSE CAST(NULL AS STRING) END"
+    )
     if cfg.use_filename:
-        route = F.coalesce(route, _filename_route_expr(F.col("url"), cfg.targets))
-    route = F.coalesce(route, F.lit(cfg.default_route).cast("string"))
+        route = f"coalesce({route}, {_filename_route_expr('url', cfg.targets)})"
+    route = f"coalesce({route}, CAST({sql_string(cfg.default_route)} AS STRING))"
     spans = []
     if with_lines:
         spans = [
-            F.transform(
-                F.filter("_p", lambda x: ok & (x["page_no"] < x["n_pages"])),
-                lambda x: F.struct(x["page_no"].alias("page_no"), x["lines"].alias("lines")),
-            ).alias("spans")
+            f"transform(filter(_p, x -> ({ok}) AND x.page_no < x.n_pages),"
+            " x -> struct(x.page_no AS page_no, x.lines AS lines)) AS spans"
         ]
-    return g.select(
-        F.col("url"),
-        F.col("warc_ts"),
-        F.col("lang"),
-        F.when(ok, F.array_join(F.transform("_p", lambda x: x["page_text"]), "\n", ""))
-        .otherwise("").alias("extracted_text"),
-        F.when(ok, F.array_join(F.transform("_p", lambda x: x["norm_text"]), " ", ""))
-        .otherwise("").alias("extracted_norm"),
-        route.alias("route"),
-        F.when(ok, F.get("_p", 0)["n_pages"]).otherwise(F.lit(0)).cast("int").alias("n_pages"),
-        F.when(ok, F.lit("ok")).otherwise(F.col("_bad")["status"]).alias("status"),
-        F.col("byte_count"),
-        F.col("wall_ms"),
+    return g.selectExpr(
+        "url",
+        "warc_ts",
+        "lang",
+        f"CASE WHEN {ok} THEN array_join(transform(_p, x -> x.page_text), '\\n', '')"
+        " ELSE '' END AS extracted_text",
+        f"CASE WHEN {ok} THEN array_join(transform(_p, x -> x.norm_text), ' ', '')"
+        " ELSE '' END AS extracted_norm",
+        f"{route} AS route",
+        f"CAST(CASE WHEN {ok} THEN get(_p, 0).n_pages ELSE 0 END AS INT) AS n_pages",
+        f"CASE WHEN {ok} THEN 'ok' ELSE _bad.status END AS status",
+        "byte_count",
+        "wall_ms",
         *spans,
     )
 
@@ -436,38 +473,40 @@ def _jvm_reassemble(pages_df: DataFrame, cfg: ExtractConfig) -> DataFrame:
 def source_filter(corpus_df: DataFrame) -> DataFrame:
     """S3/P5: drop the engine's own outputs before any Python runs
     (ref: pypdfocr/pypdfocr_watcher.py:95-96)."""
-    cond = None
-    for suf in EXCLUDED_SUFFIXES:
-        c = ~F.col("url").endswith(suf)
-        cond = c if cond is None else (cond & c)
-    return corpus_df.where(cond)
+    return corpus_df.where(
+        " AND ".join(f"NOT endswith(url, {sql_string(suf)})" for suf in EXCLUDED_SUFFIXES)
+    )
 
 
 def _split(corpus_df: DataFrame, cfg: ExtractConfig) -> tuple[DataFrame, DataFrame]:
-    """Source filter, then the (light, heavy) size split."""
+    """Source filter, then the (light, heavy) size split: one ``where``
+    per branch, its condition SQL text."""
     src = source_filter(corpus_df)
-    if "n_bytes" not in corpus_df.columns:
-        is_heavy = F.length(F.col("html")) > cfg.heavy_payload_bytes
-        return src.where(~is_heavy), src.where(is_heavy)
-    # The n_bytes predicates decide each row's branch, so any threshold
-    # and any unpartitioned table give the same rows. A coalesce()
-    # wrapper would defeat row-group pushdown, so the bare column is
-    # compared and rows with a null n_bytes fall to the light branch
-    # (Or(IsNull, LtEq) pushes).
-    light = src.where(F.col("n_bytes").isNull() | (F.col("n_bytes") <= cfg.heavy_payload_bytes))
-    heavy = src.where(F.col("n_bytes") > cfg.heavy_payload_bytes)
+    columns = corpus_df.columns
+    t = int(cfg.heavy_payload_bytes)
+    if "n_bytes" not in columns:
+        light, heavy = f"NOT (length(html) > {t})", f"length(html) > {t}"
+    else:
+        # The n_bytes predicates decide each row's branch, so any threshold
+        # and any unpartitioned table give the same rows. A coalesce()
+        # wrapper would defeat row-group pushdown, so the bare column is
+        # compared and rows with a null n_bytes fall to the light branch
+        # (Or(IsNull, LtEq) pushes).
+        light, heavy = f"n_bytes IS NULL OR n_bytes <= {t}", f"n_bytes > {t}"
     # On materialize_corpus's layout the size_class partition predicate
     # prunes the other class's files at planning, so each branch lists
     # and packs only its own files. It is added only where the threshold
     # implies it: a light doc under a lower threshold sits in the light
     # partition but belongs to the heavy branch, and vice versa.
-    if "size_class" in corpus_df.columns:
-        if cfg.heavy_payload_bytes <= HEAVY_PAYLOAD_BYTES:
-            light = light.where(F.col("size_class") == "light")
-        if cfg.heavy_payload_bytes >= HEAVY_PAYLOAD_BYTES:
-            heavy = heavy.where(F.col("size_class") == "heavy")
-        light, heavy = light.drop("size_class"), heavy.drop("size_class")
-    return light, heavy
+    partitioned = "n_bytes" in columns and "size_class" in columns
+    if partitioned and t <= HEAVY_PAYLOAD_BYTES:
+        light = f"({light}) AND size_class = 'light'"
+    if partitioned and t >= HEAVY_PAYLOAD_BYTES:
+        heavy = f"({heavy}) AND size_class = 'heavy'"
+    light_df, heavy_df = src.where(light), src.where(heavy)
+    if partitioned:
+        light_df, heavy_df = light_df.drop("size_class"), heavy_df.drop("size_class")
+    return light_df, heavy_df
 
 
 def _salted_pages(heavy: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -487,7 +526,44 @@ def _salted_pages(heavy: DataFrame, cfg: ExtractConfig) -> DataFrame:
         # a second time (the salt exchange right after this ships the
         # same bytes page-split — once is enough).
         heavy.mapInPandas(lambda it: (_explode_rows(pdf, cfg) for pdf in it), PAGE_SCHEMA)
-        .repartition(k, F.xxhash64("url", "page_no"))
+        .repartition(k, F.expr("xxhash64(url, page_no)"))
+    )
+
+
+# The physical operators (before AQE) under which a plan whose every file
+# scan lists no file yields no row: none of them makes a row from nothing.
+_EMPTY_PROOF_NODES = frozenset(
+    "org.apache.spark.sql.execution." + n for n in ("FileSourceScanExec", "FilterExec", "ProjectExec")
+)
+_FILE_SCAN = "org.apache.spark.sql.execution.FileSourceScanExec"
+
+
+def _provably_empty(df: DataFrame) -> bool:
+    """True only when ``df`` provably has no rows, read from its physical
+    plan before AQE (``sparkPlan``): every node is a file scan, a filter
+    or a projection, and every scan is a path read whose pruned listing
+    holds no file, so the scan reads no row. Anything else (a
+    join, an aggregate, an in-memory, local or RDD leaf, a streaming
+    frame, a catalog table, whose listing may change before the plan
+    runs) is not a proof. Runs no Spark job and generates no code: the
+    listing is the one the reader already made, pruned in memory."""
+    if df._jdf.isStreaming():
+        return False
+    nodes, scans = [df._jdf.queryExecution().sparkPlan()], []
+    while nodes:
+        node = nodes.pop()
+        name = node.getClass().getName()
+        if name not in _EMPTY_PROOF_NODES:
+            return False
+        if name == _FILE_SCAN:
+            scans.append(node)
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    # checked only once every node is known: a scan under a join could
+    # carry a dynamic-pruning filter whose evaluation runs a job
+    return all(
+        s.tableIdentifier().isEmpty() and s.selectedPartitions().totalNumberOfFiles() == 0
+        for s in scans
     )
 
 
@@ -503,6 +579,8 @@ def _extract_plan(
     ``_jvm_reassemble`` folds back into documents."""
     light, heavy = _split(corpus_df, cfg)
     light_out = light.mapInPandas(lambda it: (light_rows(pdf, cfg) for pdf in it), light_schema)
+    if _provably_empty(heavy):
+        return light_out
     heavy_out = _salted_pages(heavy, cfg).mapInPandas(
         lambda it: (page_rows(pdf, cfg) for pdf in it), page_schema
     )

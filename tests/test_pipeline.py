@@ -452,12 +452,10 @@ def test_partitioned_corpus_keeps_threshold_rule(spark, tmp_path, extract_fn):
     assert run(above_all) == default
 
 
-def test_light_only_corpus_runs_no_explode_and_fills_every_core(spark, tmp_path):
-    """On a corpus with no heavy rows the heavy branch scans no files, so
-    its explode job never runs: an extract pass runs the page stage over
-    the empty salt shuffle and the light stage, which reads one light
-    file per task — not the light files packed two per task together
-    with the heavy branch's files."""
+@pytest.fixture(scope="module")
+def light_only_corpus(spark, tmp_path_factory):
+    """sf0.001 without its heavy rows, materialized: a size-class corpus
+    with no ``size_class=heavy`` partition. Returns its path."""
     from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
 
     docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
@@ -467,10 +465,30 @@ def test_light_only_corpus_runs_no_explode_and_fills_every_core(spark, tmp_path)
                                 for c in ("doc_id", "text", "lang", "source")))
     ]
     assert not all(light)
-    os.makedirs(tmp_path / "sf")
-    pq.write_table(docs.filter(light), str(tmp_path / "sf" / "documents.parquet"))
-    path = str(tmp_path / "corpus")
-    corpus_df = pipeline.materialize_corpus(spark, str(tmp_path / "sf"), path)
+    root = tmp_path_factory.mktemp("light_only")
+    os.makedirs(root / "sf")
+    pq.write_table(docs.filter(light), str(root / "sf" / "documents.parquet"))
+    path = str(root / "corpus")
+    pipeline.materialize_corpus(spark, str(root / "sf"), path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def mixed_corpus(spark, tmp_path_factory):
+    """sf0.001 materialized: light rows and the heavy tail. Returns its path."""
+    path = str(tmp_path_factory.mktemp("mixed") / "corpus")
+    pipeline.materialize_corpus(spark, SF_SMOKE, path)
+    return path
+
+
+def test_light_only_corpus_runs_no_explode_and_fills_every_core(spark, light_only_corpus):
+    """On a corpus with no heavy rows the heavy branch scans no files, so
+    the plan proves it empty and leaves it out: an extract pass runs one
+    job, the light stage, which reads one light file per task — not the
+    light files packed two per task together with the heavy branch's
+    files, and no page stage over an empty salt shuffle."""
+    path = light_only_corpus
+    corpus_df = spark.read.parquet(path)
 
     sc = spark.sparkContext
     sc.setJobGroup("light-only-placement", "one extract pass")
@@ -491,13 +509,196 @@ def test_light_only_corpus_runs_no_explode_and_fills_every_core(spark, tmp_path)
             info = tracker.getStageInfo(stage)
             if info is not None and info.numCompletedTasks > 0:
                 ran.append(info.numTasks)
-    # the page stage (one task per salt partition), then the light stage
-    # with one task per light file
+    # the light stage alone, with one task per light file
     par = sc.defaultParallelism
-    assert ran == [par, par], ran
+    assert ran == [par], ran
     assert not os.path.exists(os.path.join(path, "size_class=heavy"))
     light_files = glob.glob(os.path.join(path, "size_class=light", "*.parquet"))
     assert len(light_files) == par
+
+
+def _map_in_pandas_nodes(df) -> int:
+    return df._jdf.queryExecution().logical().toString().count("MapInPandas")
+
+
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
+@pytest.mark.parametrize("case", ["light_only", "size_class_with_heavy", "union_in_memory",
+                                  "threshold_below_partition_split", "resume_anti_join"])
+def test_heavy_branch_left_out_only_when_provably_empty(
+    spark, tmp_path, corpus_rows, oracle_rows, light_only_corpus, mixed_corpus, case, extract_fn
+):
+    """The heavy branch is left out only on a light-only materialized
+    corpus. Wherever heavy rows can reach it — a size-class corpus with
+    heavy rows, a light-only corpus unioned with in-memory heavy rows, a
+    threshold below the partition split (light-partition rows belong to
+    the heavy branch), a resume anti-join over a mixed corpus — it runs,
+    and every case's rows equal ``corpus.oracle_extract``. The output
+    schema, nullability included, is the light kernel's in every case,
+    so a commit appends the same schema whether the branch ran or not."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
+    from pypdfocr_spark.schema import CORPUS_SCHEMA, EXTRACTED_SCHEMA
+
+    cols = ["extracted_text", "extracted_norm", "route", "n_pages", "status"]
+    oracle = {o["url"]: tuple(o[c] for c in cols) for o in oracle_rows}
+    light_only = spark.read.parquet(light_only_corpus)
+    mixed = spark.read.parquet(mixed_corpus)
+    cfg = ExtractConfig()
+    if case == "light_only":
+        corpus_df = light_only
+    elif case == "size_class_with_heavy":
+        corpus_df = mixed
+    elif case == "union_in_memory":
+        heavy_rows = [
+            (r["url"], r["warc_ts"], r["html"], r["text"], r["lang"], len(r["html"]), "heavy")
+            for r in corpus_rows if len(r["html"]) > HEAVY_PAYLOAD_BYTES
+        ]
+        assert heavy_rows
+        schema = StructType(CORPUS_SCHEMA.fields + [StructField("size_class", StringType())])
+        corpus_df = light_only.unionByName(spark.createDataFrame(heavy_rows, schema))
+    elif case == "threshold_below_partition_split":
+        sizes = sorted(r["n_bytes"] for r in light_only.select("n_bytes").collect())
+        cfg = ExtractConfig(heavy_payload_bytes=sizes[len(sizes) // 2])
+        corpus_df = light_only
+    else:
+        out_dir = str(tmp_path / "out")
+        lineage.commit(
+            pipeline.extract(mixed.where("size_class = 'light' AND xxhash64(url) % 2 = 0"), cfg),
+            out_dir,
+        )
+        corpus_df = lineage.resume_filter(mixed, out_dir)
+    urls = [r["url"] for r in corpus_df.select("url").collect()]
+    want = {u: oracle[u] for u in urls if not u.endswith(ck.EXCLUDED_SUFFIXES)}
+
+    out_df = extract_fn(corpus_df, cfg)
+    assert _map_in_pandas_nodes(out_df) == (1 if case == "light_only" else 3)
+    light_schema = (
+        spans.EXTRACTED_SPANS_SCHEMA if extract_fn is spans.extract_spans else EXTRACTED_SCHEMA
+    )
+    assert out_df.schema.json() == light_schema.json()
+    out = out_df.collect()
+    got = {r["url"]: tuple(r[c] for c in cols) for r in out}
+    assert len(got) == len(out)
+    assert got == want
+    # every case but the light-only one hands the heavy branch rows
+    assert (pipeline._split(corpus_df, cfg)[1].count() == 0) == (case == "light_only")
+
+
+def test_empty_proof_runs_no_job_and_compiles_no_code(spark, light_only_corpus):
+    """The emptiness proof reads the plan and the reader's file listing
+    only: no Spark job, no generated code. A frame whose emptiness shows
+    only by running it (an in-memory leaf) is no proof."""
+    from pypdfocr_spark.config import HEAVY_PAYLOAD_BYTES
+
+    sc = spark.sparkContext
+    # a threshold no other test plans, so code generated for this filter
+    # would be compiled here, not found in the codegen cache
+    cfg = ExtractConfig(heavy_payload_bytes=HEAVY_PAYLOAD_BYTES + 7919)
+    _, heavy = pipeline._split(spark.read.parquet(light_only_corpus), cfg)
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiled.getCount()
+    sc.setJobGroup("empty-proof", "the heavy branch's emptiness proof")
+    try:
+        assert pipeline._provably_empty(heavy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("empty-proof") == []
+    assert compiled.getCount() == before
+    assert not pipeline._provably_empty(heavy.limit(1))
+    cached = spark.read.parquet(light_only_corpus).cache()
+    try:
+        assert not pipeline._provably_empty(pipeline._split(cached, cfg)[1])
+    finally:
+        cached.unpersist()
+
+
+def _py4j_commands(spark, monkeypatch, build) -> int:
+    """py4j commands this thread sends while ``build()`` runs, leaving out
+    py4j's object-release messages (``m``/``d``)."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        build()
+    finally:
+        monkeypatch.undo()
+    return len(sent)
+
+
+def test_extract_plan_build_py4j_budget(spark, monkeypatch, light_only_corpus, mixed_corpus):
+    """Building an extract plan costs a bounded number of py4j round trips:
+    the plan is built from SQL strings (226 commands on a mixed corpus,
+    76 on a light-only one, where the heavy branch is left out; composed
+    Columns cost 1,234). A rewrite back to composed Columns would bring
+    back about a thousand round trips per call."""
+    for path, bound in ((mixed_corpus, 300), (light_only_corpus, 100)):
+        corpus_df = spark.read.parquet(path)
+        n = _py4j_commands(spark, monkeypatch, lambda: pipeline.extract(corpus_df, ExtractConfig()))
+        assert n <= bound, (path, n)
+
+
+@pytest.mark.parametrize("extract_fn", [pipeline.extract, spans.extract_spans],
+                         ids=["extract", "extract_spans"])
+def test_config_strings_in_sql_keep_route_parity(spark, extract_fn):
+    """Route keywords, folder names and the default route reach SQL text
+    on the heavy path (filename fallback, default). Values holding quotes,
+    backslashes, LIKE wildcards, non-ASCII text or an injection-shaped
+    string route the same on the heavy path as on the light path
+    (``route_document``), and ``sql_string`` reads back as the value."""
+    import datetime
+
+    from pypdfocr_spark.kernels import codec
+    from pypdfocr_spark.kernels.route import normalize_targets, route_document
+    from pypdfocr_spark.schema import CORPUS_SCHEMA
+
+    values = ["it's", "a\\b", "50%", "_u_", "ünïcødé", "x') OR true --", "\\'", "--"]
+    got = spark.sql("SELECT " + ", ".join(pipeline.sql_string(v) for v in values)).first()
+    assert list(got) == values
+    assert spark.sql(f"SELECT {pipeline.sql_string(None)} AS v").first()["v"] is None
+
+    targets = normalize_targets([
+        ("it's", ["x') or true --"]),
+        ("back\\slash", ["a\\b"]),
+        ("50%_off", ["50%"]),
+        ("under_score", ["_u_"]),
+        ("ünï", ["ünï"]),
+        ("x') OR true --", ["quote'd"]),
+    ])
+    default = "d'e\\f') --"
+    ts = datetime.datetime(2024, 1, 1)
+    page = {"dpi": 300, "w_px": 2550, "h_px": 3300,
+            "words": [{"t": "nothing", "b": [10, 10, 80, 40], "l": 0}]}
+    payload = codec.encode_doc([page])
+    names = ["x') or true --", "a\\b", "50%", "_u_", "ÜNÏ", "quote'd",
+             "aub-50x", "plain"]  # the last two match only under LIKE wildcards, or nothing
+    urls = [f"https://a.example/{n}.pdf" for n in names]
+    corpus_df = spark.createDataFrame(
+        [(u, ts, payload, "", "en", len(payload)) for u in urls], CORPUS_SCHEMA
+    )
+
+    def routes(threshold):
+        cfg = ExtractConfig(targets=targets, default_route=default, heavy_payload_bytes=threshold)
+        out = extract_fn(corpus_df, cfg)
+        assert _map_in_pandas_nodes(out) == 3
+        return {r["url"]: r["route"] for r in out.collect()}
+
+    want = {u: route_document(["nothing"], u, targets, use_filename=True, default=default)
+            for u in urls}
+    assert want[urls[0]] == "it's" and want[urls[-1]] == want[urls[-2]] == default
+    assert len(set(want.values())) == 7
+    assert routes(0) == want
+    assert routes(ExtractConfig().heavy_payload_bytes) == want
 
 
 def test_extract_from_documents_rebuilds_stale_corpus(spark, tmp_path):
