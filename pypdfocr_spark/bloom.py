@@ -34,8 +34,6 @@ preserves the standard FPP bound with only two base hashes.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,19 +42,6 @@ from pyspark.sql.types import BinaryType, BooleanType, StructField, StructType
 # salt for the second hash stream: xxhash64 has a fixed seed in Spark, so
 # independence comes from appending a constant column to the hashed tuple
 _H2_SALT = 0x9E3779B9
-
-
-def bloom_params(n_keys: int, fpp: float = 0.01) -> "tuple[int, int]":
-    """Standard sizing: bits m = -n·ln p / ln²2 rounded UP to a power of
-    two (the index mask needs it), hashes k = round(m/n·ln 2), clamped to
-    [1, 16]. Returns ``(num_bits, num_hashes)``."""
-    if not 0.0 < fpp < 1.0:
-        raise ValueError("fpp must be in (0, 1)")
-    n = max(1, int(n_keys))
-    m_ideal = -n * math.log(fpp) / (math.log(2) ** 2)
-    num_bits = 1 << max(6, math.ceil(math.log2(m_ideal)))
-    k = max(1, min(16, round(num_bits / n * math.log(2))))
-    return num_bits, k
 
 
 def _hash_cols(key_col: str):
@@ -147,155 +132,3 @@ def bloom_probe_df(
         {"_bf_h1": F.xxhash64(F.col(key_col)),
          "_bf_h2": F.xxhash64(F.col(key_col), F.lit(_H2_SALT))}
     ).mapInPandas(probe, out_schema)
-
-
-def bloom_dedup(
-    corpus: DataFrame,
-    reference: DataFrame,
-    key_col: str = "text",
-    fpp: float = 0.01,
-    n_reference_keys: "int | None" = None,
-    return_flags: bool = False,
-) -> DataFrame:
-    """Cross-corpus dedup: drop every ``corpus`` row whose ``key_col``
-    (maybe) appears in ``reference`` — dump-N-against-dumps-1..N-1, the
-    CCNet/Dolma incremental-crawl pattern. Guarantees: every TRUE
-    duplicate is dropped (no false negatives); at most ~``fpp`` of fresh
-    rows are lost to false positives.
-
-    ``n_reference_keys`` sizes the filter; when omitted it is counted
-    with one extra job (at production scale pass the known dump size).
-    ``return_flags=True`` keeps all rows with the ``maybe_seen`` column
-    instead of filtering."""
-    n = n_reference_keys if n_reference_keys is not None else reference.count()
-    num_bits, num_hashes = bloom_params(n, fpp)
-    bitmap = bloom_build(reference, key_col, num_bits, num_hashes)
-    probed = bloom_probe_df(corpus, bitmap, key_col, num_hashes)
-    if return_flags:
-        return probed
-    return probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-
-
-def paragraph_keys(
-    df: DataFrame, text_col: str = "text", sep: str = "\n"
-) -> DataFrame:
-    """One row per paragraph — the build-side input for paragraph-mode
-    dedup (``bloom_build(paragraph_keys(reference), key_col="key")``)."""
-    return df.select(
-        F.explode(F.split(F.col(text_col), _sep_regex(sep))).alias("key")
-    )
-
-
-def _sep_regex(sep: str) -> str:
-    import re as _re
-
-    return _re.escape(sep)
-
-
-def bloom_paragraph_filter(
-    df: DataFrame,
-    bloom: bytes,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-    num_hashes: int = 7,
-    min_chars: int = 1,
-) -> DataFrame:
-    """Paragraph-mode cross-corpus dedup (the Dolma BFF unit of work):
-    drop every paragraph of ``df[text_col]`` that (maybe) appears in the
-    reference filter, keeping the rest of the document intact and in
-    order. Paragraphs shorter than ``min_chars`` are never dropped
-    (empty lines and stub separators would otherwise be annihilated
-    corpus-wide by one reference occurrence).
-
-    MAP-ONLY at any corpus size: the paragraph split and both hash
-    streams are computed per-paragraph INSIDE a JVM ``transform`` (no
-    explode, no reassembly shuffle), and one Arrow stage probes the
-    broadcast bitmap and rejoins the survivors."""
-    num_bits = len(bloom) << 3
-    if num_bits & (num_bits - 1):
-        raise ValueError("bitmap length must be a power-of-two bit count")
-    nh = num_hashes
-    bc = df.sparkSession.sparkContext.broadcast(bloom)
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField as SF,
-    )
-
-    out_schema = StructType(
-        [
-            SF("doc_id", LongType()),
-            SF("text", StringType()),
-            SF("n_paragraphs", IntegerType()),
-            SF("n_dropped", IntegerType()),
-        ]
-    )
-
-    parts = F.split(F.col(text_col), _sep_regex(sep))
-    prepared = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        parts.alias("_parts"),
-        F.transform(parts, lambda p: F.xxhash64(p)).alias("_h1s"),
-        F.transform(parts, lambda p: F.xxhash64(p, F.lit(_H2_SALT))).alias("_h2s"),
-    )
-
-    def run(batches):
-        import pandas as pd
-
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        nb = len(bits) << 3
-        for pdf in batches:
-            ids, texts, nparts, ndrop = [], [], [], []
-            for did, ps, h1s, h2s in zip(
-                pdf["doc_id"], pdf["_parts"], pdf["_h1s"], pdf["_h2s"]
-            ):
-                if ps is None or len(ps) == 0:
-                    ids.append(int(did)); texts.append("")
-                    nparts.append(0); ndrop.append(0)
-                    continue
-                pos = _positions(
-                    np.asarray(h1s, dtype=np.int64),
-                    np.asarray(h2s, dtype=np.int64),
-                    nb, nh,
-                )
-                seen = ((bits[(pos >> np.uint64(3)).astype(np.int64)]
-                         >> (pos & np.uint64(7)).astype(np.uint8)) & 1).all(axis=1)
-                kept = [p for p, s in zip(ps, seen)
-                        if not s or len(p) < min_chars]
-                ids.append(int(did))
-                texts.append(sep.join(kept))
-                nparts.append(len(ps))
-                ndrop.append(len(ps) - len(kept))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"),
-                 "text": texts,
-                 "n_paragraphs": pd.Series(nparts, dtype="int32"),
-                 "n_dropped": pd.Series(ndrop, dtype="int32")}
-            )
-
-    return prepared.mapInPandas(run, out_schema)
-
-
-def bloom_paragraph_dedup(
-    corpus: DataFrame,
-    reference: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-    fpp: float = 0.01,
-    n_reference_keys: "int | None" = None,
-    min_chars: int = 1,
-) -> DataFrame:
-    """Composite: build the filter over the REFERENCE corpus's paragraphs,
-    then strip matching paragraphs from ``corpus`` — dump-over-dump
-    paragraph dedup with one reference scan and one map-only corpus pass."""
-    keys = paragraph_keys(reference, text_col, sep)
-    n = n_reference_keys if n_reference_keys is not None else keys.count()
-    num_bits, num_hashes = bloom_params(n, fpp)
-    bitmap = bloom_build(keys, "key", num_bits, num_hashes)
-    return bloom_paragraph_filter(
-        corpus, bitmap, id_col, text_col, sep, num_hashes, min_chars
-    )

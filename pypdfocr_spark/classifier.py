@@ -1,29 +1,23 @@
-"""Model-based quality filtering — the DCLM/fastText pattern, Spark-native.
+"""Model-based quality scoring — the DCLM/fastText pattern, Spark-native.
 
 The strongest single curation signal in recent pipelines (DCLM, FineWeb-
-Edu) is not a heuristic but a tiny supervised classifier: train a linear
-model on "good" (curated/reference) vs "bad" (raw crawl) documents, then
-keep the corpus rows the model scores above a threshold. The fastText
-architecture those pipelines use IS a hashed-bag-of-ngrams linear model —
-exactly what distributes well:
+Edu) is not a heuristic but a tiny supervised classifier: a linear model
+that scores "good" (curated/reference) against "bad" (raw crawl)
+documents, keeping the corpus rows it scores above a threshold. The
+fastText architecture those pipelines use IS a hashed-bag-of-ngrams
+linear model — exactly what distributes well:
 
 * **features** are computed JVM-side: lowercase word unigrams + adjacent
   bigrams, murmur3-hashed (``F.hash``, whole-stage codegen) into
   ``num_buckets`` ids — only int arrays cross the Arrow boundary, never
   token strings;
-* **training** is full-batch logistic regression: per-partition numpy
-  gradient scatter-adds, ``treeAggregate``-summed (the weight vector at
-  2^18 buckets is 2 MB — broadcast territory), a driver-side update loop
-  with L2 regularization. The model never outgrows the driver by
-  construction (same shape as ``similarity.kmeans_centroids``);
 * **scoring** is MAP-ONLY: weights ride a SparkContext broadcast, one
   Arrow stage computes sigmoid(w·x + b) per doc — zero shuffle at any
   corpus size (same shape as ``bloom.bloom_probe_df``).
 
-Determinism: hashing and features are exact; gradient sums are floating-
-point reductions, so weights agree across cluster layouts to reduction
-rounding (~1e-12 relative), not bit-for-bit — thresholded verdicts are
-stable for any non-degenerate margin.
+The weights come from outside this module (a :class:`QualityModel`
+trained offline); hashing and features are exact, so a model scores
+the same on any cluster layout.
 """
 
 from __future__ import annotations
@@ -34,14 +28,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StructField,
     StructType,
 )
-
-DEFAULT_BUCKETS = 1 << 18
 
 
 @dataclass
@@ -50,7 +41,6 @@ class QualityModel:
     bias: float
     num_buckets: int
     bigrams: bool
-    history: "list[float]"       # mean log-loss per iteration
 
 
 def hashed_feature_col(text_col: str, num_buckets: int, bigrams: bool = True):
@@ -76,110 +66,6 @@ def hashed_feature_col(text_col: str, num_buckets: int, bigrams: bool = True):
         ),
     ).otherwise(F.array().cast("array<int>"))
     return F.concat(uni, big)
-
-
-def _grad_partition(num_buckets, weights_bc, bias):
-    """Partition gradient kernel: returns one row with the packed
-    float64 gradient, the bias gradient, summed log-loss, and row count."""
-
-    def run(batches):
-        import pandas as pd
-
-        w = np.frombuffer(weights_bc.value, dtype=np.float64)
-        grad = np.zeros(num_buckets, dtype=np.float64)
-        gb = 0.0
-        loss = 0.0
-        count = 0
-        for pdf in batches:
-            for buckets, y in zip(pdf["_fx"], pdf["_label"]):
-                idx = np.asarray(buckets, dtype=np.int64)
-                if len(idx) == 0:
-                    continue
-                v = 1.0 / len(idx)
-                z = bias + w[idx].sum() * v
-                p = 1.0 / (1.0 + np.exp(-z))
-                err = p - float(y)
-                np.add.at(grad, idx, err * v)
-                gb += err
-                eps = 1e-12
-                loss += -(float(y) * np.log(p + eps)
-                          + (1.0 - float(y)) * np.log(1.0 - p + eps))
-                count += 1
-        yield pd.DataFrame(
-            {"grad": [grad.tobytes()], "gb": [gb], "loss": [loss],
-             "count": [count]}
-        )
-
-    return run
-
-
-_GRAD_SCHEMA = StructType(
-    [
-        StructField("grad", BinaryType()),
-        StructField("gb", DoubleType()),
-        StructField("loss", DoubleType()),
-        StructField("count", LongType()),
-    ]
-)
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    label_col: str = "label",
-    text_col: str = "text",
-    num_buckets: int = DEFAULT_BUCKETS,
-    bigrams: bool = True,
-    iterations: int = 40,
-    lr: float = 50.0,
-    l2: float = 1e-6,
-) -> QualityModel:
-    """Full-batch logistic regression on hashed n-gram features.
-    ``label_col`` is 1 for quality-positive documents (curated reference)
-    and 0 for negatives (raw crawl). The featurized relation is persisted
-    once and scanned per iteration; each iteration is one
-    map-side-gradient + treeReduce pass.
-
-    The default ``lr`` looks large because features are MEAN-pooled: a
-    doc with n tokens has squared feature norm ~1/n, so the logistic
-    Hessian bound is ~1/(4n) and gradient descent is stable up to
-    lr ≈ 4·typical_doc_len — 50 is conservative for real documents."""
-    sc = df.sparkSession.sparkContext
-    feat = df.select(
-        hashed_feature_col(text_col, num_buckets, bigrams).alias("_fx"),
-        F.col(label_col).cast("double").alias("_label"),
-    ).persist()
-    try:
-        w = np.zeros(num_buckets, dtype=np.float64)
-        b = 0.0
-        history: "list[float]" = []
-        n_total = None
-        for _ in range(iterations):
-            wbc = sc.broadcast(w.tobytes())
-            parts = feat.mapInPandas(
-                _grad_partition(num_buckets, wbc, b), _GRAD_SCHEMA
-            )
-            agg = (
-                parts.rdd.map(
-                    lambda r: (np.frombuffer(r["grad"], np.float64),
-                               r["gb"], r["loss"], r["count"])
-                )
-                .treeReduce(
-                    lambda a, c: (a[0] + c[0], a[1] + c[1],
-                                  a[2] + c[2], a[3] + c[3]),
-                    depth=2,
-                )
-            )
-            grad, gb, loss, n = agg
-            wbc.destroy()
-            if n == 0:
-                raise ValueError("no trainable rows (all docs empty?)")
-            n_total = n
-            history.append(loss / n)
-            w = w - lr * (grad / n + l2 * w)
-            b = b - lr * (gb / n)
-        return QualityModel(w, b, num_buckets, bigrams, history)
-    finally:
-        feat.unpersist()
 
 
 SCORE_SCHEMA = StructType(
@@ -223,19 +109,3 @@ def classifier_score_df(
         hashed_feature_col(text_col, model.num_buckets, model.bigrams).alias("_fx"),
     )
     return prepared.mapInPandas(run, SCORE_SCHEMA)
-
-
-def quality_filter_df(
-    df: DataFrame,
-    model: QualityModel,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """The gate form: corpus rows whose model probability clears
-    ``threshold`` (one map pass + one broadcast-able join back on id)."""
-    scores = classifier_score_df(df, model, id_col, text_col)
-    keep = scores.where(F.col("quality_prob") >= threshold).select(
-        F.col("doc_id").alias(id_col), "quality_prob"
-    )
-    return df.join(keep, id_col)

@@ -76,9 +76,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--sf-dir", help="driver table dir to derive the corpus from")
     p.add_argument("--corpus", help="existing corpus parquet path (F1 schema)")
     p.add_argument("--out", required=True, help="output dir: commits append to <out>/extracted")
-    p.add_argument("--config", help="routing config (JSON)")
+    p.add_argument("--config", help="routing config (YAML or JSON)")
     p.add_argument("--resume", action="store_true", help="skip committed urls")
-    p.add_argument("--watch", help="streaming: watch this dir for corpus files")
+    p.add_argument(
+        "--watch",
+        help="streaming: process the corpus files in this dir present at start, "
+        "then exit (the checkpoint skips them on the next start)",
+    )
     p.add_argument("--checkpoint", help="streaming checkpoint dir")
     p.add_argument("--master", default=None)
     p.add_argument(

@@ -15,9 +15,8 @@ Scale notes (100 TB):
   ``max_df`` (stopword-shingles contribute candidates, not evidence).
 * MinHash LSH: band-bucket join produces candidates linear in near-dup
   count, not quadratic in corpus size; signatures are 16 BIGINTs/doc.
-* embedding near-dup: :func:`embedding_near_dup_pairs_lsh` is the scale
-  path (sign-LSH bucket equi-join on a slim index, exact-cosine
-  filtered); the all-pairs form is a guarded small-slice verifier.
+* embedding near-dup: :func:`embedding_near_dup_pairs_lsh` (sign-LSH
+  bucket equi-join on a slim index, exact-cosine filtered).
 """
 
 from __future__ import annotations
@@ -39,48 +38,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return (
         df.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
         .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keeper_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-    )
-
-
-def canonical_url_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    canonical_col: str = "canonical_url",
-) -> DataFrame:
-    """Publisher-declared duplicate groups: pages whose ``<link
-    rel=canonical>`` names the same target are one logical document
-    (the AMP / mobile / print / tracking-variant case), regardless of
-    byte-level differences exact dedup can't see. Group key = the
-    declared canonical when it is an absolute http(s) URL, else the
-    page's own URL (relative/garbage canonicals fall back to self —
-    resolving them needs the page's base and is the caller's job, not
-    the group-by's); both sides run through
-    :func:`webops.canonicalize_url` so ``:443`` / trailing-slash /
-    utm variants of the SAME declared target still collapse.
-
-    Returns (canon_key, keeper_id, dup_count), min-id keeper — the same
-    contract as :func:`exact_dedup`; one hash aggregation, pure
-    expressions.
-    """
-    from .webops import canonicalize_url
-
-    canon = F.col(canonical_col)
-    # case-insensitive scheme test (ADVICE r5): RFC 3986 schemes are
-    # case-insensitive, so an uppercase-scheme canonical (HTTP://…) must
-    # still count as an absolute declared target — canonicalize_url
-    # lowercases the head afterwards either way
-    declared = F.when(
-        canon.rlike("(?i)^https?://"), canon
-    ).otherwise(F.col(url_col))
-    key = canonicalize_url(declared)
-    return (
-        df.select(key.alias("canon_key"), F.col(id_col))
-        .groupBy("canon_key")
         .agg(
             F.min(id_col).alias("keeper_id"),
             F.count(F.lit(1)).alias("dup_count"),
@@ -477,7 +434,7 @@ def minhash_signatures(
     num_hashes: int = 16, k: int = 3,
 ) -> DataFrame:
     """Per-doc MinHash signature as ``num_hashes`` columns ``mh0..mhN`` —
-    same arithmetic as kernels.textstats.minhash_signature and the SQL
+    same arithmetic as the scalar reference in tests/reference.py and the SQL
     oracle: x = md5-prefix-int(shingle) mod P; mh_i = min((a_i·x+b_i) mod P).
 
     Aggregation is a single groupBy with N min() aggregates — map-side
@@ -572,8 +529,9 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     (per-bit vote accumulation has no built-in expression form). The
     kernel is numpy-vectorized with a per-batch token→hash cache
     (kernels.textstats.simhash64_many); identical output to the scalar
-    reference ``simhash64`` and to the DuckDB bit-vote oracle. Returned
-    as the signed-64 reinterpretation for BIGINT storage."""
+    reference ``simhash64`` (tests/reference.py) and to the DuckDB
+    bit-vote oracle. Returned as the signed-64 reinterpretation for
+    BIGINT storage."""
 
     def gen(batches):
         for pdf in batches:
@@ -700,55 +658,6 @@ def dedup_keepers(
         F.col("node").alias(id_col)
     )
     return kept.select(id_col).join(dupes, id_col, "left_anti")
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    threshold: float = 0.95, max_rows: int | None = 100_000,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — **all-pairs verifier form**,
-    O(n²) by construction. Refuses inputs above ``max_rows`` (the cross
-    join is a scale-killer); use :func:`embedding_near_dup_pairs_lsh` for
-    the bucketed linear-ish scale path and keep this form for small-slice
-    exact verification (pass ``max_rows=None`` to bypass the guard).
-
-    Cosine is computed with JVM higher-order functions (zip_with +
-    aggregate in doubles) — no Python.
-    """
-    from .similarity import dot_expr, norm_expr
-
-    if max_rows is not None:
-        # bounded probe: column-pruned limit(N+1).count() short-circuits
-        # instead of scanning the whole table (and the guard stays off the
-        # plan for max_rows=None, e.g. streaming inputs)
-        n = emb.select(id_col).limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"all-pairs embedding near-dup over more than {max_rows} rows "
-                "would build an O(n²) cross join (guard: max_rows); use "
-                "embedding_near_dup_pairs_lsh or pass max_rows=None"
-            )
-    # r6: per-side norms — computed once per row, not once per pair;
-    # cosine = dot/(na·nb) is arithmetically identical (same fold, same
-    # multiply order), see similarity.dot_expr
-    a = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        norm_expr(F.col(vec_col)).alias("_na"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        norm_expr(F.col(vec_col)).alias("_nb"),
-    )
-    cosine = dot_expr(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine)
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
 
 
 def embedding_near_dup_pairs_lsh(

@@ -1,12 +1,13 @@
-"""Text-analysis kernels for the training-data pipeline ops
-(language-ID, quality scoring, token counting, fingerprinting,
-MinHash / SimHash signatures).
+"""Text-analysis kernels for the training-data pipeline ops: the
+constants the Spark operators and the DuckDB oracle share (MinHash
+coefficients, language markers, stopwords), the vectorized SimHash
+kernel, and the pure-Python language-ID.
 
-Pure Python/hashlib so the same math runs (a) vectorized inside pandas
-UDFs, (b) standalone as the pytest oracle, and (c) — where expressed with
-md5 — reproducibly in ANSI SQL for the DuckDB oracle
+The math is plain Python/hashlib and, where expressed with md5,
+reproducible in ANSI SQL for the DuckDB oracle
 (``('0x' || substr(md5(s),1,15))::BIGINT`` ≡ Spark
-``conv(substring(md5(s),1,15),16,10)``).
+``conv(substring(md5(s),1,15),16,10)``). The scalar references the
+tests check the vectorized forms against live in tests/reference.py.
 """
 
 from __future__ import annotations
@@ -23,53 +24,14 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return [(2 * i + 1, 7919 * (i + 1)) for i in range(num_hashes)]
 
 
-def md5_prefix_int(s: str) -> int:
-    """First 15 hex chars of md5 as an int (< 2^60, sign-safe in BIGINT)."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
 def tokens_of(text: str) -> list[str]:
     return text.split()
 
 
-def shingles(text: str, k: int = 3) -> list[str]:
-    """Distinct token k-grams (space-joined), order-independent set."""
-    toks = tokens_of(text)
-    if len(toks) < k:
-        return sorted({" ".join(toks)}) if toks else []
-    return sorted({" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)})
-
-
-def minhash_signature(text: str, num_hashes: int = 16, k: int = 3) -> list[int]:
-    """MinHash over token k-gram shingles with the shared coefficient
-    schedule; empty docs → all MINHASH_P (sentinel max)."""
-    sh = shingles(text, k)
-    if not sh:
-        return [MINHASH_P] * num_hashes
-    xs = [md5_prefix_int(s) % MINHASH_P for s in sh]
-    return [min((a * x + b) % MINHASH_P for x in xs) for a, b in minhash_coeffs(num_hashes)]
-
-
-def simhash64(text: str) -> int:
-    """64-bit SimHash over whitespace tokens, md5-based bit sampling."""
-    toks = tokens_of(text)
-    if not toks:
-        return 0
-    acc = [0] * 64
-    for t in toks:
-        h = int.from_bytes(hashlib.md5(t.encode("utf-8")).digest()[:8], "big")
-        for bit in range(64):
-            acc[bit] += 1 if (h >> bit) & 1 else -1
-    out = 0
-    for bit in range(64):
-        if acc[bit] > 0:
-            out |= 1 << bit
-    return out
-
-
 def simhash64_many(texts: list[str]) -> list[int]:
     """Vectorized SimHash over a batch of texts — identical output to
-    :func:`simhash64` (pytest-asserted), returned as signed int64.
+    the scalar ``simhash64`` in tests/reference.py (pytest-asserted),
+    returned as signed int64.
 
     The per-token md5 is computed once per *distinct* token in the batch
     (natural-language token frequency makes the cache hit rate high); the
@@ -102,10 +64,6 @@ def simhash64_many(texts: list[str]) -> list[int]:
     return out
 
 
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")
-
-
 # ---- language ID (n-gram / marker-word heuristic) ----
 # Marker stopwords per language; scoring = count of marker hits among
 # tokens, argmax with deterministic tie-break on language code.
@@ -131,42 +89,3 @@ def lang_id(text: str) -> str:
 STOPWORDS = frozenset(
     "the a of and is in to for on with at by an be this that".split()
 )
-
-
-def quality_stats(text: str) -> dict:
-    """Length / punctuation / stopword-ratio features for corpus quality
-    filtering (training-data pipeline op)."""
-    toks = tokens_of(text)
-    n_tokens = len(toks)
-    n_chars = len(text)
-    n_alpha = sum(1 for c in text if c.isalpha())
-    n_punct = sum(1 for c in text if c in ".,;:!?\"'()-")
-    n_stop = sum(1 for t in toks if t.lower() in STOPWORDS)
-    mean_tok = (sum(len(t) for t in toks) / n_tokens) if n_tokens else 0.0
-    return {
-        "n_tokens": n_tokens,
-        "n_chars": n_chars,
-        "alpha_ratio": (n_alpha / n_chars) if n_chars else 0.0,
-        "punct_ratio": (n_punct / n_chars) if n_chars else 0.0,
-        "stopword_ratio": (n_stop / n_tokens) if n_tokens else 0.0,
-        "mean_token_len": mean_tok,
-    }
-
-
-def bag_fingerprint(text: str) -> str:
-    """Order-insensitive document fingerprint: md5 of the sorted distinct
-    token set — SQL-reproducible (list_sort/list_distinct + md5)."""
-    toks = sorted(set(tokens_of(text)))
-    return hashlib.md5(" ".join(toks).encode("utf-8")).hexdigest()
-
-
-def rolling_fingerprints(text: str, k: int = 8, window: int = 4) -> list[int]:
-    """Winnowing-style fingerprint: min md5-int per sliding window of
-    char k-gram hashes. Used by the near-dup query (rows-only check)."""
-    s = text
-    if len(s) < k:
-        return [md5_prefix_int(s)] if s else []
-    grams = [md5_prefix_int(s[i : i + k]) for i in range(len(s) - k + 1)]
-    if len(grams) <= window:
-        return [min(grams)]
-    return sorted({min(grams[i : i + window]) for i in range(len(grams) - window + 1)})

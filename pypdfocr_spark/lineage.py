@@ -50,15 +50,14 @@ def lineage_rows(committed: DataFrame, partition_id: Column) -> DataFrame:
 
     ``wall_ms`` per partition is the rounded sum of the per-row Python
     compute shares measured inside the Arrow stages
-    (EXTRACTED_SCHEMA.wall_ms); 0 when that column is absent or null.
+    (EXTRACTED_SCHEMA.wall_ms); 0 when that column is null.
     """
     sel = [
         F.col("run_id"),
         partition_id.cast("int").alias("partition_id"),
         F.col("byte_count"),
         F.when(F.col("status") != "ok", F.col("url")).alias("failure_url"),
-        (F.col("wall_ms") if "wall_ms" in committed.columns else F.lit(None))
-        .cast("double").alias("row_wall_ms"),
+        F.col("wall_ms").cast("double").alias("row_wall_ms"),
     ]
     return (
         committed.select(*sel)
@@ -77,13 +76,18 @@ def lineage_rows(committed: DataFrame, partition_id: Column) -> DataFrame:
 # ``00003-<task>-<uuid>-00001.parquet``.
 _FILE_PARTITION = r"^(?:part-)?(\d+)-"
 
+# The committed columns lineage reads. Each read of the committed table
+# gives its columns, not inferring them: inference runs a Spark job on
+# every read, and a given column the files lack reads as null.
+_LINEAGE_READ = "run_id STRING, url STRING, status STRING, byte_count LONG, wall_ms DOUBLE"
+
 
 def lineage_table(spark: SparkSession, out_dir: str) -> DataFrame:
     """LINEAGE_SCHEMA rows for every commit to ``out_dir``: a grouped read
     of the committed table by ``run_id`` and by the partition in each
     row's data file name. Empty before the first commit."""
     try:
-        committed = spark.read.parquet(f"{out_dir}/extracted")
+        committed = spark.read.schema(_LINEAGE_READ).parquet(f"{out_dir}/extracted")
     except AnalysisException:  # no commit yet
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     part = F.regexp_extract("_metadata.file_name", _FILE_PARTITION, 1)
@@ -109,7 +113,7 @@ def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
     snapshot exists yet. Not de-duplicated: the left-anti join that
     reads them does not need it."""
     try:
-        return spark.read.parquet(f"{out_dir}/extracted").select("url")
+        return spark.read.schema("url STRING").parquet(f"{out_dir}/extracted")
     except AnalysisException:
         return None
 

@@ -457,85 +457,3 @@ def ivf_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "cosine")
     )
-
-
-def lsh_bucket_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_planes: int = 8,
-    probe_bits: int = 1,
-    n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k over a sign-LSH index (see
-    :func:`hyperplane_bucket` / :func:`bucket_index`).
-
-    Three recall knobs, all deterministic:
-
-    * ``probe_bits`` — multi-probe: also search buckets within that
-      Hamming distance of the query's bucket (probe_bits=1 ≈ (1+m)×
-      candidates for most of the boundary-loss recall back);
-    * ``n_tables`` — OR-construction: L independent plane sets; a pair is
-      a candidate if it collides in ANY table (recall 1−(1−p^m)^L at ×L
-      index size) — the knob that reaches recall ≥0.9 when the similarity
-      level of true neighbors is moderate;
-    * ``n_planes`` — bucket resolution m (fewer planes = bigger buckets).
-
-    Plan shape: candidates are generated on the *slim* (id, table, bucket)
-    index and deduped; payload vectors join back only for surviving
-    candidates. The corpus is scanned once to build the index; per query
-    the bucket equi-join reads ~n·L·(1+m)/2^m candidates, not n.
-    """
-    from pyspark.sql.window import Window
-
-    if dim is None:
-        dim = infer_dim(emb, vec_col)
-    idx = bucket_index(emb, id_col, vec_col, n_planes, n_tables, dim)
-    q_idx = idx.where(F.col("id").isin(query_ids)).withColumnRenamed("id", "query_id")
-    if probe_bits > 0:
-        probes = F.array(
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(m))
-                for m in probe_masks(n_planes, probe_bits)
-            ]
-        )
-        q_idx = q_idx.withColumn("bucket", F.explode(probes))
-    cand = (
-        idx.withColumnRenamed("id", "neighbor_id")
-        .join(F.broadcast(q_idx), on=["table", "bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    if n_tables > 1:
-        # within ONE table a pair matches at most one probe mask (masks
-        # are distinct), so the dedup shuffle is only needed across tables
-        cand = cand.distinct()
-    qv = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm_expr(F.col(vec_col)).alias("_qn"),
-    )
-    nv = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        norm_expr(F.col(vec_col)).alias("_nn"),
-    )
-    scored = (
-        cand.join(nv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn(
-            "cosine",
-            dot_expr(F.col("qv"), F.col("nv")) / (F.col("_qn") * F.col("_nn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )

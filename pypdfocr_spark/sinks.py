@@ -1,37 +1,24 @@
-"""Pluggable sinks (SURVEY §2.2 / §2.10) — the reference's ``PyFiler`` ABC
-(``move_to_matching_folder`` / ``file_original`` / ``add_folder_target``,
-ref: pypdfocr/pypdfocr_filer.py:17-105) becomes a sink trait over the
-routed DataFrame; the two reference impls map to:
+"""Filing sinks (SURVEY §2.2 / §2.10) — the reference's directory filer
+(``move_to_matching_folder`` / ``file_original``,
+ref: pypdfocr/pypdfocr_filer.py:17-105, pypdfocr/pypdfocr_filer_dirs.py)
+over the routed DataFrame:
 
 * K2 directory filer  → :class:`DirsSink` — routing is a *column*, so the
   per-file ``shutil.move`` + mkdir-p disappears into
   ``partitionBy(route)``; the ``_1/_2`` name-uniquify probe loop
   (ref: pypdfocr/pypdfocr_filer.py:52-65) becomes a ``row_number`` window.
-* K4 Evernote filer   → :class:`EvernoteSink` stub — the API-call shape
-  (notebook check-or-create, note with an md5-hashed PDF resource,
-  ref: pypdfocr/pypdfocr_filer_evernote.py:183-288) is preserved as a
-  ``foreachBatch``-style callable; the client itself is gated (no network
-  / evernote SDK here).
-* K5 email notifier   → :func:`email_summary` — the driver-side SMTP
-  report (original / converted / filing summary,
-  ref: pypdfocr/pypdfocr.py:410-438) rendered from the lineage table;
-  SMTP send gated behind import/availability.
+* K3 original-move filer → :func:`original_move_manifest`.
+
+The reference's Evernote filer and email summary have no counterpart:
+this engine's output is the extracted-text table and the folders it is
+routed to.
 """
 
 from __future__ import annotations
 
-from abc import ABC, abstractmethod
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-class RouteSink(ABC):
-    """Sink trait: consume the routed extraction output."""
-
-    @abstractmethod
-    def write(self, extracted: DataFrame, out_dir: str) -> None: ...
 
 
 def original_move_manifest(
@@ -67,7 +54,7 @@ def original_move_manifest(
     )
 
 
-class DirsSink(RouteSink):
+class DirsSink:
     """K2: write route-partitioned parquet with uniquified artifact names.
 
     ``artifact_name`` reproduces the reference's collision policy: the
@@ -96,259 +83,3 @@ class DirsSink(RouteSink):
                 F.lit("_ocr.pdf"),
             ),
         )
-
-
-ENML_HEADER = (
-    '<?xml version="1.0" encoding="UTF-8"?>'
-    '<!DOCTYPE en-note SYSTEM "http://xml.evernote.com/pub/enml2.dtd">'
-)
-
-
-def build_note(notebook_guid: str, title: str, payload: bytes) -> dict:
-    """K4 note construction as plain data — the exact shape the reference
-    builds with Evernote SDK Types (ref: pypdfocr_filer_evernote.py:210-255):
-    ENML body with the 'Uploaded by' line and an ``en-media`` link keyed
-    by the resource's md5, plus one application/pdf resource carrying
-    (bodyHash=md5, size, body, fileName=title)."""
-    import hashlib
-
-    md5hash = hashlib.md5(payload).hexdigest()
-    content = (
-        ENML_HEADER
-        + "<en-note>Uploaded by PyPDFOCR <br/>"
-        + f'<en-media type="application/pdf" hash="{md5hash}"/>'
-        + "</en-note>"
-    )
-    return {
-        "title": title,
-        "notebookGuid": notebook_guid,
-        "content": content,
-        "resources": [
-            {
-                "mime": "application/pdf",
-                "bodyHash": md5hash,
-                "size": len(payload),
-                "body": payload,
-                "fileName": title,
-            }
-        ],
-    }
-
-
-def check_and_make_notebook(client, notebook_name: str, stack: str) -> dict:
-    """Idempotent notebook lookup-or-create, with the reference's
-    stack-fixup branch (an existing notebook whose stack differs is
-    updated in place, ref: pypdfocr_filer_evernote.py:183-208).
-
-    ``client`` is any object with ``get_notebooks() -> {name: notebook}``,
-    ``update_notebook(nb)``, ``create_notebook(nb) -> nb`` — the Evernote
-    SDK note store on a real deployment, a fake in tests."""
-    notebooks = client.get_notebooks()
-    if notebook_name in notebooks:
-        notebook = notebooks[notebook_name]
-        if notebook.get("stack") != stack:
-            notebook["stack"] = stack
-            client.update_notebook(notebook)
-        return notebook
-    return client.create_notebook({"name": notebook_name, "stack": stack})
-
-
-def _is_auth_error(exc: Exception) -> bool:
-    """The two EDAMUserException codes the reference's ``en_handle``
-    decorator refresh-retries (ref: pypdfocr_filer_evernote.py:73-76):
-    AUTH_EXPIRED (EDAMErrorCode 9) and DATA_REQUIRED (5). Matched by
-    code value or name so tests/fakes need no SDK types."""
-    code = getattr(exc, "errorCode", None)
-    return code in (5, 9, "DATA_REQUIRED", "AUTH_EXPIRED")
-
-
-def evernote_retry(
-    do,
-    client,
-    client_factory=None,
-    retries: int = 3,
-    sleep=None,
-    is_auth_error=_is_auth_error,
-    on_reconnect=None,
-):
-    """Reference parity for the ``en_handle`` wrapper around every
-    Evernote API call (ref: pypdfocr_filer_evernote.py:39-80): up to
-    ``retries`` attempts; an auth-expired error sleeps 3 s, reconnects
-    (``client_factory()``), and retries. Three deliberate deltas, all on
-    the safe side of the reference: a non-auth error raises immediately
-    instead of being silently swallowed in the loop; exhausting the
-    budget raises the last auth error instead of returning ``None`` (the
-    reference's silent-loss mode — a lost upload must surface in lineage
-    failure accounting here); and the sleep/reconnect happens only when
-    an attempt REMAINS (the reference also sleeps+reconnects after its
-    final failure, 3 dead seconds per permanently-failing call)."""
-    import time as _time
-
-    sleep = sleep or _time.sleep
-    last: Exception | None = None
-    for attempt in range(retries):
-        try:
-            return do(client)
-        except Exception as e:
-            if not is_auth_error(e):
-                raise
-            last = e
-            if attempt == retries - 1:
-                break  # no attempt left — don't pay a useless sleep+reconnect
-            sleep(3)  # ref :77 time.sleep(3)
-            if client_factory is not None:
-                client = client_factory()  # ref :65 _connect_to_evernote
-                if on_reconnect is not None:
-                    # let the caller rebind its connection like the
-                    # reference's en_handle does persistently (ref :65) —
-                    # otherwise every later call repays the stale-token
-                    # failure + 3 s sleep
-                    on_reconnect(client)
-    assert last is not None
-    raise last
-
-
-class EvernoteSink(RouteSink):
-    """K4: route → notebook (under a configured stack), one note per
-    document with the md5-hashed artifact resource. All of the
-    reference's note/notebook logic is real (:func:`build_note`,
-    :func:`check_and_make_notebook`, ref: pypdfocr_filer_evernote.py:
-    183-288); only the transport is injected — ``client_factory`` builds
-    the per-partition API client (the Evernote SDK + OAuth on a real
-    deployment; absent here, so the default raises on use while keeping
-    the dataflow and the note construction fully testable)."""
-
-    def __init__(
-        self, uploader=None, client_factory=None, stack: str = "pypdfocr",
-        sleep=None,
-    ):
-        self._uploader = uploader
-        self._client_factory = client_factory
-        self._stack = stack
-        self._sleep = sleep  # injected clock for retry tests; None → time.sleep
-
-    def upload_rows(self, rows, client, notebook_guids: dict | None = None) -> int:
-        """Upload loop over note rows (any iterable — consumed once, so a
-        partition streams through in constant memory; bodies are never
-        buffered). ``notebook_guids`` maps route → guid when notebooks
-        were pre-created on the driver; otherwise check-or-create lazily
-        (single-process use only — see :meth:`write` for why).
-
-        Every client call runs under :func:`evernote_retry` — the
-        reference wraps each API-touching filer method in ``en_handle``
-        (ref: pypdfocr_filer_evernote.py:39-80,210)."""
-        n = 0
-        notebooks: dict[str, dict] = {}
-        # cur[0] is the LIVE client: an auth-expiry reconnect inside
-        # evernote_retry rebinds it (on_reconnect), so later rows use the
-        # fresh token instead of repaying fail+sleep per call
-        cur = [client]
-
-        def _rebind(c):
-            cur[0] = c
-
-        retry = lambda do: evernote_retry(  # noqa: E731 — bind factory/clock once
-            do, cur[0], self._client_factory, sleep=self._sleep, on_reconnect=_rebind
-        )
-        for r in rows:
-            nb_name = r["notebook"]
-            if notebook_guids is not None:
-                guid = notebook_guids[nb_name]
-            else:
-                if nb_name not in notebooks:
-                    notebooks[nb_name] = retry(
-                        lambda c: check_and_make_notebook(c, nb_name, self._stack)
-                    )
-                guid = notebooks[nb_name].get("guid", nb_name)
-            note = build_note(guid, r["note_title"], (r["body"] or b""))
-            retry(lambda c: c.create_note(note))
-            n += 1
-        return n
-
-    def note_rows(self, extracted: DataFrame) -> DataFrame:
-        body = F.coalesce(F.col("extracted_text"), F.lit("")).cast("binary")
-        return extracted.select(
-            F.col("route").alias("notebook"),
-            F.col("url").alias("note_title"),
-            body.alias("body"),
-            F.md5(body).alias("resource_md5"),
-            F.length(body).alias("resource_len"),
-        )
-
-    def write(self, extracted: DataFrame, out_dir: str) -> None:
-        rows = self.note_rows(extracted)
-        if self._client_factory is not None:
-            # Notebooks are created ONCE on the driver before the fan-out:
-            # concurrent per-partition check-or-create would race (two
-            # executors both see the notebook missing and both create it).
-            # Executors then only create notes. Task-retry note duplication
-            # is left to the deployment's dedupe (the note carries the
-            # resource md5 as its idempotency key); exactly-once delivery
-            # to an external API is not expressible from inside a task.
-            routes = [r["notebook"] for r in rows.select("notebook").distinct().collect()]
-            # same live-client rebinding as upload_rows: a token expiry
-            # during route k must not make routes k+1.. repay a stale
-            # call + sleep each
-            cur = [self._client_factory()]
-            guids = {
-                name: evernote_retry(
-                    lambda c, _n=name: check_and_make_notebook(c, _n, self._stack),
-                    cur[0], self._client_factory, sleep=self._sleep,
-                    on_reconnect=lambda c: cur.__setitem__(0, c),
-                ).get("guid", name)
-                for name in routes
-            }
-            factory, sink = self._client_factory, self
-            rows.foreachPartition(
-                lambda it: sink.upload_rows(
-                    (r.asDict() for r in it), factory(), notebook_guids=guids
-                )
-            )
-        elif self._uploader is not None:
-            uploader = self._uploader
-            rows.foreachPartition(lambda it: uploader(list(it)))
-        else:
-            raise NotImplementedError(
-                "EvernoteSink needs a client_factory/uploader (SDK + OAuth) "
-                "on a real deployment"
-            )
-
-
-def email_summary(lineage_df: DataFrame, run_id: str) -> str:
-    """K5: the post-job report body (driver-side; sent by
-    :func:`send_email_summary`, ref: pypdfocr/pypdfocr.py:410-438)."""
-    rows = lineage_df.where(F.col("run_id") == run_id).collect()
-    docs = sum(r["doc_count"] for r in rows)
-    fails = [u for r in rows for u in r["failures"]]
-    lines = [
-        f"pypdfocr_spark run {run_id}",
-        f"documents committed: {docs}",
-        f"partitions: {len(rows)}",
-        f"failures: {len(fails)}",
-    ]
-    lines += [f"  failed: {u}" for u in fails[:20]]
-    return "\n".join(lines)
-
-
-def send_email_summary(body: str, mail_config: dict, subject: str) -> None:
-    """K5 transport: SMTP + STARTTLS + login + sendmail + quit, the exact
-    call sequence and config keys of the reference's ``_send_email``
-    (ref: pypdfocr/pypdfocr.py:410-438: mail_from_addr / mail_to_list /
-    mail_smtp_server / mail_smtp_login / mail_smtp_password; From/To/
-    Subject header block). Driver-side, post-job — never a data-plane op."""
-    import smtplib
-
-    from_addr = mail_config["mail_from_addr"]
-    to_addr_list = mail_config["mail_to_list"]
-    login = mail_config["mail_smtp_login"]
-
-    header = f"From: {login}\n"
-    header += "To: {}\n".format(",".join(to_addr_list))
-    header += f"Subject: {subject}\n\n"
-    server = smtplib.SMTP(mail_config["mail_smtp_server"])
-    try:
-        server.starttls()
-        server.login(login, mail_config["mail_smtp_password"])
-        server.sendmail(from_addr, to_addr_list, header + body)
-    finally:
-        server.quit()

@@ -71,12 +71,16 @@ def _doc_rows_with_spans(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                 for i, lines in enumerate(spans_by_page)
             ]
         except Exception as exc:
-            text, status, spans, page_texts = "", f"error:{type(exc).__name__}", [], []
+            text, status, spans, page_texts, norm_pages = (
+                "", f"error:{type(exc).__name__}", [], [], []
+            )
             route = route_document(
                 [], url, cfg.targets, use_filename=cfg.use_filename, default=cfg.default_route,
             )
+        # doc norm = the page norms joined by space, as in
+        # pipeline._extract_rows (the S6 identity)
         out.append(
-            (url, ts, lang, text, normalize_page_text(text), route,
+            (url, ts, lang, text, " ".join(norm_pages), route,
              len(page_texts), status, len(payload), 0.0, spans)
         )
     res = pd.DataFrame(out, columns=[f.name for f in EXTRACTED_SPANS_SCHEMA.fields])

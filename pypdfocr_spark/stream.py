@@ -17,8 +17,9 @@ pypdfocr/pypdfocr.py:461-471). Here each piece maps to an engine facility:
   committed output (resume_filter) + checkpointed source offsets —
   strictly stronger than the reference's sentinel dict (exactly-once
   instead of at-least-once)
-* restart loop         → checkpoint recovery (``awaitTermination`` +
-  driver supervision)
+* restart loop         → checkpoint recovery. Each start processes the
+  files present then and exits (``availableNow``); a supervisor that
+  restarts it picks up only the files added since.
 """
 
 from __future__ import annotations
@@ -38,10 +39,12 @@ def watch_extract(
     out_dir: str,
     checkpoint_dir: str,
     cfg: ExtractConfig | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Watch ``input_path`` for new corpus parquet files and run the batch
-    extraction pipeline per micro-batch with idempotent commits.
+    """Process the corpus parquet files present in ``input_path`` when the
+    query starts, then stop (an ``availableNow`` trigger): the batch
+    extraction pipeline runs per micro-batch with idempotent commits, and
+    the checkpoint makes the next start pick up only the files added
+    since.
 
     ``foreachBatch`` reuses the exact batch dataflow (same kernels, same
     plan) — the reference similarly funnels watch-mode files into the
@@ -57,10 +60,9 @@ def watch_extract(
         result = extract(remaining, cfg)
         lineage.commit(result, out_dir, run_id=f"stream-{batch_id}")
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -203,7 +203,7 @@ def gopher_filter_df(
 
 def fingerprint_df(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Order-insensitive bag fingerprint: md5 of the space-joined sorted
-    distinct token set (kernels.textstats.bag_fingerprint)."""
+    distinct token set (``bag_fingerprint`` in tests/reference.py)."""
     toks = _tokens(text_col)
     return df.select(
         F.col(id_col),

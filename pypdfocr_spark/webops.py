@@ -465,33 +465,8 @@ def url_filter_df(
 
 
 # ---------------------------------------------------------------------------
-# Domain-level quality rollup + per-domain caps (DCLM/RefinedWeb style)
+# Per-domain caps (C4/RefinedWeb style)
 # ---------------------------------------------------------------------------
-
-
-def domain_quality_df(
-    df: DataFrame,
-    domain_col: str = "reg_domain",
-    quality_col: str = "quality",
-    temperature: float = 0.5,
-) -> DataFrame:
-    """Per-domain corpus statistics + sampling weights: doc count, mean
-    quality, and a temperature-flattened sampling weight
-    ``count^t / count`` (t<1 down-weights mega-domains so a training
-    sampler draws a flatter domain distribution — the DoReMi/DCLM
-    re-weighting shape with a closed-form proxy). One map-side-combinable
-    hash aggregation; domains are low-cardinality relative to docs, so
-    partial agg collapses the 100-TB input before the shuffle."""
-    if not 0.0 < temperature <= 1.0:
-        raise ValueError("temperature must be in (0, 1]")
-    agg = df.groupBy(F.col(domain_col).alias("reg_domain")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.avg(quality_col).alias("mean_quality"),
-    )
-    w = F.pow(F.col("n_docs").cast("double"), F.lit(float(temperature))) / F.col(
-        "n_docs"
-    ).cast("double")
-    return agg.select("reg_domain", "n_docs", "mean_quality", w.alias("sample_weight"))
 
 
 def domain_cap_df(

@@ -99,7 +99,7 @@ docs.count()
 
 nb = 1 << 16
 model = classifier.QualityModel(
-    np.random.RandomState(7).standard_normal(nb), 0.0, nb, True, []
+    np.random.RandomState(7).standard_normal(nb), 0.0, nb, True
 )
 bitmap = bloom.bloom_build(
     docs.where(F.col("doc_id") % 11 == 0), "text",

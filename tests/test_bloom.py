@@ -1,8 +1,7 @@
 """Bloom-filter dedup (bloom.py): build determinism, the no-false-negative
-guarantee, measured FPP, and the cross-corpus dedup composite."""
+guarantee, measured FPP, and the map-only probe."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from pypdfocr_spark import bloom
@@ -12,15 +11,6 @@ def _docs(spark, texts, start=0):
     return spark.createDataFrame(
         [(start + i, t) for i, t in enumerate(texts)], "doc_id LONG, text STRING"
     )
-
-
-def test_bloom_params_shapes():
-    m, k = bloom.bloom_params(1_000_000, fpp=0.01)
-    assert m & (m - 1) == 0                    # power of two
-    assert m >= 9_585_058                      # ideal bit count for 1M @ 1%
-    assert 1 <= k <= 16
-    with pytest.raises(ValueError):
-        bloom.bloom_params(10, fpp=1.5)
 
 
 def test_build_deterministic_across_layouts(spark):
@@ -63,7 +53,9 @@ def test_measured_fpp_within_bound(spark):
     n = 2000
     ref = _docs(spark, [f"ref {i}" for i in range(n)])
     fresh = _docs(spark, [f"fresh {i}" for i in range(n)], start=10_000)
-    nb, nh = bloom.bloom_params(n, fpp=0.01)
+    # 2^15 bits and 11 hashes: the standard sizing for 2,000 keys at 1%
+    # (bits -n·ln p / ln²2 rounded up to a power of two, hashes m/n·ln 2)
+    nb, nh = 1 << 15, 11
     bm = bloom.bloom_build(ref, num_bits=nb, num_hashes=nh)
     fp = bloom.bloom_probe_df(fresh, bm, num_hashes=nh) \
               .where(F.col("maybe_seen")).count()
@@ -80,66 +72,9 @@ def test_probe_preserves_rows_and_schema(spark):
     assert rows["a"]["maybe_seen"] and rows["a"]["extra"] == 1
 
 
-def test_bloom_dedup_cross_corpus(spark):
-    ref = _docs(spark, [f"dump1 doc {i}" for i in range(300)])
-    dups = [f"dump1 doc {i}" for i in range(0, 300, 3)]
-    fresh = [f"dump2 doc {i}" for i in range(100)]
-    corpus = _docs(spark, dups + fresh, start=5000)
-    kept = bloom.bloom_dedup(corpus, ref, fpp=0.001)
-    kept_texts = {r["text"] for r in kept.collect()}
-    assert not any(t in kept_texts for t in dups)         # all true dupes dropped
-    # no-FN guarantee is exact; FP loss on fresh is bounded (deterministic
-    # fixture: this either always passes or never does)
-    assert len(kept_texts & set(fresh)) >= 98
-    flagged = bloom.bloom_dedup(corpus, ref, fpp=0.001, return_flags=True)
-    assert flagged.count() == corpus.count()
-    assert "maybe_seen" in flagged.columns
-
-
 def test_probe_plan_is_shuffle_free(spark):
     df = _docs(spark, ["x"])
     bm = bloom.bloom_build(df, num_bits=1 << 10, num_hashes=3)
     plan = bloom.bloom_probe_df(df, bm, num_hashes=3) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_paragraph_dedup_strips_seen_paragraphs(spark):
-    ref = _docs(spark, ["old news one\nold news two"])
-    corpus = spark.createDataFrame(
-        [(10, "fresh line\nold news one\nanother fresh"),
-         (11, "old news two"),
-         (12, "all fresh here")],
-        "doc_id LONG, text STRING",
-    )
-    out = {r["doc_id"]: r for r in
-           bloom.bloom_paragraph_dedup(corpus, ref, fpp=0.001).collect()}
-    assert out[10]["text"] == "fresh line\nanother fresh"
-    assert out[10]["n_paragraphs"] == 3 and out[10]["n_dropped"] == 1
-    assert out[11]["text"] == "" and out[11]["n_dropped"] == 1
-    assert out[12]["text"] == "all fresh here" and out[12]["n_dropped"] == 0
-
-
-def test_paragraph_filter_min_chars_protects_short_lines(spark):
-    ref = _docs(spark, ["\nxx\nlong reference paragraph body"])
-    corpus = spark.createDataFrame(
-        [(1, "a\n\nxx\nlong reference paragraph body\nb")],
-        "doc_id LONG, text STRING",
-    )
-    keys = bloom.paragraph_keys(ref)
-    bm = bloom.bloom_build(keys, "key", num_bits=1 << 12, num_hashes=4)
-    out = bloom.bloom_paragraph_filter(
-        corpus, bm, num_hashes=4, min_chars=3
-    ).collect()[0]
-    # "" and "xx" are seen but under min_chars => kept; the long one drops
-    assert out["text"] == "a\n\nxx\nb"
-    assert out["n_dropped"] == 1
-
-
-def test_paragraph_filter_plan_is_shuffle_free(spark):
-    df = _docs(spark, ["x\ny"])
-    bm = bloom.bloom_build(bloom.paragraph_keys(df), "key",
-                           num_bits=1 << 10, num_hashes=3)
-    plan = bloom.bloom_paragraph_filter(df, bm, num_hashes=3) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

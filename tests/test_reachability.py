@@ -15,7 +15,9 @@ The same holds one level down for every module outside ``REACH_PENDING``:
 each top-level function and class must be named by an entry file, by a
 module-level statement of the package other than an import, or by the
 body of another reached definition. A ``REACH_PENDING`` entry whose module is now fully reached
-fails too, so the set can only shrink.
+fails too, so the set can only shrink. Each module-level name such a
+module assigns (a constant, a schema, a compiled pattern) must be named
+the same way by something other than its own assignment.
 """
 
 import ast
@@ -37,16 +39,9 @@ ALLOWED_UNREACHED = {
 # (ROADMAP.md §2 and §6).
 REACH_PENDING = {
     "artifact": "searchable-PDF writer only tests name; cli writes it or it goes (§2)",
-    "bloom": "Bloom dedup and paragraph filters only tests name (§2, second batch)",
-    "classifier": "quality-classifier training and filter only tests name (§2, second batch)",
-    "dedup": "canonical_url_dedup, embedding_near_dup_pairs only tests name (§2, third batch)",
     "kernels.merge": "searchable-PDF text-layer geometry, decided with artifact (§2)",
-    "kernels.textstats": "scalar twins of dedup's vectorized signatures (§2, third batch)",
     "lineage": "lineage_table / lineage_rows, which cli is to read after a commit (§6)",
-    "pack": "pack_greedy only tests name (§2, second batch)",
-    "similarity": "lsh_bucket_topk only tests name (§2, second batch)",
-    "sinks": "DirsSink stays only if cli's filing switch reaches it; the rest goes (§2)",
-    "webops": "domain_quality_df only tests name (§2, third batch)",
+    "sinks": "DirsSink and original_move_manifest wait for cli's filing switch (§2)",
 }
 
 
@@ -154,45 +149,106 @@ def _top_level_defs(tree: ast.Module) -> "list[ast.AST]":
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
 
 
-def _unreached_definitions(
-    mods: "dict[str, Path]", entry_files: "list[Path]"
-) -> "dict[str, list[str]]":
-    """Top-level ``def`` / ``class`` names per module (dotted name → names)
-    that nothing reaches. Seeds are the names an entry file uses (its code,
-    or any word of its strings, which hold the scripts' child-process code)
-    and the names the package's module-level statements other than
-    imports use (an import-time call, a constant built by a helper). A
-    seed's body names more. Matching is by name, so a same-named
-    definition elsewhere in the package counts too."""
-    trees = {mod: ast.parse(path.read_text(), str(path)) for mod, path in mods.items()}
-    defs: "dict[str, list[ast.AST]]" = {}
-    seeds = set()
-    for tree in trees.values():
-        top = _top_level_defs(tree)
-        for node in top:
-            defs.setdefault(node.name, []).append(node)
-        for stmt in tree.body:
-            # an import alone uses nothing: a re-export or an unused
-            # import must not count as a call
-            if stmt not in top and not isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                seeds |= _code_names(stmt)
+def _module_statements(tree: ast.Module) -> "list[ast.stmt]":
+    """Module-level statements other than definitions and imports: an
+    import alone uses nothing, so a re-export or an unused import must
+    not count as a use."""
+    return [stmt for stmt in tree.body
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef,
+                                     ast.Import, ast.ImportFrom))]
+
+
+def _entry_names(entry_files: "list[Path]") -> "set[str]":
+    """The names entry files use: their code, and any word of their
+    strings, which hold the scripts' child-process code."""
+    names = set()
     for path in entry_files:
         tree = ast.parse(path.read_text(), str(path))
-        seeds |= _code_names(tree)
+        names |= _code_names(tree)
         for n in ast.walk(tree):
             if isinstance(n, ast.Constant) and isinstance(n.value, str):
-                seeds.update(re.findall(r"\w+", n.value))
-    reached = set()
+                names.update(re.findall(r"\w+", n.value))
+    return names
+
+
+def _reach_walk(mods: "dict[str, Path]", entry_files: "list[Path]"):
+    """Parsed modules (dotted name → tree) and the reached top-level
+    definitions, by name. Seeds are the names entry files use and the
+    names the package's module-level statements use (an import-time
+    call, a constant built by a helper). A seed's body names more.
+    Matching is by name, so a same-named definition elsewhere in the
+    package counts too."""
+    trees = {mod: ast.parse(path.read_text(), str(path)) for mod, path in mods.items()}
+    defs: "dict[str, list[ast.AST]]" = {}
+    seeds = _entry_names(entry_files)
+    for tree in trees.values():
+        for node in _top_level_defs(tree):
+            defs.setdefault(node.name, []).append(node)
+        for stmt in _module_statements(tree):
+            seeds |= _code_names(stmt)
+    reached: "dict[str, list[ast.AST]]" = {}
     todo = [name for name in seeds if name in defs]
     while todo:
         name = todo.pop()
         if name in reached:
             continue
-        reached.add(name)
+        reached[name] = defs[name]
         for node in defs[name]:
             todo.extend(_code_names(node) & defs.keys())
+    return trees, reached
+
+
+def _unreached_definitions(
+    mods: "dict[str, Path]", entry_files: "list[Path]"
+) -> "dict[str, list[str]]":
+    """Top-level ``def`` / ``class`` names per module (dotted name → names)
+    that nothing reaches."""
+    trees, reached = _reach_walk(mods, entry_files)
     return {mod: [n.name for n in _top_level_defs(tree) if n.name not in reached]
             for mod, tree in trees.items()}
+
+
+def _assigned_names(stmt: ast.stmt) -> "set[str]":
+    """The plain names a module-level assignment binds."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
+        targets = [stmt.target]
+    else:
+        return set()
+    return {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+
+
+def _unnamed_constants(
+    mods: "dict[str, Path]", entry_files: "list[Path]", pending: "set[str]" = frozenset()
+) -> "dict[str, list[str]]":
+    """Module-level assigned names per module (dotted name → names) that
+    nothing names but their own assignment: not an entry file, not
+    another module-level statement of the package, not a reached
+    definition. The definitions of the ``pending`` modules (dotted names)
+    count as reached: they still await their keep-or-delete decision.
+    Dunder names (``__version__``) are Python's, not ours."""
+    trees, reached = _reach_walk(mods, entry_files)
+    named = _entry_names(entry_files)
+    for nodes in reached.values():
+        for node in nodes:
+            named |= _code_names(node)
+    for mod in pending:
+        for node in _top_level_defs(trees[mod]):
+            named |= _code_names(node)
+    stmt_names = [(stmt, _code_names(stmt))
+                  for tree in trees.values() for stmt in _module_statements(tree)]
+    out = {}
+    for mod, tree in trees.items():
+        unnamed = []
+        for stmt in _module_statements(tree):
+            for name in sorted(_assigned_names(stmt)):
+                if name.startswith("__") or name in named:
+                    continue
+                if not any(name in names for other, names in stmt_names if other is not stmt):
+                    unnamed.append(name)
+        out[mod] = unnamed
+    return out
 
 
 def test_definitions_reached_by_name():
@@ -208,6 +264,18 @@ def test_definitions_reached_by_name():
     stale = sorted(mod for mod in REACH_PENDING if not unreached.get(mod))
     assert not checked, f"defined but never named: {checked}"
     assert not stale, f"fully reached or gone, drop from REACH_PENDING: {stale}"
+
+
+def test_module_constants_named():
+    """Every module-level name a module outside ``REACH_PENDING`` assigns
+    is named by something other than its own assignment."""
+    pending = {f"{PKG}.{mod}" for mod in REACH_PENDING}
+    unnamed = {
+        mod[len(PKG) + 1:]: names
+        for mod, names in _unnamed_constants(_package_modules(), _entry_files(), pending).items()
+        if names and mod not in pending
+    }
+    assert not unnamed, f"assigned but never named: {unnamed}"
 
 
 def test_reach_walk_seeds_module_level_statements(tmp_path):
@@ -234,3 +302,25 @@ def test_reach_walk_seeds_module_level_statements(tmp_path):
     unreached = _unreached_definitions(_package_modules(tmp_path, "toypkg"),
                                        [tmp_path / "main.py"])
     assert unreached == {"toypkg": [], "toypkg.hooks": ["reexported", "only_tests_call_me"]}
+
+
+def test_constants_walk_flags_unnamed_and_orphaned(tmp_path):
+    """A constant named only by its own assignment, or only by a
+    definition nothing reaches, is flagged; one a reached definition or
+    another module-level statement names is not."""
+    pkg = tmp_path / "toypkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "consts.py").write_text(
+        "USED = 1\nBASE = 2\nDERIVED = BASE + 1\nUNUSED = 3\nORPHANED = 4\n"
+        "__version__ = '0'\n\n\n"
+        "def run():\n    return USED + DERIVED\n\n\n"
+        "def only_tests_call_me():\n    return ORPHANED\n"
+    )
+    (tmp_path / "main.py").write_text("from toypkg.consts import run\n\nrun()\n")
+    unnamed = _unnamed_constants(_package_modules(tmp_path, "toypkg"), [tmp_path / "main.py"])
+    assert unnamed == {"toypkg": [], "toypkg.consts": ["UNUSED", "ORPHANED"]}
+    pending = {"toypkg.consts"}
+    assert _unnamed_constants(
+        _package_modules(tmp_path, "toypkg"), [tmp_path / "main.py"], pending
+    )["toypkg.consts"] == ["UNUSED"]

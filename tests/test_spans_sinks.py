@@ -1,7 +1,6 @@
-"""Span-level output + sink trait tests."""
+"""Span-level output + directory sink tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pypdfocr_spark import pipeline, sinks, spans
 from pypdfocr_spark.config import ExtractConfig
@@ -63,265 +62,3 @@ def test_dirs_sink_uniquify(spark, tmp_path):
     sinks.DirsSink().write(df, str(tmp_path / "routed"))
     routes = {r["route"] for r in spark.read.parquet(str(tmp_path / "routed")).select("route").collect()}
     assert routes == {"r1", "r2"}
-
-
-def test_evernote_sink_note_rows_and_gate(spark):
-    df = spark.createDataFrame(
-        [("https://a/doc.pdf", "patents", "some text")],
-        ["url", "route", "extracted_text"],
-    )
-    sink = sinks.EvernoteSink()
-    row = sink.note_rows(df).first()
-    assert row["notebook"] == "patents"
-    import hashlib
-    assert row["resource_md5"] == hashlib.md5(b"some text").hexdigest()
-    with pytest.raises(NotImplementedError):
-        sink.write(df, "unused")
-    # with an injected uploader it runs
-    captured = []
-    sinks.EvernoteSink(uploader=captured.append).write(df, "unused")
-
-
-def test_email_summary(spark):
-    from pypdfocr_spark import lineage as lin
-
-    df = spark.createDataFrame(
-        [("r1", 0, 10, 1000, ["https://bad"], 5)],
-        "run_id string, partition_id int, doc_count long, byte_count long, failures array<string>, wall_ms long",
-    )
-    body = sinks.email_summary(df, "r1")
-    assert "documents committed: 10" in body
-    assert "https://bad" in body
-
-
-def test_send_email_summary_smtp_sequence(monkeypatch):
-    """K5 transport parity: SMTP → starttls → login → sendmail → quit with
-    the reference's config keys and header block (ref: pypdfocr.py:410-438),
-    mocked like the reference's own binary-wrapper tests."""
-    import smtplib
-
-    events = []
-
-    class FakeSMTP:
-        def __init__(self, server):
-            events.append(("connect", server))
-
-        def starttls(self):
-            events.append(("starttls",))
-
-        def login(self, login, password):
-            events.append(("login", login, password))
-
-        def sendmail(self, from_addr, to_list, message):
-            events.append(("sendmail", from_addr, tuple(to_list), message))
-
-        def quit(self):
-            events.append(("quit",))
-
-    monkeypatch.setattr(smtplib, "SMTP", FakeSMTP)
-    cfg = {
-        "mail_from_addr": "from@x.test",
-        "mail_to_list": ["a@x.test", "b@x.test"],
-        "mail_smtp_server": "smtp.x.test:587",
-        "mail_smtp_login": "login@x.test",
-        "mail_smtp_password": "hunter2",
-    }
-    sinks.send_email_summary("run summary body", cfg, subject="pypdfocr_spark: run r1")
-    assert [e[0] for e in events] == ["connect", "starttls", "login", "sendmail", "quit"]
-    assert events[0] == ("connect", "smtp.x.test:587")
-    assert events[2] == ("login", "login@x.test", "hunter2")
-    _, from_addr, to_list, message = events[3]
-    assert from_addr == "from@x.test" and to_list == ("a@x.test", "b@x.test")
-    assert "Subject: pypdfocr_spark: run r1" in message
-    assert message.endswith("run summary body")
-
-
-class _FakeEvernoteClient:
-    """Duck-typed note store, recording the reference call shapes."""
-
-    def __init__(self, existing=None):
-        self.notebooks = dict(existing or {})
-        self.updated, self.created_nb, self.notes = [], [], []
-
-    def get_notebooks(self):
-        return dict(self.notebooks)
-
-    def update_notebook(self, nb):
-        self.updated.append(nb)
-        self.notebooks[nb["name"]] = nb
-
-    def create_notebook(self, nb):
-        nb = {**nb, "guid": f"guid-{nb['name']}"}
-        self.created_nb.append(nb)
-        self.notebooks[nb["name"]] = nb
-        return nb
-
-    def create_note(self, note):
-        self.notes.append(note)
-
-
-def test_evernote_notebook_idempotent_and_stack_fixup():
-    # existing notebook with wrong stack → updated in place (ref
-    # pypdfocr_filer_evernote.py:196-200); missing → created
-    client = _FakeEvernoteClient({"spark_docs": {"name": "spark_docs", "stack": "old", "guid": "g1"}})
-    nb = sinks.check_and_make_notebook(client, "spark_docs", "pypdfocr")
-    assert nb["guid"] == "g1" and client.updated and not client.created_nb
-    nb2 = sinks.check_and_make_notebook(client, "analytics", "pypdfocr")
-    assert nb2["guid"] == "guid-analytics" and client.created_nb
-    # second lookup: no duplicate create, no further update
-    sinks.check_and_make_notebook(client, "analytics", "pypdfocr")
-    assert len(client.created_nb) == 1
-
-
-def test_evernote_note_shape_and_upload(spark):
-    import hashlib
-
-    df = spark.createDataFrame(
-        [("https://x/a.pdf", "hello body", "spark_docs"),
-         ("https://x/b.pdf", "other", "spark_docs"),
-         ("https://x/c.pdf", None, "default")],
-        "url string, extracted_text string, route string",
-    )
-    client = _FakeEvernoteClient()
-    sink = sinks.EvernoteSink(client_factory=None)
-    rows = [r.asDict() for r in sink.note_rows(df).collect()]
-    n = sink.upload_rows(rows, client)
-    assert n == 3 and len(client.notes) == 3
-    by_title = {nt["title"]: nt for nt in client.notes}
-    note = by_title["https://x/a.pdf"]
-    md5 = hashlib.md5(b"hello body").hexdigest()
-    # exact ENML shape of the reference (filer_evernote.py:214-240)
-    assert note["content"] == (
-        sinks.ENML_HEADER + "<en-note>Uploaded by PyPDFOCR <br/>"
-        + f'<en-media type="application/pdf" hash="{md5}"/></en-note>'
-    )
-    res = note["resources"][0]
-    assert res["bodyHash"] == md5 and res["size"] == 10
-    assert res["mime"] == "application/pdf" and res["body"] == b"hello body"
-    # one notebook per route, created once
-    assert {nb["name"] for nb in client.created_nb} == {"spark_docs", "default"}
-
-
-# ------------------------------------------------- Evernote auth retry (K4)
-class _AuthError(Exception):
-    def __init__(self, code):
-        self.errorCode = code
-
-
-def test_evernote_retry_refresh_then_succeed():
-    """ref pypdfocr_filer_evernote.py:39-80: AUTH_EXPIRED → sleep 3,
-    reconnect, retry; success on a later attempt returns normally."""
-    sleeps, rebuilt = [], []
-    attempts = {"n": 0}
-
-    def do(client):
-        attempts["n"] += 1
-        if attempts["n"] < 3:
-            raise _AuthError(9)  # EDAMErrorCode.AUTH_EXPIRED
-        return f"ok via {client}"
-
-    out = sinks.evernote_retry(
-        do, "c0", client_factory=lambda: rebuilt.append(1) or f"c{len(rebuilt)}",
-        sleep=sleeps.append,
-    )
-    assert out == "ok via c2"  # reconnected twice
-    assert sleeps == [3, 3] and len(rebuilt) == 2
-
-
-def test_evernote_retry_three_attempts_then_raise():
-    """VERDICT r2 #7 done-criterion: persistent auth error → exactly 3
-    attempts, then the error raises (never the reference's silent None)."""
-    calls, sleeps = [], []
-
-    def do(client):
-        calls.append(client)
-        raise _AuthError("AUTH_EXPIRED")
-
-    with pytest.raises(_AuthError):
-        sinks.evernote_retry(do, "c", sleep=sleeps.append)
-    # review fix: no sleep after the FINAL attempt (nothing can use it)
-    assert len(calls) == 3 and len(sleeps) == 2
-
-
-def test_evernote_retry_non_auth_raises_immediately():
-    calls = []
-
-    def do(client):
-        calls.append(client)
-        raise _AuthError(6)  # LIMIT_REACHED — not retried by the reference
-
-    with pytest.raises(_AuthError):
-        sinks.evernote_retry(do, "c", sleep=lambda s: None)
-    assert len(calls) == 1
-
-
-def test_evernote_upload_rows_retries_create_note():
-    class FlakyClient(_FakeEvernoteClient):
-        def __init__(self):
-            super().__init__()
-            self.failures_left = 2
-
-        def create_note(self, note):
-            if self.failures_left > 0:
-                self.failures_left -= 1
-                raise _AuthError(9)
-            super().create_note(note)
-
-    client = FlakyClient()
-    sleeps = []
-    sink = sinks.EvernoteSink(client_factory=lambda: client, sleep=sleeps.append)
-    n = sink.upload_rows(
-        [{"notebook": "nb", "note_title": "t", "body": b"x"}], client
-    )
-    assert n == 1 and len(client.notes) == 1
-    assert sleeps == [3, 3]
-
-
-def test_evernote_retry_rebinds_via_on_reconnect():
-    """Review fix: after an auth-expiry reconnect, the NEW client must be
-    reported to the caller (on_reconnect) so subsequent rows do not repay
-    the stale-token failure + sleep on every call."""
-    rebound, sleeps = [], []
-    attempts = {"n": 0}
-
-    def do(client):
-        attempts["n"] += 1
-        if attempts["n"] == 1:
-            raise _AuthError(9)
-        return client
-
-    out = sinks.evernote_retry(
-        do, "stale", client_factory=lambda: "fresh",
-        sleep=sleeps.append, on_reconnect=rebound.append,
-    )
-    assert out == "fresh" and rebound == ["fresh"]
-
-
-def test_upload_rows_uses_fresh_client_after_expiry():
-    """End-to-end: token expires on row 1's create_note; rows 2..n must go
-    straight to the fresh client (exactly ONE sleep in total)."""
-    sleeps = []
-
-    class Client:
-        def __init__(self, name, expired=False):
-            self.name, self.expired, self.created = name, expired, []
-
-        def list_notebooks(self):
-            return [type("NB", (), {"name": "default", "guid": "g1", "stack": None})()]
-
-        def create_note(self, note):
-            if self.expired:
-                raise _AuthError(9)
-            self.created.append(note)
-
-    stale, fresh = Client("stale", expired=True), Client("fresh")
-    sink = sinks.EvernoteSink(
-        client_factory=lambda: fresh, sleep=sleeps.append
-    )
-    rows = [
-        {"notebook": "default", "note_title": f"t{i}", "body": b"x"} for i in range(4)
-    ]
-    n = sink.upload_rows(rows, stale, notebook_guids={"default": "g1"})
-    assert n == 4
-    assert len(fresh.created) == 4 and not stale.created
-    assert sleeps == [3]  # one expiry, one sleep — not one per row

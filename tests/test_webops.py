@@ -199,23 +199,6 @@ def test_url_filter_fast_plan_zero_exchange_and_broadcast(spark):
     assert "hashpartitioning(doc_id" not in plan
 
 
-def test_domain_quality_weights(spark):
-    df = spark.createDataFrame(
-        [("a.com", 0.9), ("a.com", 0.7), ("a.com", 0.8), ("a.com", 0.6),
-         ("b.org", 1.0)],
-        "reg_domain STRING, quality DOUBLE",
-    )
-    rows = {r["reg_domain"]: r for r in webops.domain_quality_df(df).collect()}
-    assert rows["a.com"]["n_docs"] == 4
-    assert abs(rows["a.com"]["mean_quality"] - 0.75) < 1e-12
-    # t=0.5: weight = n^0.5 / n = 1/sqrt(n)
-    assert abs(rows["a.com"]["sample_weight"] - 0.5) < 1e-12
-    assert abs(rows["b.org"]["sample_weight"] - 1.0) < 1e-12
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        webops.domain_quality_df(df, temperature=0.0)
-
-
 def test_domain_cap_deterministic_across_layouts(spark):
     import hashlib
     rows = [(i, "big.com" if i % 4 else "small.org") for i in range(64)]
